@@ -86,11 +86,12 @@ abstract class BinaryVectorExpression extends BinaryExpression
     * scope (e.g. `least(l2_dist(v, c1), l2_dist(v, c2))`): a fixed name
     * there is a Janino "Redefinition of local variable" compile error and
     * the whole stage silently falls back to interpreted evaluation.
-    * (Per-element temporaries declared inside the loop body are safe —
-    * each instance's loop is its own block scope.)
+    * Per-element temporaries take `ctx.freshName`s too: a loop-body local
+    * may not shadow a same-named local of an enclosing generated scope.
     */
   protected def accDecl(acc: String): String          // java: accumulator decls
-  protected def accStep(acc: String, x: String, y: String): String // per-element
+  protected def accStep(ctx: CodegenContext, acc: String, x: String,
+      y: String): String                               // per-element
   protected def accFinish(acc: String): String        // java: expr producing double
 
   protected def evalLoop(a: ArrayData, b: ArrayData): Double
@@ -108,6 +109,8 @@ abstract class BinaryVectorExpression extends BinaryExpression
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
+      val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
       s"""
          |int $n = $a.numElements();
          |if ($n != $b.numElements()) {
@@ -115,9 +118,9 @@ abstract class BinaryVectorExpression extends BinaryExpression
          |}
          |${accDecl(acc)}
          |for (int $i = 0; $i < $n; $i++) {
-         |  double x = ${genGetD(a, leftElem, i)};
-         |  double y = ${genGetD(b, rightElem, i)};
-         |  ${accStep(acc, "x", "y")}
+         |  double $x = ${genGetD(a, leftElem, i)};
+         |  double $y = ${genGetD(b, rightElem, i)};
+         |  ${accStep(ctx, acc, x, y)}
          |}
          |${ev.value} = ${accFinish(acc)};
        """.stripMargin
@@ -130,7 +133,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
   override protected def accDecl(acc: String): String =
     s"double ${acc}dot = 0.0d, ${acc}na = 0.0d, ${acc}nb = 0.0d;"
-  override protected def accStep(acc: String, x: String, y: String): String =
+  override protected def accStep(ctx: CodegenContext, acc: String, x: String,
+      y: String): String =
     s"${acc}dot += $x * $y; ${acc}na += $x * $x; ${acc}nb += $y * $y;"
   override protected def accFinish(acc: String): String =
     s"(${acc}na == 0.0d || ${acc}nb == 0.0d) ? 0.0d : " +
@@ -155,8 +159,11 @@ case class L2Distance(left: Expression, right: Expression)
     extends BinaryVectorExpression {
   override def prettyName: String = "l2_dist"
   override protected def accDecl(acc: String): String = s"double ${acc}s = 0.0d;"
-  override protected def accStep(acc: String, x: String, y: String): String =
-    s"double d = $x - $y; ${acc}s += d * d;"
+  override protected def accStep(ctx: CodegenContext, acc: String, x: String,
+      y: String): String = {
+    val d = ctx.freshName("d")
+    s"double $d = $x - $y; ${acc}s += $d * $d;"
+  }
   override protected def accFinish(acc: String): String = s"Math.sqrt(${acc}s)"
   override protected def evalLoop(a: ArrayData, b: ArrayData): Double = {
     var s = 0.0; var i = 0
@@ -176,7 +183,8 @@ case class DotProduct(left: Expression, right: Expression)
     extends BinaryVectorExpression {
   override def prettyName: String = "dot_product"
   override protected def accDecl(acc: String): String = s"double ${acc}s = 0.0d;"
-  override protected def accStep(acc: String, x: String, y: String): String =
+  override protected def accStep(ctx: CodegenContext, acc: String, x: String,
+      y: String): String =
     s"${acc}s += $x * $y;"
   override protected def accFinish(acc: String): String = s"${acc}s"
   override protected def evalLoop(a: ArrayData, b: ArrayData): Double = {
@@ -213,12 +221,13 @@ case class L2Norm(child: Expression) extends UnaryExpression
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      val x = ctx.freshName("x")
       s"""
          |int $n = $a.numElements();
          |double $s = 0.0d;
          |for (int $i = 0; $i < $n; $i++) {
-         |  double x = ${genGetD(a, et, i)};
-         |  $s += x * x;
+         |  double $x = ${genGetD(a, et, i)};
+         |  $s += $x * $x;
          |}
          |${ev.value} = Math.sqrt($s);
        """.stripMargin
@@ -351,6 +360,7 @@ case class NearestCentroidId(child: Expression,
       val dist = ctx.freshName("dist")
       val best = ctx.freshName("best")
       val bestJ = ctx.freshName("bestJ")
+      val d = ctx.freshName("d")
       s"""
          |double[][] $cs = $cref;
          |if ($a.numElements() != $cs[0].length) {
@@ -362,8 +372,8 @@ case class NearestCentroidId(child: Expression,
          |for (int $j = 0; $j < $cs.length; $j++) {
          |  double $s = 0.0d;
          |  for (int $i = 0; $i < $cs[0].length; $i++) {
-         |    double d = ${genGetD(a, elem, i)} - $cs[$j][$i];
-         |    $s += d * d;
+         |    double $d = ${genGetD(a, elem, i)} - $cs[$j][$i];
+         |    $s += $d * $d;
          |  }
          |  double $dist = Math.sqrt($s);
          |  if (!(Double.isNaN($dist) || Double.isInfinite($dist))) {

@@ -1287,20 +1287,21 @@ object Dedup {
     // consumed by both sides of the mutuality join (n·k rows). The
     // incomingNearDups discipline (r18 ADVICE item): materialize the
     // final edge set and free BOTH intermediates before returning, so a
-    // serving session calling this repeatedly accumulates nothing.
+    // serving session calling this repeatedly accumulates nothing — on
+    // the failure path as well, hence the finally blocks.
     val (edges, pairsSeam) =
       knnEdgesWithSeam(df, idCol, vecCol, k, nBits, maxBucketSize)
-    val knn = edges.localCheckpoint(true)
-    GraftSqlShims.unpersistCheckpoint(pairsSeam)
-    val out = knn.filter(col("src_id") < col("dst_id"))
+    val knn =
+      try edges.localCheckpoint(true)
+      finally GraftSqlShims.unpersistCheckpoint(pairsSeam)
+    try knn.filter(col("src_id") < col("dst_id"))
       .select(col("src_id").as("a_id"), col("dst_id").as("b_id"),
         col("score"))
       .join(knn.filter(col("src_id") > col("dst_id"))
         .select(col("dst_id").as("a_id"), col("src_id").as("b_id")),
         Seq("a_id", "b_id"))
       .localCheckpoint(true)
-    GraftSqlShims.unpersistCheckpoint(knn)
-    out
+    finally GraftSqlShims.unpersistCheckpoint(knn)
   }
 
   /** Within-document repeated-span removal — the paragraph/line-level

@@ -40,10 +40,7 @@ object Materialize {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.materialize.corpusMode") match {
       case Some("reliable") =>
-        require(spark.sparkContext.getCheckpointDir.isDefined,
-          "spark.graft.materialize.corpusMode=reliable needs " +
-            "sparkContext.setCheckpointDir(...) — point it at durable " +
-            "shared storage")
+        requireCheckpointDir(spark.sparkContext.getCheckpointDir)
         df.checkpoint(eager = true)
       case Some(other) if other != "local" =>
         throw new IllegalArgumentException(
@@ -52,4 +49,14 @@ object Materialize {
       case _ => df.localCheckpoint(true)
     }
   }
+
+  /** Reliable mode's precondition, as a function of the context's
+    * checkpoint dir: refuse loudly here rather than let Spark throw its
+    * internal error mid-plan.
+    */
+  def requireCheckpointDir(dir: Option[String]): Unit =
+    require(dir.isDefined,
+      "spark.graft.materialize.corpusMode=reliable needs " +
+        "sparkContext.setCheckpointDir(...) — point it at durable " +
+        "shared storage")
 }

@@ -301,7 +301,7 @@ object TrainExport {
     * identical values — no new rounding needed; the only ordering is
     * over the |sources|-row frame. Appends `quota` (BIGINT).
     *
-    * PRECONDITION (enforced in-plan): the weights must sum to ~1. The
+    * PRECONDITION (checked eagerly): the weights must sum to ~1. The
     * largest-remainder step can only hand out one extra slot per source,
     * so the leftover `n − Σ⌊n·w⌋` must lie in [0, |sources|] — a weight
     * vector summing materially below 1 would silently underfill the
@@ -426,48 +426,49 @@ object TrainExport {
     require(n >= 0, s"budget must be non-negative, got $n")
     // materialize the weights input once — it is |sources|-sized BY
     // CONTRACT but typically a whole derivation pipeline (q200's DoReMi
-    // weights are a corpus LM pass), and it feeds the emptiness probe,
-    // q0, the leftover aggregate, and the final projection (38 corpus
-    // scans in the q200 plan without this, r17 all-plans audit).
+    // weights are a corpus LM pass), and it feeds the leftover aggregate
+    // and the final projection (38 corpus scans in the q200 plan without
+    // this, r17 all-plans audit).
     // n == 0 skips it: nothing downstream runs more than once and the
     // blocks would leak (r18 ADVICE item)
     val wts = if (n == 0) weights else weights.localCheckpoint(true)
-    // the in-plan guard below evaluates per ROW — an empty weights frame
-    // would skip it entirely and silently leave the whole budget
-    // unfilled, the exact failure the guard exists for; catch it eagerly
-    // (the frame is |sources|-sized, the check is one cheap job)
-    require(n == 0 || !wts.isEmpty,
-      s"hamiltonQuotas: empty weights frame cannot fill a budget of $n")
-    val q0 = wts
-      .withColumn("__q0", floor(col(weightCol) * n).cast("long"))
-      .withColumn("__rem", col(weightCol) * n - floor(col(weightCol) * n))
-    val r = q0.agg((lit(n.toLong) - coalesce(sum("__q0"), lit(0L))).as("__r"),
-      count(lit(1)).as("__cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("__rem"), col(sourceCol))
-    val out = q0.crossJoin(broadcast(r))
-      .withColumn("__rk", row_number().over(w).cast("long"))
-      .withColumn("quota",
-        when(col("__r") < 0L || col("__r") > col("__cnt"),
-          raise_error(concat(
-            lit("hamiltonQuotas: weights must sum to ~1 (leftover "),
-            col("__r").cast("string"), lit(" slots for "),
-            col("__cnt").cast("string"), lit(" sources)"))).cast("long"))
-        .otherwise(
-          col("__q0") + when(col("__rk") <= col("__r"), 1L).otherwise(0L)))
-      .drop("__q0", "__rem", "__rk", "__r", "__cnt")
-    if (n == 0) out
-    else {
+    try {
+      val q0 = wts
+        .withColumn("__q0", floor(col(weightCol) * n).cast("long"))
+        .withColumn("__rem", col(weightCol) * n - floor(col(weightCol) * n))
+      // the leftover and the source count decide the guards: one row,
+      // read on the driver BEFORE the result materializes. Raising inside
+      // that materialization instead would strand the failed
+      // localCheckpoint's own RDD, which Spark registers as persisted
+      // before its job runs and gives no handle to. n == 0 always
+      // passes: leftover 0.
+      val (r, cnt) =
+        if (n == 0) (0L, 0L)
+        else {
+          val row = q0.agg(
+            (lit(n.toLong) - coalesce(sum("__q0"), lit(0L))).as("__r"),
+            count(lit(1)).as("__cnt")).head()
+          (row.getLong(0), row.getLong(1))
+        }
+      // an empty weights frame with a budget is the silent underfill
+      require(n == 0 || cnt > 0,
+        s"hamiltonQuotas: empty weights frame cannot fill a budget of $n")
+      require(r >= 0L && r <= cnt, s"hamiltonQuotas: weights must sum to ~1 " +
+        s"(leftover $r slots for $cnt sources)")
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(desc("__rem"), col(sourceCol))
+      val out = q0
+        .withColumn("__rk", row_number().over(w).cast("long"))
+        .withColumn("quota",
+          col("__q0") + when(col("__rk") <= r, 1L).otherwise(0L))
+        .drop("__q0", "__rem", "__rk")
       // the quotas frame is |sources|-sized and every caller consumes it
       // at least twice (fill filter + report): materialize it HERE and
       // free the wts seam — a returned lineage over wts would pin the
       // whole weights pipeline's blocks for the session with no handle
-      // to release them (r18 ADVICE item). The per-row budget guard
-      // above fires during this materialization, same loudness.
-      val m = out.localCheckpoint(true)
-      org.apache.spark.sql.GraftSqlShims.unpersistCheckpoint(wts)
-      m
-    }
+      // to release them (r18 ADVICE item)
+      if (n == 0) out else out.localCheckpoint(true)
+    } finally if (n != 0) org.apache.spark.sql.GraftSqlShims.unpersistCheckpoint(wts)
   }
 
   /** The DoReMi loop closed: per-source quotas ([[hamiltonQuotas]] over

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.DeterministicEmbedding
 import graft.sources.EmbeddingTextFormat
 
 /** EP3 parity: the reference's fully-implemented text→embeddings pipeline
@@ -14,35 +15,31 @@ import graft.sources.EmbeddingTextFormat
   * (fastembed's default model in the reference); graft substitutes a
   * *deterministic* embedder with the same pipeline shape: token →
   * `array<float>` of fixed dim, L2-normalized. Each dimension j is a uniform
-  * value in [-1, 1) derived from `md5(token:j)` — entirely built-in
-  * codegen'd column functions (md5/conv/transform/aggregate), so it runs
-  * in-scan at any scale and is reproducible in plain SQL (the DuckDB oracle
-  * can recompute it).
+  * value in [-1, 1) derived from `md5(token:j)`. The embedder is one
+  * codegen'd kernel, [[graft.functions.DeterministicEmbedding]], that
+  * computes each md5 once per token and runs in-scan at any scale; its
+  * values are still reproducible in plain SQL by the stated formula,
+  * which is what the DuckDB oracle recomputes:
+  * {{{
+  *   x_j = conv(substring(md5(token || ':' || j), 1, 8), 16, 10) / 2^32 * 2 - 1
+  *   e_j = x_j / sqrt(sum of x_j² in index order)
+  * }}}
   */
 object DeterministicEmbedder {
 
-  /** Uniform [-1, 1) from the first 8 hex chars of md5(seed). */
-  private def unitFromMd5(seed: Column): Column =
-    (conv(substring(md5(seed), 1, 8), 16, 10).cast("long") / lit(4294967296.0)) * 2.0 - 1.0
-
-  /** Raw (unnormalized) embedding: dim values seeded by `token:j`. */
-  def rawEmbedding(token: Column, dim: Int): Column =
-    transform(
-      sequence(lit(0), lit(dim - 1)),
-      j => unitFromMd5(concat(token, lit(":"), j.cast("string"))))
-
   /** L2-normalized `array<float>` embedding of a token/text column. */
   def embedding(token: Column, dim: Int = 64): Column =
-    transform(embeddingDouble(token, dim), x => x.cast("float"))
+    kernel(token, dim, asFloat = true)
 
   /** Same embedding in full double precision (no float32 quantization) —
     * the form oracle SQL can reproduce bit-for-bit-enough to round-compare.
     */
-  def embeddingDouble(token: Column, dim: Int): Column = {
-    val raw = rawEmbedding(token, dim)
-    val norm = sqrt(aggregate(raw, lit(0.0), (acc, x) => acc + x * x))
-    transform(raw, x => x / norm)
-  }
+  def embeddingDouble(token: Column, dim: Int): Column =
+    kernel(token, dim, asFloat = false)
+
+  private def kernel(token: Column, dim: Int, asFloat: Boolean): Column =
+    GraftSqlShims.column(DeterministicEmbedding(
+      GraftSqlShims.expression(token), dim, asFloat))
 }
 
 object EmbeddingPipeline {

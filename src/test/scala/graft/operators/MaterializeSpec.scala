@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.TestContextShims
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -32,10 +33,9 @@ class MaterializeSpec extends AnyFunSuite {
     val localOut = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.3)
       .orderBy("a_id", "b_id").collect().toSeq
     assert(localOut.nonEmpty, "fixture must produce candidate pairs")
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_reliable_ck").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_reliable_ck")
     val prevDir = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(ckDir)
+    spark.sparkContext.setCheckpointDir(ckDir.toString)
     try {
       val reliableOut = withMode("reliable") {
         Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.3)
@@ -43,20 +43,34 @@ class MaterializeSpec extends AnyFunSuite {
       }
       assert(reliableOut == localOut,
         "mode must change storage, never results")
-    } finally prevDir.foreach(spark.sparkContext.setCheckpointDir)
+    } finally {
+      // later suites share this context: leave no dir set and no files
+      TestContextShims.restoreCheckpointDir(spark.sparkContext, prevDir)
+      val walk = java.nio.file.Files.walk(ckDir)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
   }
 
   test("reliable mode without a checkpoint dir refuses loudly") {
-    // a fresh context-level dir cannot be unset once set, so pin the
-    // contract through the helper directly on a session whose context
-    // has no dir only when that is the case; otherwise assert the
-    // require TEXT via a direct call with the dir temporarily present
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val e = intercept[IllegalArgumentException] {
+    // the precondition is a function of the dir, so the refusal branch
+    // runs whatever dir earlier suites left on the shared context
+    val e = intercept[IllegalArgumentException] {
+      Materialize.requireCheckpointDir(None)
+    }
+    assert(e.getMessage.contains("setCheckpointDir"))
+    Materialize.requireCheckpointDir(Some("/ck")) // a set dir passes
+    // ... and corpusScale consults it on a context with no dir
+    val sc = spark.sparkContext
+    val prevDir = sc.getCheckpointDir
+    TestContextShims.restoreCheckpointDir(sc, None)
+    try {
+      val e2 = intercept[IllegalArgumentException] {
         withMode("reliable")(Materialize.corpusScale(docs))
       }
-      assert(e.getMessage.contains("setCheckpointDir"))
-    }
+      assert(e2.getMessage.contains("setCheckpointDir"))
+    } finally TestContextShims.restoreCheckpointDir(sc, prevDir)
   }
 
   test("unknown mode refuses loudly") {

@@ -318,6 +318,17 @@ class TrainExportSpec extends AnyFunSuite {
     assert(TrainExport.hamiltonQuotas(none, 0).isEmpty) // n=0 is fine
   }
 
+  test("hamiltonQuotas: the budget guard's failure path frees the weights seam") {
+    val sc = spark.sparkContext
+    val under = Seq(("a", 0.3), ("b", 0.2)).toDF("source", "weight")
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[Exception](TrainExport.hamiltonQuotas(under, 10))
+    assert(e.getMessage.contains("weights must sum to ~1"))
+    val leaked = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(leaked.isEmpty,
+      s"guard failure leaked persisted RDDs: ${leaked.values.map(_.toDebugString)}")
+  }
+
   test("mixtureSelect: quota fill, honest shortfall, md5-rank determinism") {
     // corpus: a has 20 docs, b has 2 (will fall short of its quota),
     // c has 5; weights give b a quota its availability can't cover

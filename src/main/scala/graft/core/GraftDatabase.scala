@@ -1552,13 +1552,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       seg: Int, genDir: Path): Unit = {
     graft.operators.Dedup.bandKeys(
         graft.operators.Dedup.minhashSignatures(
-          graft.operators.Dedup.explodeShingles(
-            rows, "id", "payload", shingleN),
-          "id", numHashes),
+          rows, "id", "payload", shingleN, numHashes),
         "id", numHashes, rowsPerBand)
       .withColumn("band_bucket",
         graft.operators.Dedup.sigBucket(col("band_key"), buckets))
       .withColumn("seg", lit(seg))
+      // one writer per (band, bucket) directory: signatures come out in
+      // the input's (core-widened) partitioning, and every task would
+      // otherwise add its own small file to every directory it touches
+      .repartition(col("band"), col("band_bucket"))
       .write.mode("append").option("compression", Compression)
       .partitionBy("band", "band_bucket")
       .parquet(new Path(genDir, "bands").toString)
@@ -1730,9 +1732,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else graft.operators.Materialize.corpusScale(
         graft.operators.Dedup.bandKeys(
         graft.operators.Dedup.minhashSignatures(
-          graft.operators.Dedup.explodeShingles(
-            cur, "id", "payload", shingleN),
-          "id", numHashes),
+          cur, "id", "payload", shingleN, numHashes),
         "id", numHashes, rowsPerBand)
         // the screen consumes the band table twice (hot-key census +
         // probe join): a stored artifact is just two pruned scans, but
@@ -2106,16 +2106,24 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private def commitSplitBase(name: String, cur: DataFrame,
       pairs: DataFrame, nSlots: Int, valSlots: Int,
       testSlots: Int, extraMeta: String = ""): DataFrame = {
-    val assign = graft.operators.TrainExport.leakageSafeSplit(
-      cur, pairs, "id", nSlots, valSlots, testSlots)
     val dir = splitsDir(name)
     val g = if (fs.exists(splitsMetaPath(name))) splitsGen(name) + 1 else 0
     val genDir = new Path(dir, s"gen_$g")
-    if (fs.exists(genDir)) fs.delete(genDir, true)
-    assign.select(col("id").cast("long").as("id"),
-        col("rep").cast("long").as("rep"), col("split"))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(genDir, "assign").toString)
+    // refuse a bad split rule before the components run; they come
+    // back checkpointed: free them once the assignment write has
+    // consumed them, on success and on failure
+    graft.operators.TrainExport.requireSplitRule(cur, "id", nSlots,
+      valSlots, testSlots)
+    val cc = graft.operators.Dedup.connectedComponents(pairs)
+    try {
+      val assign = graft.operators.TrainExport.clusterSplits(
+        cur, cc, "id", nSlots, valSlots, testSlots)
+      if (fs.exists(genDir)) fs.delete(genDir, true)
+      assign.select(col("id").cast("long").as("id"),
+          col("rep").cast("long").as("rep"), col("split"))
+        .write.mode("overwrite").option("compression", Compression)
+        .parquet(new Path(genDir, "assign").toString)
+    } finally GraftSqlShims.unpersistCheckpoint(cc)
     writeString(fs, splitsMetaPath(name),
       s"""{"type":"splits","slots":$nSlots,"val":$valSlots,"test":$testSlots$extraMeta,"gen":$g}""")
     // sweep superseded generations (the compactPostings orphan rule)
@@ -2429,6 +2437,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   private[graft] var lastRouteScreenPlan: Option[String] = None
 
+  /** Job-group prefix of ROUTE's write-once admission check. */
+  private[graft] val RouteCheckGroupPrefix = "graft:ROUTE:admission-check:"
+
   private def routeCore(name: String, batch: DataFrame,
       arriving: DataFrame, matchesIn: => DataFrame, insert: Boolean,
       refreshBands: Boolean, batchTag: Option[String] = None,
@@ -2474,12 +2485,31 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         coalesce(col("__committed"), lit(false)).as("__committed"),
         coalesce(col("__present"), lit(false)).as("__present"))
       .limit(1)
+    // the check runs under its own job group, so a failed screen can
+    // cancel it: an interrupted pool thread alone leaves the Spark job
+    // running detached
+    val checkGroup = s"$RouteCheckGroupPrefix${UUID.randomUUID()}"
     val checkPool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val checkF = scala.concurrent.Future(badFrame.collect())(
-      scala.concurrent.ExecutionContext.fromExecutor(checkPool))
+    val checkF = scala.concurrent.Future {
+      spark.sparkContext.setJobGroup(checkGroup,
+        s"ROUTE $name: admission check", interruptOnCancel = true)
+      badFrame.collect()
+    }(scala.concurrent.ExecutionContext.fromExecutor(checkPool))
     val matches =
       try matchesIn
-      catch { case t: Throwable => checkPool.shutdownNow(); throw t }
+      catch { case t: Throwable =>
+        // cancel until the check has finished: a job the pool thread
+        // submits after a cancel is caught by the next one, so no job of
+        // the group outlives the throw
+        while (!checkF.isCompleted) {
+          spark.sparkContext.cancelJobGroup(checkGroup)
+          try scala.concurrent.Await.ready(checkF,
+            scala.concurrent.duration.Duration(50, "ms"))
+          catch { case _: java.util.concurrent.TimeoutException => () }
+        }
+        checkPool.shutdownNow()
+        throw t
+      }
     lastRouteScreenPlan = Some(matches.queryExecution.executedPlan.toString)
     val bad =
       try scala.concurrent.Await.result(checkF,

@@ -8,16 +8,19 @@ import org.apache.spark.sql.functions._
   * "north_star" extensions): exact, MinHash+LSH, SimHash, n-gram Jaccard,
   * and embedding-cosine near-dup.
   *
-  * Everything is built from codegen'd built-ins over an explode → aggregate
-  * shape: shingles/tokens explode map-side, signatures reduce with partial
-  * aggregation, and candidate pairs come from equi-joins on small derived
-  * keys (band buckets / LSH codes) — never an all-pairs product. Hash
-  * functions are md5-based so the exact same signatures are reproducible in
-  * any engine (the DuckDB oracles recompute them).
+  * Everything is codegen'd: built-ins over an explode → aggregate shape
+  * where rows must meet (shingle-keyed verification, band buckets), and
+  * one per-row kernel where they need not — a MinHash signature depends
+  * on one document only, so [[graft.functions.MinhashSignature]] hashes
+  * its shingles in place, with no shingle rows and no shuffle. Candidate
+  * pairs come from equi-joins on small derived keys (band buckets / LSH
+  * codes) — never an all-pairs product. Hash functions are md5-based so
+  * the exact same signatures are reproducible in any engine (the DuckDB
+  * oracles recompute them with the explode/groupBy formula).
   *
   * Scale notes (100 TB corpus):
-  *  - shingling is embarrassingly parallel; the only shuffles are
-  *    groupBy(doc) for signatures and groupBy(band/bucket) for candidates;
+  *  - shingling and signatures are embarrassingly parallel; the only
+  *    MinHash shuffle is groupBy(band/bucket) for candidates;
   *  - band buckets are power-law-ish: a pathological hot bucket (e.g. the
   *    empty document) would quadratically blow up its pair list, so
   *    candidatePairs caps per-bucket membership (`maxBucketSize`) the way
@@ -55,16 +58,28 @@ object Dedup {
     * min-wise values; at shingle-set sizes in the hundreds the collision
     * effect on Jaccard estimation is negligible, and the scheme stays
     * engine-reproducible (any SQL dialect can substring an md5).
-    * Output: (id, mh0..mh{numHashes-1}).
+    *
+    * One row per input row: the per-document kernel
+    * ([[graft.functions.MinhashSignature]]) hashes a document's shingles
+    * where the text is, so the plan has no generator and no shuffle
+    * (ids are unique in every caller). Documents shorter than
+    * `shingleN` tokens have no shingle and get no row; the cheap
+    * [[graft.functions.HasTokens]] screen drops them before any digest.
+    * The input is widened to full core parallelism first (see
+    * [[Parallelism.ensure]]). Output: (id, mh0..mh{numHashes-1}).
     */
-  def minhashSignatures(shingles: DataFrame, idCol: String,
-      numHashes: Int): DataFrame = {
-    require(numHashes <= 8, "one md5 yields 8 independent 4-hex chunks")
-    val hashed = shingles.withColumn("__h", md5(col("shingle")))
-    val mins = (0 until numHashes).map { s =>
-      min(substring(col("__h"), s * 4 + 1, 4)).as(s"mh$s")
-    }
-    hashed.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
+  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int): DataFrame = {
+    val text = GraftSqlShims.expression(col(textCol))
+    val sig = GraftSqlShims.column(
+      graft.functions.MinhashSignature(text, shingleN, numHashes))
+    Parallelism.ensure(df)
+      .filter(GraftSqlShims.column(graft.functions.HasTokens(text, shingleN)))
+      // its own projection: the signature is read numHashes times below,
+      // and CollapseProject keeps a non-cheap alias instead of inlining it
+      .select(col(idCol), sig.as("__sig"))
+      .select(col(idCol) +: (0 until numHashes).map(s =>
+        col("__sig").getItem(s).as(s"mh$s")): _*)
   }
 
   /** LSH banding: band b's key is md5 over the band's `rowsPerBand`
@@ -152,8 +167,7 @@ object Dedup {
       maxBucketSize: Int = 1000): DataFrame =
     candidatePairs(
       bandKeys(
-        minhashSignatures(explodeShingles(df, idCol, textCol, shingleN),
-          idCol, numHashes),
+        minhashSignatures(df, idCol, textCol, shingleN, numHashes),
         idCol, numHashes, rowsPerBand),
       idCol, maxBucketSize)
 
@@ -807,25 +821,26 @@ object Dedup {
       threshold: Double = 0.5, shingleN: Int = 5, numHashes: Int = 8,
       rowsPerBand: Int = 2, maxBucketSize: Int = 1000,
       materialize: Boolean = true, corpusBuckets: Int = -1): DataFrame = {
-    // the batch's shingles feed BOTH candidate generation and
-    // verification: materialize them ONCE (eager, delta-sized — the
-    // refreshPostings arrivals discipline) so neither subtree re-runs
-    // the tokenization chain. Released before returning — the OUTPUT is
-    // checkpointed instead (below), so a long-lived serving session
-    // screening many batches doesn't accumulate one shingle-table cache
-    // per call.
+    // the batch's shingles feed every verification subtree: materialize
+    // them ONCE (eager, delta-sized — the refreshPostings arrivals
+    // discipline) so none re-runs the tokenization chain. Candidate
+    // generation reads the batch text directly (the per-document
+    // signature kernel needs no shingle rows). Released before returning
+    // — the OUTPUT is checkpointed instead (below), so a long-lived
+    // serving session screening many batches doesn't accumulate one
+    // shingle-table cache per call.
     val shA = explodeShingles(batch, idCol, textCol, shingleN)
       .localCheckpoint(true)
     val batchBands = bandKeys(
-      minhashSignatures(shA, idCol, numHashes),
+      minhashSignatures(batch, idCol, textCol, shingleN, numHashes),
       idCol, numHashes, rowsPerBand)
     // stored-layout pruning (cap-and-switch): when the corpus bands are
     // bucket-partitioned (band_bucket = sigBucket(band_key, n) — the
     // ScaleKnobs-derived REINDEX layout), the batch's own bucket set is
     // pushed as a literal IN filter so the artifact scan prunes to
     // matching partitions instead of reading every band row. The collect
-    // is ≤ corpusBuckets ints over the checkpointed batch shingles (the
-    // q79 collected-In-filter discipline); a batch whose bands touch
+    // is ≤ corpusBuckets ints over the batch's signatures (the q79
+    // collected-In-filter discipline); a batch whose bands touch
     // every bucket switches back to the full read. Layout-only: the same
     // (band, band_key) pairs survive either way, so results are
     // bucket-count invariant (spec-pinned at two widths).
@@ -923,29 +938,85 @@ object Dedup {
   /** Connected components over a candidate-pair graph → dedup clusters:
     * every document gets the smallest doc id reachable through candidate
     * edges as its cluster representative (so "keep one per cluster" =
-    * `filter(id === cluster_rep)`).
+    * `filter(id === cluster_rep)`). Ids must be integral (every caller
+    * passes pair ids); the output is (id, cluster_rep) in the wider of
+    * the two id types, one row per id that appears in an edge (a
+    * self-pair included). Edges with a null endpoint are ignored.
     *
-    * Distributed min-label propagation: each round, every node adopts the
-    * minimum label in its closed neighborhood; converges in
-    * O(component diameter) rounds — near-dup components are tiny, so 2–3
-    * rounds in practice. Each round is one join + one aggregation on the
-    * (small) edge set, not the corpus; at extreme graph sizes a dedicated
-    * graph engine would slot in behind the same signature.
+    * Two phases:
+    *  1. Partition-local union-find. The edges are checkpointed as long
+    *     pairs, counted and cut into partitions of about 1M each; in
+    *     every partition a union-find over primitive arrays (sorted
+    *     distinct ids, an int parent array, union toward the smaller id,
+    *     path halving) labels each id with the smallest id of its LOCAL
+    *     component. With one partition — every graph under ~1M edges,
+    *     near-dup graphs in practice — those are the graph's components:
+    *     two jobs of its own (the count, which runs the upstream
+    *     pipeline, and the result checkpoint) and no shuffle.
+    *  2. Only with more partitions: distributed min-label propagation
+    *     over the star edges (id, local label), which have the same
+    *     connectivity as the input, seeded with each id's smallest
+    *     local label. Each round every node adopts the minimum label in
+    *     its closed neighborhood — one join + one aggregation on the
+    *     label-sized frames, O(component diameter) rounds. At extreme
+    *     graph sizes a dedicated graph engine would slot in behind the
+    *     same signature.
+    *
+    * The result is checkpointed and self-contained (a directly freeable
+    * frame: `GraftSqlShims.unpersistCheckpoint` releases it).
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
-      bCol: String = "b_id", maxIter: Int = 50): DataFrame = {
-    // cache the pair projection BEFORE mirroring it — otherwise the union
-    // runs the entire upstream candidate pipeline twice — and size the
-    // iteration's parallelism from the measured edge count: the label
-    // frames are usually orders of magnitude smaller than the corpus, and
-    // per-round fixed cost (32-way shuffles of a few-KB frame) otherwise
-    // dominates the wall clock. ~1M edges per partition, capped at the
-    // cluster's parallelism.
-    val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).cache()
-    val nEdges = fwd.count()
-    val parts = math.max(1L, math.min(
-      fwd.sparkSession.sparkContext.defaultParallelism.toLong,
-      nEdges / 1000000L + 1L)).toInt
+      bCol: String = "b_id", maxIter: Int = 50): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, 1000000L)
+
+  /** [[connectedComponents]] with the union-find partition size as a
+    * parameter — specs shrink it to drive the propagation phase.
+    */
+  private[operators] def connectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String, maxIter: Int, edgesPerPartition: Long): DataFrame = {
+    import org.apache.spark.sql.types._
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    val (aF, bF) = (pairs.schema(aCol), pairs.schema(bCol))
+    require(integral.contains(aF.dataType) && integral.contains(bF.dataType),
+      s"connectedComponents requires integral id columns; '$aCol' is " +
+        s"${aF.dataType}, '$bCol' is ${bF.dataType} — hash or re-key " +
+        "non-numeric ids first")
+    val idType = integral(math.max(integral.indexOf(aF.dataType),
+      integral.indexOf(bF.dataType)))
+    // the pair projection is read twice (count, then the union-find
+    // pass): checkpoint it as primitive pairs so the count is the one job
+    // that runs the upstream candidate pipeline and stores the edges (a
+    // Dataset cache re-plans over the cached table: two more jobs)
+    val edgeRdd = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .rdd.flatMap(r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) None
+        else Some((r.getLong(0), r.getLong(1))))
+      .localCheckpoint()
+    val spark = pairs.sparkSession
+    def result(labels: DataFrame): DataFrame =
+      labels.select(col("id").cast(idType).as("id"),
+        col("label").cast(idType).as("cluster_rep"))
+    val (ufParts, local) = try {
+      val nEdges = edgeRdd.count()
+      // union-find partitions are sized by edges alone (bounded task
+      // memory, ~64 bytes per edge)
+      val ufParts = math.max(1L, nEdges / edgesPerPartition + 1L).toInt
+      val rows = (if (ufParts == 1) edgeRdd.coalesce(1)
+        else edgeRdd.repartition(ufParts)).mapPartitions(localComponents)
+      val df = spark.createDataFrame(rows, StructType(Seq(
+        StructField("id", LongType, aF.nullable || bF.nullable),
+        // as the result, nullable like the propagation phase's min()
+        // output; as the star edges' endpoint, non-null like the ids
+        StructField("label", LongType, nullable = ufParts == 1))))
+      // one partition's components are the graph's components: the
+      // union-find output IS the result
+      (ufParts, (if (ufParts == 1) result(df) else df).localCheckpoint(true))
+    } finally edgeRdd.unpersist(blocking = false)
+    if (ufParts == 1) return local
+    // the propagation phase is capped at the cluster's parallelism: its
+    // per-round fixed cost (shuffles of a few-KB frame) otherwise
+    // dominates the wall clock
+    val parts = math.min(spark.sparkContext.defaultParallelism, ufParts)
     // localCheckpoint (not cache) for everything the loop re-reads: each
     // round's logical plan would otherwise carry the WHOLE iteration
     // lineage — caching cuts physical recompute but Catalyst still
@@ -963,13 +1034,18 @@ object Dedup {
     // checkpoint is LAZY and the convergence count is the action that
     // materializes it — an eager checkpoint + separate isEmpty was two
     // scheduled jobs per round of a frame that fits in one.
-    val edges = fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst")))
+    //
+    // seeds: an id's smallest local label is a member of its component
+    // and no smaller than the component's minimum, so propagation from
+    // it converges to that minimum
+    var labels = local.groupBy("id").agg(min("label").as("label"))
+      .repartition(parts, col("id")).localCheckpoint(true)
+    val star = local.filter(col("id") =!= col("label"))
+      .select(col("id").as("src"), col("label").as("dst"))
+    val edges = star.unionByName(
+      star.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(parts, col("dst")).localCheckpoint(true)
-    fwd.unpersist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .repartition(parts, col("id"))
-      .withColumn("label", col("id")).localCheckpoint(true)
+    GraftSqlShims.unpersistCheckpoint(local)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -979,8 +1055,8 @@ object Dedup {
       // convergence count in the same pass (a labels⋈neighborMin
       // carry-join here was a whole extra shuffle of the label frame per
       // round). `max(when(is_self, label))` sees exactly one non-null per
-      // id, stays type-agnostic, and the count both materializes the lazy
-      // checkpoint and answers convergence in one job.
+      // id, and the count both materializes the lazy checkpoint and
+      // answers convergence in one job.
       val contrib = edges
         .join(labels.withColumnRenamed("id", "dst")
           .withColumnRenamed("label", "n_label"), Seq("dst"))
@@ -1000,8 +1076,7 @@ object Dedup {
       labels = next
       iter += 1
     }
-    // the returned frame is itself checkpointed and self-contained — the
-    // edge frame is no longer reachable from it and can be freed now
+    // the edge frame is not reachable from the labels — free it now
     GraftSqlShims.unpersistCheckpoint(edges)
     // fail LOUD on non-convergence: a silently non-minimal label would
     // diverge from the exact transitive-closure oracle only at the scale
@@ -1014,7 +1089,56 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds — " +
           "component diameter exceeds the cap; raise maxIter")
     }
-    labels.select(col("id"), col("label").as("cluster_rep"))
+    // a directly checkpointed result (not a projection over the last
+    // round), so callers can free it
+    val out = result(labels).localCheckpoint(true)
+    GraftSqlShims.unpersistCheckpoint(labels)
+    out
+  }
+
+  /** One partition's union-find over its (src, dst) long edges: emits
+    * (id, smallest id of its local component) per distinct id. Ids sort
+    * into a primitive array and edges union by index, so the smaller
+    * index — the smaller id — is always the root.
+    */
+  private def localComponents(edges: Iterator[(Long, Long)])
+      : Iterator[org.apache.spark.sql.Row] = {
+    var src = new Array[Long](1024)
+    var dst = new Array[Long](1024)
+    var m = 0
+    edges.foreach { case (a, b) =>
+      if (m == src.length) {
+        src = java.util.Arrays.copyOf(src, m * 2)
+        dst = java.util.Arrays.copyOf(dst, m * 2)
+      }
+      src(m) = a
+      dst(m) = b
+      m += 1
+    }
+    val ids = new Array[Long](2 * m)
+    System.arraycopy(src, 0, ids, 0, m)
+    System.arraycopy(dst, 0, ids, m, m)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < m) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, src(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, dst(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 1
+    }
+    Iterator.tabulate(n)(j => org.apache.spark.sql.Row(ids(j), ids(find(j))))
   }
 
   /** Embedding-cosine near-dup pairs, LSH-prefiltered: only pairs sharing a
@@ -1048,11 +1172,11 @@ object Dedup {
     * recomputable, and stable when new singletons arrive (an existing
     * cluster never flips because unrelated data grew).
     *
-    * Scale shape: the components run is the q65 machinery (edge-keyed
-    * label propagation, checkpointed rounds); the rep attach is one
-    * id-keyed left join (pair-covered docs are a small minority, so the
-    * cc frame usually broadcasts); the split itself is scan-side hash
-    * math. Output: the input columns plus `cluster_rep` and `split`.
+    * Scale shape: the components run is the q65 machinery (partition-
+    * local union-find, label propagation only past ~1M edges); the rep
+    * attach is one id-keyed left join (pair-covered docs are a small
+    * minority, so the cc frame usually broadcasts); the split itself is
+    * scan-side hash math. Output: the input columns plus `cluster_rep` and `split`.
     */
   def clusterSplit(df: DataFrame, idCol: String, pairs: DataFrame,
       seed: String = "csplit", trainMod: Int = 10,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over pair tables — the iterative-numeric sibling of
-  * [[Dedup.connectedComponents]]'s iterative-label propagation. The input
+  * [[Dedup.connectedComponents]]'s label propagation. The input
   * convention is the repo's pair-table shape (`a_id` < `b_id`, one row per
   * undirected edge), which every near-dup discovery stage (MinHash-LSH,
   * SimHash banding, embedding buckets) already emits.

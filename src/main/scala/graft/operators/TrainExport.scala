@@ -321,22 +321,27 @@ object TrainExport {
     * nSlots divides 65536, no modulo bias; SQL-recomputable per row).
     * Slots [0, n−v−t) → train, [n−v−t, n−t) → val, rest → test.
     *
-    * Scale shape: the components loop is label-frame-sized per round
-    * (the q65 discipline); assignment is one broadcast-free left join
+    * Scale shape: the components are the q65 machinery (partition-local
+    * union-find, pair-sized); assignment is one broadcast-free left join
     * (cluster labels are pair-member-sized, usually ≪ corpus) + pure
     * column math. Output: (id, rep, split), one row per document.
     */
   def leakageSafeSplit(docs: DataFrame, pairs: DataFrame, idCol: String,
       nSlots: Int = 16, valSlots: Int = 1, testSlots: Int = 1): DataFrame = {
-    require(nSlots >= 2 && 65536 % nSlots == 0,
-      s"nSlots must divide 65536, got $nSlots")
-    require(valSlots >= 0 && testSlots >= 0 &&
-      valSlots + testSlots < nSlots,
-      s"need valSlots + testSlots < nSlots, got $valSlots/$testSlots/$nSlots")
-    graft.operators.VectorIndex.requireIntegralCol(docs, idCol,
-      "leakageSafeSplit")
-    val cc = Dedup.connectedComponents(pairs)
-      .select(col("id"), col("cluster_rep"))
+    requireSplitRule(docs, idCol, nSlots, valSlots, testSlots)
+    clusterSplits(docs, Dedup.connectedComponents(pairs), idCol, nSlots,
+      valSlots, testSlots)
+  }
+
+  /** [[leakageSafeSplit]] over components already computed
+    * ([[Dedup.connectedComponents]]'s (id, cluster_rep) frame). The
+    * returned plan reads `components`, so a caller that checkpointed
+    * them frees them only after consuming the split.
+    */
+  def clusterSplits(docs: DataFrame, components: DataFrame, idCol: String,
+      nSlots: Int, valSlots: Int, testSlots: Int): DataFrame = {
+    requireSplitRule(docs, idCol, nSlots, valSlots, testSlots)
+    val cc = components.select(col("id"), col("cluster_rep"))
     docs.select(col(idCol).cast("long").as("id"))
       .join(cc, Seq("id"), "left_outer")
       .select(col("id"),
@@ -349,6 +354,17 @@ object TrainExport {
           .when(col("__slot") < nSlots - testSlots, "val")
           .otherwise("test"))
       .drop("__slot")
+  }
+
+  private[graft] def requireSplitRule(docs: DataFrame, idCol: String, nSlots: Int,
+      valSlots: Int, testSlots: Int): Unit = {
+    require(nSlots >= 2 && 65536 % nSlots == 0,
+      s"nSlots must divide 65536, got $nSlots")
+    require(valSlots >= 0 && testSlots >= 0 &&
+      valSlots + testSlots < nSlots,
+      s"need valSlots + testSlots < nSlots, got $valSlots/$testSlots/$nSlots")
+    graft.operators.VectorIndex.requireIntegralCol(docs, idCol,
+      "leakageSafeSplit")
   }
 
   /** INGEST-TIME split routing — [[leakageSafeSplit]]'s arrival path:

@@ -599,8 +599,7 @@ object DedupQueries {
       val docs = graft.operators.Parallelism.ensure(Tables.documents(s, dir))
       val bandsPath = Scratch.dir("graft_q204") + "/bands"
       Dedup.bandKeys(
-          Dedup.minhashSignatures(
-            Dedup.explodeShingles(docs, "doc_id", "text", 5), "doc_id", 8),
+          Dedup.minhashSignatures(docs, "doc_id", "text", 5, 8),
           "doc_id", 8, 2)
         .write.mode("overwrite").partitionBy("band").parquet(bandsPath)
       val stored = s.read.parquet(bandsPath)
@@ -625,8 +624,7 @@ object DedupQueries {
       val docs = graft.operators.Parallelism.ensure(Tables.documents(s, dir))
       val bandsPath = Scratch.dir("graft_q337") + "/bands"
       Dedup.bandKeys(
-          Dedup.minhashSignatures(
-            Dedup.explodeShingles(docs, "doc_id", "text", 5), "doc_id", 8),
+          Dedup.minhashSignatures(docs, "doc_id", "text", 5, 8),
           "doc_id", 8, 2)
         .write.mode("overwrite").partitionBy("band").parquet(bandsPath)
       val stored = s.read.parquet(bandsPath)

@@ -308,9 +308,7 @@ object StreamingIngest {
     val corpus = spark.read.parquet(path).select(col("doc_id"), col("text"))
     val corpusBands = graft.operators.Dedup.bandKeys(
       graft.operators.Dedup.minhashSignatures(
-        graft.operators.Dedup.explodeShingles(
-          corpus, "doc_id", "text", shingleN),
-        "doc_id", numHashes),
+        corpus, "doc_id", "text", shingleN, numHashes),
       "doc_id", numHashes, rowsPerBand)
     val okKeys = corpusBands.groupBy("band", "band_key")
       .agg(count(lit(1)).as("__n"))

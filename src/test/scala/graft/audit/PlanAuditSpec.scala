@@ -862,11 +862,13 @@ class PlanAuditSpec extends AnyFunSuite {
     // instead (materialize = false, the round-10 loop-audit rule)
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, TestSpark.sf)
-    val bands = graft.operators.Dedup.bandKeys(
-      graft.operators.Dedup.minhashSignatures(
-        graft.operators.Dedup.explodeShingles(docs, "doc_id", "text", 5),
-        "doc_id", 8),
-      "doc_id", 8, 2)
+    val sigs = graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text", 5, 8)
+    // signatures are per-document math: no shingle rows, no shuffle back
+    // to the document
+    val sp = sigs.queryExecution.executedPlan.toString
+    assert(!sp.contains("Generate") && !sp.contains("hashpartitioning(doc_id"),
+      s"signatures must not explode and regroup shingles:\n${sp.take(2000)}")
+    val bands = graft.operators.Dedup.bandKeys(sigs, "doc_id", 8, 2)
     val batch = docs.filter(col("doc_id") % 7 === 3)
       .select((col("doc_id") + 500000L).as("doc_id"),
         concat(col("text"), lit(" tm1 tm2")).as("text"))

@@ -509,6 +509,63 @@ class SplitLifecycleSpec extends AnyFunSuite {
       .filter(col("id") === 200L).count() == 0)
   }
 
+  test("SPLIT leaves no persisted RDD behind (the components checkpoint is freed)") {
+    val d = db()
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+    d.buildSplits("docs").collect()
+    assert(sc.getPersistentRDDs.isEmpty,
+      s"SPLIT leaked: ${sc.getPersistentRDDs.values.map(_.toDebugString).toList}")
+    // and the freed components were really consumed: the sidecar reads back
+    assert(d.splitAssignments("docs").count() == corpusDocs.size.toLong)
+  }
+
+  test("a ROUTE screen that throws cancels the in-flight admission check") {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val d = db()
+    d.buildSplits("docs")
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(d.RouteCheckGroupPrefix))
+          .foreach(g => started.put(e.jobId, g))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, e.jobResult)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the check reads only the ids — slow ones, ~6 s of work in one
+      // task — while the screen's first read of the payload raises
+      val slowId = udf { (i: Long) => Thread.sleep(100); i }
+      val batch = spark.range(0, 60, 1, 1)
+        .select(slowId(col("id") + 1000L).as("id"))
+        .withColumn("payload", when(col("id") >= 0L,
+          raise_error(lit("screen failure"))).cast("string"))
+      val e = intercept[Exception](d.routeArrivals("docs", batch, insert = false))
+      assert(e.getMessage.contains("screen failure"), e.getMessage)
+      org.apache.spark.TestContextShims.drainListenerBus(sc)
+      val groups = started.values.asScala.toSet
+      assert(groups.size == 1, s"one admission-check group expected: $groups")
+      val jobs = sc.statusTracker.getJobIdsForGroup(groups.head)
+      assert(jobs.nonEmpty)
+      jobs.foreach { j =>
+        assert(!sc.statusTracker.getJobInfo(j).exists(
+          _.status == org.apache.spark.JobExecutionStatus.RUNNING),
+          s"admission-check job $j still running after the throw")
+        assert(ended.containsKey(j), s"admission-check job $j never ended")
+      }
+      // the check's short stages may finish first; its slow one must not
+      assert(jobs.exists(j => ended.get(j) != JobSucceeded),
+        "the admission check ran to completion instead of being cancelled")
+      assert(d.splitAssignments("docs").count() == corpusDocs.size.toLong,
+        "a failed screen must commit nothing")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("md5-kmeans layout: appends assign by the SAME rounded rule the training used") {
     val parent = Files.createTempDirectory("graft_md5app").toString
     val d = GraftDatabase.create(spark, parent, "db")

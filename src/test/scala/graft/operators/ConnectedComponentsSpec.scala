@@ -67,4 +67,107 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // representatives are minimal in their cluster
     cc.foreach { case (id, rep) => assert(rep <= id) }
   }
+
+  // The pre-union-find implementation, kept as the reference: distributed
+  // min-label propagation over the mirrored edges until no label moves.
+  // Returns the output schema and rows, with its checkpoints freed.
+  private def refComponents(pairs: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.types.StructType, Set[(Any, Any)]) = {
+    import org.apache.spark.sql.GraftSqlShims.unpersistCheckpoint
+    import org.apache.spark.sql.functions._
+    val fwd = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+    val edges = fwd.unionByName(
+      fwd.select(col("dst").as("src"), col("src").as("dst"))).localCheckpoint(true)
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")).localCheckpoint(true)
+    var converged = false
+    while (!converged) {
+      val next = edges
+        .join(labels.withColumnRenamed("id", "dst")
+          .withColumnRenamed("label", "n_label"), Seq("dst"))
+        .select(col("src").as("id"), col("n_label").as("label"),
+          lit(false).as("is_self"))
+        .unionByName(labels.select(col("id"), col("label"),
+          lit(true).as("is_self")))
+        .groupBy("id")
+        .agg(min("label").as("label"),
+          max(when(col("is_self"), col("label"))).as("old"))
+        .select(col("id"), col("old"), col("label"))
+        .localCheckpoint(true)
+      converged = next.filter(col("label") =!= col("old")).isEmpty
+      unpersistCheckpoint(labels)
+      labels = next
+    }
+    val out = labels.select(col("id"), col("label").as("cluster_rep"))
+    val result = (out.schema, rows(out))
+    unpersistCheckpoint(labels)
+    unpersistCheckpoint(edges)
+    result
+  }
+
+  /** Graphs the two implementations are compared on. */
+  private def graphs: Seq[(String, Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(17)
+    val random = (1 to 3).map { g =>
+      s"random $g" -> Seq.fill(40)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    }
+    random ++ Seq(
+      "duplicates" -> Seq((1L, 2L), (1L, 2L), (2L, 1L), (3L, 4L), (3L, 4L)),
+      "self-pairs" -> Seq((5L, 5L), (6L, 6L), (6L, 7L), (9L, 8L)),
+      // a path listed from its far end: many propagation rounds
+      "long chain" -> (1L until 24L).reverse.map(i => (i + 1, i)),
+      "two stars" -> ((2L to 12L).map(i => (1L, i)) ++ (21L to 30L).map(i => (i, 20L))),
+      "large ids" -> Seq((Long.MaxValue, 3L), (Long.MinValue, 3L), (-7L, Long.MaxValue)))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+    df.collect().map(r => (r.get(0), r.get(1))).toSet
+
+  test("union-find components equal the propagation reference, one partition and forced multi-partition") {
+    for ((name, edges) <- graphs; perPart <- Seq(1000000L, 3L, 1L)) {
+      val pairs = spark.sparkContext.parallelize(edges, 3).toDF("a_id", "b_id")
+      val (wantSchema, want) = refComponents(pairs)
+      val got = Dedup.connectedComponents(pairs, "a_id", "b_id", 50, perPart)
+      assert(got.schema == wantSchema, s"$name/$perPart")
+      assert(rows(got) == want, s"$name/$perPart")
+    }
+  }
+
+  test("int ids come back as ints, equal to the reference") {
+    for ((name, edges) <- graphs.filter(_._1 != "large ids"); perPart <- Seq(1000000L, 2L)) {
+      val pairs = spark.sparkContext
+        .parallelize(edges.map { case (a, b) => (a.toInt, b.toInt) }, 2)
+        .toDF("a_id", "b_id")
+      val got = Dedup.connectedComponents(pairs, "a_id", "b_id", 50, perPart)
+      val (wantSchema, want) = refComponents(pairs)
+      assert(got.schema == wantSchema, s"$name/$perPart")
+      assert(got.schema("id").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(rows(got) == want, s"$name/$perPart")
+    }
+  }
+
+  test("non-integral ids refuse loudly") {
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(Seq(("a", "b")).toDF("a_id", "b_id"))
+    }
+    assert(e.getMessage.contains("integral"))
+  }
+
+  test("multi-partition path: non-convergence fails loud and frees every checkpoint") {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val chain = (1L until 24L).reverse.map(i => (i + 1, i))
+    val pairs = spark.sparkContext.parallelize(chain, 3).toDF("a_id", "b_id")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(pairs, "a_id", "b_id", 1, 1L)
+    }
+    assert(e.getMessage.contains("did not converge"))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name).toList}")
+    // and on success exactly the returned frame stays persisted
+    val cc = Dedup.connectedComponents(pairs, "a_id", "b_id", 50, 1L)
+    assert(cc.count() == 24)
+    assert(spark.sparkContext.getPersistentRDDs.size == 1)
+    org.apache.spark.sql.GraftSqlShims.unpersistCheckpoint(cc)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
 }

@@ -695,8 +695,7 @@ class DedupSpec extends AnyFunSuite {
       (2L, words("beta", 20)),
       (3L, words("gamma", 20))).toDF("doc_id", "text")
     val bands = Dedup.bandKeys(
-      Dedup.minhashSignatures(
-        Dedup.explodeShingles(corpus, "doc_id", "text", 5), "doc_id", 8),
+      Dedup.minhashSignatures(corpus, "doc_id", "text", 5, 8),
       "doc_id", 8, 2)
     // batch: a near-copy of doc 1 (two appended tokens), an update of
     // doc 2 under ITS OWN id, and an unrelated doc
@@ -717,8 +716,7 @@ class DedupSpec extends AnyFunSuite {
     // maxBucketSize = 3 the key drops and an arriving copy finds nothing
     val hot = (10L to 13L).map(i => (i, words("dup", 20))).toDF("doc_id", "text")
     val hotBands = Dedup.bandKeys(
-      Dedup.minhashSignatures(
-        Dedup.explodeShingles(hot, "doc_id", "text", 5), "doc_id", 8),
+      Dedup.minhashSignatures(hot, "doc_id", "text", 5, 8),
       "doc_id", 8, 2)
     val probe = Seq((99L, words("dup", 20))).toDF("doc_id", "text")
     assert(Dedup.incomingNearDups(hotBands, hot, probe, "doc_id", "text",
@@ -737,8 +735,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = (1L to 8L).map(i =>
       (i, words(s"w${i % 3}", 20))).toDF("doc_id", "text")
     val bands = Dedup.bandKeys(
-      Dedup.minhashSignatures(
-        Dedup.explodeShingles(corpus, "doc_id", "text", 5), "doc_id", 8),
+      Dedup.minhashSignatures(corpus, "doc_id", "text", 5, 8),
       "doc_id", 8, 2)
     val batch = Seq(
       (100L, words("w1", 20) + " x"),
@@ -763,8 +760,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = (1L to 8L).map(i =>
       (i, words(s"w${i % 3}", 20))).toDF("doc_id", "text")
     val bands = Dedup.bandKeys(
-      Dedup.minhashSignatures(
-        Dedup.explodeShingles(corpus, "doc_id", "text", 5), "doc_id", 8),
+      Dedup.minhashSignatures(corpus, "doc_id", "text", 5, 8),
       "doc_id", 8, 2)
     val hit = Seq((100L, words("w1", 20))).toDF("doc_id", "text")
     val miss = Seq((200L, words("zz", 20))).toDF("doc_id", "text")
@@ -776,5 +772,114 @@ class DedupSpec extends AnyFunSuite {
     assert(missOut.schema === hitOut.schema,
       s"path-dependent screen schema: ${missOut.schema.treeString} vs " +
         hitOut.schema.treeString)
+  }
+
+  // The pre-kernel signature formula, kept as the reference the kernel
+  // must reproduce: explode the distinct shingles, one md5 each, and
+  // group them back per document to the min of each 4-hex chunk.
+  private def refSignatures(df: org.apache.spark.sql.DataFrame, n: Int,
+      k: Int): org.apache.spark.sql.DataFrame = {
+    val hashed = Dedup.explodeShingles(df, "doc_id", "text", n)
+      .withColumn("__h", md5(col("shingle")))
+    val mins = (0 until k).map(s =>
+      min(substring(col("__h"), s * 4 + 1, 4)).as(s"mh$s"))
+    hashed.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("minhash signature kernel equals the explode/md5/groupBy formula, codegen and interpreted") {
+    def words(n: Int): String = (1 to n).map(i => s"w$i").mkString(" ")
+    val fixed = Seq(
+      "the quick brown fox jumps over the lazy dog the quick brown fox",
+      "café au lait café noir café crème café au lait",
+      "日本語 の テキスト 処理 日本語 の テキスト 処理 です",
+      "𝄞 music 😀 smile 𝄞 music 😀 smile 𝄞",
+      // every byte Java's \s matches separates; runs collapse
+      "a\tb\nc\u000Bd\fe\rf  g \t\n h",
+      // U+00A0 is NOT a separator: "a\u00A0b" is one token
+      "a\u00A0b c\u00A0d e f g\u00A0h",
+      "  leading and trailing whitespace around the words  ",
+      "x x x x x x x x",
+      "", "   ", null)
+    val modes = Seq(
+      "CODEGEN_ONLY" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.fallback" -> "false"),
+      "NO_CODEGEN" -> Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    for (n <- Seq(1, 3, 5)) {
+      // exactly n−1 tokens (no signature) and exactly n (one shingle)
+      val texts = fixed ++ Seq(words(n - 1), words(n), words(n) + "\t")
+      // an RDD-backed frame: a local relation would be folded by the
+      // optimizer's interpreted projection and never reach codegen
+      val df = spark.sparkContext.parallelize(
+        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 2)
+        .toDF("doc_id", "text")
+      for ((mode, conf) <- modes; k <- Seq(1, 4, 8)) withConf(conf: _*) {
+        val got = Dedup.minhashSignatures(df, "doc_id", "text", n, k)
+        val rows = got.collect()
+        // the final adaptive plan marks whole-stage-codegen'd operators *(n)
+        val plan = got.queryExecution.executedPlan.toString
+        assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"),
+          s"$mode picked the wrong evaluation path:\n$plan")
+        def byId(rs: Array[org.apache.spark.sql.Row]) =
+          rs.map(r => r.getLong(0) -> (1 to k).map(r.getString)).toMap
+        val want = byId(refSignatures(df, n, k).collect())
+        assert(got.columns.toSeq == "doc_id" +: (0 until k).map(s => s"mh$s"))
+        assert(byId(rows) == want, s"$mode n=$n k=$k")
+        // one row per qualifying document; the short ones, empty and null get none
+        assert(rows.length == want.size)
+        assert(!want.contains(texts.indexOf(words(n - 1)).toLong))
+        assert(want.contains(texts.indexOf(words(n)).toLong))
+      }
+    }
+  }
+
+  test("minhash signature kernel: text that is not valid UTF-8 tokenizes like the regex path") {
+    // a lone continuation byte, a truncated lead byte and an encoded
+    // surrogate, around ASCII separators
+    val df = Seq(
+      (1L, "80 61 62 20 63 c3 20 64 65 0a ed a0 80 66 20 67 68"),
+      (2L, "ff fe 20 61 20 62 09 63 20 e2 82 20 64 20 65"))
+      .toDF("doc_id", "hex")
+      .select(col("doc_id"),
+        unhex(regexp_replace(col("hex"), " ", "")).cast("string").as("text"))
+    for (n <- Seq(1, 3)) {
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString)).toMap
+      val want = rows(refSignatures(df, n, 8))
+      assert(want.nonEmpty)
+      assert(rows(Dedup.minhashSignatures(df, "doc_id", "text", n, 8)) == want, s"n=$n")
+    }
+  }
+
+  test("minhash signature plan: one per-row kernel, no generator, no per-document shuffle") {
+    val corpus = graft.Tables.documents(spark, TestSpark.sf)
+    val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", 5, 8)
+    val plan = sig.queryExecution.executedPlan.toString
+    assert(!plan.contains("Generate"),
+      s"signatures must not explode shingles into rows:\n$plan")
+    assert(!plan.contains("hashpartitioning(doc_id"),
+      s"signatures must not shuffle shingles back to their document:\n$plan")
+    val exprs = sig.queryExecution.optimizedPlan.collect { case p => p.expressions }.flatten
+    def count(name: String) =
+      exprs.map(_.collect { case e if e.getClass.getSimpleName == name => e }.size).sum
+    assert(count("MinhashSignature") == 1,
+      s"the kernel must be evaluated once per row:\n${sig.queryExecution.optimizedPlan}")
+    assert(count("Md5") == 0)
+  }
+
+  test("minhash signature kernel rejects out-of-range parameters") {
+    intercept[IllegalArgumentException](Dedup.minhashSignatures(docs, "doc_id", "text", 0, 8))
+    intercept[IllegalArgumentException](Dedup.minhashSignatures(docs, "doc_id", "text", 5, 9))
+    intercept[IllegalArgumentException](Dedup.minhashSignatures(docs, "doc_id", "text", 5, 0))
   }
 }

@@ -8,4 +8,10 @@ object TestContextShims {
     */
   def restoreCheckpointDir(sc: SparkContext, dir: Option[String]): Unit =
     sc.checkpointDir = dir
+
+  /** Blocks until every posted listener event has been delivered, so a
+    * spec's listener has seen all jobs that started or ended so far.
+    */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

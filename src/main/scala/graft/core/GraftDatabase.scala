@@ -23,7 +23,19 @@ import graft.operators.{ProductQuantization, SimilaritySearch, TextAnalysis, Vec
   *   <root>/<collection>/_graft_meta.ddl   // collection schema (DDL string)
   *   <root>/<collection>/part-....parquet  // data files (cluster_id=... dirs
   *                                         //   after REINDEX)
+  *   <root>/graft_<kind>_<collection>/     // a managed artifact (postings =
+  *                                         //   textindex, minhash, winsig,
+  *                                         //   dhash, splits, attrs):
+  *       meta.json                         //   typed ArtifactMeta, the commit
+  *       stale                             //   set by every mutation
+  *       gen_<g>/<table>/...parquet        //   the pointer's generation
+  *                                         //   (dhash: flat, no gen_)
+  *       gen_<g>/tombstones/               //   dead (id, seg) versions
   * }}}
+  *
+  * Every artifact goes through [[ManagedArtifact]] (meta, stale marker,
+  * generation commit, delete); the four diffable ones (postings, minhash,
+  * winsig, attrs) share [[SegmentedArtifact]]'s refresh and compaction.
   *
   * All paths go through Hadoop [[FileSystem]], so a database root can live on
   * HDFS/S3/local alike; nothing below assumes a local disk. Mutation commands
@@ -71,12 +83,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val dir = collDir(name)
     if (!fs.exists(dir)) throw new IllegalStateException(s"no such collection: $name")
     fs.delete(dir, true)
-    deleteTextIndex(name) // the artifacts must not outlive their collection
-    deleteMinhashIndex(name)
-    deleteWinsigIndex(name)
-    deleteDhashIndex(name)
-    deleteSplitsSidecar(name)
-    deleteAttrsIndex(name)
+    // the artifacts must not outlive their collection
+    artifacts(name).foreach(_.delete())
     if (fs.exists(batchLogDir(name))) { fs.delete(batchLogDir(name), true); () }
     ()
   }
@@ -110,24 +118,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     indexType(name).foreach(t => rows += ((s"vector:$t", "live")))
     if (fs.exists(new Path(collDir(name), TokenizerMetaFile)))
       rows += (("tokenizer", "live"))
-    if (fs.exists(textIndexMetaPath(name)))
-      rows += (("postings",
-        if (fs.exists(textIndexStaleMarker(name))) "stale" else "live"))
-    if (fs.exists(new Path(minhashDir(name), "meta.json")))
-      rows += (("minhash",
-        if (fs.exists(minhashStaleMarker(name))) "stale" else "live"))
-    if (fs.exists(new Path(winsigDir(name), "meta.json")))
-      rows += (("winsig",
-        if (fs.exists(winsigStaleMarker(name))) "stale" else "live"))
-    if (fs.exists(dhashMetaPath(name)))
-      rows += (("dhash",
-        if (fs.exists(dhashStaleMarker(name))) "stale" else "live"))
     // the split sidecar never goes stale: assignments are point-in-time
     // placements by design (a re-SPLIT rebuilds, mutations don't move)
-    if (fs.exists(splitsMetaPath(name))) rows += (("splits", "live"))
-    if (fs.exists(attrsMetaPath(name)))
-      rows += (("attrs",
-        if (fs.exists(attrsStaleMarker(name))) "stale" else "live"))
+    artifacts(name).foreach(a => a.state.foreach(st => rows += ((a.label, st))))
     rows.sortBy(_._1).toSeq.toDF("index_type", "state")
   }
 
@@ -232,11 +225,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def bulkInsert(name: String, df: DataFrame): Unit = {
     requireCollection(name)
-    invalidateTextIndex(name) // appended rows are not in the stored postings
-    invalidateMinhashIndex(name) // ... nor in the stored signatures
-    invalidateWinsigIndex(name) // ... nor in the stored window sigs
-    invalidateDhashIndex(name) // ... nor in the stored dhash bands
-    invalidateAttrsIndex(name) // ... nor in the stored attributes
+    invalidateArtifacts(name) // appended rows are in no stored artifact
     // derived columns the existing data carries (quantized copy, cluster
     // assignment) are recomputed for arriving rows in the same write pass —
     // an append may never produce rows missing a column the readers expect.
@@ -378,13 +367,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur00 = attrs match {
       case None => cur000
       case Some(spec) =>
-        require(fs.exists(attrsMetaPath(name)),
+        val at = this.attrs(name) // the method, not the attrs= parameter
+        val snap = at.snapshot
+        require(snap.isDefined,
           s"EXPORT attrs= needs the attribute sidecar on $name — run TAG first")
-        require(!fs.exists(attrsStaleMarker(name)),
+        require(snap.get.live,
           s"attribute sidecar on $name is stale (a mutation landed after " +
             "the last TAG) — TAG mode=refresh first")
         cur000.join(
-          docAttrs(name).filter(attrsPredicate(spec)).select("id"),
+          attrRowsOf(at, snap.get).filter(attrsPredicate(spec)).select("id"),
           Seq("id"), "left_semi")
     }
     // exclude=<collection>: anti-join against a COMMITTED id-keyed
@@ -423,7 +414,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       case Some(sv) =>
         require(Seq("train", "val", "test").contains(sv),
           s"EXPORT split= must be train, val, or test, got '$sv'")
-        require(fs.exists(splitsMetaPath(name)),
+        require(splits(name).exists,
           s"EXPORT split=$sv needs the split sidecar on $name — run SPLIT first")
         curAll.join(
           splitAssignments(name).filter(col("split") === sv).select("id"),
@@ -755,11 +746,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def update(name: String, updates: DataFrame, key: String = "id"): Unit = {
     requireCollection(name)
-    invalidateTextIndex(name)
-    invalidateMinhashIndex(name)
-    invalidateWinsigIndex(name)
-    invalidateDhashIndex(name)
-    invalidateAttrsIndex(name)
+    invalidateArtifacts(name)
     val current = read(name)
     val hasIndex = current.columns.contains("cluster_id")
     val hasQuant = current.columns.contains(QuantCol)
@@ -803,11 +790,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def delete(name: String, predicate: Column): Unit = {
     requireCollection(name)
-    invalidateTextIndex(name)
-    invalidateMinhashIndex(name)
-    invalidateWinsigIndex(name)
-    invalidateDhashIndex(name)
-    invalidateAttrsIndex(name)
+    invalidateArtifacts(name)
     rewrite(name, graft.operators.Mutations.deleteWhere(read(name), predicate))
   }
 
@@ -834,11 +817,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def sync(name: String, snapshot: DataFrame, key: String = "id"): DataFrame = {
     requireCollection(name)
-    invalidateTextIndex(name)
-    invalidateMinhashIndex(name)
-    invalidateWinsigIndex(name)
-    invalidateDhashIndex(name)
-    invalidateAttrsIndex(name)
+    invalidateArtifacts(name)
     import spark.implicits._
     val next = align(name, snapshot)
     val current = read(name)
@@ -972,43 +951,41 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   }
 
   def searchText(name: String, rawTerms: Seq[String], k1: Double = 1.2,
-      b: Double = 0.75, k: Int = 20): DataFrame = {
+      b: Double = 0.75, k: Int = 20): DataFrame =
+    rankText(name, rawTerms)(
+      TextAnalysis.bm25FromIndex(_, _, "id", _, k1, b, k),
+      TextAnalysis.bm25(_, "id", "payload", _, k1, b, k))
+
+  /** The SEARCHTEXT artifact dispatch shared by every scorer: a LIVE
+    * postings artifact serves from the query terms' `term_bucket=`
+    * partitions (tombstoned (id, seg) versions drop via a broadcast
+    * anti-join on both frames, the filter staying scan-side) — a stale
+    * posting must never serve, so a stale or absent artifact routes to
+    * the exact one-pass rescan. Both the index and the rescan tokenizer
+    * store normalized lowercase [a-z0-9]+ tokens, so incoming terms go
+    * through the SAME rule (lowercase, split at non-alphanumerics, drop
+    * empties, dedup) — a verbatim 'Vector' could never match either path.
+    */
+  private def rankText(name: String, rawTerms: Seq[String])(
+      stored: (DataFrame, DataFrame, Seq[String]) => DataFrame,
+      rescan: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     requireCollection(name)
-    // both the postings index and the rescan tokenizer store normalized
-    // lowercase [a-z0-9]+ tokens — a verbatim 'Vector' or 'data-merge'
-    // could never match on either path (a silent empty result at the
-    // command surface). Incoming terms go through the SAME rule:
-    // lowercase, split at non-alphanumerics, drop empties, dedup.
     val terms = normalizeTerms(rawTerms)
     require(terms.nonEmpty,
       s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    // the stored path serves only a LIVE artifact: a stale marker (any
-    // mutation since the last build/refresh) routes to the exact rescan
-    // — a stale posting must never serve
-    if (fs.exists(new Path(tDir, "meta.json")) &&
-        !fs.exists(textIndexStaleMarker(name))) {
-      val buckets = parseTextIndexBuckets(
-        readString(fs, new Path(tDir, "meta.json")))
-      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-      val postings = readArtifact(
-          new Path(textGenDir(name), "postings"), PostingsSchema)
-        .filter(col("term_bucket").isin(wanted: _*) &&
-          col("term").isin(terms: _*))
-      // segment-aware read: tombstoned (id, seg) versions drop via a
-      // broadcast anti-join on BOTH frames (partition pruning at the
-      // postings scan is untouched — the filter stays scan-side)
-      val livePostings = postings
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      val doclens = liveDoclens(name).select(col("id"), col("dl"))
-      graft.operators.TextAnalysis.bm25FromIndex(livePostings, doclens, "id",
-        terms, k1, b, k)
-    } else {
-      val cur = read(name)
-      require(cur.columns.contains("payload"),
-        s"SEARCHTEXT needs a payload column on $name " +
-          s"(has: ${cur.columns.mkString(", ")})")
-      graft.operators.TextAnalysis.bm25(cur, "id", "payload", terms, k1, b, k)
+    val post = postings(name)
+    post.snapshot.filter(_.live) match {
+      case Some(s) =>
+        val wanted = terms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
+        stored(post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
+            col("term").isin(terms: _*))),
+          post.live(s, "doclens").select(col("id"), col("dl")), terms)
+      case None =>
+        val cur = read(name)
+        require(cur.columns.contains("payload"),
+          s"SEARCHTEXT needs a payload column on $name " +
+            s"(has: ${cur.columns.mkString(", ")})")
+        rescan(cur, terms)
     }
   }
 
@@ -1020,35 +997,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * otherwise the one-pass rescan. Stored ≡ rescan bit-identically.
     */
   def searchTextQL(name: String, rawTerms: Seq[String],
-      mu: Double = 2000.0, k: Int = 20): DataFrame = {
-    requireCollection(name)
-    val terms = normalizeTerms(rawTerms)
-    require(terms.nonEmpty,
-      s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    if (fs.exists(new Path(tDir, "meta.json")) &&
-        !fs.exists(textIndexStaleMarker(name))) {
-      val buckets = parseTextIndexBuckets(
-        readString(fs, new Path(tDir, "meta.json")))
-      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-      val postings = readArtifact(
-          new Path(textGenDir(name), "postings"), PostingsSchema)
-        .filter(col("term_bucket").isin(wanted: _*) &&
-          col("term").isin(terms: _*))
-      val livePostings = postings
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      val doclens = liveDoclens(name).select(col("id"), col("dl"))
-      graft.operators.TextAnalysis.dirichletQLFromIndex(livePostings,
-        doclens, "id", terms, mu, k)
-    } else {
-      val cur = read(name)
-      require(cur.columns.contains("payload"),
-        s"SEARCHTEXT needs a payload column on $name " +
-          s"(has: ${cur.columns.mkString(", ")})")
-      graft.operators.TextAnalysis.dirichletQL(cur, "id", "payload", terms,
-        mu, k)
-    }
-  }
+      mu: Double = 2000.0, k: Int = 20): DataFrame =
+    rankText(name, rawTerms)(
+      TextAnalysis.dirichletQLFromIndex(_, _, "id", _, mu, k),
+      TextAnalysis.dirichletQL(_, "id", "payload", _, mu, k))
 
   /** SEARCHTEXT score=jm — Jelinek–Mercer query-likelihood ranking
     * ([[graft.operators.TextAnalysis.jelinekMercerQL]], the linear-
@@ -1057,35 +1009,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * bit-identically.
     */
   def searchTextJM(name: String, rawTerms: Seq[String],
-      lambda: Double = 0.7, k: Int = 20): DataFrame = {
-    requireCollection(name)
-    val terms = normalizeTerms(rawTerms)
-    require(terms.nonEmpty,
-      s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    if (fs.exists(new Path(tDir, "meta.json")) &&
-        !fs.exists(textIndexStaleMarker(name))) {
-      val buckets = parseTextIndexBuckets(
-        readString(fs, new Path(tDir, "meta.json")))
-      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-      val postings = readArtifact(
-          new Path(textGenDir(name), "postings"), PostingsSchema)
-        .filter(col("term_bucket").isin(wanted: _*) &&
-          col("term").isin(terms: _*))
-      val livePostings = postings
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      val doclens = liveDoclens(name).select(col("id"), col("dl"))
-      graft.operators.TextAnalysis.jelinekMercerQLFromIndex(livePostings,
-        doclens, "id", terms, lambda, k)
-    } else {
-      val cur = read(name)
-      require(cur.columns.contains("payload"),
-        s"SEARCHTEXT needs a payload column on $name " +
-          s"(has: ${cur.columns.mkString(", ")})")
-      graft.operators.TextAnalysis.jelinekMercerQL(cur, "id", "payload",
-        terms, lambda, k)
-    }
-  }
+      lambda: Double = 0.7, k: Int = 20): DataFrame =
+    rankText(name, rawTerms)(
+      TextAnalysis.jelinekMercerQLFromIndex(_, _, "id", _, lambda, k),
+      TextAnalysis.jelinekMercerQL(_, "id", "payload", _, lambda, k))
 
   /** REINDEX type=postings — materialize the text index as a managed
     * artifact beside the collection: term-grain postings partitioned by
@@ -1133,12 +1060,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"REINDEX type=postings needs a payload column on $name")
-    val dir = textIndexDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeTextSegment(name, cur, seg = 0, buckets = nBuckets,
-      positions = positions, genDir = new Path(dir, "gen_0"))
-    writeString(fs, textIndexMetaPath(name),
-      s"""{"type":"postings","buckets":$nBuckets,"positions":$positions,"gen":0}""")
+    postings(name).build(ArtifactMeta("postings",
+      Seq("buckets" -> nBuckets, "positions" -> positions)), cur)
   }
 
   /** One index segment: postings (term-bucket-partitioned, `seg`-tagged)
@@ -1147,8 +1070,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * in the same bucket layout — for `rows`, APPENDED into the shared
     * artifact directories.
     */
-  private def writeTextSegment(name: String, rows: DataFrame, seg: Int,
-      buckets: Int, positions: Boolean, genDir: Path): Unit = {
+  private def writeTextSegment(rows: DataFrame, seg: Int, genDir: Path,
+      meta: ArtifactMeta): Unit = {
+    val buckets = textBuckets(meta)
     def bucketed(df: DataFrame): DataFrame = df
       .withColumn("seg", lit(seg))
       .withColumn("term_bucket",
@@ -1162,7 +1086,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .write.mode("append").option("compression", Compression)
       .partitionBy("term_bucket")
       .parquet(new Path(genDir, "postings").toString)
-    if (positions)
+    if (hasPositions(meta))
       bucketed(graft.operators.TextAnalysis
           .invertedIndexPositional(rows, "id", "payload"))
         .write.mode("append").option("compression", Compression)
@@ -1209,53 +1133,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshPostings(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(textIndexMetaPath(name)),
-      s"no postings artifact on $name to refresh — run REINDEX type=postings first")
-    val buckets = parseTextIndexBuckets(
-      readString(fs, textIndexMetaPath(name)))
-    val genDir = textGenDir(name)
-    val cur = read(name)
-    require(cur.columns.contains("payload"),
-      s"REINDEX type=postings needs a payload column on $name")
-    val curKeys = cur.select(col("id"), md5(col("payload")).as("payload_md5"))
-    val indexed = liveDoclens(name)
-      .select(col("id"), col("payload_md5"), col("seg"))
-    // changed docs appear on BOTH sides: as an arrival (new md5 not
-    // indexed) and as a departure (old version's (id, seg) tombstoned).
-    // Both frames are DELTA-sized: materialize each ONCE (eager
-    // checkpoint) — without this, every downstream job (the segment
-    // writes, the tombstone swap, the emptiness checks) re-runs the
-    // whole corpus-vs-index diff, and the refresh pays the corpus pass
-    // it exists to avoid several times over (RefreshBench)
-    val arrivals = curKeys.join(indexed.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = indexed.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    if (!arrivals.isEmpty) {
-      val newRows = cur.join(broadcast(arrivals.select("id")), Seq("id"))
-      // coalesce: an artifact built over an empty collection has a
-      // 0-row doclens — max(seg) is null and the first real segment is 1
-      val nextSeg = readArtifact(new Path(genDir, "doclens"), DoclensSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1
-      writeTextSegment(name, newRows, nextSeg, buckets,
-        positions = textIndexHasPositions(name), genDir = genDir)
-    }
-    // tombstones: materialize the union BEFORE touching the old file
-    // (the copy-on-write swap discipline — never overwrite a path the
-    // plan still reads)
-    val tombPath = new Path(genDir, "tombstones")
-    if (!departures.isEmpty) {
-      val newTombs = tombstones(name).union(departures)
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(textIndexStaleMarker(name), false)
+    postings(name).refresh(name, read(name))
     ()
   }
 
@@ -1281,55 +1159,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def compactPostings(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(textIndexMetaPath(name)),
-      s"no postings artifact on $name to compact")
-    require(!fs.exists(textIndexStaleMarker(name)),
-      s"postings artifact on $name is stale — REINDEX type=postings " +
-        "(or mode=refresh) first, then compact")
-    val dir = textIndexDir(name)
-    val g = textIndexGen(name)
-    val genDir = textGenDir(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true) // earlier crash orphan
-    val hasPos = textIndexHasPositions(name)
-    val buckets = parseTextIndexBuckets(
-      readString(fs, textIndexMetaPath(name)))
-    def live(sub: String, schema: StructType): DataFrame =
-      readArtifact(new Path(genDir, sub), schema)
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-        .withColumn("seg", lit(0))
-    live("postings", PostingsSchema)
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("term_bucket")
-      .parquet(new Path(nextDir, "postings").toString)
-    live("doclens", DoclensSchema)
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "doclens").toString)
-    if (hasPos)
-      live("positions", PositionsSchema)
-        .write.mode("overwrite").option("compression", Compression)
-        .partitionBy("term_bucket")
-        .parquet(new Path(nextDir, "positions").toString)
-    // THE commit: one small-file overwrite moves the pointer
-    writeString(fs, textIndexMetaPath(name),
-      s"""{"type":"postings","buckets":$buckets,"positions":$hasPos,"gen":${g + 1}}""")
-    // best-effort cleanup of every generation but the live one (also
-    // sweeps orphans a crashed earlier compaction left behind)
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    postings(name).compact(name)
   }
 
-  /** Whether the stored text index carries positional rows. */
-  private def textIndexHasPositions(name: String): Boolean = {
-    val meta = new Path(textIndexDir(name), "meta.json")
-    fs.exists(meta) &&
-      """"positions"\s*:\s*true""".r
-        .findFirstIn(readString(fs, meta)).isDefined
-  }
+  private def hasPositions(meta: ArtifactMeta): Boolean =
+    meta.bool("positions").contains(true)
 
   /** SEARCHPHRASE — exact consecutive-token phrase match. With a LIVE
     * positional artifact (REINDEX type=postings;positions=true) the
@@ -1353,25 +1187,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       "[a-z0-9]+".r.findAllIn(t.toLowerCase))
     require(phrase.nonEmpty,
       s"no searchable phrase after normalization (got: ${rawPhrase.mkString(" ")})")
-    val tDir = textIndexDir(name)
-    val positional =
-      if (textIndexHasPositions(name) &&
-          !fs.exists(textIndexStaleMarker(name))) {
-        val buckets = parseTextIndexBuckets(
-          readString(fs, new Path(tDir, "meta.json")))
-        val wanted = phrase.map(bucketOfTerm(_, buckets)).distinct
-        readArtifact(new Path(textGenDir(name), "positions"),
-            PositionsSchema)
-          .filter(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(phrase.distinct: _*))
-          .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      } else {
-        val cur = read(name)
-        require(cur.columns.contains("payload"),
-          s"SEARCHPHRASE needs a payload column on $name")
-        graft.operators.TextAnalysis
-          .invertedIndexPositional(cur, "id", "payload")
-      }
+    val positional = positionalRows(name, phrase, "SEARCHPHRASE")
     graft.operators.TextAnalysis.phraseHits(positional, "id", phrase)
       .select(col("id"), col("n_hits"))
       .orderBy(desc("n_hits"), col("id"))
@@ -1397,65 +1213,70 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(terms.size >= 2,
       s"SEARCHPROXIMITY needs >= 2 distinct terms after normalization " +
         s"(got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    val positional =
-      if (textIndexHasPositions(name) &&
-          !fs.exists(textIndexStaleMarker(name))) {
-        val buckets = parseTextIndexBuckets(
-          readString(fs, new Path(tDir, "meta.json")))
-        val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-        readArtifact(new Path(textGenDir(name), "positions"),
-            PositionsSchema)
-          .filter(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(terms: _*))
-          .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      } else {
-        val cur = read(name)
-        require(cur.columns.contains("payload"),
-          s"SEARCHPROXIMITY needs a payload column on $name")
-        graft.operators.TextAnalysis
-          .invertedIndexPositional(cur, "id", "payload")
-      }
+    val positional = positionalRows(name, terms, "SEARCHPROXIMITY")
     graft.operators.TextAnalysis.minCoverSpans(positional, "id", terms)
       .orderBy(col("min_span"), col("id"))
       .limit(k)
   }
 
-  /** The tombstones frame `(id, seg)` — empty when no version was ever
-    * replaced or deleted (anti-joining against it is then free).
+  /** Positional rows `(term, id, pos, seg)` for `terms`: from a LIVE
+    * positional artifact, ONLY the terms' `term_bucket=` partitions of
+    * the positions table (tombstoned versions dropped); otherwise the
+    * exact rescan recomputes them from the collection in-query.
     */
-  private def tombstones(name: String): DataFrame =
-    readArtifact(new Path(textGenDir(name), "tombstones"), TombstonesSchema)
+  private def positionalRows(name: String, terms: Seq[String],
+      command: String): DataFrame = {
+    val post = postings(name)
+    post.snapshot.filter(s => s.live && hasPositions(s.meta)) match {
+      case Some(s) =>
+        val wanted = terms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
+        post.live(s, "positions", Some(col("term_bucket").isin(wanted: _*) &&
+          col("term").isin(terms.distinct: _*)))
+      case None =>
+        val cur = read(name)
+        require(cur.columns.contains("payload"),
+          s"$command needs a payload column on $name")
+        TextAnalysis.invertedIndexPositional(cur, "id", "payload")
+    }
+  }
 
-  /** Doclens with dead versions filtered out — the live document set of
-    * the stored index (its row count and `dl` sum are the BM25 N and
-    * avgdl). The tombstone side is a broadcast anti-join: it holds one
-    * row per EVER-replaced version, orders of magnitude below doc count.
+  // ---- managed artifacts --------------------------------------------------
+  //
+  // One registry: DROP deletes every artifact, LISTINDEXES reports each
+  // one's state, and every mutation marks them stale (the split sidecar
+  // excepted — its placements are point-in-time by design).
+
+  private def artifactDir(kind: String, name: String): Path =
+    new Path(root, s"$ReservedPrefix${kind}_$name")
+
+  private def artifacts(name: String): Seq[ManagedArtifact] = Seq(
+    postings(name), minhash(name), winsig(name), dhash(name), splits(name),
+    attrs(name))
+
+  private def invalidateArtifacts(name: String): Unit =
+    artifacts(name).foreach(_.invalidate())
+
+  /** The stored text index (REINDEX type=postings): term-grain postings
+    * partitioned by `term_bucket`, the doc-length companion carrying the
+    * `payload_md5` diff key, and — built `positions=true` — positional
+    * rows in the same bucket layout. Stale artifacts are KEPT: they are
+    * the diff base a refresh needs to index only the delta.
     */
-  private def liveDoclens(name: String): DataFrame =
-    readArtifact(new Path(textGenDir(name), "doclens"), DoclensSchema)
-      .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
+  private def postings(name: String): SegmentedArtifact =
+    new SegmentedArtifact(spark, fs, artifactDir("textindex", name),
+      "postings", SegmentedFamily("postings artifact",
+        "REINDEX type=postings", "REINDEX type=postings (or mode=refresh)",
+        tables = m => Seq(
+          ArtifactTable("postings", PostingsSchema, Seq("term_bucket")),
+          ArtifactTable("doclens", DoclensSchema)) ++
+          (if (hasPositions(m)) Seq(ArtifactTable("positions",
+            PositionsSchema, Seq("term_bucket"))) else Nil),
+        docs = "doclens", diffKey = md5(col("payload")),
+        validate = m => { textBuckets(m); () },
+        writeSegment = writeTextSegment))
 
-  private def textIndexDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}textindex_$name")
-
-  private def textIndexMetaPath(name: String): Path =
-    new Path(textIndexDir(name), "meta.json")
-
-  /** The artifact's current GENERATION — the pointer that makes
-    * compaction atomic: data lives under `gen_<g>/`, and the only
-    * commit point is the single meta.json overwrite that moves `g`.
-    * Readers resolve through the pointer, so they see the old
-    * generation until the new one is complete, and a crash mid-compact
-    * leaves an orphan directory, never a half-artifact.
-    */
-  private def textIndexGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, textIndexMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def textGenDir(name: String): Path =
-    new Path(textIndexDir(name), s"gen_${textIndexGen(name)}")
+  private def textBuckets(m: ArtifactMeta): Int =
+    m.requireInt("buckets", s"text index meta has no buckets field: ${m.json}")
 
   // artifact frame schemas — reads pass them EXPLICITLY, so a
   // dynamic-partition directory holding zero data files (an empty
@@ -1467,89 +1288,53 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     "term STRING, id BIGINT, pos BIGINT, seg INT, term_bucket INT")
   private val DoclensSchema = StructType.fromDDL(
     "id BIGINT, dl BIGINT, payload_md5 STRING, seg INT")
-  private val TombstonesSchema = StructType.fromDDL("id BIGINT, seg INT")
-
-  /** Read an artifact frame with its declared schema; a missing
-    * directory is the empty frame (nothing was ever written there).
-    */
-  private def readArtifact(p: Path,
-      schema: StructType): DataFrame = {
-    if (fs.exists(p))
-      graft.operators.ScaleKnobs.withDriverListing(spark)(
-        spark.read.schema(schema).parquet(p.toString))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private def textIndexStaleMarker(name: String): Path =
-    new Path(textIndexDir(name), "stale")
+  // the (id, payload_md5) diff base of the minhash and winsig artifacts
+  private val DocsSchema = StructType.fromDDL(
+    "id BIGINT, payload_md5 STRING, seg INT")
 
   // ---- minhash signature artifact (ingest-time dedup screening) ---------
 
-  private def minhashDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}minhash_$name")
-
-  private def minhashStaleMarker(name: String): Path =
-    new Path(minhashDir(name), "stale")
-
-  private def minhashMetaPath(name: String): Path =
-    new Path(minhashDir(name), "meta.json")
-
-  private def minhashGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, minhashMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def minhashGenDir(name: String): Path =
-    new Path(minhashDir(name), s"gen_${minhashGen(name)}")
+  private def minhash(name: String): SegmentedArtifact =
+    new SegmentedArtifact(spark, fs, artifactDir("minhash", name), "minhash",
+      SegmentedFamily("minhash artifact", "REINDEX type=minhash",
+        "REINDEX type=minhash (or mode=refresh)",
+        tables = _ => Seq(
+          ArtifactTable("bands", MinhashBandsSchema, Seq("band", "band_bucket")),
+          ArtifactTable("docs", DocsSchema)),
+        docs = "docs", diffKey = md5(col("payload")),
+        validate = m => { minhashParams(m); sigBuckets(m, "minhash", name); () },
+        writeSegment = writeMinhashSegment(name)))
 
   private val MinhashBandsSchema = StructType.fromDDL(
     "id BIGINT, band_key STRING, seg INT, band INT, band_bucket INT")
 
-  private def minhashTombstones(name: String): DataFrame =
-    readArtifact(new Path(minhashGenDir(name), "tombstones"),
-      TombstonesSchema)
-
-  private def liveMinhashBands(name: String): DataFrame =
-    readArtifact(new Path(minhashGenDir(name), "bands"), MinhashBandsSchema)
-      .join(broadcast(minhashTombstones(name)), Seq("id", "seg"), "left_anti")
-      // band_bucket rides along: the probe derives the batch's bucket set
-      // from the same md5 slice and pushes it as a partition filter
-      .select("id", "band", "band_key", "band_bucket")
-
-  private def liveMinhashDocs(name: String): DataFrame =
-    readArtifact(new Path(minhashGenDir(name), "docs"), WinsigDocsSchema)
-      .join(broadcast(minhashTombstones(name)), Seq("id", "seg"), "left_anti")
-
-  private def minhashParams(name: String): (Int, Int, Int) = {
-    val meta = readString(fs, minhashMetaPath(name))
+  private def minhashParams(m: ArtifactMeta): (Int, Int, Int) = {
     def intOf(k: String): Int =
-      s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-          s"minhash meta has no $k field: $meta"))
+      m.requireInt(k, s"minhash meta has no $k field: ${m.json}")
     (intOf("shingleN"), intOf("numHashes"), intOf("rowsPerBand"))
   }
 
   // Missing buckets field = an artifact built before the derived
-  // sub-bucket layouts landed: its partition dirs have no band_bucket
-  // layer, so segments appended under the current layout would mix flat
-  // files with partition dirs (the round-11 discovery-conflict rule).
-  // The supported upgrade is a full rebuild — say so, actionably.
-  private def minhashBuckets(name: String): Int =
-    """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, minhashMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"minhash meta on $name has no buckets field (artifact predates " +
-          "the bucketed layout) — run REINDEX type=minhash to rebuild " +
-          "before refresh/compact/screen"))
+  // sub-bucket layouts landed: its partition dirs have no bucket layer,
+  // so segments appended under the current layout would mix flat files
+  // with partition dirs (the round-11 discovery-conflict rule). The
+  // supported upgrade is a full rebuild — say so, actionably. Shared by
+  // the minhash and winsig artifacts.
+  private def sigBuckets(m: ArtifactMeta, kind: String, name: String): Int =
+    m.requireInt("buckets", s"$kind meta on $name has no buckets field " +
+      "(artifact predates the bucketed layout) — run REINDEX " +
+      s"type=$kind to rebuild before refresh/compact/screen")
 
   /** One segment append: banded signatures + the (id, payload_md5)
     * diff-base rows for every doc in `rows` (short docs with no
     * shingles included — the diff must see them).
     */
-  private def writeMinhashSegment(name: String, rows: DataFrame,
-      shingleN: Int, numHashes: Int, rowsPerBand: Int, buckets: Int,
-      seg: Int, genDir: Path): Unit = {
+  private def writeMinhashSegment(name: String)(rows: DataFrame, seg: Int,
+      genDir: Path, meta: ArtifactMeta): Unit = {
+    val (shingleN, numHashes, rowsPerBand) = minhashParams(meta)
+    // every segment shares the generation's bucket layout (from the
+    // meta), or the partition dirs diverge mid-artifact
+    val buckets = sigBuckets(meta, "minhash", name)
     graft.operators.Dedup.bandKeys(
         graft.operators.Dedup.minhashSignatures(
           rows, "id", "payload", shingleN, numHashes),
@@ -1598,12 +1383,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else buckets
     require(nBuckets >= 1 && 65536 % nBuckets == 0,
       s"minhash buckets must divide 65536, got $nBuckets")
-    val dir = minhashDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeMinhashSegment(name, cur, shingleN, numHashes, rowsPerBand,
-      nBuckets, seg = 0, genDir = new Path(dir, "gen_0"))
-    writeString(fs, minhashMetaPath(name),
-      s"""{"type":"minhash","shingleN":$shingleN,"numHashes":$numHashes,"rowsPerBand":$rowsPerBand,"buckets":$nBuckets,"gen":0}""")
+    minhash(name).build(ArtifactMeta("minhash", Seq("shingleN" -> shingleN,
+      "numHashes" -> numHashes, "rowsPerBand" -> rowsPerBand,
+      "buckets" -> nBuckets)), cur)
   }
 
   /** REINDEX type=minhash;mode=refresh — incremental signature
@@ -1620,41 +1402,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshMinhash(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(minhashMetaPath(name)),
-      s"no minhash artifact on $name to refresh — run REINDEX type=minhash first")
-    val (shingleN, numHashes, rowsPerBand) = minhashParams(name)
-    val genDir = minhashGenDir(name)
-    val cur = read(name)
-    require(cur.columns.contains("payload"),
-      s"REINDEX type=minhash needs a payload column on $name")
-    val curKeys = cur.select(col("id"), md5(col("payload")).as("payload_md5"))
-    val indexed = liveMinhashDocs(name)
-    val arrivals = curKeys.join(indexed.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = indexed.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    if (!arrivals.isEmpty) {
-      val newRows = cur.join(broadcast(arrivals.select("id")), Seq("id"))
-      val nextSeg = readArtifact(new Path(genDir, "docs"), WinsigDocsSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1
-      // bucket count comes from the meta: every segment must share the
-      // generation's layout or the partition dirs diverge mid-artifact
-      writeMinhashSegment(name, newRows, shingleN, numHashes, rowsPerBand,
-        minhashBuckets(name), nextSeg, genDir)
-    }
-    val tombPath = new Path(genDir, "tombstones")
-    if (!departures.isEmpty) {
-      val newTombs = minhashTombstones(name).union(departures)
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"minhash tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(minhashStaleMarker(name), false)
+    minhash(name).refresh(name, read(name))
     ()
   }
 
@@ -1665,34 +1413,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def compactMinhash(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(minhashMetaPath(name)),
-      s"no minhash artifact on $name to compact")
-    require(!fs.exists(minhashStaleMarker(name)),
-      s"minhash artifact on $name is stale — REINDEX type=minhash " +
-        "(or mode=refresh) first, then compact")
-    val dir = minhashDir(name)
-    val g = minhashGen(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    val (shingleN, numHashes, rowsPerBand) = minhashParams(name)
-    val nBuckets = minhashBuckets(name)
-    readArtifact(new Path(minhashGenDir(name), "bands"), MinhashBandsSchema)
-      .join(broadcast(minhashTombstones(name)), Seq("id", "seg"), "left_anti")
-      .withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("band", "band_bucket")
-      .parquet(new Path(nextDir, "bands").toString)
-    liveMinhashDocs(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "docs").toString)
-    writeString(fs, minhashMetaPath(name),
-      s"""{"type":"minhash","shingleN":$shingleN,"numHashes":$numHashes,"rowsPerBand":$rowsPerBand,"buckets":$nBuckets,"gen":${g + 1}}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    minhash(name).compact(name)
   }
 
   /** Screen an arriving batch (`id`, `payload`) for near-duplicates of
@@ -1714,21 +1435,26 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       s"screen batch needs (id, payload) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
-    val hasMeta = fs.exists(minhashMetaPath(name))
-    val live = hasMeta && !fs.exists(minhashStaleMarker(name))
+    val mh = minhash(name)
+    val snap = mh.snapshot
+    val liveSnap = snap.filter(_.live)
+    val live = liveSnap.isDefined
     // parameters come from the artifact's meta whenever one exists —
     // EVEN STALE: the fallback must screen with the same (shingleN,
     // hashes, bands) family the caller built, or the candidate sets
     // would silently change shape across the stale window. Defaults
     // apply only when no artifact was ever built.
     val (shingleN, numHashes, rowsPerBand) =
-      if (hasMeta) minhashParams(name) else (5, 8, 2)
+      snap.map(s => minhashParams(s.meta)).getOrElse((5, 8, 2))
     val bands =
       // explicit schemas throughout the artifact reads: an artifact
       // built over an empty (or all-too-short-payload) collection has a
       // schemaless partitioned dir — inference would fail, the declared
       // schema reads it empty
-      if (live) liveMinhashBands(name)
+      if (live) mh.live(liveSnap.get, "bands")
+        // band_bucket rides along: the probe derives the batch's bucket
+        // set from the same md5 slice and pushes it as a partition filter
+        .select("id", "band", "band_key", "band_bucket")
       else graft.operators.Materialize.corpusScale(
         graft.operators.Dedup.bandKeys(
         graft.operators.Dedup.minhashSignatures(
@@ -1752,22 +1478,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // the stored layout's bucket count unlocks partition pruning in
       // the probe; the rescan fallback has no band_bucket column and
       // the operator's cap-and-switch simply ignores the knob then
-      corpusBuckets = if (live) minhashBuckets(name) else -1)
+      corpusBuckets =
+        liveSnap.map(s => sigBuckets(s.meta, "minhash", name)).getOrElse(-1))
     finally if (!live) GraftSqlShims.unpersistCheckpoint(bands)
-  }
-
-  /** Mark the minhash artifact stale (mutations — a stale signature
-    * must never screen; [[screenDupes]] falls back to the in-query
-    * recompute). No-op when absent.
-    */
-  private def invalidateMinhashIndex(name: String): Unit = {
-    if (fs.exists(new Path(minhashDir(name), "meta.json")))
-      writeString(fs, minhashStaleMarker(name), "stale")
-  }
-
-  private def deleteMinhashIndex(name: String): Unit = {
-    val dir = minhashDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- managed split sidecar (leakage-safe split lifecycle) ---------------
@@ -1781,66 +1494,39 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   // (and matched nothing older) still inherits yesterday's placement,
   // instead of falling back to its own-id slot one generation out.
 
-  private def splitsDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}splits_$name")
+  private def splits(name: String): ManagedArtifact =
+    new ManagedArtifact(spark, fs, artifactDir("splits", name), "splits",
+      staleable = false)
 
-  private def splitsMetaPath(name: String): Path =
-    new Path(splitsDir(name), "meta.json")
-
-  private def splitsGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def splitsGenDir(name: String): Path =
-    new Path(splitsDir(name), s"gen_${splitsGen(name)}")
+  /** The split sidecar's snapshot; `missing` refuses an absent one. */
+  private def splitsSnapshot(name: String,
+      missing: => String): ArtifactSnapshot = {
+    val s = splits(name).snapshot
+    require(s.isDefined, missing)
+    s.get
+  }
 
   private val SplitAssignSchema = StructType.fromDDL(
     "id BIGINT, rep BIGINT, split STRING")
 
-  private def splitsParams(name: String): (Int, Int, Int) = {
-    val meta = readString(fs, splitsMetaPath(name))
+  /** (slots, val, test). The meta also pins the edge `family`
+    * ("minhash"/"embedding"/"winsig"/"dhash"; absent on pre-pin sidecars
+    * — treated as unpinned) and the family's width: `bits`, `min_tokens`
+    * or `max_hamming`.
+    */
+  private def splitsParams(m: ArtifactMeta): (Int, Int, Int) = {
     def intOf(k: String): Int =
-      s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-          s"splits meta has no $k field: $meta"))
+      m.requireInt(k, s"splits meta has no $k field: ${m.json}")
     (intOf("slots"), intOf("val"), intOf("test"))
   }
 
-  /** Edge family the sidecar was built with ("minhash"/"embedding";
-    * absent on pre-pin sidecars — treated as unpinned).
-    */
-  private def splitsFamilyOf(name: String): Option[String] =
-    """"family"\s*:\s*"([a-z]+)"""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1))
-
-  /** Sign-bucket width of an embedding-family sidecar, if pinned. */
-  private def splitsBitsOf(name: String): Option[Int] =
-    """"bits"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt)
-
-  /** Window width of a winsig-family sidecar, if pinned. */
-  private def splitsMinTokensOf(name: String): Option[Int] =
-    """"min_tokens"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt)
-
-  /** Hamming radius of a dhash-family sidecar, if pinned. */
-  private def splitsMaxHammingOf(name: String): Option[Int] =
-    """"max_hamming"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt)
-
-  /** Committed ROUTE segment numbers of the current generation — only
+  /** Committed ROUTE segment numbers of generation dir `g` — only
     * MARKED segments are live. A crash mid-write leaves an unmarked
     * orphan dir readers never see; segment numbering skips past it (max
     * over ALL routed_* names), so the orphan sits inert until a
     * compactSplits / re-SPLIT sweeps the generation.
     */
-  private def splitRoutedSegs(name: String): Seq[Int] = {
-    val g = splitsGenDir(name)
+  private def routedSegs(g: Path): Seq[Int] =
     if (!fs.exists(g)) Seq.empty
     else fs.listStatus(g).toSeq.map(_.getPath.getName)
       .filter(n => n.startsWith("routed_") && n.endsWith(".done"))
@@ -1849,29 +1535,25 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .flatMap(n => scala.util.Try(
         n.stripPrefix("routed_").stripSuffix(".done").toInt).toOption)
       .sorted
-  }
-
-  /** Compaction carry file for durable batch tags: compactSplits folds
-    * the routed segments (and their tag-bearing markers) away, so the
-    * applied-tag set is carried into the fresh generation as one
-    * newline-delimited file written BEFORE the meta pointer flips.
-    */
-  private def splitsBatchCarryPath(name: String): Path =
-    new Path(splitsGenDir(name), "_batches")
 
   /** Durable replay-idempotency record for ROUTE micro-batches: every
     * batch tag ever committed into the CURRENT generation — read from
     * the `routed_<n>.done` marker contents (the tag commits atomically
     * with its segment: the marker write IS the commit) plus the
-    * compaction carry file. A checkpoint-restarted streaming screen
-    * derives its skip set from THIS, not from driver memory, so a
-    * replayed micro-batch is recognized across restarts instead of
-    * dying on the write-once refusal.
+    * compaction carry file `_batches` (compactSplits folds the markers
+    * away, so it carries their tags into the fresh generation as one
+    * newline-delimited file written BEFORE the pointer flips). A
+    * checkpoint-restarted streaming screen derives its skip set from
+    * THIS, not from driver memory, so a replayed micro-batch is
+    * recognized across restarts instead of dying on the write-once
+    * refusal.
     */
   def routedBatchTags(name: String): Set[String] = {
     requireCollection(name)
-    if (!fs.exists(splitsMetaPath(name))) return Set.empty
-    val g = splitsGenDir(name)
+    splits(name).snapshot.fold(Set.empty[String])(s => batchTagsOf(s.dataDir))
+  }
+
+  private def batchTagsOf(g: Path): Set[String] = {
     val tagRe = """"batch"\s*:\s*"([A-Za-z0-9_.-]+)"""".r
     val fromMarkers =
       if (!fs.exists(g)) Seq.empty[String]
@@ -1880,7 +1562,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
           p.getName.endsWith(".done"))
         .flatMap(p => tagRe.findFirstMatchIn(readString(fs, p))
           .map(_.group(1)))
-    val carry = splitsBatchCarryPath(name)
+    val carry = new Path(g, "_batches")
     val fromCarry =
       if (!fs.exists(carry)) Seq.empty[String]
       else readString(fs, carry).split('\n').toSeq
@@ -1910,7 +1592,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def readmitRouted(name: String, batch: DataFrame): Long = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splits(name).exists,
       s"no split sidecar on $name — nothing was ever routed")
     require(batch.columns.contains("id"),
       "readmitRouted batch needs an id column")
@@ -1931,7 +1613,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val n = missing.count()
     if (n > 0L) {
       bulkInsert(name, missing)
-      if (fs.exists(minhashMetaPath(name))) refreshMinhash(name)
+      if (minhash(name).exists) refreshMinhash(name)
     }
     n
   }
@@ -1943,11 +1625,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def splitAssignments(name: String): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
-      s"no split sidecar on $name — run SPLIT first")
-    val g = splitsGenDir(name)
-    val base = readArtifact(new Path(g, "assign"), SplitAssignSchema)
-    val segs = splitRoutedSegs(name)
+    assignmentsOf(splits(name), splitsSnapshot(name,
+      s"no split sidecar on $name — run SPLIT first"))
+  }
+
+  private def assignmentsOf(sp: ManagedArtifact,
+      s: ArtifactSnapshot): DataFrame = {
+    val g = s.dataDir
+    val base = sp.read(new Path(g, "assign"), SplitAssignSchema)
+    val segs = routedSegs(g)
     if (segs.isEmpty) base
     else base.unionByName(
       // ONE multi-path scan over every MARKED segment — a per-segment
@@ -1978,12 +1664,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"SPLIT needs a payload column on $name (or use SPLIT by=embedding)")
-    val (shingleN, numHashes, rowsPerBand) =
-      if (fs.exists(minhashMetaPath(name))) minhashParams(name) else (5, 8, 2)
+    val (shingleN, numHashes, rowsPerBand) = minhash(name).snapshot
+      .map(s => minhashParams(s.meta)).getOrElse((5, 8, 2))
     val pairs = graft.operators.Dedup.minhashCandidates(
       cur, "id", "payload", shingleN, numHashes, rowsPerBand)
     commitSplitBase(name, cur, pairs, nSlots, valSlots, testSlots,
-      extraMeta = ""","family":"minhash"""")
+      Seq("family" -> "minhash"))
   }
 
   /** SPLIT by=embedding — [[buildSplits]] under EMBEDDING edges (the
@@ -2025,7 +1711,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .filter(round(col("score"), 6) >= threshold)
       .select("a_id", "b_id")
     commitSplitBase(name, cur, pairs, nSlots, valSlots, testSlots,
-      extraMeta = s""","family":"embedding","bits":$bits""")
+      Seq("family" -> "embedding", "bits" -> bits))
   }
 
   /** SPLIT by=winsig — [[buildSplits]] under EXACT-SUBSTRING edges: two
@@ -2047,9 +1733,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"SPLIT by=winsig needs a payload column on $name")
-    val stored: Option[Int] =
-      if (fs.exists(winsigMetaPath(name))) Some(winsigMinTokens(name))
-      else None
+    val ws = winsig(name)
+    val snap = ws.snapshot
+    val stored = snap.map(s => winsigMinTokens(s.meta, name))
     val mt = (minTokens, stored) match {
       case (-1, Some(m)) => m
       case (-1, None) => 15
@@ -2060,10 +1746,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         m
       case (m, None) => m
     }
-    val live = stored.isDefined && !fs.exists(winsigStaleMarker(name))
-    val rows =
-      if (live) liveWinsigSigs(name).select(col("id"), col("win_sig"))
-      else graft.operators.Dedup.windowSigRows(cur, "id", "payload", mt)
+    val rows = snap.filter(_.live) match {
+      case Some(s) => ws.live(s, "sigs").select(col("id"), col("win_sig"))
+      case None => graft.operators.Dedup.windowSigRows(cur, "id", "payload", mt)
+    }
     val ok = rows.groupBy("win_sig").agg(count(lit(1)).as("__n"))
       .filter(col("__n") >= 2 && col("__n") <= maxBucketSize)
       .select("win_sig")
@@ -2074,7 +1760,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
     commitSplitBase(name, cur, pairs, nSlots, valSlots, testSlots,
-      extraMeta = s""","family":"winsig","min_tokens":$mt""")
+      Seq("family" -> "winsig", "min_tokens" -> mt))
   }
 
   /** SPLIT by=dhash — [[buildSplits]] under PERCEPTUAL-IMAGE edges: two
@@ -2089,48 +1775,42 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       testSlots: Int = 1): DataFrame = {
     requireCollection(name)
     val cur = read(name)
-    val mc =
-      if (fs.exists(dhashMetaPath(name))) dhashMediaCol(name) else mediaCol
+    val mc = dhash(name).snapshot.map(s => dhashMediaCol(s.meta, name))
+      .getOrElse(mediaCol)
     require(cur.columns.contains(mc),
       s"SPLIT by=dhash needs a binary $mc column on $name")
     val pairs = graft.operators.Multimodal.dhashNearDups(
         cur.select(col("id"), col(mc)), "id", mc, maxHamming)
       .select("a_id", "b_id")
     commitSplitBase(name, cur, pairs, nSlots, valSlots, testSlots,
-      extraMeta = s""","family":"dhash","max_hamming":$maxHamming""")
+      Seq("family" -> "dhash", "max_hamming" -> maxHamming))
   }
 
   /** Shared SPLIT commit: place clusters, write the base assignment as a
-    * fresh generation, flip the pointer, sweep, summarize.
+    * fresh generation (the meta carrying the family's `pins`), flip the
+    * pointer, sweep, summarize.
     */
   private def commitSplitBase(name: String, cur: DataFrame,
       pairs: DataFrame, nSlots: Int, valSlots: Int,
-      testSlots: Int, extraMeta: String = ""): DataFrame = {
-    val dir = splitsDir(name)
-    val g = if (fs.exists(splitsMetaPath(name))) splitsGen(name) + 1 else 0
-    val genDir = new Path(dir, s"gen_$g")
+      testSlots: Int, pins: Seq[(String, Any)]): DataFrame = {
+    val sp = splits(name)
+    val g = if (sp.exists) sp.meta.gen.getOrElse(0) + 1 else 0
     // refuse a bad split rule before the components run; they come
     // back checkpointed: free them once the assignment write has
     // consumed them, on success and on failure
     graft.operators.TrainExport.requireSplitRule(cur, "id", nSlots,
       valSlots, testSlots)
     val cc = graft.operators.Dedup.connectedComponents(pairs)
-    try {
-      val assign = graft.operators.TrainExport.clusterSplits(
-        cur, cc, "id", nSlots, valSlots, testSlots)
-      if (fs.exists(genDir)) fs.delete(genDir, true)
-      assign.select(col("id").cast("long").as("id"),
-          col("rep").cast("long").as("rep"), col("split"))
-        .write.mode("overwrite").option("compression", Compression)
-        .parquet(new Path(genDir, "assign").toString)
+    try sp.commitGeneration(ArtifactMeta("splits", Seq("slots" -> nSlots,
+        "val" -> valSlots, "test" -> testSlots) ++ pins, gen = Some(g))) {
+      genDir =>
+        graft.operators.TrainExport.clusterSplits(
+            cur, cc, "id", nSlots, valSlots, testSlots)
+          .select(col("id").cast("long").as("id"),
+            col("rep").cast("long").as("rep"), col("split"))
+          .write.mode("overwrite").option("compression", Compression)
+          .parquet(new Path(genDir, "assign").toString)
     } finally GraftSqlShims.unpersistCheckpoint(cc)
-    writeString(fs, splitsMetaPath(name),
-      s"""{"type":"splits","slots":$nSlots,"val":$valSlots,"test":$testSlots$extraMeta,"gen":$g}""")
-    // sweep superseded generations (the compactPostings orphan rule)
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_$g") fs.delete(st.getPath, true)
-    }
     splitSummary(name)
   }
 
@@ -2153,7 +1833,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def splitStats(name: String): DataFrame =
     splitSummary(name).withColumn("n_segments",
-      lit(splitRoutedSegs(name).size.toLong))
+      lit(routedSegs(splits(name).snapshot.get.dataDir).size.toLong))
 
   /** ROUTE — admit an arriving batch (`id`, `payload`) into the managed
     * split lifecycle: screen against the stored minhash bands
@@ -2189,20 +1869,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       batchTag: Option[String] = None,
       dryRun: Boolean = false): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
-      s"no split sidecar on $name — run SPLIT before ROUTE")
+    val sp = routeSnapshot(name)
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       "ROUTE batch needs (id, payload) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
     // cross-family routing would inherit through a DIFFERENT edge set
     // than the one that clustered the corpus — refuse, don't guess
-    splitsFamilyOf(name).foreach(f => require(f == "minhash",
+    sp.meta.string("family").foreach(f => require(f == "minhash",
       s"the split sidecar on $name was built by=$f — ROUTE (minhash) " +
         s"would inherit through a different edge family; use " +
         s"ROUTE by=$f or re-SPLIT"))
     val arriving = batch.select(col("id").cast("long").as("id"),
       col("payload"))
-    routeCore(name, batch, arriving,
+    routeCore(name, sp, batch, arriving,
       screenDupes(name, arriving, threshold),
       insert, refreshBands = true, batchTag, dryRun)
   }
@@ -2226,8 +1905,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         graft.operators.ScaleKnobs.routeBroadcastMaxRows,
       dryRun: Boolean = false): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
-      s"no split sidecar on $name — run SPLIT before ROUTE")
+    val sp = routeSnapshot(name)
     require(batch.columns.contains("id") &&
       batch.columns.contains("embedding"),
       "ROUTE by=embedding batch needs (id, embedding) columns — got " +
@@ -2235,7 +1913,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // the family pin fires FIRST: a cross-family sidecar is the more
     // fundamental refusal — it survives even after the user runs the
     // REINDEX the layout message would suggest
-    splitsFamilyOf(name).foreach(f => require(f == "embedding",
+    sp.meta.string("family").foreach(f => require(f == "embedding",
       s"the split sidecar on $name was built by=$f — ROUTE by=embedding " +
         "would inherit through a different edge family; use the " +
         s"matching ROUTE or re-SPLIT by=embedding"))
@@ -2249,7 +1927,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // the sidecar's pinned signature width must match the layout the
     // screen is about to probe — a re-REINDEX at a different width
     // between SPLIT and ROUTE would silently change the edge family
-    splitsBitsOf(name).foreach(b => require(b == nBits,
+    sp.meta.int("bits").foreach(b => require(b == nBits,
       s"the split sidecar on $name was built at $b sign bits but the " +
         s"stored layout now uses $nBits — re-SPLIT by=embedding (or " +
         "restore the layout) before routing"))
@@ -2286,7 +1964,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .filter(round(graft.functions.cosine_sim(col("embedding"),
         col("__ce")), 6) >= threshold)
       .select(col("id").as("a_id"), col("b_id"))
-    routeCore(name, batch, arriving, matches, insert,
+    routeCore(name, sp, batch, arriving, matches, insert,
       refreshBands = false, batchTag, dryRun)
   }
 
@@ -2308,42 +1986,42 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       insert: Boolean = true, batchTag: Option[String] = None,
       dryRun: Boolean = false, maxBucketSize: Int = 1000): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
-      s"no split sidecar on $name — run SPLIT before ROUTE")
+    val sp = routeSnapshot(name)
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       "ROUTE by=winsig batch needs (id, payload) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
-    splitsFamilyOf(name).foreach(f => require(f == "winsig",
+    sp.meta.string("family").foreach(f => require(f == "winsig",
       s"the split sidecar on $name was built by=$f — ROUTE by=winsig " +
         "would inherit through a different edge family; use the " +
         "matching ROUTE or re-SPLIT by=winsig"))
-    val mt = splitsMinTokensOf(name).getOrElse(15)
+    val mt = sp.meta.int("min_tokens").getOrElse(15)
     // width drift between the sidecar and the artifact is a silent
-    // family change — refuse (the splitsBitsOf doctrine)
-    if (fs.exists(winsigMetaPath(name)))
-      require(winsigMinTokens(name) == mt,
-        s"the split sidecar on $name pins min_tokens=$mt but the winsig " +
-          s"artifact uses ${winsigMinTokens(name)} — re-SPLIT by=winsig " +
-          "(or rebuild the artifact) before routing")
+    // family change — refuse (the bits-pin doctrine)
+    val ws = winsig(name)
+    val snap = ws.snapshot
+    snap.map(s => winsigMinTokens(s.meta, name)).foreach(w => require(w == mt,
+      s"the split sidecar on $name pins min_tokens=$mt but the winsig " +
+        s"artifact uses $w — re-SPLIT by=winsig (or rebuild the " +
+        "artifact) before routing"))
     val arriving = batch.select(col("id").cast("long").as("id"),
       col("payload"))
-    val live = fs.exists(winsigMetaPath(name)) &&
-      !fs.exists(winsigStaleMarker(name))
+    val liveSnap = snap.filter(_.live)
+    val live = liveSnap.isDefined
     // the batch's windows feed BOTH the bucket derivation and the probe
     // — checkpoint once (the incomingCoveredText discipline), release
     // after the routed frame (itself checkpointed) materializes
     val bRows = graft.operators.Dedup.windowSigRows(
       arriving, "id", "payload", mt).localCheckpoint(true)
-    val sRows =
-      if (live) {
-        val nb = winsigBuckets(name)
+    val sRows = liveSnap match {
+      case Some(s) =>
+        val nb = sigBuckets(s.meta, "winsig", name)
         val bks = bRows.select(graft.operators.Dedup
             .sigBucket(col("win_sig"), nb).as("__sb"))
           .distinct().collect().map(_.getInt(0)).toSeq
-        val base = liveWinsigSigs(name)
+        val base = ws.live(s, "sigs")
         (if (bks.size < nb) base.filter(col("sig_bucket").isin(bks: _*))
          else base).select(col("id"), col("win_sig"))
-      } else graft.operators.Materialize.corpusScale(
+      case None => graft.operators.Materialize.corpusScale(
         graft.operators.Dedup.windowSigRows(
           read(name), "id", "payload", mt)
         // the screen consumes the signature table twice (hot-sig census
@@ -2353,6 +2031,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         // freed after routeCore's checkpointed return. Corpus-row scale:
         // the storage knob applies.
       )
+    }
     val ok = sRows.groupBy("win_sig").agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxBucketSize).select("win_sig")
     val matches = bRows.select(col("win_sig"), col("id").as("a_id"))
@@ -2364,10 +2043,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // refusal/error path (a write-once refusal would otherwise leak the
     // batch windows + the corpus-sized fallback table — r18 ADVICE item)
     try {
-      val out = routeCore(name, batch, arriving, matches, insert,
+      val out = routeCore(name, sp, batch, arriving, matches, insert,
         refreshBands = false, batchTag, dryRun)
-      if (insert && !dryRun && fs.exists(winsigMetaPath(name)))
-        refreshWinsig(name)
+      if (insert && !dryRun && ws.exists) refreshWinsig(name)
       out
     } finally {
       GraftSqlShims.unpersistCheckpoint(bRows)
@@ -2388,37 +2066,36 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       insert: Boolean = true, batchTag: Option[String] = None,
       dryRun: Boolean = false): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
-      s"no split sidecar on $name — run SPLIT before ROUTE")
-    splitsFamilyOf(name).foreach(f => require(f == "dhash",
+    val sp = routeSnapshot(name)
+    sp.meta.string("family").foreach(f => require(f == "dhash",
       s"the split sidecar on $name was built by=$f — ROUTE by=dhash " +
         "would inherit through a different edge family; use the " +
         "matching ROUTE or re-SPLIT by=dhash"))
-    val mh = splitsMaxHammingOf(name).getOrElse(6)
-    val mc =
-      if (fs.exists(dhashMetaPath(name))) dhashMediaCol(name) else "media"
+    val mh = sp.meta.int("max_hamming").getOrElse(6)
+    val dh = dhash(name)
+    val snap = dh.snapshot
+    val mc = snap.map(s => dhashMediaCol(s.meta, name)).getOrElse("media")
     require(batch.columns.contains("id") && batch.columns.contains(mc),
       s"ROUTE by=dhash batch needs (id, $mc) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
     val arriving = batch.select(col("id").cast("long").as("id"), col(mc))
-    val wasLive = fs.exists(dhashMetaPath(name)) &&
-      !fs.exists(dhashStaleMarker(name))
     val matches = screenImages(name, batch, mc, maxHamming = mh)
       .select("a_id", "b_id")
-    val out = routeCore(name, batch, arriving, matches, insert,
+    val out = routeCore(name, sp, batch, arriving, matches, insert,
       refreshBands = false, batchTag, dryRun)
-    if (insert && !dryRun && wasLive) {
-      // delta admission into the band artifact: append the arrivals'
-      // rows, then clear the stale marker the insert just set — valid
-      // ONLY because the artifact was live before this ROUTE (a marker
-      // predating us must stay)
-      graft.operators.Multimodal.dhashBands(
-          arriving, "id", mc, dhashBuckets(name))
-        .write.mode("append").option("compression", Compression)
-        .partitionBy("band", "key_bucket")
-        .parquet(new Path(dhashDir(name), "bands").toString)
-      fs.delete(dhashStaleMarker(name), false)
-      ()
+    snap.filter(_.live).foreach { s =>
+      if (insert && !dryRun) {
+        // delta admission into the band artifact: append the arrivals'
+        // rows, then clear the stale marker the insert just set — valid
+        // ONLY because the artifact was live before this ROUTE (a marker
+        // predating us must stay)
+        graft.operators.Multimodal.dhashBands(
+            arriving, "id", mc, dhashBuckets(s.meta, name))
+          .write.mode("append").option("compression", Compression)
+          .partitionBy("band", "key_bucket")
+          .parquet(new Path(s.dataDir, "bands").toString)
+        dh.clearStale()
+      }
     }
     out
   }
@@ -2440,15 +2117,18 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   /** Job-group prefix of ROUTE's write-once admission check. */
   private[graft] val RouteCheckGroupPrefix = "graft:ROUTE:admission-check:"
 
-  private def routeCore(name: String, batch: DataFrame,
+  private def routeSnapshot(name: String): ArtifactSnapshot =
+    splitsSnapshot(name, s"no split sidecar on $name — run SPLIT before ROUTE")
+
+  private def routeCore(name: String, sp: ArtifactSnapshot, batch: DataFrame,
       arriving: DataFrame, matchesIn: => DataFrame, insert: Boolean,
       refreshBands: Boolean, batchTag: Option[String] = None,
       dryRun: Boolean = false): DataFrame = {
     batchTag.foreach(t => require(t.matches("[A-Za-z0-9_.-]+"),
       s"ROUTE batch tag must be [A-Za-z0-9_.-]+ (it names a durable " +
         s"replay record): '$t'"))
-    val (nSlots, valSlots, testSlots) = splitsParams(name)
-    val assign = splitAssignments(name)
+    val (nSlots, valSlots, testSlots) = splitsParams(sp.meta)
+    val assign = assignmentsOf(splits(name), sp)
     // admission pre-check BEFORE anything commits: a batch the collection
     // cannot accept (missing declared columns) must fail with NOTHING
     // written — otherwise the sidecar commit lands, bulkInsert throws,
@@ -2538,7 +2218,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // SAME refusals, but NOTHING commits — the capacity-planning /
     // steady-state-bench shape ("what would this batch's placement be")
     if (dryRun) return routed.orderBy("id")
-    val g = splitsGenDir(name)
+    val g = sp.dataDir
     val existing = Option(
         if (fs.exists(g)) fs.listStatus(g) else null)
       .getOrElse(Array.empty).toSeq.map(_.getPath.getName)
@@ -2562,21 +2242,20 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val autoAfter = spark.conf
       .getOption("spark.graft.splits.autoCompactSegments")
       .map(_.toInt).getOrElse(64)
-    if (autoAfter > 0 && splitRoutedSegs(name).size > autoAfter)
+    if (autoAfter > 0 && routedSegs(g).size > autoAfter)
       compactSplits(name)
     // capture BEFORE the insert: bulkInsert marks the attrs sidecar
     // stale, and a marker that PREDATES this ROUTE must stay (the dhash
     // delta-admission rule — clearing it would hide someone else's
     // un-healed mutation)
-    val attrsLiveBefore = fs.exists(attrsMetaPath(name)) &&
-      !fs.exists(attrsStaleMarker(name))
+    val at = attrs(name)
+    val attrsLiveBefore = at.state.contains("live")
     if (insert) {
       bulkInsert(name, batch)
       // minhash bands live in a separate artifact needing a refresh; the
       // sign layout derives at append (no artifact = the rescan fallback
       // already sees collection rows directly)
-      if (refreshBands && fs.exists(minhashMetaPath(name)))
-        refreshMinhash(name)
+      if (refreshBands && minhash(name).exists) refreshMinhash(name)
       // a live attribute sidecar stays current through admissions too
       // (every stored artifact maintains incrementally). DELTA admission:
       // ROUTE ids are write-once, so an admission can only ADD rows —
@@ -2585,13 +2264,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // cost stays batch-sized, where the full refresh would pay two
       // collection-scale anti-joins per micro-batch.
       if (attrsLiveBefore) {
-        val gA = attrsGenDir(name)
-        val nextSeg = nextAttrsSeg(name, gA)
-        writeAttrsSegment(name, align(name, batch), nextSeg, gA)
-        recordAttrsSeg(name, nextSeg)
-        fs.delete(attrsStaleMarker(name), false)
-        maybeAutoCompactAttrs(name, nextSeg)
-      } else if (fs.exists(attrsMetaPath(name)))
+        val seg = at.append(at.snapshot.get, align(name, batch))
+        at.clearStale()
+        maybeAutoCompactAttrs(name, seg)
+      } else if (at.exists)
         // an already-stale sidecar needs the full diff heal anyway
         refreshAttrs(name)
     }
@@ -2607,44 +2283,28 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def compactSplits(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    val sp = splits(name)
+    val s = splitsSnapshot(name,
       s"no split sidecar on $name to compact — run SPLIT first")
-    val (nSlots, valSlots, testSlots) = splitsParams(name)
-    // the family/bits pins are part of the artifact's identity — a
-    // compaction must carry them into the new meta verbatim
-    val carried =
-      splitsFamilyOf(name).map(f => s""","family":"$f"""").getOrElse("") +
-      splitsBitsOf(name).map(b => s""","bits":$b""").getOrElse("")
-    val dir = splitsDir(name)
-    val g = splitsGen(name) + 1
-    val genDir = new Path(dir, s"gen_$g")
-    if (fs.exists(genDir)) fs.delete(genDir, true)
-    // reads the OLD generation, writes the NEW one, then the pointer
-    // flips — readers serve gen g−1 until the flip, a crash leaves an
-    // orphan dir, never a half-artifact
-    splitAssignments(name)
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(genDir, "assign").toString)
-    // durable batch tags survive compaction: the markers fold away with
-    // their segments, so their tags carry as one file in the new gen —
-    // written BEFORE the pointer flip (the gen dir must be complete
-    // when it becomes visible)
-    val tags = routedBatchTags(name)
-    if (tags.nonEmpty)
-      writeString(fs, new Path(genDir, "_batches"),
-        tags.toSeq.sorted.mkString("\n"))
-    writeString(fs, splitsMetaPath(name),
-      s"""{"type":"splits","slots":$nSlots,"val":$valSlots,"test":$testSlots$carried,"gen":$g}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_$g") fs.delete(st.getPath, true)
+    splitsParams(s.meta)
+    // the typed meta carries over verbatim: the family and width pins
+    // are part of the artifact's identity, and ROUTE reads them back.
+    // Reads the OLD generation, writes the NEW one, then the pointer
+    // flips — readers serve the old one until the flip
+    sp.commitGeneration(s.meta.copy(gen = Some(s.meta.gen.getOrElse(0) + 1))) {
+      genDir =>
+        assignmentsOf(sp, s)
+          .write.mode("overwrite").option("compression", Compression)
+          .parquet(new Path(genDir, "assign").toString)
+        // durable batch tags survive compaction: the markers fold away
+        // with their segments, so their tags carry as one file in the
+        // new gen — written BEFORE the pointer flip (the gen dir must be
+        // complete when it becomes visible)
+        val tags = batchTagsOf(s.dataDir)
+        if (tags.nonEmpty)
+          writeString(fs, new Path(genDir, "_batches"),
+            tags.toSeq.sorted.mkString("\n"))
     }
-    ()
-  }
-
-  private def deleteSplitsSidecar(name: String): Unit = {
-    val dir = splitsDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- durable micro-batch application log (sink-side idempotency) -------
@@ -2689,51 +2349,36 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   // delta price, compacts online, and a signature keeps screening as
   // long as ANY live document carries it.
 
-  private def winsigDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}winsig_$name")
-
-  private def winsigMetaPath(name: String): Path =
-    new Path(winsigDir(name), "meta.json")
-
-  private def winsigStaleMarker(name: String): Path =
-    new Path(winsigDir(name), "stale")
-
-  private def winsigGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, winsigMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def winsigGenDir(name: String): Path =
-    new Path(winsigDir(name), s"gen_${winsigGen(name)}")
+  private def winsig(name: String): SegmentedArtifact =
+    new SegmentedArtifact(spark, fs, artifactDir("winsig", name), "winsig",
+      SegmentedFamily("winsig artifact", "REINDEX type=winsig",
+        "REINDEX type=winsig (or mode=refresh)",
+        tables = _ => Seq(
+          ArtifactTable("sigs", WinsigSigsSchema, Seq("sig_bucket")),
+          ArtifactTable("docs", DocsSchema)),
+        docs = "docs", diffKey = md5(col("payload")),
+        validate = m => {
+          winsigMinTokens(m, name); sigBuckets(m, "winsig", name); ()
+        },
+        writeSegment = writeWinsigSegment(name)))
 
   private val WinsigSigsSchema = StructType.fromDDL(
     "id BIGINT, win_sig STRING, seg INT, sig_bucket INT")
-  private val WinsigDocsSchema = StructType.fromDDL(
-    "id BIGINT, payload_md5 STRING, seg INT")
 
-  private def winsigTombstones(name: String): DataFrame =
-    readArtifact(new Path(winsigGenDir(name), "tombstones"),
-      TombstonesSchema)
-
-  /** Live (untombstoned) stored signature rows. */
-  private def liveWinsigSigs(name: String): DataFrame =
-    readArtifact(new Path(winsigGenDir(name), "sigs"), WinsigSigsSchema)
-      .join(broadcast(winsigTombstones(name)), Seq("id", "seg"), "left_anti")
-
-  private def liveWinsigDocs(name: String): DataFrame =
-    readArtifact(new Path(winsigGenDir(name), "docs"), WinsigDocsSchema)
-      .join(broadcast(winsigTombstones(name)), Seq("id", "seg"), "left_anti")
+  private def winsigMinTokens(m: ArtifactMeta, name: String): Int =
+    m.requireInt("minTokens", s"winsig meta has no minTokens field on $name")
 
   /** One segment append: per-doc distinct window sigs + the (id,
     * payload_md5) diff-base rows for EVERY doc in `rows` (window-less
     * short docs included — the diff must see them or they re-arrive on
     * every refresh).
     */
-  private def writeWinsigSegment(name: String, rows: DataFrame,
-      minTokens: Int, buckets: Int, seg: Int, genDir: Path): Unit = {
-    graft.operators.Dedup.windowSigRows(rows, "id", "payload", minTokens)
-      .withColumn("sig_bucket",
-        graft.operators.Dedup.sigBucket(col("win_sig"), buckets))
+  private def writeWinsigSegment(name: String)(rows: DataFrame, seg: Int,
+      genDir: Path, meta: ArtifactMeta): Unit = {
+    graft.operators.Dedup.windowSigRows(rows, "id", "payload",
+        winsigMinTokens(meta, name))
+      .withColumn("sig_bucket", graft.operators.Dedup.sigBucket(
+        col("win_sig"), sigBuckets(meta, "winsig", name)))
       .withColumn("seg", lit(seg))
       .write.mode("append").option("compression", Compression)
       .partitionBy("sig_bucket")
@@ -2767,12 +2412,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else buckets
     require(nBuckets >= 1 && 65536 % nBuckets == 0,
       s"winsig buckets must divide 65536, got $nBuckets")
-    val dir = winsigDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeWinsigSegment(name, cur, minTokens, nBuckets, seg = 0,
-      genDir = new Path(dir, "gen_0"))
-    writeString(fs, winsigMetaPath(name),
-      s"""{"type":"winsig","minTokens":$minTokens,"buckets":$nBuckets,"gen":0}""")
+    winsig(name).build(ArtifactMeta("winsig",
+      Seq("minTokens" -> minTokens, "buckets" -> nBuckets)), cur)
   }
 
   /** REINDEX type=winsig;mode=refresh — incremental screening-artifact
@@ -2790,39 +2431,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshWinsig(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(winsigMetaPath(name)),
-      s"no winsig artifact on $name to refresh — run REINDEX type=winsig first")
-    val minTokens = winsigMinTokens(name)
-    val genDir = winsigGenDir(name)
-    val cur = read(name)
-    require(cur.columns.contains("payload"),
-      s"REINDEX type=winsig needs a payload column on $name")
-    val curKeys = cur.select(col("id"), md5(col("payload")).as("payload_md5"))
-    val indexed = liveWinsigDocs(name)
-    val arrivals = curKeys.join(indexed.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = indexed.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    if (!arrivals.isEmpty) {
-      val newRows = cur.join(broadcast(arrivals.select("id")), Seq("id"))
-      val nextSeg = readArtifact(new Path(genDir, "docs"), WinsigDocsSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1
-      writeWinsigSegment(name, newRows, minTokens, winsigBuckets(name),
-        nextSeg, genDir)
-    }
-    val tombPath = new Path(genDir, "tombstones")
-    if (!departures.isEmpty) {
-      val newTombs = winsigTombstones(name).union(departures)
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"winsig tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(winsigStaleMarker(name), false)
+    winsig(name).refresh(name, read(name))
     ()
   }
 
@@ -2835,48 +2444,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def compactWinsig(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(winsigMetaPath(name)),
-      s"no winsig artifact on $name to compact")
-    require(!fs.exists(winsigStaleMarker(name)),
-      s"winsig artifact on $name is stale — REINDEX type=winsig " +
-        "(or mode=refresh) first, then compact")
-    val dir = winsigDir(name)
-    val g = winsigGen(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    val minTokens = winsigMinTokens(name)
-    val nBuckets = winsigBuckets(name)
-    liveWinsigSigs(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("sig_bucket")
-      .parquet(new Path(nextDir, "sigs").toString)
-    liveWinsigDocs(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "docs").toString)
-    writeString(fs, winsigMetaPath(name),
-      s"""{"type":"winsig","minTokens":$minTokens,"buckets":$nBuckets,"gen":${g + 1}}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    winsig(name).compact(name)
   }
-
-  private def winsigMinTokens(name: String): Int =
-    """"minTokens"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, winsigMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"winsig meta has no minTokens field on $name"))
-
-  // same pre-upgrade contract as minhashBuckets: full rebuild, loudly
-  private def winsigBuckets(name: String): Int =
-    """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, winsigMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"winsig meta on $name has no buckets field (artifact predates " +
-          "the bucketed layout) — run REINDEX type=winsig to rebuild " +
-          "before refresh/compact/screen"))
 
   /** Scrub an arriving batch (`id`, `payload`) of every token position
     * covered by a >= minTokens-token window already present in the
@@ -2900,60 +2469,39 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       s"screen batch needs (id, payload) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
-    val hasMeta = fs.exists(winsigMetaPath(name))
-    val live = hasMeta && !fs.exists(winsigStaleMarker(name))
+    val ws = winsig(name)
+    val snap = ws.snapshot
     val minTokens =
-      if (hasMeta) winsigMinTokens(name) else defaultMinTokens
-    val sigs =
+      snap.map(s => winsigMinTokens(s.meta, name)).getOrElse(defaultMinTokens)
+    val liveSnap = snap.filter(_.live)
+    val sigs = liveSnap.fold(
+      graft.operators.Dedup.windowSigs(cur, "id", "payload", minTokens))(
       // explicit schemas throughout the artifact reads: an artifact
       // built over an empty (or all-too-short-payload) collection still
       // reads as an empty frame
-      if (live) liveWinsigSigs(name).select("win_sig", "sig_bucket")
-      else graft.operators.Dedup.windowSigs(cur, "id", "payload", minTokens)
+      s => ws.live(s, "sigs").select("win_sig", "sig_bucket"))
     graft.operators.Dedup.incomingCoveredText(sigs, batch,
       "id", "payload", minTokens,
-      corpusBuckets = if (live) winsigBuckets(name) else -1)
-  }
-
-  /** Mark the winsig artifact stale (mutations — a stale signature table
-    * must never screen; [[screenSubstrings]] falls back to the in-query
-    * recompute). No-op when absent.
-    */
-  private def invalidateWinsigIndex(name: String): Unit = {
-    if (fs.exists(new Path(winsigDir(name), "meta.json")))
-      writeString(fs, winsigStaleMarker(name), "stale")
-  }
-
-  private def deleteWinsigIndex(name: String): Unit = {
-    val dir = winsigDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
+      corpusBuckets = liveSnap.fold(-1)(s => sigBuckets(s.meta, "winsig", name)))
   }
 
   // ---- dhash signature artifact (ingest-time perceptual screening) ------
 
-  private def dhashDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}dhash_$name")
-
-  private def dhashStaleMarker(name: String): Path =
-    new Path(dhashDir(name), "stale")
-
-  private def dhashMetaPath(name: String): Path =
-    new Path(dhashDir(name), "meta.json")
+  /** Flat layout (bands under the artifact dir itself, no generations):
+    * a full rebuild is one scan, so dhash has no segments to refresh. */
+  private def dhash(name: String): ManagedArtifact =
+    new ManagedArtifact(spark, fs, artifactDir("dhash", name), "dhash",
+      generational = false)
 
   private val DhashBandsSchema = StructType.fromDDL(
     "id BIGINT, sig BIGINT, band INT, key BIGINT, key_bucket INT")
 
-  private def dhashBuckets(name: String): Int =
-    """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, dhashMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"dhash meta on $name has no buckets field"))
+  private def dhashBuckets(m: ArtifactMeta, name: String): Int =
+    m.requireInt("buckets", s"dhash meta on $name has no buckets field")
 
-  private def dhashMediaCol(name: String): String =
-    """"mediaCol"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(readString(fs, dhashMetaPath(name)))
-      .map(_.group(1)).getOrElse(throw new IllegalStateException(
-        s"dhash meta on $name has no mediaCol field"))
+  private def dhashMediaCol(m: ArtifactMeta, name: String): String =
+    m.string("mediaCol").getOrElse(throw new IllegalStateException(
+      s"dhash meta on $name has no mediaCol field"))
 
   /** REINDEX type=dhash — materialize the collection's banded dHash56
     * signatures ([[graft.operators.Multimodal.dhashBands]] over the
@@ -2983,15 +2531,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else buckets
     require(nBuckets >= 1 && 16384 % nBuckets == 0,
       s"dhash buckets must divide 16384 (14-bit keys), got $nBuckets")
-    val dir = dhashDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    graft.operators.Multimodal.dhashBands(
-        cur.select(col("id"), col(mediaCol)), "id", mediaCol, nBuckets)
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("band", "key_bucket")
-      .parquet(new Path(dir, "bands").toString)
-    writeString(fs, dhashMetaPath(name),
-      s"""{"type":"dhash","mediaCol":"$mediaCol","buckets":$nBuckets}""")
+    dhash(name).rebuild(ArtifactMeta("dhash",
+        Seq("mediaCol" -> mediaCol, "buckets" -> nBuckets))) { dir =>
+      graft.operators.Multimodal.dhashBands(
+          cur.select(col("id"), col(mediaCol)), "id", mediaCol, nBuckets)
+        .write.mode("overwrite").option("compression", Compression)
+        .partitionBy("band", "key_bucket")
+        .parquet(new Path(dir, "bands").toString)
+    }
   }
 
   /** Screen an arriving image batch (`id`, media) for perceptual
@@ -3012,9 +2559,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       maxBucketSize: Int = 1000): DataFrame = {
     requireCollection(name)
     val cur = read(name)
-    val hasMeta = fs.exists(dhashMetaPath(name))
-    val live = hasMeta && !fs.exists(dhashStaleMarker(name))
-    val mc = if (hasMeta) dhashMediaCol(name) else mediaCol
+    val snap = dhash(name).snapshot
+    val liveSnap = snap.filter(_.live)
+    val live = liveSnap.isDefined
+    val mc = snap.map(s => dhashMediaCol(s.meta, name)).getOrElse(mediaCol)
     require(cur.columns.contains(mc),
       s"SCREEN needs a binary $mc column on $name")
     require(batch.columns.contains("id") && batch.columns.contains(mc),
@@ -3025,7 +2573,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // schemaless partitioned dir — the declared schema reads it empty
       if (live) graft.operators.ScaleKnobs.withDriverListing(spark)(
         spark.read.schema(DhashBandsSchema)
-          .parquet(new Path(dhashDir(name), "bands").toString))
+          .parquet(new Path(liveSnap.get.dataDir, "bands").toString))
       else graft.operators.Materialize.corpusScale(
         graft.operators.Multimodal.dhashBands(
           cur.select(col("id"), col(mc)), "id", mc)
@@ -3038,7 +2586,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       )
     val out = graft.operators.Multimodal.incomingDhashDups(bands, batch,
       "id", mc, maxHamming, maxBucketSize,
-      corpusBuckets = if (live) dhashBuckets(name) else -1)
+      corpusBuckets = liveSnap.fold(-1)(s => dhashBuckets(s.meta, name)))
     if (live) out
     else
       // finally: the fallback band seam is freed on success AND on a
@@ -3046,20 +2594,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // leak a corpus-sized block set for the session)
       try out.localCheckpoint(true)
       finally GraftSqlShims.unpersistCheckpoint(bands)
-  }
-
-  /** Mark the dhash artifact stale (mutations — a stale signature must
-    * never screen; [[screenImages]] falls back to the in-query
-    * recompute). No-op when absent.
-    */
-  private def invalidateDhashIndex(name: String): Unit = {
-    if (fs.exists(dhashMetaPath(name)))
-      writeString(fs, dhashStaleMarker(name), "stale")
-  }
-
-  private def deleteDhashIndex(name: String): Unit = {
-    val dir = dhashDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- attribute sidecar (TAG: tag once, filter many) --------------------
@@ -3082,58 +2616,31 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   // exists to avoid, and at scale it must never happen by accident (the
   // unindexed-decon refusal doctrine).
 
-  private def attrsDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}attrs_$name")
-
-  private def attrsMetaPath(name: String): Path =
-    new Path(attrsDir(name), "meta.json")
-
-  private def attrsStaleMarker(name: String): Path =
-    new Path(attrsDir(name), "stale")
-
-  private def attrsGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, attrsMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def attrsGenDir(name: String): Path =
-    new Path(attrsDir(name), s"gen_${attrsGen(name)}")
+  private def attrs(name: String): SegmentedArtifact =
+    new SegmentedArtifact(spark, fs, artifactDir("attrs", name), "attrs",
+      SegmentedFamily("attribute sidecar", "TAG", "TAG mode=refresh",
+        tables = _ => Seq(ArtifactTable("attrs", AttrsSchema)),
+        docs = "attrs", diffKey = attrsDiffKey, validate = _ => (),
+        writeSegment = (rows, seg, genDir, _) =>
+          attrRows(rows, seg)
+            .write.mode("append").option("compression", Compression)
+            .parquet(new Path(genDir, "attrs").toString)))
 
   private val AttrsSchema = StructType.fromDDL(
     "id BIGINT, payload_md5 STRING, n_tokens BIGINT, lang STRING, " +
       "quality DOUBLE, n_pii BIGINT, seg INT")
 
-  /** The meta's high-water segment number, when the sidecar records one
-    * (sidecars from before the hint fall back to the artifact scan). */
-  private def attrsMaxSegOf(name: String): Option[Int] =
-    """"max_seg"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, attrsMetaPath(name)))
-      .map(_.group(1).toInt)
+  // the DIFF key: md5(NULL) is NULL, and a NULL key never equals itself
+  // in the refresh's anti-joins — null-payload rows would churn
+  // (tombstone + re-tag) on every refresh. The sentinel goes OUTSIDE the
+  // md5 so NULL and '' stay DISTINCT states: a ''<->NULL update must
+  // re-tag (their attribute values differ), which a md5-of-coalesced-text
+  // key would silently miss.
+  private def attrsDiffKey: Column = coalesce(md5(col("payload")), lit("<null>"))
 
-  /** Next attrs segment number — from the meta hint when present (one
-    * small-file read, NOT a per-refresh scan of the artifact's seg
-    * column, which at corpus scale is a corpus-row-count read per
-    * streamed micro-batch). Callers append the segment, then
-    * [[recordAttrsSeg]]; a crash between the two merely REUSES the
-    * number for the next arrivals — safe, because the healing diff
-    * excludes already-written rows by (id, payload_md5), so a reused
-    * seg only ever mixes rows that are all live.
-    */
-  private def nextAttrsSeg(name: String, genDir: Path): Int =
-    attrsMaxSegOf(name).map(_ + 1).getOrElse(
-      readArtifact(new Path(genDir, "attrs"), AttrsSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1)
-
-  private def recordAttrsSeg(name: String, seg: Int): Unit =
-    writeString(fs, attrsMetaPath(name),
-      s"""{"type":"attrs","gen":${attrsGen(name)},"max_seg":$seg}""")
-
-  private def attrsTombstones(name: String): DataFrame =
-    readArtifact(new Path(attrsGenDir(name), "tombstones"), TombstonesSchema)
-
-  private def liveAttrRows(name: String): DataFrame =
-    readArtifact(new Path(attrsGenDir(name), "attrs"), AttrsSchema)
-      .join(broadcast(attrsTombstones(name)), Seq("id", "seg"), "left_anti")
+  private def attrRowsOf(at: SegmentedArtifact,
+      s: ArtifactSnapshot): DataFrame =
+    at.live(s, "attrs").select("id", "n_tokens", "lang", "quality", "n_pii")
 
   /** The core tagset over one projection — every attribute is the SAME
     * gate-proven column math its standalone query uses (q36's quality
@@ -3153,13 +2660,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         TextAnalysis.stopwordRatioFromToks(col("__toks")).as("__stop"))
     base.select(
       col("id"),
-      // the DIFF key: md5(NULL) is NULL, and a NULL key never equals
-      // itself in the refresh's anti-joins — null-payload rows would
-      // churn (tombstone + re-tag) on every refresh. The sentinel goes
-      // OUTSIDE the md5 so NULL and '' stay DISTINCT states: a ''<->NULL
-      // update must re-tag (their attribute values differ), which a
-      // md5-of-coalesced-text key would silently miss.
-      coalesce(md5(col("payload")), lit("<null>")).as("payload_md5"),
+      attrsDiffKey.as("payload_md5"),
       size(col("__toks")).cast("long").as("n_tokens"),
       // q39's argmax fold over the MATERIALIZED token array (langId
       // itself would re-tokenize per profile — 5× the regex cost)
@@ -3175,12 +2676,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       lit(seg).as("seg"))
   }
 
-  private def writeAttrsSegment(name: String, rows: DataFrame, seg: Int,
-      genDir: Path): Unit =
-    attrRows(rows, seg)
-      .write.mode("append").option("compression", Compression)
-      .parquet(new Path(genDir, "attrs").toString)
-
   /** TAG — build (or rebuild) the attribute sidecar: ONE pass over the
     * collection's payloads computing the core tagset (token count,
     * language id, quality score, PII occurrence count) per id, committed
@@ -3192,11 +2687,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"TAG needs a payload column on $name")
-    val dir = attrsDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeAttrsSegment(name, cur, seg = 0, genDir = new Path(dir, "gen_0"))
-    writeString(fs, attrsMetaPath(name),
-      """{"type":"attrs","gen":0,"max_seg":0}""")
+    attrs(name).build(ArtifactMeta("attrs"), cur)
   }
 
   /** TAG mode=refresh — incremental attribute maintenance
@@ -3208,43 +2699,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshAttrs(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(attrsMetaPath(name)),
-      s"no attribute sidecar on $name to refresh — run TAG first")
-    val genDir = attrsGenDir(name)
-    val cur = read(name)
-    require(cur.columns.contains("payload"),
-      s"TAG needs a payload column on $name")
-    val curKeys = cur.select(col("id").cast("long").as("id"),
-      coalesce(md5(col("payload")), lit("<null>")).as("payload_md5"))
-    val stored = liveAttrRows(name)
-    val arrivals = curKeys.join(stored.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = stored.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    var wroteSeg = -1
-    if (!arrivals.isEmpty) {
-      val newRows = cur.withColumn("id", col("id").cast("long"))
-        .join(broadcast(arrivals.select("id")), Seq("id"))
-      val nextSeg = nextAttrsSeg(name, genDir)
-      writeAttrsSegment(name, newRows, nextSeg, genDir)
-      recordAttrsSeg(name, nextSeg)
-      wroteSeg = nextSeg
-    }
-    if (!departures.isEmpty) {
-      val newTombs = attrsTombstones(name).union(departures)
-      val tombPath = new Path(genDir, "tombstones")
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"attrs tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(attrsStaleMarker(name), false)
-    maybeAutoCompactAttrs(name, wroteSeg)
-    ()
+    maybeAutoCompactAttrs(name, attrs(name).refresh(name,
+      read(name).withColumn("id", col("id").cast("long"))))
   }
 
   /** Segment hygiene (the splits auto-compact policy, attrs edition):
@@ -3270,26 +2726,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def compactAttrs(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(attrsMetaPath(name)),
-      s"no attribute sidecar on $name to compact — run TAG first")
-    require(!fs.exists(attrsStaleMarker(name)),
-      s"attribute sidecar on $name is stale — TAG mode=refresh first, " +
-        "then compact")
-    val dir = attrsDir(name)
-    val g = attrsGen(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    liveAttrRows(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "attrs").toString)
-    writeString(fs, attrsMetaPath(name),
-      s"""{"type":"attrs","gen":${g + 1},"max_seg":0}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    attrs(name).compact(name)
   }
 
   /** The committed attribute table: (id, n_tokens, lang, quality, n_pii),
@@ -3307,9 +2744,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def docAttrs(name: String): DataFrame = {
     requireCollection(name)
-    require(fs.exists(attrsMetaPath(name)),
-      s"no attribute sidecar on $name — run TAG first")
-    liveAttrRows(name).select("id", "n_tokens", "lang", "quality", "n_pii")
+    val at = attrs(name)
+    val snap = at.snapshot
+    require(snap.isDefined, s"no attribute sidecar on $name — run TAG first")
+    attrRowsOf(at, snap.get)
   }
 
   /** TAG mode=stats — per-language summary of the committed attributes
@@ -3361,48 +2799,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     }.reduce(_ && _)
   }
 
-  /** Mark the attribute sidecar stale (mutations call this): the stored
-    * attributes describe payloads that may have changed. Readers of
-    * [[docAttrs]] still see the committed values; filtering consumers
-    * refuse until a refresh re-tags the delta. No-op when absent.
-    */
-  private def invalidateAttrsIndex(name: String): Unit = {
-    if (fs.exists(attrsMetaPath(name)))
-      writeString(fs, attrsStaleMarker(name), "stale")
-  }
-
   /** Whether the attribute sidecar exists but a mutation marked it
     * stale — the probe the streaming tagger's replay heal uses (a
     * replayed micro-batch whose rows already landed must still clear
-    * the staleness its crashed original left behind).
+    * the staleness its crashed original left behind). Readers of
+    * [[docAttrs]] still see the committed values while stale; filtering
+    * consumers refuse until a refresh re-tags the delta.
     */
   private[graft] def attrsStale(name: String): Boolean =
-    fs.exists(attrsMetaPath(name)) && fs.exists(attrsStaleMarker(name))
-
-  private def deleteAttrsIndex(name: String): Unit = {
-    val dir = attrsDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-  }
-
-  /** Mark the stored text index STALE (mutations call this — stale
-    * postings must never serve a query; SEARCHTEXT falls back to the
-    * exact rescan). The artifact itself is KEPT: it is the diff base
-    * [[refreshPostings]] needs to index only the delta. No-op when no
-    * artifact exists.
-    */
-  private def invalidateTextIndex(name: String): Unit = {
-    val dir = textIndexDir(name)
-    if (fs.exists(new Path(dir, "meta.json")))
-      writeString(fs, textIndexStaleMarker(name), "stale")
-  }
-
-  /** Delete the stored text index outright (DROP calls this — the
-    * artifact must not outlive its collection). No-op when absent.
-    */
-  private def deleteTextIndex(name: String): Unit = {
-    val dir = textIndexDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-  }
+    attrs(name).state.contains("stale")
 
   /** Driver-side twin of [[graft.operators.TextAnalysis.normalizedTokens]]
     * (lowercase, [a-z0-9]+ runs): query terms must pass through the SAME
@@ -3422,12 +2827,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .digest(term.getBytes("UTF-8"))
     val hex = d.take(2).map("%02x".format(_)).mkString
     Integer.parseInt(hex, 16) % buckets
-  }
-
-  private[graft] def parseTextIndexBuckets(json: String): Int = {
-    val m = """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-    m.map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-      s"text index meta has no buckets field: $json"))
   }
 
   /** SEARCHHYBRID (extension): reciprocal-rank fusion of SEARCHTEXT and
@@ -3548,28 +2947,22 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val unionTerms: Seq[String] = termsByQ.flatMap(_._2).distinct
 
     // ---- sparse branch: one pruned postings pass for the whole batch
-    val tDir = textIndexDir(name)
-    val liveText = fs.exists(new Path(tDir, "meta.json")) &&
-      !fs.exists(textIndexStaleMarker(name))
-    val (hits, doclens) =
-      if (liveText) {
-        val buckets = parseTextIndexBuckets(
-          readString(fs, textIndexMetaPath(name)))
-        val wanted = unionTerms.map(bucketOfTerm(_, buckets)).distinct
-        val postings = readArtifact(
-            new Path(textGenDir(name), "postings"), PostingsSchema)
-          .filter(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(unionTerms: _*))
-          .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-        (postings.select(col("id"), col("term"), col("tf")),
-          liveDoclens(name).select(col("id"), col("dl")))
-      } else {
+    val post = postings(name)
+    val snap = post.snapshot
+    val (hits, doclens) = snap.filter(_.live) match {
+      case Some(s) =>
+        val wanted = unionTerms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
+        (post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
+            col("term").isin(unionTerms: _*)))
+            .select(col("id"), col("term"), col("tf")),
+          post.live(s, "doclens").select(col("id"), col("dl")))
+      case None =>
         // a STALE artifact never serves — but silently tokenizing the
         // corpus once per batch call hides the degradation from the
         // caller (the dense branch errors loudly on an unprobeable
         // layout; parity here). No artifact at all = the legitimate
         // index-free path, still one pass for the whole batch.
-        require(!fs.exists(new Path(tDir, "meta.json")),
+        require(snap.isEmpty,
           s"postings artifact on $name is stale (mutated since the last " +
             "build) — SEARCHHYBRID batch would silently tokenize the " +
             "whole corpus; REINDEX type=postings mode=refresh (or rebuild, " +
@@ -3581,7 +2974,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         (graft.operators.TextAnalysis.invertedIndex(cur, "id", "payload")
             .filter(col("term").isin(unionTerms: _*)),
           graft.operators.TextAnalysis.docLengths(cur, "id", "payload"))
-      }
+    }
     // the batch catalog: (query_id, term, ord) — ord is the term's
     // position in ITS query's list, the fold order that keeps per-query
     // summation identical to the single-query chain
@@ -4477,19 +3870,9 @@ object GraftDatabase {
     new GraftDatabase(spark, root)
   }
 
-  private def writeString(fs: FileSystem, p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
+  private def writeString(fs: FileSystem, p: Path, s: String): Unit =
+    ManagedArtifact.writeString(fs, p, s)
 
-  private def readString(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
-  }
+  private def readString(fs: FileSystem, p: Path): String =
+    ManagedArtifact.readString(fs, p)
 }

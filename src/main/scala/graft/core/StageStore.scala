@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (r13 verdict item 2): each stage's output frame is written to
   * `<root>/<stage>/gen_<g>/data` and COMMITTED by the single
   * `meta.json` overwrite — the artifact generation-pointer discipline
-  * (compactPostings precedent), so a crash at ANY point leaves either
+  * ([[ManagedArtifact.commitGeneration]]), so a crash at ANY point leaves either
   * "stage absent" (no meta — recompute) or "stage complete" (meta —
   * read back), never a half-written table a resume would trust.
   *
@@ -49,7 +49,8 @@ final class StageStore(spark: SparkSession, rootDir: String) {
     */
   private[graft] val stagePlans = scala.collection.mutable.Map.empty[String, String]
 
-  private def metaPath(stage: String) = new Path(new Path(root, stage), "meta.json")
+  private def artifact(stage: String) =
+    new ManagedArtifact(spark, fs, new Path(root, stage), stage)
 
   /** Return `stage`'s committed output, computing + committing it first
     * if absent. `compute` is by-name: a committed stage never builds the
@@ -62,24 +63,19 @@ final class StageStore(spark: SparkSession, rootDir: String) {
   def stage(name: String, partitionCols: Seq[String] = Nil)
       (compute: => DataFrame): DataFrame = {
     require(name.matches("[A-Za-z0-9_.-]+"), s"bad stage name: $name")
-    val dir = new Path(root, name)
-    val meta = metaPath(name)
-    if (fs.exists(meta)) {
-      val g = """"gen"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(readString(meta)).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"stage $name meta has no gen field"))
-      val schema = DataType.fromJson(
-        readString(new Path(dir, s"gen_$g/schema.json"))).asInstanceOf[StructType]
+    val art = artifact(name)
+    if (art.exists) {
+      val g = art.meta.gen.getOrElse(throw new IllegalStateException(
+        s"stage $name meta has no gen field"))
+      val schema = DataType.fromJson(ManagedArtifact.readString(fs,
+        new Path(art.genDir(g), "schema.json"))).asInstanceOf[StructType]
       // explicit schema: a zero-row stage reads back as the empty frame;
       // driver-side listing — partitioned stages are tens of dirs and
       // the distributed listing job is pure overhead there (ScaleKnobs)
       graft.operators.ScaleKnobs.withDriverListing(spark)(
         spark.read.schema(schema)
-          .parquet(new Path(dir, s"gen_$g/data").toString))
+          .parquet(new Path(art.genDir(g), "data").toString))
     } else {
-      val g = nextGen(dir)
-      val genDir = new Path(dir, s"gen_$g")
       val out = compute
       computed += name
       stagePlans(name) = out.queryExecution.executedPlan.toString
@@ -91,14 +87,17 @@ final class StageStore(spark: SparkSession, rootDir: String) {
       // 7.0 s with the hand-forward). The write below IS the single
       // compute pass; the committed read-back is this pipeline's
       // reliable checkpoint.
-      val w = out.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(new Path(genDir, "data").toString)
-      writeString(new Path(genDir, "schema.json"), out.schema.json)
-      if (failBeforeCommit.contains(name))
-        throw new IllegalStateException(s"injected crash before commit: $name")
-      writeString(meta, s"""{"stage":"$name","gen":$g}""")
-      sweepOrphans(dir, g)
+      // a crashed attempt's meta-less gen dir is skipped, then swept
+      art.commitGeneration(ArtifactMeta("", Seq("stage" -> name),
+          gen = Some(nextGen(art.dir)))) { genDir =>
+        val w = out.write.mode("overwrite")
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(new Path(genDir, "data").toString)
+        ManagedArtifact.writeString(fs, new Path(genDir, "schema.json"),
+          out.schema.json)
+        if (failBeforeCommit.contains(name))
+          throw new IllegalStateException(s"injected crash before commit: $name")
+      }
       if (failAfterCommit.contains(name))
         throw new IllegalStateException(s"injected crash after commit: $name")
       stage(name)(sys.error("unreachable — just committed"))
@@ -106,10 +105,10 @@ final class StageStore(spark: SparkSession, rootDir: String) {
   }
 
   /** Committed generation of `stage`, if any (spec introspection). */
-  private[graft] def committedGen(stage: String): Option[Int] =
-    if (!fs.exists(metaPath(stage))) None
-    else """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(metaPath(stage))).map(_.group(1).toInt)
+  private[graft] def committedGen(stage: String): Option[Int] = {
+    val art = artifact(stage)
+    if (art.exists) art.meta.gen else None
+  }
 
   private def nextGen(dir: Path): Int = {
     val existing =
@@ -117,23 +116,5 @@ final class StageStore(spark: SparkSession, rootDir: String) {
       else fs.listStatus(dir).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("gen_")).map(_.drop(4).toInt)
     if (existing.isEmpty) 0 else existing.max + 1
-  }
-
-  private def sweepOrphans(dir: Path, keep: Int): Unit = {
-    fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_$keep")
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  private def writeString(p: Path, s: String): Unit = {
-    val o = fs.create(p, true)
-    try o.write(s.getBytes("UTF-8")) finally o.close()
-  }
-
-  private def readString(p: Path): String = {
-    val i = fs.open(p)
-    try scala.io.Source.fromInputStream(i, "UTF-8").mkString finally i.close()
   }
 }

@@ -2467,7 +2467,7 @@ object PipelineQueries {
     // at build time, so the (band, band_bucket) partition layout is
     // exercised at every SF regardless of what ScaleKnobs.sigBuckets
     // derives from the collection's stats. The refresh segment must land
-    // under the SAME bucket layout (minhashBuckets reads the meta) and
+    // under the SAME bucket layout (the meta records the bucket count) and
     // compaction must carry it into gen_1 — any layout divergence either
     // errors at read (mixed flat/partitioned dirs) or changes the probe's
     // pruned candidate set. Bucketing is result-invariant, so the oracle

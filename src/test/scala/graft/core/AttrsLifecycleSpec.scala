@@ -304,4 +304,30 @@ class AttrsLifecycleSpec extends AnyFunSuite {
       d.exportCollectionResumable("docs", out, nShards = 4, attrs = None))
     assert(e.getMessage.contains("attrs"))
   }
+
+  test("a refresh after a crash between segment append and record keeps the fresh version") {
+    val d = db(Seq(docEn, docDe))
+    d.reindexAttrs("docs")
+    d.update("docs", Seq((2L, "la que es un dia")).toDF("id", "payload"))
+    d.refreshAttrs("docs") // doc 2 v2 lands as seg 1, (2, 0) tombstoned
+    // the state a crash right after that append left under a
+    // record-after-append segment rule: the meta still at max_seg 0 and
+    // none of that refresh's tombstones written
+    val dir = java.nio.file.Paths.get(d.root.toUri.getPath,
+      s"${GraftDatabase.ReservedPrefix}attrs_docs")
+    Files.deleteIfExists(dir.resolve(".meta.json.crc")) // stale checksum
+    Files.write(dir.resolve("meta.json"),
+      """{"type":"attrs","gen":0,"max_seg":0}""".getBytes("UTF-8"))
+    val tombs = dir.resolve("gen_0").resolve("tombstones")
+    assert(Files.exists(tombs))
+    Files.walk(tombs).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    // doc 2 changes again: its v3 must not take a segment number whose
+    // (id, seg) the same refresh tombstones
+    d.update("docs", Seq((2L, "the dog and the cat")).toDF("id", "payload"))
+    d.refreshAttrs("docs")
+    val a = attrsMap(d)
+    assert(a.keySet == Set(1L, 2L), a.toString)
+    assert(a(2L)._2 == "en" && a(2L)._1 == 5L, s"doc 2 must be v3: ${a(2L)}")
+  }
 }

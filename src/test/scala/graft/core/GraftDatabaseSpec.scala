@@ -1128,4 +1128,35 @@ class GraftDatabaseSpec extends AnyFunSuite {
     assert(oneMerge == Seq(Seq("ab", "ab", "ab", "ab"), Seq("ab")),
       s"1-merge retrain must stop at (a,b): $oneMerge")
   }
+
+  test("a refresh refused by a pre-bucket meta materializes nothing and leaks no checkpoint") {
+    val db = freshDb()
+    db.createCollection("docs")
+    db.bulkInsert("docs", (1L to 4L).map(i => VectorRecord(i,
+      Array(1.0f, 0.0f), (0 until 20).map(t => s"w${i}_$t").mkString(" ")))
+      .toDF())
+    db.reindexMinhash("docs", buckets = 4)
+    db.reindexWinsig("docs", buckets = 4)
+    val base = db.root.toUri.getPath
+    def put(kind: String, json: String): Unit = {
+      val dir = java.nio.file.Paths.get(base, s"graft_${kind}_docs")
+      Files.deleteIfExists(dir.resolve(".meta.json.crc")) // stale checksum
+      Files.write(dir.resolve("meta.json"), json.getBytes("UTF-8"))
+    }
+    // the artifacts as a build before the bucketed layout wrote them
+    put("minhash", """{"type":"minhash","shingleN":5,"numHashes":8,"rowsPerBand":2,"gen":0}""")
+    put("winsig", """{"type":"winsig","minTokens":15,"gen":0}""")
+    // a mutation gives both refreshes arrivals AND departures
+    db.update("docs", Seq(VectorRecord(2L, Array(0.0f, 1.0f),
+      (0 until 20).map(t => s"changed$t").mkString(" "))).toDF())
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Seq[() => Unit](() => db.refreshMinhash("docs"),
+        () => db.refreshWinsig("docs")).foreach { refresh =>
+      val e = intercept[IllegalStateException](refresh())
+      assert(e.getMessage.contains("predates the bucketed layout"), e.getMessage)
+    }
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"refresh leaked checkpoints: $leaked")
+  }
 }

@@ -679,4 +679,60 @@ class SplitLifecycleSpec extends AnyFunSuite {
       d2.routeArrivals("docs", Seq((1L, "x")).toDF("id", "payload"))
     }.getMessage.contains("run SPLIT before ROUTE"))
   }
+
+  test("compaction keeps every family pin: ROUTE still windows at min_tokens and screens at max_hamming") {
+    import org.apache.spark.sql.types._
+    def splitsMeta(d: GraftDatabase, coll: String): ArtifactMeta =
+      ArtifactMeta.parse(new String(Files.readAllBytes(java.nio.file.Paths
+        .get(d.root.toUri.getPath, s"graft_splits_$coll", "meta.json")), "UTF-8"))
+    val parent = Files.createTempDirectory("graft_pins").toString
+    val d = GraftDatabase.create(spark, parent, "db")
+    // winsig at a non-default width
+    d.createCollection("docs", StructType(Seq(
+      StructField("id", LongType), StructField("payload", StringType))))
+    val shared = (1 to 20).map(i => s"w$i")
+    d.bulkInsert("docs", Seq(
+      (1L, shared.mkString(" ") + " alpha"),
+      (2L, "intro " + shared.mkString(" ")),
+      (3L, (1 to 20).map(i => s"x$i").mkString(" "))).toDF("id", "payload"))
+    d.reindexWinsig("docs", minTokens = 20)
+    d.buildSplitsWinsig("docs", minTokens = 20)
+    d.compactSplits("docs")
+    assert(splitsMeta(d, "docs").int("min_tokens").contains(20))
+    // 17 shared tokens: a match at width 15, none at the pinned 20
+    val r1 = d.routeArrivalsWinsig("docs",
+        Seq((100L, shared.take(17).mkString(" ") + " tail")).toDF("id", "payload"))
+      .as[(Long, Long, String, Long, Long)].collect().head
+    assert(r1._2 == 100L && r1._4 == 0L, r1.toString)
+    // the full 20-token window inherits
+    val r2 = d.routeArrivalsWinsig("docs",
+        Seq((101L, "head " + shared.mkString(" "))).toDF("id", "payload"))
+      .as[(Long, Long, String, Long, Long)].collect().head
+    assert(r2._2 == 1L && r2._4 >= 1L, r2.toString)
+
+    // dhash at a tighter radius: grids are the payload (2-byte magic +
+    // 7x9 cells); the arrival flips exactly 5 of row 0's 8 gradient bits
+    def grid(px: (Int, Int) => Int): String = "0000" +
+      (for (i <- 0 until 7; j <- 0 until 9) yield f"${px(i, j)}%02x").mkString
+    val base = grid((i, j) => 10 * j + i)
+    val other = grid((i, j) => 200 - 10 * j + i) // every gradient reversed
+    val row0 = Seq(200, 190, 180, 170, 160, 150, 160, 170, 180)
+    val arrival = grid((i, j) => if (i == 0) row0(j) else 10 * j + i)
+    def media(rows: Seq[(Long, String)]) = rows.toDF("id", "hex")
+      .select(col("id"), unhex(col("hex")).as("media"))
+    d.createCollection("imgs", StructType(Seq(
+      StructField("id", LongType), StructField("media", BinaryType))))
+    d.bulkInsert("imgs", media(Seq((1L, base), (2L, other))))
+    assert(d.screenImages("imgs", media(Seq((9L, arrival))))
+      .as[(Long, Long, Long)].collect().toSeq == Seq((9L, 1L, 5L)),
+      "the arrival sits 5 bits from doc 1: a match at the default radius 6")
+    d.reindexDhash("imgs")
+    d.buildSplitsDhash("imgs", maxHamming = 3)
+    d.compactSplits("imgs")
+    assert(splitsMeta(d, "imgs").int("max_hamming").contains(3))
+    val r3 = d.routeArrivalsDhash("imgs", media(Seq((300L, arrival))))
+      .as[(Long, Long, String, Long, Long)].collect().head
+    assert(r3._2 == 300L && r3._4 == 0L,
+      s"ROUTE must screen at the pinned radius 3: $r3")
+  }
 }

@@ -316,7 +316,10 @@ object CommandExecutor {
               case Some(s) if db.indexTypeOf(coll).contains("ivfpq_kmeans") =>
                 db.searchSimilarIvfPq(coll, vec, k, s.toInt,
                   nprobe = if (radius >= 0) radius + 1 else 2)
-              case Some(s) => db.searchSimilarSq8(coll, vec, k, s.toInt, metric)
+              // radius= composes the cell probe on a sign/kmeans layout,
+              // the same option names SEARCHHYBRID composes under
+              case Some(s) => db.searchSimilarSq8(coll, vec, k, s.toInt, metric,
+                probeRadius = radius)
               case None => db.searchSimilar(coll, vec, k, metric, radius)
             }
         }

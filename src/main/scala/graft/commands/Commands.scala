@@ -23,7 +23,8 @@ package graft.commands
   *  - SEARCHSIMILAR arg: `k=<n>[;metric=cosine|l2|dot][;radius=<r>]
   *    [;shortlist=<n>];vec=f,f,...` — `radius` opts into the index probe
   *    (sign-bucket hamming radius / kmeans nprobe−1); `shortlist` selects
-  *    the SQ8 quantized-rerank path — except on `type=pq` /
+  *    the SQ8 quantized-rerank path (composed with `radius` cell pruning
+  *    on a quantized sign/kmeans collection) — except on `type=pq` /
   *    `type=ivfpq` collections, where it means the ADC path over the
   *    stored codes (composed with `radius` cell pruning). `batch=<path>`
   *    answers a whole (query_id, query_vec) parquet in one scan.

@@ -162,27 +162,51 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   /** Read a collection as a DataFrame (empty-with-schema when no data files
     * have been written yet). `basePath` keeps partition columns (cluster_id)
-    * visible after REINDEX rewrites the layout.
+    * visible after REINDEX rewrites the layout. Runs no Spark job.
     */
   def read(name: String): DataFrame = {
     requireCollection(name)
     val dir = collDir(name)
-    val schema = schemaOf(name)
-    val hasData = fs.listStatus(dir).exists { s =>
-      (s.isFile && s.getPath.getName.endsWith(".parquet")) ||
-        (s.isDirectory && s.getPath.getName.contains("="))
-    }
-    if (!hasData) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    } else {
-      // schema inference (not the stored DDL) so partition columns added by
-      // REINDEX (cluster_id=...) stay visible. Driver-side listing: an
-      // indexed layout is tens-to-hundreds of cluster dirs and the
-      // distributed listing job is pure overhead there (ScaleKnobs).
-      graft.operators.ScaleKnobs.withDriverListing(spark)(
-        spark.read.option("basePath", dir.toString).parquet(dir.toString))
+    firstDataFile(dir) match {
+      case None =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaOf(name))
+      case Some(footer) =>
+        // the data schema comes from the files, not the stored DDL: the
+        // rewrites add columns (the quantized copy, pq codes) the DDL never
+        // names. It is the schema Spark's inference would derive from the
+        // same footer, resolved on the driver — inference runs a Spark job
+        // per read even for one footer. Partition columns (cluster_id) are
+        // still discovered from the directories. Driver-side listing: an
+        // indexed layout is tens-to-hundreds of cluster dirs and the
+        // distributed listing job is pure overhead there (ScaleKnobs).
+        val schema = GraftSqlShims.parquetFooterSchema(spark, footer)
+        graft.operators.ScaleKnobs.withDriverListing(spark)(
+          spark.read.schema(schema).option("basePath", dir.toString)
+            .parquet(dir.toString))
     }
   }
+
+  /** The data file whose footer Spark's parquet schema inference reads:
+    * the first non-empty visible file by full path string
+    * (`ParquetUtils.splitFiles` sorts the listing that way), found by
+    * descending in that order rather than listing the whole tree. A
+    * directory sorts as `name/`, which is where its files' paths fall.
+    * Hidden names are Spark's listing rule: `.` and `_` prefixes, except
+    * `_` names holding a `=`.
+    */
+  private def firstDataFile(dir: Path): Option[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir)
+      .filterNot { s =>
+        val n = s.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }
+      .sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
+      .iterator
+      .flatMap(s =>
+        if (s.isDirectory) firstDataFile(s.getPath)
+        else Some(s).filter(_.getLen > 0))
+      .nextOption()
 
   // ---- writes ------------------------------------------------------------
 

@@ -228,12 +228,16 @@ private[core] final class SegmentedArtifact(spark: SparkSession,
     read(new Path(s.dataDir, "tombstones"), TombstonesSchema)
 
   /** Live rows of `sub`; `where` filters the table scan itself, so its
-    * partition pruning is untouched by the tombstone anti-join. */
+    * partition pruning is untouched by the tombstone anti-join. A
+    * generation without a `tombstones` table (a build, a compaction, a
+    * refresh with no departures) is all live: no anti-join, so no
+    * broadcast of an empty frame. */
   def live(s: ArtifactSnapshot, sub: String,
       where: Option[Column] = None): DataFrame = {
     val t = table(s, sub)
-    where.fold(t)(t.filter).join(broadcast(tombstones(s)), Seq("id", "seg"),
-      "left_anti")
+    val rows = where.fold(t)(t.filter)
+    if (!fs.exists(new Path(s.dataDir, "tombstones"))) rows
+    else rows.join(broadcast(tombstones(s)), Seq("id", "seg"), "left_anti")
   }
 
   /** Full build over `rows` as gen 0 / seg 0. */

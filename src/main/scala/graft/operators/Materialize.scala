@@ -23,6 +23,16 @@ import org.apache.spark.sql.DataFrame
   * either way (spec-pinned) — the knob changes WHERE the materialized
   * bytes live, never what they are.
   *
+  * Retention in `reliable` mode: the operators free a corpus-scale frame
+  * with `GraftSqlShims.unpersistCheckpoint`, which releases block-manager
+  * blocks only — a reliable checkpoint has none, so that call is a no-op
+  * and the checkpoint FILES stay in the checkpoint directory. Spark
+  * deletes them only when `spark.cleaner.referenceTracking.cleanCheckpoints
+  * = true` (default false), and then once the checkpointed RDD is garbage
+  * collected on the driver. A long-running session in reliable mode
+  * should set it; otherwise the directory grows with every screen
+  * fallback and dedup/export seam it serves.
+  *
   * Memory math at sf0.1 (why the default is safe locally and the knob
   * matters at 100 TB): the q31 rare-shingle table is ~250 k rows × ~70 B
   * (id + 5-token shingle) ≈ 17 MB; dhash bands are 4 rows/image × ~20 B.

@@ -123,6 +123,10 @@ object ScaleKnobs {
     * value is restored after the read (explicit-default restore — the
     * r16 RuntimeConfig rule). Synchronized: the threshold is session
     * state and concurrent screen legs may read artifacts in parallel.
+    * The body only lists and plans — every caller hands the reader an
+    * explicit schema (collection reads resolve theirs from a footer on
+    * the driver), so no Spark job runs under the lock and concurrent
+    * commands queue for a listing, never for another command's job.
     */
   def withDriverListing[T](spark: org.apache.spark.sql.SparkSession)(
       body: => T): T = listingLock.synchronized {

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 import graft.functions.{cosine_sim, dot_product, l2_dist}
 
@@ -169,8 +171,9 @@ object SimilaritySearch {
     *    driver (it is request-sized by construction — the same class of
     *    driver-side value as the query vector), push the ids into the
     *    rerank scan as an `In` filter so parquet row-group/page statistics
-    *    can skip full-precision data, and join the approx scores back from
-    *    a local relation (no second execution of the shortlist plan).
+    *    can skip full-precision data, and attach the approx scores as a
+    *    literal id lookup (no second execution of the shortlist plan and
+    *    no broadcast job: the rerank is the command's only other job).
     *  - above the threshold: a giant In-list would serialize through the
     *    driver into every task, so the shortlist never leaves the
     *    executors — broadcast join-back instead (the pushdown win no
@@ -197,11 +200,23 @@ object SimilaritySearch {
         // another order would otherwise silently push scores as ids
         val idIdx = short.schema.fieldIndex(idCol)
         val ids = rows.map(_.get(idIdx)).toSeq
-        val local = collection.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), short.schema)
+        // the join-back as a literal lookup instead of a broadcast join
+        // (a second job): id → the shortlist's other columns, one struct
+        // per shortlist row, inlined — the inner USING join's columns and
+        // multiplicity (duplicate ids on either side, null ids matching
+        // nothing)
+        val rest = StructType(short.schema.filterNot(_.name == idCol))
+        val byId = rows.filter(_.get(idIdx) != null).groupBy(_.get(idIdx))
+          .map { case (id, rs) =>
+            id -> rs.toSeq.map(r => Row.fromSeq(rest.map(f => r.getAs[Any](f.name))))
+          }
+        val lookup = GraftSqlShims.column(Literal.create(byId,
+          MapType(short.schema(idCol).dataType,
+            ArrayType(rest, containsNull = false), valueContainsNull = false)))
         collection
           .filter(col(idCol).isInCollection(ids))
-          .join(broadcast(local), Seq(idCol))
+          .select((idCol +: collection.columns.toSeq.filter(_ != idCol))
+            .map(col) :+ inline(element_at(lookup, col(idCol))): _*)
       } else {
         collection.join(broadcast(short), Seq(idCol))
       }

@@ -36,6 +36,30 @@ object GraftSqlShims {
       case _ => ()
     }
 
+  /** The data schema Spark's parquet inference derives from `file`'s
+    * footer, computed on the driver: the same footer read, Spark row
+    * metadata (`ParquetFileFormat.readSchemaFromFooter`) and converter
+    * flags as `ParquetFileFormat.mergeSchemasInParallel`, without the
+    * Spark job that function launches even for a single footer.
+    */
+  def parquetFooterSchema(spark: SparkSession,
+      file: org.apache.hadoop.fs.FileStatus): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        spark.sessionState.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
+  }
+
   /** True if the frame's analyzed plan is a checkpoint scan (used by specs
     * to assert leak-hygiene contracts without peeking at Spark internals).
     */

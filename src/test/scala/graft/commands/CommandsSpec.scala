@@ -566,4 +566,35 @@ class CommandsSpec extends AnyFunSuite {
       (3L, Seq.empty[Float], "empty vec")),
       "jsonl records must round-trip exactly through the command surface")
   }
+
+  test("executor: SEARCHSIMILAR radius= composes the cell probe on the SQ8 path") {
+    val parent = Files.createTempDirectory("graftsq8probe").toString
+    val db = GraftDatabase.create(spark, parent, "sq8probedb")
+    val recs = (0 until 200).map { i =>
+      graft.model.VectorRecord(i.toLong,
+        Array.tabulate(6)(j => math.cos(i * 0.37 + j * 1.1).toFloat), s"p$i")
+    }.toDF()
+    // a stored row's own vector: its cell is never empty, so the probed
+    // scan survives planning (an empty shortlist folds the scan away)
+    val vec = Array.tabulate(6)(j => math.cos(17 * 0.37 + j * 1.1).toFloat)
+    Seq[(String, GraftDatabase => Unit)](
+      "signq" -> (_.reindex("signq", nBits = 4)),
+      "kmq" -> (_.reindexKMeans("kmq", k = 4))
+    ).foreach { case (coll, layout) =>
+      db.createCollection(coll)
+      db.bulkInsert(coll, recs)
+      layout(db)
+      db.quantize(coll)
+      Seq(0, 1).foreach { r =>
+        val got = CommandExecutor.execute(db, GraftCommand.SearchSimilar(coll,
+          s"k=10;radius=$r;shortlist=40;vec=${vec.mkString(",")}"))
+        val want = db.searchSimilarSq8(coll, vec, 10, 40, probeRadius = r)
+        val rows = got.collect().toSeq
+        assert(rows.nonEmpty && rows == want.collect().toSeq, s"$coll radius=$r")
+        val plan = got.queryExecution.executedPlan.toString
+        assert("PartitionFilters: \\[[^\\]]*cluster_id".r.findFirstIn(plan).isDefined,
+          s"$coll radius=$r must prune cells:\n$plan")
+      }
+    }
+  }
 }

@@ -335,6 +335,44 @@ class GraftDatabaseSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSeq == Seq(4L))
   }
 
+  test("postings live rows: the tombstone anti-join only where tombstones exist") {
+    val db = freshDb()
+    db.createCollection("docs")
+    db.bulkInsert("docs", Seq(
+      VectorRecord(1L, Array(1.0f, 0.0f), "vector data merge"),
+      VectorRecord(2L, Array(0.0f, 1.0f), "data filler filler"),
+      VectorRecord(3L, Array(0.9f, 0.1f), "vector only here")).toDF())
+    db.reindexPostings("docs", buckets = 16)
+    def q() = db.searchText("docs", Seq("vector", "data"), k = 10)
+    def antiJoin(df: org.apache.spark.sql.DataFrame): Boolean = {
+      df.collect()
+      df.queryExecution.executedPlan.toString.contains("LeftAnti")
+    }
+    assert(!antiJoin(q()), "a fresh build has no tombstones to anti-join")
+    // an arrival alone tombstones nothing: still no anti-join
+    db.bulkInsert("docs", Seq(
+      VectorRecord(4L, Array(0.5f, 0.5f), "late vector arrival")).toDF())
+    db.refreshPostings("docs")
+    assert(!antiJoin(q()), "a refresh without departures writes no tombstones")
+    // departures: the anti-join is back and the stored rows equal the rescan
+    db.update("docs", Seq(
+      VectorRecord(2L, Array(0.0f, 1.0f), "rewritten vector data")).toDF())
+    db.delete("docs", $"id" === 3L)
+    val rescan = q().as[(Long, Double, Long)].collect().toSeq
+    assert(!q().queryExecution.executedPlan.toString.contains("textindex_docs"))
+    db.refreshPostings("docs")
+    val served = q()
+    assert(served.queryExecution.executedPlan.toString.contains("textindex_docs"))
+    assert(antiJoin(served), "tombstoned versions must be anti-joined out")
+    assert(served.as[(Long, Double, Long)].collect().toSeq == rescan)
+    // compaction folds the tombstones away: no anti-join, same rows
+    db.compactPostings("docs")
+    val compacted = q()
+    assert(compacted.queryExecution.executedPlan.toString.contains("textindex_docs"))
+    assert(!antiJoin(compacted), "a compacted generation has no tombstones")
+    assert(compacted.as[(Long, Double, Long)].collect().toSeq == rescan)
+  }
+
   test("positional postings: stored phrase match, refresh delta, compaction") {
     val db = freshDb()
     db.createCollection("docs")

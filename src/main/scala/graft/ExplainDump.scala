@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: print a query's INITIAL physical plan without executing it
-  * (PlanDump's non-executing sibling — for queries too slow to run while
+  * ([[PlansDump]]'s non-executing sibling — for queries too slow to run while
   * diagnosing why they are slow).
   */
 object ExplainDump {

@@ -306,20 +306,22 @@ object CommandExecutor {
                 "SEARCHSIMILAR arg must include vec=f,f,... or batch=<path>")
             }
             opts.get("shortlist") match {
-              // on a REINDEX type=pq collection, shortlist= means the ADC
-              // path (stored m-byte codes + sidecar codebooks), composed
-              // with cell pruning when radius= is also given
-              case Some(s) if db.indexTypeOf(coll).contains("pq") =>
-                db.searchSimilarPq(coll, vec, k, s.toInt, probeRadius = radius)
-              // residual layout: radius= keeps the kmeans convention
-              // (nprobe = radius + 1, like searchSimilar on type=kmeans)
-              case Some(s) if db.indexTypeOf(coll).contains("ivfpq_kmeans") =>
-                db.searchSimilarIvfPq(coll, vec, k, s.toInt,
-                  nprobe = if (radius >= 0) radius + 1 else 2)
-              // radius= composes the cell probe on a sign/kmeans layout,
-              // the same option names SEARCHHYBRID composes under
-              case Some(s) => db.searchSimilarSq8(coll, vec, k, s.toInt, metric,
-                probeRadius = radius)
+              case Some(s) => db.indexTypeOf(coll) match {
+                // on a REINDEX type=pq collection, shortlist= means the ADC
+                // path (stored m-byte codes + sidecar codebooks), composed
+                // with cell pruning when radius= is also given
+                case Some("pq") =>
+                  db.searchSimilarPq(coll, vec, k, s.toInt, probeRadius = radius)
+                // residual layout: radius= keeps the kmeans convention
+                // (nprobe = radius + 1, like searchSimilar on type=kmeans)
+                case Some("ivfpq_kmeans") =>
+                  db.searchSimilarIvfPq(coll, vec, k, s.toInt,
+                    nprobe = if (radius >= 0) radius + 1 else 2)
+                // radius= composes the cell probe on a sign/kmeans layout,
+                // the same option names SEARCHHYBRID composes under
+                case _ => db.searchSimilarSq8(coll, vec, k, s.toInt, metric,
+                  probeRadius = radius)
+              }
               case None => db.searchSimilar(coll, vec, k, metric, radius)
             }
         }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.core.IndexLayout.{IvfPqKMeans, KMeans, Pq, SignBucket}
 import graft.model.VectorRecord
 import graft.operators.{ProductQuantization, SimilaritySearch, TextAnalysis, VectorIndex, ZOrder}
 
@@ -115,8 +116,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     requireCollection(name)
     import spark.implicits._
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    indexType(name).foreach(t => rows += ((s"vector:$t", "live")))
-    if (fs.exists(new Path(collDir(name), TokenizerMetaFile)))
+    layoutOf(name).foreach(l => rows += ((s"vector:${l.kind}", "live")))
+    if (fs.exists(new Path(collDir(name), TokenizerMeta.File)))
       rows += (("tokenizer", "live"))
     // the split sidecar never goes stale: assignments are point-in-time
     // placements by design (a re-SPLIT rebuilds, mutations don't move)
@@ -240,45 +241,40 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * Indexed collections (REINDEX moved the data under `cluster_id=...`
     * partition dirs): a plain root-level append would be INVISIBLE to the
     * partition-discovering read — silent row loss. So the append is
-    * layout-aware: arriving rows get a `cluster_id` in the same write pass
-    * (sign-bucket code or nearest stored centroid — both pure column math)
-    * and land `partitionBy("cluster_id")`; a layout whose assignment rule
-    * the sidecar doesn't carry appends into a reserved `cluster_id=-1`
-    * unindexed-tail partition, which exact scans always read and probes of
-    * recognized layouts never produce (both assignment rules emit ≥ 0).
+    * layout-aware: arriving rows get their index columns in the same write
+    * pass ([[IndexLayout.assign]] — pure column math against the recorded
+    * layout) and land `partitionBy("cluster_id")`; a clustered collection
+    * without a recorded cell rule appends into the reserved
+    * [[IndexLayout.unindexedTail]].
     */
   def bulkInsert(name: String, df: DataFrame): Unit = {
     requireCollection(name)
     invalidateArtifacts(name) // appended rows are in no stored artifact
     // derived columns the existing data carries (quantized copy, cluster
-    // assignment) are recomputed for arriving rows in the same write pass —
-    // an append may never produce rows missing a column the readers expect.
-    // ONE schema read serves both decisions (each listStatus/inference is a
-    // storage roundtrip — this is the hot write path).
+    // assignment, codes) are recomputed for arriving rows in the same write
+    // pass — an append may never produce rows missing a column the readers
+    // expect. ONE schema read and ONE sidecar read (this is the hot write
+    // path).
     val existing = read(name).columns.toSet
-    val layout = indexType(name)
-    val base = align(name, df)
+    val arrived = derive(existing, layoutOf(name), align(name, df))
+    val w = arrived.write.mode("append").option("compression", Compression)
+    (if (existing.contains("cluster_id")) w.partitionBy("cluster_id") else w)
+      .parquet(collDir(name).toString)
+  }
+
+  /** Rows arriving in a collection whose data has columns `existing`: the
+    * quantized copy when the collection stores one, and in a clustered
+    * collection the index columns of `layout` ([[IndexLayout.assign]]) or
+    * the unindexed tail when there is no layout record.
+    */
+  private def derive(existing: Set[String], layout: Option[IndexLayout],
+      rows: DataFrame): DataFrame = {
     val quanted =
       if (existing.contains(QuantCol))
-        base.withColumn(QuantCol, quantExpr(col("embedding")))
-      else base
-    val aligned =
-      // residual layouts derive codes AFTER the cluster assignment (codes
-      // quantize x − centroid(cell)) — the combined ivfPqAssign below
-      // handles both columns in one pass
-      if (existing.contains(PqCodeCol) && !layout.contains("ivfpq_kmeans"))
-        ProductQuantization.assignCodes(quanted, "embedding",
-          pqCodebooksOf(name), PqCodeCol)
-      else quanted
-    appendAssignment(name, existing.contains("cluster_id"), layout) match {
-      case Some(assign) =>
-        assign(aligned).write.mode("append")
-          .option("compression", Compression)
-          .partitionBy("cluster_id").parquet(collDir(name).toString)
-      case None =>
-        aligned.write.mode("append").option("compression", Compression)
-          .parquet(collDir(name).toString)
-    }
+        rows.withColumn(QuantCol, quantExpr(col("embedding")))
+      else rows
+    if (!existing.contains("cluster_id")) quanted
+    else layout.fold(IndexLayout.unindexedTail(quanted))(_.assign(quanted))
   }
 
   /** EXPORT — deterministic sharded egress (the BULKINSERT sources'
@@ -544,46 +540,37 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
     val spark = this.spark
     import spark.implicits._
-    val metaP = new Path(path, "_export_meta.json")
+    val metaP = new Path(path, ExportMeta.File)
     val pinned: Option[(String, Int)] =
       if (!fs.exists(metaP)) None
       else {
-        val m = readString(fs, metaP)
-        val f = """"format"\s*:\s*"([a-z]+)"""".r.findFirstMatchIn(m)
-          .map(_.group(1))
-        val s = """"shards"\s*:\s*(\d+)""".r.findFirstMatchIn(m)
-          .map(_.group(1).toInt)
-        require(f.isDefined && s.isDefined,
+        val pin = ExportMeta.parse(readString(fs, metaP))
+        require(pin.isDefined,
           s"EXPORT resume: malformed _export_meta.json at $path")
-        require(f.get == format,
-          s"EXPORT resume: $path was started as format=${f.get}, " +
+        val ExportMeta(f, s, sp, exPin, atPin) = pin.get
+        require(f == format,
+          s"EXPORT resume: $path was started as format=$f, " +
             s"got format=$format — finish or remove the old export first")
         // the split filter is part of the artifact's identity exactly
         // like format: a train-set export must never silently resume as
         // a full-corpus one (or vice versa)
-        val sp = """"split"\s*:\s*"([a-z]*)"""".r.findFirstMatchIn(m)
-          .map(_.group(1)).getOrElse("")
         require(sp == split.getOrElse(""),
           s"EXPORT resume: $path was started with split=" +
             s"${if (sp.isEmpty) "<none>" else sp}, got " +
             s"${split.getOrElse("<none>")} — finish or remove the old export first")
         // the exclusion source is part of the artifact's identity too:
         // a decon-cleaned export must never silently resume uncleaned
-        val exPin = """"exclude"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(m)
-          .map(_.group(1)).getOrElse("")
         require(exPin == exclude.getOrElse(""),
           s"EXPORT resume: $path was started with exclude=" +
             s"${if (exPin.isEmpty) "<none>" else exPin}, got " +
             s"${exclude.getOrElse("<none>")} — finish or remove the old export first")
         // the attrs filter is artifact identity too: a quality-filtered
         // export must never silently resume unfiltered (or vice versa)
-        val atPin = """"attrs"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(m)
-          .map(_.group(1)).getOrElse("")
         require(atPin == attrs.getOrElse(""),
           s"EXPORT resume: $path was started with attrs=" +
             s"${if (atPin.isEmpty) "<none>" else atPin}, got " +
             s"${attrs.getOrElse("<none>")} — finish or remove the old export first")
-        Some((f.get, s.get))
+        Some((f, s))
       }
     // -1 adopts the pinned count (the stats-derived call resumed later);
     // an EXPLICIT mismatching count refuses — a crashed 16-shard export
@@ -612,8 +599,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       pinned.map(_._2).getOrElse(nShards), split, exclude, attrs)
     if (pinned.isEmpty) {
       fs.mkdirs(new Path(path))
-      writeString(fs, metaP,
-        s"""{"format": "$format", "shards": $nSh, "split": "${split.getOrElse("")}", "exclude": "${exclude.getOrElse("")}", "attrs": "${attrs.getOrElse("")}"}""")
+      writeString(fs, metaP, ExportMeta(format, nSh, split.getOrElse(""),
+        exclude.getOrElse(""), attrs.getOrElse("")).json)
     }
     val doneDir = new Path(path, "_shards")
     def marker(s: Int) = new Path(doneDir, s"$s.done")
@@ -722,39 +709,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     requireCollection(name)
     val cur = read(name)
     if (!cur.columns.contains(QuantCol))
-      rewrite(name, cur.withColumn(QuantCol, quantExpr(col("embedding"))))
+      rewrite(name, cur.withColumn(QuantCol, quantExpr(col("embedding"))),
+        layoutOf(name))
   }
 
   private def quantExpr(v: Column): Column =
     transform(graft.operators.SimilaritySearch.sq8(v), x => x.cast("tinyint"))
 
-
-  /** How to assign `cluster_id` to rows appended to `name`, or None for an
-    * unindexed (flat) collection. `hasClusterLayout` comes from the caller's
-    * schema read (the partition column appears iff cluster dirs exist).
-    */
-  private def appendAssignment(name: String,
-      hasClusterLayout: Boolean,
-      layout: Option[String]): Option[DataFrame => DataFrame] =
-    if (!hasClusterLayout) None
-    else layout match {
-      case Some("sign_bucket") =>
-        Some(VectorIndex.assignSignBuckets(_, nBits = indexBits(name)))
-      case Some("kmeans") =>
-        Some(kmeansAssignRule(name))
-      case Some("pq") =>
-        // same cell rule as sign_bucket (the pq_code column is re-derived
-        // by the bulkInsert pass above, keyed off the schema read)
-        Some(VectorIndex.assignSignBuckets(_, nBits = indexBits(name)))
-      case Some("ivfpq_kmeans") =>
-        // cluster AND residual code re-derive together from the sidecar
-        Some(ivfPqAssign(name))
-      case _ =>
-        // unknown layout (custom reindexWith): rows stay readable in the
-        // unindexed tail; SEARCHSIMILAR on unknown layouts is exact-scan
-        // anyway, so nothing ever prunes these rows away.
-        Some(_.withColumn("cluster_id", lit(-1)))
-    }
 
   /** UPDATE (reference `src/command/types.rs:82-93`): upsert by key.
     * anti-join keeps the untouched rows, union appends the new versions —
@@ -762,11 +723,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * broadcasts it and the big side never shuffles.
     *
     * Indexed collections: updates arrive without cluster assignments, so
-    * the merge runs on the declared schema and then (a) a sign-bucket index
-    * re-assigns codes in the same pass — cheap column math — or (b) a
-    * model-based layout (no reproducible assignment rule) is invalidated:
-    * the sidecar is dropped and SEARCHSIMILAR falls back to exact scans
-    * until the next REINDEX.
+    * the merge runs on the declared schema and then (a) a recorded layout
+    * re-assigns every row in the same pass ([[IndexLayout.assign]] — the
+    * index survives the update), or (b) a layout with no record (a custom
+    * [[reindexWith]]) is dropped: the collection is rewritten flat and
+    * SEARCHSIMILAR scans exactly until the next REINDEX.
     */
   def update(name: String, updates: DataFrame, key: String = "id"): Unit = {
     requireCollection(name)
@@ -782,29 +743,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val merged =
       if (hasQuant) mergedRaw.withColumn(QuantCol, quantExpr(col("embedding")))
       else mergedRaw
-    val next = (if (hasIndex) indexType(name) else None) match {
-      case Some("sign_bucket") =>
-        VectorIndex.assignSignBuckets(merged, nBits = indexBits(name))
-      case Some("kmeans") =>
-        // re-assign against the stored centroids via the SAME
-        // trainer-aware rule the append path uses — the index survives
-        // the update instead of being dropped, and md5-trained layouts
-        // keep their oracle-replayable cells through updates too
-        kmeansAssignRule(name)(merged)
-      case Some("pq") =>
-        // both derived columns are reproducible from the sidecar, so the
-        // PQ index survives updates too — cells AND codes re-derive
-        ProductQuantization.assignCodes(
-          VectorIndex.assignSignBuckets(merged, nBits = indexBits(name)),
-          "embedding", pqCodebooksOf(name), PqCodeCol)
-      case Some("ivfpq_kmeans") =>
-        // residual layout: cluster then residual codes, both sidecar-pure
-        ivfPqAssign(name)(merged)
-      case _ =>
-        if (hasIndex) fs.delete(new Path(collDir(name), IndexMetaFile), false)
-        merged
-    }
-    rewrite(name, next)
+    val layout = layoutOf(name)
+    rewrite(name,
+      if (hasIndex) layout.fold(merged)(_.assign(merged)) else merged, layout)
   }
 
   /** DELETE rows matching a predicate (reference `src/command/types.rs:95-106`).
@@ -815,7 +756,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def delete(name: String, predicate: Column): Unit = {
     requireCollection(name)
     invalidateArtifacts(name)
-    rewrite(name, graft.operators.Mutations.deleteWhere(read(name), predicate))
+    rewrite(name, graft.operators.Mutations.deleteWhere(read(name), predicate),
+      layoutOf(name))
   }
 
   /** SYNC (extension): reconcile the collection with a FULL incoming
@@ -831,9 +773,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * everything look "changed").
     *
     * One copy-on-write [[rewrite]] applies the whole reconciliation; the
-    * index sidecar survives (recognized layouts re-derive the delta's
-    * assignments; an unrecognized custom layout routes the delta to the
-    * `cluster_id=-1` unindexed tail, the bulkInsert contract).
+    * layout record survives, and the delta's index columns derive exactly
+    * as a [[bulkInsert]]'s do.
     *
     * Returns the diff report — one row per status (added / changed /
     * removed / unchanged) with its key count: the work-list sizes an
@@ -862,24 +803,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       diff.filter(col("status").isin("added", "changed")).select(key), Seq(key))
     val kept = current.join(
       diff.filter(col("status") === "unchanged").select(key), Seq(key))
-    val existing = current.columns.toSet
-    val layout = indexType(name)
-    val quanted =
-      if (existing.contains(QuantCol))
-        delta.withColumn(QuantCol, quantExpr(col("embedding")))
-      else delta
-    val coded =
-      if (existing.contains(PqCodeCol) && !layout.contains("ivfpq_kmeans"))
-        ProductQuantization.assignCodes(quanted, "embedding",
-          pqCodebooksOf(name), PqCodeCol)
-      else quanted
-    val derived = appendAssignment(name, existing.contains("cluster_id"),
-        layout) match {
-      case Some(assign) => assign(coded)
-      case None => coded
-    }
-    rewrite(name, kept.unionByName(derived,
-      allowMissingColumns = false))
+    val layout = layoutOf(name)
+    val derived = derive(current.columns.toSet, layout, delta)
+    rewrite(name, kept.unionByName(derived, allowMissingColumns = false),
+      layout)
     diff.unpersist()
     Seq("added", "changed", "removed", "unchanged")
       .map(st => (st, counts.getOrElse(st, 0L))).toDF("status", "n")
@@ -909,24 +836,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       metric: String = "cosine", probeRadius: Int = -1,
       idCol: String = "id"): DataFrame = {
     val data = read(name)
-    // probe ONLY layouts whose sidecar carries the assignment semantics:
-    // sign_bucket (probeRadius = hamming bit-flip radius) or kmeans
-    // (probeRadius = extra cells beyond the nearest, i.e. nprobe − 1 —
+    // probe ONLY sign_bucket and kmeans layouts ([[CellLayout.cells]] —
     // radius 0 means "just the query's own cell" for both). A cluster_id
     // from an external assign function has no recoverable geometry, so it
     // falls back to exact rather than silently returning wrong neighbors.
-    lazy val layout = indexType(name)
-    if (probeRadius >= 0 && data.columns.contains("cluster_id")
-        && layout.contains("sign_bucket")) {
-      VectorIndex.probe(data, query, k, metric, indexBits(name), probeRadius,
-        idCol = idCol)
-    } else if (probeRadius >= 0 && data.columns.contains("cluster_id")
-        && layout.contains("kmeans")) {
-      VectorIndex.probeKMeans(data, query, k, metric, centroidsOf(name),
-        nprobe = probeRadius + 1, idCol = idCol)
-    } else {
-      SimilaritySearch.topK(data, query, k, metric, idCol = idCol)
+    val probeable = probeRadius >= 0 && data.columns.contains("cluster_id")
+    def probe(l: CellLayout) =
+      data.filter(col("cluster_id").isin(l.cells(query, probeRadius): _*))
+    val scanned = (if (probeable) layoutOf(name) else None) match {
+      case Some(l: SignBucket) => probe(l)
+      case Some(l: KMeans) => probe(l)
+      case _ => data
     }
+    SimilaritySearch.topK(scanned, query, k, metric, idCol = idCol)
   }
 
   /** SEARCHTEXT (extension): BM25 keyword retrieval over the collection's
@@ -1578,14 +1500,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   }
 
   private def batchTagsOf(g: Path): Set[String] = {
-    val tagRe = """"batch"\s*:\s*"([A-Za-z0-9_.-]+)"""".r
     val fromMarkers =
       if (!fs.exists(g)) Seq.empty[String]
       else fs.listStatus(g).toSeq.map(_.getPath)
         .filter(p => p.getName.startsWith("routed_") &&
           p.getName.endsWith(".done"))
-        .flatMap(p => tagRe.findFirstMatchIn(readString(fs, p))
-          .map(_.group(1)))
+        .flatMap(p => RoutedMarker.parse(readString(fs, p), p.toString).batch)
     val carry = new Path(g, "_batches")
     val fromCarry =
       if (!fs.exists(carry)) Seq.empty[String]
@@ -1718,8 +1638,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // test-set copy entirely. -1 ADOPTS (stored layout's width, else 8);
     // an EXPLICIT mismatching width refuses — the resume-pin doctrine.
     val stored: Option[Int] =
-      if (indexType(name).contains("sign_bucket")) Some(indexBits(name))
-      else None
+      layoutOf(name).collect { case SignBucket(b) => b }
     val bits = (nBits, stored) match {
       case (-1, Some(b)) => b
       case (-1, None) => 8
@@ -1942,12 +1861,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         "would inherit through a different edge family; use the " +
         s"matching ROUTE or re-SPLIT by=embedding"))
     val cur = read(name)
-    require(cur.columns.contains("cluster_id") &&
-      indexType(name).contains("sign_bucket"),
+    val signBits = layoutOf(name).collect { case SignBucket(b) => b }
+    require(cur.columns.contains("cluster_id") && signBits.isDefined,
       s"ROUTE by=embedding answers from the stored sign-bucket layout — " +
         s"REINDEX type=sign on $name first (the screen must never " +
         "full-scan the corpus)")
-    val nBits = indexBits(name)
+    val nBits = signBits.get
     // the sidecar's pinned signature width must match the layout the
     // screen is about to probe — a re-REINDEX at a different width
     // between SPLIT and ROUTE would silently change the edge family
@@ -2256,8 +2175,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // the marker write IS the commit — a batch tag rides in its content,
     // so "this micro-batch committed" and "these assignments are live"
     // are ONE atomic durable fact (no tag→data crash window at all)
-    writeString(fs, new Path(g, s"routed_$seg.done"),
-      batchTag.map(t => s"""{"batch":"$t"}""").getOrElse(""))
+    writeString(fs, new Path(g, s"routed_$seg.done"), RoutedMarker(batchTag).json)
     // segment-growth hygiene: past the threshold the assignment read is
     // a base + N-small-file union — fold it NOW (content-preserving,
     // batch tags carried; one extra read+write of assignment-grain rows,
@@ -2794,7 +2712,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   private def attrsPredicate(spec: String): Column = {
     // the spec is pinned verbatim inside the resumable export's JSON
-    // meta — a quote would truncate the pin and defeat the resume check
+    // meta, which earlier builds read without unescaping — no quotes
     require(!spec.contains("\""), s"attrs filter: no '\"' allowed in '$spec'")
     val conjuncts = spec.split(",").map(_.trim).filter(_.nonEmpty)
     require(conjuncts.nonEmpty, s"attrs filter: empty spec '$spec'")
@@ -3055,8 +2973,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val qvecs = queries.map { case (qid, _, v) => (qid, v) }
       .toDF("query_id", "query_vec")
     val data = read(name)
-    lazy val layout = indexType(name)
     val probeable = probeRadius >= 0 && data.columns.contains("cluster_id")
+    val layout = if (probeable) layoutOf(name) else None
     def cosineRanks(denseTop: DataFrame): DataFrame = {
       val wD = org.apache.spark.sql.expressions.Window
         .partitionBy("query_id")
@@ -3066,39 +2984,33 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         .withColumn("rank", row_number().over(wD).cast("long"))
         .select("query_id", "id", "rank")
     }
-    val dense =
-      if (probeable && layout.contains("ivfpq_kmeans") && shortlist >= 1) {
-        val coarse: ProductQuantization.Codebooks = Array(centroidsOf(name))
+    val dense = layout match {
+      case Some(l: IvfPqKMeans) if shortlist >= 1 =>
         ProductQuantization.probeAdcResidualBatch(data, qvecs, k = kf,
-            shortlist = shortlist, codebooks = pqCodebooksOf(name),
-            cellCents = coarseMap(coarse), nprobe = probeRadius + 1,
+            shortlist = shortlist, codebooks = l.codebooks,
+            cellCents = l.cellCents, nprobe = probeRadius + 1,
             vecCol = "embedding", codeCol = PqCodeCol, idCol = "id")
           .select(col("query_id"), col("id"),
             col("rank").cast("long").as("rank"))
-      } else if (probeable && layout.contains("pq") && shortlist >= 1) {
+      case Some(l: Pq) if shortlist >= 1 =>
         ProductQuantization.probeAdcBatch(data, qvecs, k = kf,
-            shortlist = shortlist, codebooks = pqCodebooksOf(name),
-            nBits = indexBits(name), radius = probeRadius,
-            vecCol = "embedding", codeCol = PqCodeCol, idCol = "id")
+            shortlist = shortlist, codebooks = l.codebooks, nBits = l.bits,
+            radius = probeRadius, vecCol = "embedding", codeCol = PqCodeCol,
+            idCol = "id")
           .select(col("query_id"), col("id"),
             col("rank").cast("long").as("rank"))
-      } else if (probeable && layout.exists(t =>
-          t == "sign_bucket" || t == "pq")) {
-        cosineRanks(VectorIndex.probeBatch(data.drop(PqCodeCol), qvecs,
-          k = kf, metric = "cosine", nBits = indexBits(name),
-          radius = probeRadius, vecCol = "embedding", idCol = "id"))
-      } else if (probeable && layout.contains("kmeans")) {
-        cosineRanks(VectorIndex.probeKMeansBatch(data, qvecs, k = kf,
-          metric = "cosine", centroids = centroidsOf(name),
-          nprobe = probeRadius + 1, idCol = "id"))
-      } else {
+      case Some(l: CellLayout) if !l.isInstanceOf[IvfPqKMeans] =>
+        cosineRanks(VectorIndex.probeBatchCells(data.drop(PqCodeCol), qvecs,
+          l.cells(_, probeRadius), k = kf, metric = "cosine",
+          vecCol = "embedding", idCol = "id"))
+      case _ =>
         require(!probeable,
-          s"probeRadius=$probeRadius set but layout $layout on $name has " +
-            "no batch probe — REINDEX to sign/kmeans/pq/ivfpq or drop " +
-            "probeRadius for the exact scan")
+          s"probeRadius=$probeRadius set but layout ${layout.map(_.kind)} " +
+            s"on $name has no batch probe — REINDEX to sign/kmeans/pq/ivfpq " +
+            "or drop probeRadius for the exact scan")
         cosineRanks(SimilaritySearch.topKBatchAgg(data, qvecs, k = kf,
           metric = "cosine", vecCol = "embedding", idCol = "id"))
-      }
+    }
 
     // ---- RRF per query (rrfFuse's exact arithmetic, query-keyed)
     val wK = org.apache.spark.sql.expressions.Window
@@ -3136,18 +3048,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       probeRadius: Int = -1): DataFrame = {
     val data = read(name)
     val stored = if (data.columns.contains(QuantCol)) Some(QuantCol) else None
-    lazy val layout = indexType(name)
     val probeable = probeRadius >= 0 && rerank && stored.isDefined &&
       data.columns.contains("cluster_id")
-    if (probeable && layout.contains("sign_bucket")) {
-      VectorIndex.probeSq8(data, query, k, shortlist, metric,
-        indexBits(name), probeRadius, q8Col = QuantCol, idCol = idCol)
-    } else if (probeable && layout.contains("kmeans")) {
-      VectorIndex.probeKMeansSq8(data, query, k, shortlist, metric,
-        centroidsOf(name), nprobe = probeRadius + 1, q8Col = QuantCol,
-        idCol = idCol)
-    } else {
-      SimilaritySearch.topKSq8(data, query, k, shortlist, metric,
+    def probe(l: CellLayout) = VectorIndex.probeCellsSq8(data,
+      l.cells(query, probeRadius), query, k, shortlist, metric,
+      q8Col = QuantCol, idCol = idCol)
+    (if (probeable) layoutOf(name) else None) match {
+      case Some(l: SignBucket) => probe(l)
+      case Some(l: KMeans) => probe(l)
+      case _ => SimilaritySearch.topKSq8(data, query, k, shortlist, metric,
         idCol = idCol, q8Col = stored, rerank = rerank)
     }
   }
@@ -3157,10 +3066,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * and the WHOLE batch is answered by ONE scan (the union of all probed
     * cells on an indexed layout) with a bounded per-query heap — never one
     * job per query. Dispatch mirrors the single-query paths:
-    * `probeRadius >= 0` + a pq sidecar + `shortlist >= 1` runs the batch
-    * IVF × ADC composition ([[ProductQuantization.probeAdcBatch]]);
-    * sign-bucket / kmeans layouts run the exact batch probe
-    * ([[VectorIndex.probeBatch]] / [[VectorIndex.probeKMeansBatch]]);
+    * `probeRadius >= 0` + a pq or ivfpq layout + `shortlist >= 1` runs the
+    * batch IVF × ADC composition ([[ProductQuantization.probeAdcBatch]] /
+    * [[ProductQuantization.probeAdcResidualBatch]]); sign-bucket, pq and
+    * kmeans layouts run the exact batch probe over their cells
+    * ([[VectorIndex.probeBatchCells]]);
     * anything else is the exact broadcast batch scan
     * ([[SimilaritySearch.topKBatchAgg]]) — same fallback discipline as
     * [[searchSimilar]], never silently wrong neighbors.
@@ -3169,52 +3079,29 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       metric: String = "cosine", probeRadius: Int = -1,
       shortlist: Int = -1, idCol: String = "id"): DataFrame = {
     val data = read(name)
-    lazy val layout = indexType(name)
     val probeable = probeRadius >= 0 && data.columns.contains("cluster_id")
-    if (probeable && layout.contains("pq") && shortlist >= 1)
-      ProductQuantization.probeAdcBatch(data, queries, k, shortlist,
-        pqCodebooksOf(name), nBits = indexBits(name), radius = probeRadius,
-        vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
-    else if (probeable && layout.contains("ivfpq_kmeans") && shortlist >= 1) {
-      // residual batch probe against sidecar models; radius keeps the
-      // kmeans convention (nprobe = radius + 1)
-      val coarse: ProductQuantization.Codebooks = Array(centroidsOf(name))
-      ProductQuantization.probeAdcResidualBatch(data, queries, k, shortlist,
-        pqCodebooksOf(name), coarseMap(coarse), nprobe = probeRadius + 1,
-        vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
+    (if (probeable) layoutOf(name) else None) match {
+      case Some(l: Pq) if shortlist >= 1 =>
+        ProductQuantization.probeAdcBatch(data, queries, k, shortlist,
+          l.codebooks, nBits = l.bits, radius = probeRadius,
+          vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
+      case Some(l: IvfPqKMeans) if shortlist >= 1 =>
+        // residual batch probe; radius keeps the kmeans convention
+        // (nprobe = radius + 1)
+        ProductQuantization.probeAdcResidualBatch(data, queries, k, shortlist,
+          l.codebooks, l.cellCents, nprobe = probeRadius + 1,
+          vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
+      case Some(l: CellLayout) if !l.isInstanceOf[IvfPqKMeans] =>
+        VectorIndex.probeBatchCells(data.drop(PqCodeCol), queries,
+          l.cells(_, probeRadius), k, metric, idCol = idCol)
+      case _ =>
+        SimilaritySearch.topKBatchAgg(data, queries, k, metric, idCol = idCol)
     }
-    else if (probeable && (layout.contains("sign_bucket")
-        || layout.contains("pq")))
-      VectorIndex.probeBatch(data.drop(PqCodeCol), queries, k, metric,
-        nBits = indexBits(name), radius = probeRadius, idCol = idCol)
-    else if (probeable && layout.contains("kmeans"))
-      VectorIndex.probeKMeansBatch(data, queries, k, metric,
-        centroidsOf(name), nprobe = probeRadius + 1, idCol = idCol)
-    else
-      SimilaritySearch.topKBatchAgg(data, queries, k, metric, idCol = idCol)
   }
 
-  private def indexSidecar(name: String): Option[String] = {
-    val sidecar = new Path(collDir(name), IndexMetaFile)
-    if (fs.exists(sidecar)) Some(readString(fs, sidecar)) else None
-  }
-
-  private def indexType(name: String): Option[String] =
-    indexSidecar(name).flatMap(parseIndexType)
-
-  /** Bit width recorded by [[reindex]]'s sidecar (only meaningful for
-    * sign_bucket layouts).
-    */
-  private def indexBits(name: String): Int =
-    indexSidecar(name).map(parseIndexBits).getOrElse(8)
-
-  /** Centroids recorded by [[reindexKMeans]]'s sidecar. */
-  private def centroidsOf(name: String): Array[Array[Double]] = {
-    val json = indexSidecar(name).getOrElse(
-      throw new IllegalStateException(s"no index sidecar for $name"))
-    parseIndexCentroids(json).getOrElse(throw new IllegalStateException(
-      s"index sidecar for $name has no centroids"))
-  }
+  /** The collection's layout record, None without one. */
+  private def layoutOf(name: String): Option[IndexLayout] =
+    IndexLayout.read(fs, collDir(name))
 
   /** The index layout recorded in the collection's sidecar, if any —
     * public so the command layer can dispatch SEARCHSIMILAR options to the
@@ -3223,25 +3110,29 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def indexTypeOf(name: String): Option[String] = {
     requireCollection(name)
-    indexType(name)
+    layoutOf(name).map(_.kind)
   }
 
-  /** Codebooks recorded by [[reindexPq]]'s sidecar. */
-  private def pqCodebooksOf(name: String): ProductQuantization.Codebooks = {
-    val json = indexSidecar(name).getOrElse(
-      throw new IllegalStateException(s"no index sidecar for $name"))
-    parseIndexCodebooks(json).getOrElse(throw new IllegalStateException(
-      s"index sidecar for $name has no codebooks — REINDEX type=pq first"))
+  /** The collection without its index columns — what every REINDEX lays
+    * out afresh (the old assignment and codes are dead weight). */
+  private def unindexed(name: String): DataFrame = {
+    requireCollection(name)
+    read(name).drop("cluster_id", PqCodeCol)
   }
+
+  /** Rewrite `base` into the cells `layout` assigns, committing the
+    * layout record in the same swap — the rule REINDEX lays out with is
+    * the one every later arrival is assigned by.
+    */
+  private def reindexAs(name: String, base: DataFrame,
+      layout: IndexLayout): Unit =
+    rewrite(name, layout.assign(base), Some(layout), Seq("cluster_id"))
 
   /** REINDEX with the default deterministic sign-bucket index; records the
     * bit width so probes know the code space.
     */
-  def reindex(name: String, nBits: Int = 8): Unit = {
-    reindexWith(name, df => VectorIndex.assignSignBuckets(df, nBits = nBits))
-    writeString(fs, new Path(collDir(name), IndexMetaFile),
-      s"""{"type": "sign_bucket", "bits": $nBits}""")
-  }
+  def reindex(name: String, nBits: Int = 8): Unit =
+    reindexAs(name, unindexed(name), SignBucket(nBits))
 
   /** REINDEX with a KMeans-centroid IVF layout: train centroids, rewrite
     * partitioned by nearest-centroid cell, and record the centroids in the
@@ -3250,17 +3141,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * by the same nearest-centroid rule (no invalidation, no row loss).
     */
   def reindexKMeans(name: String, k: Int = 16, seed: Long = 42L): Unit = {
-    requireCollection(name)
-    val base = {
-      val cur = read(name)
-      if (cur.columns.contains("cluster_id")) cur.drop("cluster_id") else cur
-    }
-    val (assigned, centroids) = VectorIndex.kmeansAssign(base, "embedding", k, seed)
-    rewrite(name, assigned, partitionBy = Seq("cluster_id"))
-    val cents = centroids
-      .map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeString(fs, new Path(collDir(name), IndexMetaFile),
-      s"""{"type": "kmeans", "k": $k, "centroids": $cents}""")
+    val (assigned, centroids) =
+      VectorIndex.kmeansAssign(unindexed(name), "embedding", k, seed)
+    rewrite(name, assigned, Some(KMeans(k, None, centroids)),
+      Seq("cluster_id"))
   }
 
   /** [[reindexKMeans]]'s ENGINE-REPLAYABLE sibling (`REINDEX
@@ -3271,55 +3155,17 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * .assignCodes]], lowest-cid tie-break), written 0-indexed to match
     * the kmeans sidecar convention. A SQL oracle replays the training,
     * the layout, and any probe built on it — which the MLlib trainer
-    * (seeded but not SQL-reproducible) cannot offer. Same sidecar shape,
-    * so every kmeans-layout reader (probes, appends, the decon screen)
-    * serves both trainers identically.
+    * (seeded but not SQL-reproducible) cannot offer. Same sidecar shape
+    * plus a `trainer` tag, so every kmeans-layout reader (probes, the
+    * decon screen) serves both trainers identically, and arrivals are
+    * assigned by the rounded rule ([[IndexLayout.KMeans]]).
     */
   def reindexKMeansMd5(name: String, k: Int = 16, rounds: Int = 1,
       seed: String = "ivf"): Unit = {
-    requireCollection(name)
-    val base = {
-      val cur = read(name)
-      if (cur.columns.contains("cluster_id")) cur.drop("cluster_id") else cur
-    }
+    val base = unindexed(name)
     val cb = ProductQuantization.trainCodebooks(base, "id", "embedding",
       m = 1, ksub = k, rounds = rounds, seed = seed)
-    val assigned = ProductQuantization
-      .assignCodes(base, "embedding", cb, "__coarse")
-      .withColumn("cluster_id",
-        (element_at(col("__coarse"), 1) - 1).cast("int"))
-      .drop("__coarse")
-    rewrite(name, assigned, partitionBy = Seq("cluster_id"))
-    val cents = cb(0).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    // the trainer tag routes the APPEND assignment rule: md5 layouts
-    // re-assign arriving rows by the same rounded rule the training used
-    writeString(fs, new Path(collDir(name), IndexMetaFile),
-      s"""{"type": "kmeans", "trainer": "md5", "k": $k, "centroids": $cents}""")
-  }
-
-  /** The kmeans cluster-assignment rule for arriving/updated rows,
-    * TRAINER-AWARE: an md5-trained layout is DEFINED by the rounded
-    * assignCodes rule (that's what makes its cells oracle-replayable),
-    * so appends AND updates must re-assign by the same rule — a raw
-    * argmin disagrees at round(l2, 6) boundaries and would place rows
-    * in cells no replay computes. MLlib layouts keep the raw argmin
-    * (their cells are not engine-replayable to begin with). ONE sidecar
-    * read serves trainer + centroids — this feeds the hot write path.
-    */
-  private def kmeansAssignRule(name: String): DataFrame => DataFrame = {
-    val json = indexSidecar(name).getOrElse(throw new IllegalStateException(
-      s"no index sidecar on $name"))
-    val cents = parseIndexCentroids(json).getOrElse(
-      throw new IllegalStateException(
-        s"kmeans sidecar on $name has no centroids"))
-    if (""""trainer"\s*:\s*"md5"""".r.findFirstIn(json).isDefined)
-      df => ProductQuantization
-        .assignCodes(df, "embedding",
-          Array(cents): ProductQuantization.Codebooks, "__coarse")
-        .withColumn("cluster_id",
-          (element_at(col("__coarse"), 1) - 1).cast("int"))
-        .drop("__coarse")
-    else df => VectorIndex.assignNearestCentroid(df, cents)
+    reindexAs(name, base, KMeans(k, Some("md5"), cb(0)))
   }
 
   /** REINDEX with the IVF × PQ layout — the 100 TB ANN index as a managed
@@ -3336,19 +3182,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def reindexPq(name: String, m: Int = 8, ksub: Int = 16, rounds: Int = 1,
       nBits: Int = 8, idCol: String = "id", seed: String = "pq"): Unit = {
-    requireCollection(name)
-    val cur = read(name)
-    val base = cur.drop("cluster_id").drop(PqCodeCol)
+    val base = unindexed(name)
     val cb = ProductQuantization.trainCodebooks(base, idCol, "embedding",
       m, ksub, rounds, seed)
-    val laid = ProductQuantization.assignCodes(
-      VectorIndex.assignSignBuckets(base, nBits = nBits), "embedding", cb,
-      PqCodeCol)
-    rewrite(name, laid, partitionBy = Seq("cluster_id"))
-    val cbJson = cb.map(_.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    writeString(fs, new Path(collDir(name), IndexMetaFile),
-      s"""{"type": "pq", "bits": $nBits, "m": $m, "ksub": $ksub, "codebooks": $cbJson}""")
+    reindexAs(name, base, Pq(nBits, m, ksub, cb))
   }
 
   /** PQ-accelerated SEARCHSIMILAR over a `REINDEX type=pq` collection:
@@ -3367,16 +3204,18 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       shortlist: Int = 1000, probeRadius: Int = -1,
       idCol: String = "id"): DataFrame = {
     val data = read(name)
-    val cb = pqCodebooksOf(name)
+    val pq = layoutOf(name).collect { case l: Pq => l }.getOrElse(
+      throw new IllegalStateException(
+        s"index sidecar for $name has no codebooks — REINDEX type=pq first"))
     require(data.columns.contains(PqCodeCol),
       s"$name has no $PqCodeCol column — REINDEX type=pq first")
     if (probeRadius >= 0 && data.columns.contains("cluster_id"))
-      ProductQuantization.probeAdc(data, query, k, shortlist, cb,
-        nBits = indexBits(name), radius = probeRadius,
+      ProductQuantization.probeAdc(data, query, k, shortlist, pq.codebooks,
+        nBits = pq.bits, radius = probeRadius,
         vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
     else
       ProductQuantization.topKAdc(data.drop(PqCodeCol), data, query, k,
-        shortlist, cb, vecCol = "embedding", codeCol = PqCodeCol,
+        shortlist, pq.codebooks, vecCol = "embedding", codeCol = PqCodeCol,
         idCol = idCol)
   }
 
@@ -3388,65 +3227,24 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * RESIDUALS `x − centroid(cell)` yield the m-byte `pq_code` beside
     * each vector. The sidecar records coarse centroids AND codebooks, so
     * the layout survives INSERT/BULKINSERT/UPDATE: both derived columns
-    * re-derive from sidecar literals ([[ivfPqAssign]]), no invalidation,
-    * no row loss. [[searchSimilarIvfPq]] is the read path.
+    * re-derive from sidecar literals ([[IndexLayout.IvfPqKMeans]]), no
+    * invalidation, no row loss. [[searchSimilarIvfPq]] is the read path.
     */
   def reindexIvfPq(name: String, m: Int = 8, ksub: Int = 16,
       rounds: Int = 1, kCells: Int = 8, idCol: String = "id",
       seed: String = "rpq",
       store: Option[StageStore] = None): Unit = {
-    requireCollection(name)
-    val cur = read(name)
-    val base = cur.drop("cluster_id").drop(PqCodeCol)
+    val base = unindexed(name)
     // with a store, BOTH codebook trainings commit per Lloyd round (the
     // TrainResumeSpec discipline): a preempted index build resumes its
     // training loops from the committed round stages and pays only the
     // final layout rewrite again — the one non-incremental job left
     val coarse = ProductQuantization.trainCodebooks(base, idCol,
       "embedding", 1, kCells, rounds, seed + ":coarse", store)
-    val clustered = ivfPqClustered(base, coarse)
-    val cb = ProductQuantization.trainCodebooks(clustered, idCol, "__res",
+    val cb = ProductQuantization.trainCodebooks(
+      IndexLayout.residualFrame(base, coarse(0)), idCol, "__res",
       m, ksub, rounds, seed, store)
-    val laid = ProductQuantization.assignCodes(clustered, "__res", cb,
-      PqCodeCol).drop("__res")
-    rewrite(name, laid, partitionBy = Seq("cluster_id"))
-    val cbJson = cb.map(_.map(_.mkString("[", ",", "]"))
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    val centJson = coarse(0)
-      .map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    // "codebooks" MUST precede "centroids": both parsers split on greedy
-    // bracket matches, which is faithful only when the deeper-nested key
-    // comes first (parseIndexCentroids' trailing ]] anchor would otherwise
-    // swallow the codebook brackets)
-    writeString(fs, new Path(collDir(name), IndexMetaFile),
-      s"""{"type": "ivfpq_kmeans", "m": $m, "ksub": $ksub, "k": $kCells, "codebooks": $cbJson, "centroids": $centJson}""")
-  }
-
-  /** The residual-layout frame: `cluster_id` (1-based coarse cid, the
-    * m=1 rounded-argmin rule) and the exact-double residual `__res`.
-    */
-  private def ivfPqClustered(df: DataFrame,
-      coarse: ProductQuantization.Codebooks): DataFrame = {
-    val cellCents = coarseMap(coarse)
-    val clustered = ProductQuantization
-      .assignCodes(df, "embedding", coarse, "__coarse")
-      .withColumn("cluster_id", element_at(col("__coarse"), 1).cast("int"))
-      .drop("__coarse")
-    ProductQuantization.withResiduals(clustered, "embedding", cellCents)
-  }
-
-  private def coarseMap(coarse: ProductQuantization.Codebooks)
-      : Map[Int, Array[Double]] =
-    coarse(0).zipWithIndex.map { case (c, i) => (i + 1) -> c }.toMap
-
-  /** Cluster + residual-code assignment for arriving/updated rows of an
-    * `ivfpq_kmeans` collection — pure column math against the sidecar's
-    * coarse centroids and codebooks.
-    */
-  private def ivfPqAssign(name: String): DataFrame => DataFrame = { df =>
-    val coarse: ProductQuantization.Codebooks = Array(centroidsOf(name))
-    ProductQuantization.assignCodes(ivfPqClustered(df, coarse), "__res",
-      pqCodebooksOf(name), PqCodeCol).drop("__res")
+    reindexAs(name, base, IvfPqKMeans(m, ksub, kCells, cb, coarse(0)))
   }
 
   /** SEARCHSIMILAR over a `REINDEX type=ivfpq` collection: the query
@@ -3463,13 +3261,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val data = read(name)
     require(data.columns.contains(PqCodeCol),
       s"$name has no $PqCodeCol column — REINDEX type=ivfpq first")
-    val coarse: ProductQuantization.Codebooks = Array(centroidsOf(name))
-    val cellCents = coarseMap(coarse)
-    val cells = ProductQuantization.nearestCellsD(
-      query.map(_.toDouble), cellCents, nprobe)
-    ProductQuantization.probeAdcResidualCells(data, query, cells, k,
-      shortlist, pqCodebooksOf(name), cellCents, vecCol = "embedding",
-      codeCol = PqCodeCol, idCol = idCol)
+    val l = layoutOf(name).collect { case l: IvfPqKMeans => l }.getOrElse(
+      throw new IllegalStateException(s"index sidecar for $name has no " +
+        "ivfpq layout — REINDEX type=ivfpq first"))
+    ProductQuantization.probeAdcResidualCells(data, query,
+      l.cells(query, nprobe - 1), k, shortlist, l.codebooks, l.cellCents,
+      vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
   }
 
   /** Semantic cross-set decontamination screen over a stored collection
@@ -3527,16 +3324,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
           s"probeRadius=$probeRadius set but $name has no cluster_id " +
             "layout — REINDEX type=ivfpq or type=kmeans first, or drop " +
             "probeRadius for the exact screen")
-        indexType(name) match {
-          case Some("ivfpq_kmeans") =>
+        layoutOf(name) match {
+          case Some(l: IvfPqKMeans) =>
             require(shortlist >= 1,
               s"probeRadius=$probeRadius on the ivfpq_kmeans layout " +
                 "needs shortlist >= 1 (the ADC screen's rerank bound), " +
                 s"got $shortlist")
-            val coarse: ProductQuantization.Codebooks =
-              Array(centroidsOf(name))
             val scored = ProductQuantization.adcResidualScored(data, qs,
-                pqCodebooksOf(name), coarseMap(coarse),
+                l.codebooks, l.cellCents,
                 nprobe = probeRadius + 1, codeCol = PqCodeCol, idCol = "id")
               .select(col("query_id").cast("long"), col("id").cast("long"),
                 col("s").cast("double"))
@@ -3552,7 +3347,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
                 round(graft.functions.cosine_sim(col("embedding"),
                   col("query_vec")), 6).as("score"),
                 (-col("id")).as("nid"))
-          case Some("kmeans") =>
+          case Some(l: KMeans) =>
             // no stored codes on this layout — the screen prunes to each
             // query's nprobe nearest coarse cells (rounded-l2 rank, the
             // [[ProductQuantization.nearestCellsD]] probe rule, so an
@@ -3565,7 +3360,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
                 "scores exact cosines directly (no ADC rerank stage) — " +
                 "drop shortlist, or REINDEX type=ivfpq for the " +
                 "codes-only screen")
-            val cents = centroidsOf(name)
+            val cents = l.centroids
             require(cents.nonEmpty,
               s"kmeans sidecar on $name carries no centroids")
             // query→cell assignment runs DISTRIBUTED, as a projection
@@ -3615,7 +3410,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
                   col("query_vec")), 6).as("score"),
                 (-col("id").cast("long")).as("nid"))
           case other => throw new IllegalArgumentException(
-            s"probeRadius=$probeRadius set but layout $other on $name " +
+            s"probeRadius=$probeRadius set but layout ${other.map(_.kind)} on $name " +
               "has no decon probe — REINDEX type=ivfpq (with " +
               "shortlist >= 1) or type=kmeans, or drop probeRadius for " +
               "the exact screen")
@@ -3652,21 +3447,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def reindexZOrder(name: String, aCol: String, bCol: String,
       bits: Int = 8, nFiles: Int = 8): Unit = {
-    requireCollection(name)
-    val cur = read(name)
-    val base =
-      if (cur.columns.contains("cluster_id")) cur.drop("cluster_id") else cur
     val m = 1 << bits
-    val laid = base
+    val laid = unindexed(name)
       .withColumn("__za", pmod(col(aCol).cast("long"), lit(m)).cast("int"))
       .withColumn("__zb", pmod(col(bCol).cast("long"), lit(m)).cast("int"))
       .withColumn("__z", ZOrder.zvalue(col("__za"), col("__zb"), bits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z", "__za", "__zb")
-    rewrite(name, laid)
-    writeString(fs, new Path(collDir(name), IndexMetaFile),
-      s"""{"type": "zorder", "cols": ["$aCol", "$bCol"], "bits": $bits}""")
+    rewrite(name, laid, Some(IndexLayout.ZOrder(Seq(aCol, bCol), bits)))
   }
 
   /** TRUNCATEWAL parity (reference `src/command/types.rs:44-54` — "truncate
@@ -3685,7 +3474,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         if (data.columns.contains("cluster_id"))
           data.repartition(targetFiles, col("cluster_id"))
         else data.repartition(targetFiles)
-      rewrite(name, compacted)
+      rewrite(name, compacted, layoutOf(name))
     case None =>
       val wal = new Path(root, WalDir)
       if (fs.exists(wal)) fs.delete(wal, true)
@@ -3696,10 +3485,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   /** Copy-on-write rewrite: materialize `next` into a temp dir, then swap.
     * An indexed collection (cluster_id present) keeps its partition layout
     * across rewrites — UPDATE/DELETE/compaction must not silently degrade
-    * REINDEX's partition pruning — and index sidecars survive the swap.
+    * REINDEX's partition pruning. `layout` is the layout record of the new
+    * version, committed by the same swap: mutations and compaction carry
+    * the current one, a REINDEX passes its own, and a layout without a
+    * record passes None — so data and record can never disagree.
     */
   private def rewrite(name: String, next: DataFrame,
-      partitionBy: Seq[String] = Nil): Unit = {
+      layout: Option[IndexLayout], partitionBy: Seq[String] = Nil): Unit = {
     val dir = collDir(name)
     val tmp = new Path(root, s"${ReservedPrefix}tmp_${name}_${UUID.randomUUID().toString.take(8)}")
     val parts =
@@ -3709,14 +3501,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val writer = next.write.mode("overwrite").option("compression", Compression)
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(tmp.toString)
-    // preserve collection + index sidecars in the new version
+    // the collection schema and tokenizer carry over; the layout record
+    // is the one given
     writeString(fs, new Path(tmp, MetaFile), readString(fs, metaPath(name)))
-    val idx = new Path(dir, IndexMetaFile)
-    if (fs.exists(idx))
-      writeString(fs, new Path(tmp, IndexMetaFile), readString(fs, idx))
-    val tok = new Path(dir, TokenizerMetaFile)
+    layout.foreach(l => writeString(fs, new Path(tmp, IndexLayout.File), l.json))
+    val tok = new Path(dir, TokenizerMeta.File)
     if (fs.exists(tok))
-      writeString(fs, new Path(tmp, TokenizerMetaFile), readString(fs, tok))
+      writeString(fs, new Path(tmp, TokenizerMeta.File), readString(fs, tok))
     // crash-safe swap: the old version moves to a trash path (not deleted),
     // so at every instant either the live dir or the trash holds a complete
     // copy — a crash between the two renames is recovered by
@@ -3758,15 +3549,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * [[graft.operators.VectorIndex]]).
     */
   def reindexWith(name: String, assign: DataFrame => DataFrame): Unit = {
-    requireCollection(name)
-    val current = read(name)
-    val base = // re-reindex: the old assignment is dead weight, drop it
-      if (current.columns.contains("cluster_id")) current.drop("cluster_id")
-      else current
-    val clustered = assign(base)
+    val clustered = assign(unindexed(name))
     require(clustered.columns.contains("cluster_id"),
       "reindex assignment must add a cluster_id column")
-    rewrite(name, clustered, partitionBy = Seq("cluster_id"))
+    // a custom assignment has no record: probes scan exactly, arrivals
+    // go to the unindexed tail
+    rewrite(name, clustered, None, Seq("cluster_id"))
   }
 
   private def requireCollection(name: String): Unit = {
@@ -3788,9 +3576,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       nMerges: Int = 10): Unit = {
     requireCollection(name)
     val merges = TextAnalysis.bpeTrain(read(name), textCol, nMerges)
-    val body = merges.map { case (a, b, _) => s"""["$a","$b"]""" }.mkString(",")
-    writeString(fs, new Path(collDir(name), TokenizerMetaFile),
-      s"""{"type": "bpe", "merges": [$body]}""")
+    writeString(fs, new Path(collDir(name), TokenizerMeta.File),
+      TokenizerMeta(merges.map { case (a, b, _) => (a, b) }).json)
   }
 
   /** Segment `textCol` with the collection's trained tokenizer: the
@@ -3800,11 +3587,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def tokenize(name: String, textCol: String = "payload"): DataFrame = {
     requireCollection(name)
-    val sidecar = new Path(collDir(name), TokenizerMetaFile)
-    if (!fs.exists(sidecar))
-      throw new IllegalStateException(
-        s"no tokenizer sidecar for $name — run trainTokenizer first")
-    val merges = GraftDatabase.parseTokenizerMerges(readString(fs, sidecar))
+    val merges = Sidecar.read(fs, new Path(collDir(name), TokenizerMeta.File))(
+        TokenizerMeta.parse).getOrElse(throw new IllegalStateException(
+        s"no tokenizer sidecar for $name — run trainTokenizer first")).merges
     read(name)
       .withColumn("tokens",
         flatten(transform(TextAnalysis.normalizedTokens(col(textCol)),
@@ -3818,47 +3603,6 @@ object GraftDatabase {
   // leading underscore: Spark/Hadoop input listing treats it as hidden, so
   // the parquet reader never trips over the sidecars.
   private[core] val MetaFile = "_graft_meta.ddl"
-  private[graft] val IndexMetaFile = "_graft_index.json"
-  private[graft] val TokenizerMetaFile = "_graft_tokenizer.json"
-
-  /** Merge-sequence parser for the tokenizer sidecar. Symbols are closed
-    * under [[graft.operators.TextAnalysis.normalizedTokens]]'s [a-z0-9]+
-    * alphabet (merges concatenate such symbols), so the format needs no
-    * escaping and the parse is a plain regex.
-    */
-  private[graft] def parseTokenizerMerges(json: String): Seq[(String, String)] =
-    """\["([a-z0-9]+)","([a-z0-9]+)"\]""".r.findAllMatchIn(json)
-      .map(m => (m.group(1), m.group(2))).toSeq
-
-  // ---- index-sidecar JSON parsing ----------------------------------------
-  // Shared by the instance probe dispatch AND the AnnProbeRewrite optimizer
-  // rule (graft.extensions), which discovers collections by their sidecar
-  // file next to the scan root — one parser, one format.
-
-  private[graft] def parseIndexType(json: String): Option[String] =
-    "\"type\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1))
-
-  private[graft] def parseIndexBits(json: String): Int =
-    "\"bits\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt).getOrElse(8)
-
-  /** The JSON is written by this object (Double.toString round-trips
-    * exactly), so a bracketed split is a faithful parse.
-    */
-  private[graft] def parseIndexCentroids(json: String): Option[Array[Array[Double]]] =
-    "\"centroids\"\\s*:\\s*\\[\\[(.*)\\]\\]".r.findFirstMatchIn(json)
-      .map(_.group(1).split("\\],\\s*\\[").map(_.split(",").map(_.trim.toDouble)))
-
-  /** Codebooks from a `type=pq` sidecar: three bracket levels (subspace →
-    * centroid → dim), written by [[GraftDatabase.reindexPq]] with
-    * Double.toString (round-trips exactly) — a two-level bracketed split
-    * is a faithful parse, same contract as [[parseIndexCentroids]].
-    */
-  private[graft] def parseIndexCodebooks(
-      json: String): Option[Array[Array[Array[Double]]]] =
-    "\"codebooks\"\\s*:\\s*\\[\\[\\[(.*)\\]\\]\\]".r.findFirstMatchIn(json)
-      .map(_.group(1).split("\\]\\],\\s*\\[\\[").map(
-        _.split("\\],\\s*\\[").map(_.split(",").map(_.trim.toDouble))))
   private[core] val QuantCol = "embedding_q8"
   private[graft] val PqCodeCol = "pq_code"
   // zstd over the snappy default: ~2× better ratio at comparable decode

@@ -1,6 +1,5 @@
 package graft.extensions
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, ExpressionInfo, In, Literal, SortOrder, Descending}
@@ -10,9 +9,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
-import graft.core.GraftDatabase
+import graft.core.{CellLayout, GraftDatabase, IndexLayout}
 import graft.functions.{CosineSimilarity, DotProduct, HammingDistance, L2Distance, L2Norm, NfcNormalize, StripAccents}
-import graft.operators.VectorIndex
 
 /** Session-level integration via [[SparkSessionExtensions]] — the standard
   * plug-in point for Spark libraries. Activate with either
@@ -78,9 +76,9 @@ object GraftExtensions {
 /** Opt-in ANN rewrite: `ORDER BY cosine_sim(vec, <literal>) DESC LIMIT k`
   * over a scan of a REINDEXed graft collection becomes the same query over
   * `cluster_id IN (<cells near the query>)` — the IVF probe
-  * ([[VectorIndex.probe]] / [[VectorIndex.probeKMeans]]), expressed as a
-  * plan rewrite so a user who writes the exact brute-force query gets the
-  * partition-pruned scan without restructuring code. At 100 TB this is the
+  * ([[GraftDatabase.searchSimilar]]'s cells, [[CellLayout.cells]]),
+  * expressed as a plan rewrite so a user who writes the exact brute-force
+  * query gets the partition-pruned scan without restructuring code. At 100 TB this is the
   * difference between scanning the corpus and scanning ~nprobe/cells of it.
   *
   * The rewrite is APPROXIMATE — it prunes cells that could in principle
@@ -95,12 +93,13 @@ object GraftExtensions {
   *  - one side of the cosine is a foldable array literal (the query vector),
   *    so the probe cells are computable at planning time;
   *  - the sort subtree scans exactly ONE file-based relation, that relation
-  *    carries a `cluster_id` partition column, and a graft index sidecar
-  *    (`_graft_index.json`, written by REINDEX) sits next to the scan root
-  *    with a geometry the probe understands (sign_bucket or kmeans — a
-  *    zorder or unknown layout has no recoverable probe geometry and is
-  *    left exact, same dispatch discipline as
-  *    [[GraftDatabase.searchSimilar]]).
+  *    carries a `cluster_id` partition column, and the layout record REINDEX
+  *    wrote next to the scan root ([[IndexLayout.read]], the one parser the
+  *    database uses too) is sign_bucket, kmeans or ivfpq_kmeans — those
+  *    layouts' cells at `spark.graft.ann.probeRadius` are the probe set. A
+  *    pq layout (its codes are an explicit searchSimilarPq opt-in), a
+  *    zorder layout (no cells) or a collection without a record is left
+  *    exact; a malformed record fails the analysis, naming its file.
   *
   * The rewrite only ever ADDS a `Filter(cluster_id IN ...)` directly above
   * the relation — output attributes are untouched, so no downstream
@@ -196,35 +195,22 @@ class AnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  /** Probe cells from the sidecar next to the scan root; None when there is
-    * no sidecar or its layout has no probe geometry.
+  /** Probe cells of the layout record next to the scan root; None when
+    * there is no record or the rule does not probe its layout.
     */
   private def probeCells(rel: LogicalRelation, query: Array[Float]): Option[Seq[Int]] = {
     val radius = spark.conf.get(ProbeRadiusKey, "1").toInt
     for {
       root <- rel.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.headOption
-      json <- readSidecar(root)
-      layout <- GraftDatabase.parseIndexType(json)
+      layout <- IndexLayout.read(
+        root.getFileSystem(spark.sessionState.newHadoopConf()), root)
       cells <- layout match {
-        case "sign_bucket" =>
-          val bits = GraftDatabase.parseIndexBits(json)
-          Some(VectorIndex.codesWithin(
-            VectorIndex.signBucketOf(query, bits), bits, radius))
-        case "kmeans" =>
-          GraftDatabase.parseIndexCentroids(json).map(cents =>
-            VectorIndex.nearestCentroidIds(query, cents, nprobe = radius + 1))
-        case "ivfpq_kmeans" =>
-          // the coarse centroids ARE probe geometry (1-based cids, the
-          // m=1 rounded-argmin rule); the rewrite prunes cells and
-          // exact-reranks inside — the ADC compression stays an explicit
-          // searchSimilarIvfPq opt-in, never an optimizer surprise
-          GraftDatabase.parseIndexCentroids(json).map { cents =>
-            val cellCents = cents.zipWithIndex
-              .map { case (c, i) => (i + 1) -> c }.toMap
-            graft.operators.ProductQuantization.nearestCellsD(
-              query.map(_.toDouble), cellCents, nprobe = radius + 1)
-          }
-        case _ => None // zorder etc: no recoverable probe geometry → exact
+        // pq's cells are sign buckets, but its codes stay an explicit
+        // searchSimilarPq opt-in; ivfpq_kmeans is probed by its coarse
+        // cells with an exact rerank inside, never by its codes
+        case _: IndexLayout.Pq => None
+        case l: CellLayout => Some(l.cells(query, radius))
+        case _ => None // zorder: no probe geometry → exact
       }
     } yield cells
   }
@@ -240,14 +226,4 @@ class AnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def readSidecar(dir: Path): Option[String] = {
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = new Path(dir, GraftDatabase.IndexMetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
 }

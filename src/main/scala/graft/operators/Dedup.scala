@@ -1550,7 +1550,7 @@ object Dedup {
     * shuffle counts signatures; the duplicated-signature table joins
     * back on the SAME key (at corpus scale both sides shuffle on
     * win_sig over the identical sub-plan — reuse-eligible; at test SFs
-    * AQE broadcasts both small sides instead, so PlanDump shows NO
+    * AQE broadcasts both small sides instead, so PlansDump shows NO
     * corpus-side shuffle at all); covered positions explode at most
     * windows x L rows and collapse by `distinct` on `(id, pos)`, the
     * exact key the token-side left join partitions on next. No

@@ -151,7 +151,6 @@ object SimilaritySearch {
           metric, qc, idCol)
         rerankExact(collection.drop(qc), short, queryVec, k, shortlist,
           metric, vecCol, idCol)
-          .drop("approx_score")
       case Some(qc) =>
         // rerank = false: rank by the quantized score alone — the scan
         // NEVER touches full-precision vectors, so total IO is a strict

@@ -126,17 +126,6 @@ object VectorIndex {
     probeCellsSq8(indexed, codesWithin(signBucketOf(query, nBits), nBits, radius),
       query, k, shortlist, metric, vecCol, q8Col, idCol, inThreshold)
 
-  /** [[probeCellsSq8]] on a KMeans-IVF layout: the `nprobe` cells nearest
-    * the query (centroids ride in on the index sidecar).
-    */
-  def probeKMeansSq8(indexed: DataFrame, query: Array[Float], k: Int,
-      shortlist: Int, metric: String, centroids: Array[Array[Double]],
-      nprobe: Int, vecCol: String = "embedding",
-      q8Col: String = "embedding_q8", idCol: String = "id"): DataFrame =
-    probeCellsSq8(indexed,
-      nearestCentroidIds(query, centroids, math.max(1, nprobe)),
-      query, k, shortlist, metric, vecCol, q8Col, idCol)
-
   /** Batch IVF probe — the shape a retrieval or hard-negative-mining job
     * actually runs (the single-query probes serve the request path): for a
     * BATCH of queries, compute each query's probe cells driver-side (the
@@ -153,8 +142,8 @@ object VectorIndex {
     * scan| (the crossJoin shape of the exact batch, q22/q59).
     *
     * `cellsOf` maps a query vector to its probe cells — sign-bucket
-    * hamming balls ([[probeBatch]]) or nearest-centroid sets
-    * ([[probeKMeansBatch]]).
+    * hamming balls ([[probeBatch]]) or a collection layout's cells
+    * ([[graft.core.CellLayout.cells]]).
     *
     * Output matches [[SimilaritySearch.topKBatchAgg]]:
     * (queryIdCol, idCol, score, rank).
@@ -199,18 +188,6 @@ object VectorIndex {
       queryVecCol: String = "query_vec"): DataFrame =
     probeBatchCells(indexed, queries,
       qv => codesWithin(signBucketOf(qv, nBits), nBits, radius),
-      k, metric, vecCol, idCol, queryIdCol, queryVecCol)
-
-  /** [[probeBatchCells]] on a KMeans-IVF layout: each query probes its
-    * `nprobe` nearest centroids' cells.
-    */
-  def probeKMeansBatch(indexed: DataFrame, queries: DataFrame, k: Int,
-      metric: String, centroids: Array[Array[Double]], nprobe: Int,
-      vecCol: String = "embedding", idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame =
-    probeBatchCells(indexed, queries,
-      qv => nearestCentroidIds(qv, centroids, math.max(1, nprobe)),
       k, metric, vecCol, idCol, queryIdCol, queryVecCol)
 
   /** MLlib BucketedRandomProjectionLSH approximate nearest neighbors —

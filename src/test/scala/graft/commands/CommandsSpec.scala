@@ -597,4 +597,30 @@ class CommandsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("executor: SEARCHSIMILAR shortlist= returns one schema with or without radius=") {
+    val parent = Files.createTempDirectory("graftsq8schema").toString
+    val db = GraftDatabase.create(spark, parent, "sq8schemadb")
+    val recs = (0 until 60).map { i =>
+      graft.model.VectorRecord(i.toLong,
+        Array.tabulate(4)(j => math.cos(i * 0.37 + j * 1.1).toFloat), s"p$i")
+    }.toDF()
+    val vec = Array.tabulate(4)(j => math.cos(5 * 0.37 + j * 1.1).toFloat)
+    Seq[(String, GraftDatabase => Unit)](
+      "signs" -> (_.reindex("signs", nBits = 3)),
+      "kms" -> (_.reindexKMeans("kms", k = 3))
+    ).foreach { case (coll, layout) =>
+      db.createCollection(coll)
+      db.bulkInsert(coll, recs)
+      layout(db)
+      db.quantize(coll)
+      def schema(radius: String) = CommandExecutor.execute(db,
+          GraftCommand.SearchSimilar(coll,
+            s"k=5;${radius}shortlist=20;vec=${vec.mkString(",")}"))
+        .schema
+      val probed = schema("radius=1;")
+      assert(probed.fieldNames.contains("approx_score"), s"$coll: $probed")
+      assert(schema("") == probed, s"$coll: the columns must not depend on radius=")
+    }
+  }
 }

@@ -962,6 +962,33 @@ class GraftDatabaseSpec extends AnyFunSuite {
     assert(exact.select("id").as[Long].head() == 50L)
   }
 
+  test("a custom reindexWith after kmeans drops the kmeans layout record") {
+    val db = freshDb()
+    db.createCollection("vecs")
+    db.bulkInsert("vecs", (0 until 40).map(i => VectorRecord(i.toLong,
+      Array(math.cos(i * 0.7).toFloat, math.sin(i * 0.7).toFloat), s"p$i"))
+      .toDF())
+    db.reindexKMeans("vecs", k = 4)
+    assert(db.indexTypeOf("vecs").contains("kmeans"))
+    db.reindexWith("vecs", df =>
+      df.withColumn("cluster_id", (col("id") % 7 + 100).cast("int")))
+    // the new layout has no record: nothing may still describe the old one
+    assert(db.indexTypeOf("vecs").isEmpty)
+    assert(!db.listIndexes("vecs").select("index_type").as[String].collect()
+      .exists(_.startsWith("vector:")))
+    val q = Array(1.0f, 0.2f)
+    val exact = db.searchSimilar("vecs", q, k = 5)
+      .select("id").as[Long].collect().toSeq
+    assert(exact.size == 5)
+    assert(db.searchSimilar("vecs", q, k = 5, probeRadius = 1)
+      .select("id").as[Long].collect().toSeq == exact,
+      "a probe without a layout record must answer exactly")
+    db.bulkInsert("vecs", Seq(VectorRecord(99L, Array(0.5f, 0.5f), "late")).toDF())
+    assert(db.read("vecs").filter($"id" === 99L)
+      .select($"cluster_id".cast("int")).as[Int].head() == -1,
+      "an append to a layout without a record lands in the unindexed tail")
+  }
+
   test("rewrite swap crash between renames is recovered on next access") {
     val db = freshDb()
     db.createCollection("vecs")
@@ -1151,8 +1178,8 @@ class GraftDatabaseSpec extends AnyFunSuite {
     // n_tokens is the fertility numerator
     assert(db.tokenize("vecs").agg(sum("n_tokens")).as[Long].head() == 3L)
     // sidecar parse round-trips the exact merge order
-    val merges = GraftDatabase.parseTokenizerMerges(
-      """{"type": "bpe", "merges": [["a","b"],["ab","ab"]]}""")
+    val merges = TokenizerMeta.parse(
+      """{"type": "bpe", "merges": [["a","b"],["ab","ab"]]}""").merges
     assert(merges == Seq(("a", "b"), ("ab", "ab")))
 
     // the command surface reaches it: REINDEX type=tokenizer retrains

@@ -48,6 +48,7 @@ import graft.operators.{ProductQuantization, SimilaritySearch, TextAnalysis, Vec
   */
 final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private val fs: FileSystem = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private val commits = new CommitCache(fs)
 
   import GraftDatabase._
 
@@ -63,6 +64,18 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   private def metaPath(name: String): Path = new Path(collDir(name), MetaFile)
 
+  /** The collection's committed state as its marker names it now (None
+    * before its first commit): what reads resolve once and reuse. */
+  private def stateOf(name: String): Option[CommittedState] =
+    commits.current(collDir(name))
+
+  /** Rewrite the collection's commit marker: the last step of every write
+    * to the collection or its artifacts. */
+  private def commit(name: String): Unit = commits.commit(collDir(name))
+
+  private def commitPoint(name: String): CommitPoint =
+    commits.point(collDir(name))
+
   /** CREATE (reference `src/command/types.rs:9-19`): registers an empty
     * collection with a schema; fails if it already exists.
     */
@@ -72,6 +85,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     if (fs.exists(dir)) throw new IllegalStateException(s"collection exists: $name")
     fs.mkdirs(dir)
     writeString(fs, metaPath(name), schema.toDDL)
+    commit(name)
   }
 
   /** Whether collection `name` exists — the cheap probe command
@@ -79,15 +93,18 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * first use). */
   def collectionExists(name: String): Boolean = fs.exists(metaPath(name))
 
-  /** DROP (reference `src/command/types.rs:21-31`). */
+  /** DROP (reference `src/command/types.rs:21-31`). The artifacts go
+    * first (each deletion commits into the still-present collection), so
+    * a crash part-way never leaves artifacts a re-created collection
+    * would inherit; the collection directory, marker included, goes last.
+    */
   def dropCollection(name: String): Unit = {
     val dir = collDir(name)
     if (!fs.exists(dir)) throw new IllegalStateException(s"no such collection: $name")
-    fs.delete(dir, true)
-    // the artifacts must not outlive their collection
     artifacts(name).foreach(_.delete())
-    if (fs.exists(batchLogDir(name))) { fs.delete(batchLogDir(name), true); () }
-    ()
+    if (fs.exists(batchLogDir(name))) fs.delete(batchLogDir(name), true)
+    fs.delete(dir, true)
+    commits.forget(dir)
   }
 
   /** LISTCOLLECTIONS (reference `src/command/types.rs:33-42`): collection
@@ -164,9 +181,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   /** Read a collection as a DataFrame (empty-with-schema when no data files
     * have been written yet). `basePath` keeps partition columns (cluster_id)
     * visible after REINDEX rewrites the layout. Runs no Spark job.
+    *
+    * The footer read and the listing happen once per committed state: a
+    * later read of the same state reuses the resolved relation (a fresh
+    * frame over it, fresh attribute ids) and lists nothing. A collection
+    * with no commit marker lists on every read.
     */
   def read(name: String): DataFrame = {
     requireCollection(name)
+    CommittedState.frame(spark, stateOf(name), "collection")(listed(name))
+  }
+
+  /** The collection read as a fresh listing resolves it. */
+  private def listed(name: String): DataFrame = {
     val dir = collDir(name)
     firstDataFile(dir) match {
       case None =>
@@ -260,6 +287,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val w = arrived.write.mode("append").option("compression", Compression)
     (if (existing.contains("cluster_id")) w.partitionBy("cluster_id") else w)
       .parquet(collDir(name).toString)
+    commit(name)
   }
 
   /** Rows arriving in a collection whose data has columns `existing`: the
@@ -899,7 +927,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def searchText(name: String, rawTerms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75, k: Int = 20): DataFrame =
     rankText(name, rawTerms)(
-      TextAnalysis.bm25FromIndex(_, _, "id", _, k1, b, k),
+      TextAnalysis.bm25FromIndex(_, _, "id", _, k1, b, k, _),
       TextAnalysis.bm25(_, "id", "payload", _, k1, b, k))
 
   /** The SEARCHTEXT artifact dispatch shared by every scorer: a LIVE
@@ -911,21 +939,24 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * store normalized lowercase [a-z0-9]+ tokens, so incoming terms go
     * through the SAME rule (lowercase, split at non-alphanumerics, drop
     * empties, dedup) — a verbatim 'Vector' could never match either path.
+    * The stored scorers get the corpus stats of the committed state
+    * ([[corpusStats]]).
     */
   private def rankText(name: String, rawTerms: Seq[String])(
-      stored: (DataFrame, DataFrame, Seq[String]) => DataFrame,
+      stored: (DataFrame, DataFrame, Seq[String], Option[(Long, Long)]) => DataFrame,
       rescan: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     requireCollection(name)
     val terms = normalizeTerms(rawTerms)
     require(terms.nonEmpty,
       s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
     val post = postings(name)
-    post.snapshot.filter(_.live) match {
+    post.served.filter(_.live) match {
       case Some(s) =>
         val wanted = terms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
         stored(post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
             col("term").isin(terms: _*))),
-          post.live(s, "doclens").select(col("id"), col("dl")), terms)
+          post.live(s, "doclens").select(col("id"), col("dl")), terms,
+          corpusStats(post, s))
       case None =>
         val cur = read(name)
         require(cur.columns.contains("payload"),
@@ -945,7 +976,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def searchTextQL(name: String, rawTerms: Seq[String],
       mu: Double = 2000.0, k: Int = 20): DataFrame =
     rankText(name, rawTerms)(
-      TextAnalysis.dirichletQLFromIndex(_, _, "id", _, mu, k),
+      TextAnalysis.dirichletQLFromIndex(_, _, "id", _, mu, k, _),
       TextAnalysis.dirichletQL(_, "id", "payload", _, mu, k))
 
   /** SEARCHTEXT score=jm — Jelinek–Mercer query-likelihood ranking
@@ -957,7 +988,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def searchTextJM(name: String, rawTerms: Seq[String],
       lambda: Double = 0.7, k: Int = 20): DataFrame =
     rankText(name, rawTerms)(
-      TextAnalysis.jelinekMercerQLFromIndex(_, _, "id", _, lambda, k),
+      TextAnalysis.jelinekMercerQLFromIndex(_, _, "id", _, lambda, k, _),
       TextAnalysis.jelinekMercerQL(_, "id", "payload", _, lambda, k))
 
   /** REINDEX type=postings — materialize the text index as a managed
@@ -1014,7 +1045,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * + doclens (`dl`, `payload_md5`, `seg`) — and, when the artifact was
     * built `positions=true`, the POSITIONAL rows `(term, id, pos, seg)`
     * in the same bucket layout — for `rows`, APPENDED into the shared
-    * artifact directories.
+    * artifact directories. Each task sorts its rows by key before writing
+    * (the order a shuffle hands them over varies run to run), so a build
+    * writes the same bytes every time and row groups are term-sorted for
+    * parquet statistics to skip.
     */
   private def writeTextSegment(rows: DataFrame, seg: Int, genDir: Path,
       meta: ArtifactMeta): Unit = {
@@ -1029,12 +1063,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // schemaless-empty-dir inference failure cannot occur, and every
     // later partitioned append lands on a layout-compatible directory
     bucketed(graft.operators.TextAnalysis.invertedIndex(rows, "id", "payload"))
+      .sortWithinPartitions("term_bucket", "term", "id")
       .write.mode("append").option("compression", Compression)
       .partitionBy("term_bucket")
       .parquet(new Path(genDir, "postings").toString)
     if (hasPositions(meta))
       bucketed(graft.operators.TextAnalysis
           .invertedIndexPositional(rows, "id", "payload"))
+        .sortWithinPartitions("term_bucket", "term", "id", "pos")
         .write.mode("append").option("compression", Compression)
         .partitionBy("term_bucket")
         .parquet(new Path(genDir, "positions").toString)
@@ -1042,6 +1078,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .join(rows.select(col("id"), md5(col("payload")).as("payload_md5")),
         Seq("id"))
       .withColumn("seg", lit(seg))
+      .sortWithinPartitions("id")
       .write.mode("append").option("compression", Compression)
       .parquet(new Path(genDir, "doclens").toString)
   }
@@ -1111,6 +1148,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private def hasPositions(meta: ArtifactMeta): Boolean =
     meta.bool("positions").contains(true)
 
+  /** (N, Σdl) over the live doclens rows of a served postings snapshot:
+    * one job per committed state, then plan literals for every stored
+    * scorer. None for an uncached snapshot — the scorers then aggregate
+    * doclens in-plan.
+    */
+  private def corpusStats(post: SegmentedArtifact,
+      s: ArtifactSnapshot): Option[(Long, Long)] =
+    s.committed.map(_(("corpusStats", s.dataDir)) {
+      val r = post.live(s, "doclens")
+        .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    })
+
   /** SEARCHPHRASE — exact consecutive-token phrase match. With a LIVE
     * positional artifact (REINDEX type=postings;positions=true) the
     * query reads ONLY the phrase terms' `term_bucket=` partitions of
@@ -1173,7 +1223,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private def positionalRows(name: String, terms: Seq[String],
       command: String): DataFrame = {
     val post = postings(name)
-    post.snapshot.filter(s => s.live && hasPositions(s.meta)) match {
+    post.served.filter(s => s.live && hasPositions(s.meta)) match {
       case Some(s) =>
         val wanted = terms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
         post.live(s, "positions", Some(col("term_bucket").isin(wanted: _*) &&
@@ -1210,7 +1260,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   private def postings(name: String): SegmentedArtifact =
     new SegmentedArtifact(spark, fs, artifactDir("textindex", name),
-      "postings", SegmentedFamily("postings artifact",
+      "postings", commitPoint(name), SegmentedFamily("postings artifact",
         "REINDEX type=postings", "REINDEX type=postings (or mode=refresh)",
         tables = m => Seq(
           ArtifactTable("postings", PostingsSchema, Seq("term_bucket")),
@@ -1242,7 +1292,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   private def minhash(name: String): SegmentedArtifact =
     new SegmentedArtifact(spark, fs, artifactDir("minhash", name), "minhash",
-      SegmentedFamily("minhash artifact", "REINDEX type=minhash",
+      commitPoint(name), SegmentedFamily("minhash artifact", "REINDEX type=minhash",
         "REINDEX type=minhash (or mode=refresh)",
         tables = _ => Seq(
           ArtifactTable("bands", MinhashBandsSchema, Seq("band", "band_bucket")),
@@ -1442,7 +1492,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   private def splits(name: String): ManagedArtifact =
     new ManagedArtifact(spark, fs, artifactDir("splits", name), "splits",
-      staleable = false)
+      commitPoint(name), staleable = false)
 
   /** The split sidecar's snapshot; `missing` refuses an absent one. */
   private def splitsSnapshot(name: String,
@@ -2176,6 +2226,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // so "this micro-batch committed" and "these assignments are live"
     // are ONE atomic durable fact (no tag→data crash window at all)
     writeString(fs, new Path(g, s"routed_$seg.done"), RoutedMarker(batchTag).json)
+    commit(name)
     // segment-growth hygiene: past the threshold the assignment read is
     // a base + N-small-file union — fold it NOW (content-preserving,
     // batch tags carried; one extra read+write of assignment-grain rows,
@@ -2293,7 +2344,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   private def winsig(name: String): SegmentedArtifact =
     new SegmentedArtifact(spark, fs, artifactDir("winsig", name), "winsig",
-      SegmentedFamily("winsig artifact", "REINDEX type=winsig",
+      commitPoint(name), SegmentedFamily("winsig artifact", "REINDEX type=winsig",
         "REINDEX type=winsig (or mode=refresh)",
         tables = _ => Seq(
           ArtifactTable("sigs", WinsigSigsSchema, Seq("sig_bucket")),
@@ -2433,7 +2484,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * a full rebuild is one scan, so dhash has no segments to refresh. */
   private def dhash(name: String): ManagedArtifact =
     new ManagedArtifact(spark, fs, artifactDir("dhash", name), "dhash",
-      generational = false)
+      commitPoint(name), generational = false)
 
   private val DhashBandsSchema = StructType.fromDDL(
     "id BIGINT, sig BIGINT, band INT, key BIGINT, key_bucket INT")
@@ -2560,7 +2611,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   private def attrs(name: String): SegmentedArtifact =
     new SegmentedArtifact(spark, fs, artifactDir("attrs", name), "attrs",
-      SegmentedFamily("attribute sidecar", "TAG", "TAG mode=refresh",
+      commitPoint(name), SegmentedFamily("attribute sidecar", "TAG", "TAG mode=refresh",
         tables = _ => Seq(ArtifactTable("attrs", AttrsSchema)),
         docs = "attrs", diffKey = attrsDiffKey, validate = _ => (),
         writeSegment = (rows, seg, genDir, _) =>
@@ -2890,14 +2941,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
     // ---- sparse branch: one pruned postings pass for the whole batch
     val post = postings(name)
-    val snap = post.snapshot
-    val (hits, doclens) = snap.filter(_.live) match {
+    val snap = post.served
+    val (hits, doclens, stats) = snap.filter(_.live) match {
       case Some(s) =>
         val wanted = unionTerms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
         (post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
             col("term").isin(unionTerms: _*)))
             .select(col("id"), col("term"), col("tf")),
-          post.live(s, "doclens").select(col("id"), col("dl")))
+          post.live(s, "doclens").select(col("id"), col("dl")),
+          corpusStats(post, s))
       case None =>
         // a STALE artifact never serves — but silently tokenizing the
         // corpus once per batch call hides the degradation from the
@@ -2915,7 +2967,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
             s"(has: ${cur.columns.mkString(", ")})")
         (graft.operators.TextAnalysis.invertedIndex(cur, "id", "payload")
             .filter(col("term").isin(unionTerms: _*)),
-          graft.operators.TextAnalysis.docLengths(cur, "id", "payload"))
+          graft.operators.TextAnalysis.docLengths(cur, "id", "payload"),
+          None)
     }
     // the batch catalog: (query_id, term, ord) — ord is the term's
     // position in ITS query's list, the fold order that keeps per-query
@@ -2923,9 +2976,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val qt = broadcast(termsByQ.flatMap { case (qid, terms) =>
       terms.zipWithIndex.map { case (t, o) => (qid, t, o) }
     }.toDF("query_id", "term", "__ord"))
-    val base = doclens.agg(
-      count(lit(1)).as("__n"),
-      (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))
     // per-term document frequencies: term-grain, ≤ |unionTerms| rows
     val dfs = broadcast(hits.groupBy("term")
       .agg(count(lit(1)).as("__df")))
@@ -2942,11 +2992,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val contrib = idf * (col("tf") * (k1 + 1)) /
       (col("tf") + lit(k1) *
         (lit(1.0) - b + lit(b) * col("dl") / col("__avgdl")))
-    val scoredRows = hits
+    val joined = hits
       .join(qt, Seq("term"))
       .join(doclens, Seq("id"))
       .join(dfs, Seq("term"))
-      .crossJoin(broadcast(base))
+    // N and avgdl: literals from the committed state's corpus stats, else
+    // one in-plan doclens aggregation crossed in as a broadcast
+    val withStats = stats match {
+      case Some(st) => joined.select(col("*") +: TextAnalysis.bm25StatCols(st): _*)
+      case None => joined.crossJoin(broadcast(doclens.agg(
+        count(lit(1)).as("__n"),
+        (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))))
+    }
+    val scoredRows = withStats
       .select(col("query_id"), col("id"), col("__ord"), contrib.as("__c"))
     // per-(query, doc) score: fold the contributions in ord order (the
     // query's own term order, left-assoc like the single-query chain),
@@ -3101,7 +3159,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   /** The collection's layout record, None without one. */
   private def layoutOf(name: String): Option[IndexLayout] =
-    IndexLayout.read(fs, collDir(name))
+    CommittedState.memo(stateOf(name), "layout")(
+      IndexLayout.read(fs, collDir(name)))
 
   /** The index layout recorded in the collection's sidecar, if any —
     * public so the command layer can dispatch SEARCHSIMILAR options to the
@@ -3508,6 +3567,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val tok = new Path(dir, TokenizerMeta.File)
     if (fs.exists(tok))
       writeString(fs, new Path(tmp, TokenizerMeta.File), readString(fs, tok))
+    // the new version carries its own commit marker: the swap commits
+    commits.commit(tmp)
     // crash-safe swap: the old version moves to a trash path (not deleted),
     // so at every instant either the live dir or the trash holds a complete
     // copy — a crash between the two renames is recovered by
@@ -3578,6 +3639,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val merges = TextAnalysis.bpeTrain(read(name), textCol, nMerges)
     writeString(fs, new Path(collDir(name), TokenizerMeta.File),
       TokenizerMeta(merges.map { case (a, b, _) => (a, b) }).json)
+    commit(name)
   }
 
   /** Segment `textCol` with the collection's trained tokenizer: the

@@ -72,10 +72,13 @@ private[core] object ArtifactMeta {
 
 /** What the artifact looked like at one meta read: a command resolves
   * its tables, tombstones and parameters from ONE snapshot, so a
-  * compaction flip between two reads can never mix generations.
+  * compaction flip between two reads can never mix generations. A
+  * served snapshot carries the collection's `committed` state, and the
+  * tables read through it are resolved once for that state.
   */
 private[core] final case class ArtifactSnapshot(meta: ArtifactMeta,
-    stale: Boolean, dataDir: Path) {
+    stale: Boolean, dataDir: Path,
+    committed: Option[CommittedState] = None) {
   def live: Boolean = !stale
 }
 
@@ -85,9 +88,14 @@ private[core] final case class ArtifactSnapshot(meta: ArtifactMeta,
   * build or refresh, and a generational artifact keeps its data under
   * `gen_<g>/` where `g` is the meta's pointer (a flat one keeps it in the
   * directory itself). Missing directories read as absent artifacts.
+  *
+  * Every write primitive ends by rewriting the owning collection's commit
+  * marker (`commits`), so serving reads ([[served]]) can cache what they
+  * resolve per committed state.
   */
 private[core] class ManagedArtifact(val spark: SparkSession,
     val fs: FileSystem, val dir: Path, val label: String,
+    val commits: CommitPoint = CommitPoint.Standalone,
     val generational: Boolean = true, val staleable: Boolean = true) {
   import ManagedArtifact._
 
@@ -102,7 +110,8 @@ private[core] class ManagedArtifact(val spark: SparkSession,
   def dataDir(m: ArtifactMeta): Path =
     if (generational) genDir(m.gen.getOrElse(0)) else dir
 
-  /** One meta read (None when the artifact is absent). */
+  /** One meta read (None when the artifact is absent). Write paths use
+    * this: they see the artifact as it is on disk. */
   def snapshot: Option[ArtifactSnapshot] =
     if (!exists) None
     else {
@@ -110,26 +119,40 @@ private[core] class ManagedArtifact(val spark: SparkSession,
       Some(ArtifactSnapshot(m, fs.exists(staleMarker), dataDir(m)))
     }
 
+  /** The snapshot serving reads use: read once per committed state of the
+    * collection, and the tables read through it likewise. */
+  def served: Option[ArtifactSnapshot] = commits.state match {
+    case None => snapshot
+    case st @ Some(s) => s(("snapshot", dir))(snapshot.map(_.copy(committed = st)))
+  }
+
   /** LISTINDEXES state: "live" / "stale", None when absent. */
   def state: Option[String] =
     if (!exists) None else Some(if (fs.exists(staleMarker)) "stale" else "live")
 
   /** Mark stale (mutations call this); no-op when absent. */
   def invalidate(): Unit =
-    if (staleable && exists) writeString(fs, staleMarker, "stale")
+    if (staleable && exists) {
+      writeString(fs, staleMarker, "stale")
+      commits.commit()
+    }
 
-  def clearStale(): Unit = { fs.delete(staleMarker, false); () }
+  def clearStale(): Unit = if (fs.delete(staleMarker, false)) commits.commit()
 
-  def delete(): Unit = if (fs.exists(dir)) { fs.delete(dir, true); () }
+  def delete(): Unit = if (fs.exists(dir)) {
+    fs.delete(dir, true)
+    commits.commit()
+  }
 
   /** Full rebuild: drop the whole artifact (stale marker included),
     * write the data, then commit `m` (its own generation, gen 0 for a
     * fresh build). A crash in between leaves the artifact absent.
     */
   def rebuild(m: ArtifactMeta)(write: Path => Unit): Unit = {
-    delete()
+    if (fs.exists(dir)) fs.delete(dir, true)
     write(dataDir(m))
     writeMeta(m)
+    commits.commit()
   }
 
   /** Online generation commit: write a fresh `gen_<m.gen>` (an orphan of
@@ -138,7 +161,8 @@ private[core] class ManagedArtifact(val spark: SparkSession,
     * pointer is the single commit, after which every other generation is
     * swept. A crash before the flip leaves an orphan and an intact
     * artifact; after it, the new generation live and an unreferenced old
-    * directory.
+    * directory. The commit marker moves with the pointer, before the sweep
+    * (which only removes generations no meta references).
     */
   def commitGeneration(m: ArtifactMeta)(write: Path => Unit): Unit = {
     val g = m.gen.getOrElse(
@@ -147,6 +171,7 @@ private[core] class ManagedArtifact(val spark: SparkSession,
     if (fs.exists(next)) fs.delete(next, true)
     write(next)
     writeMeta(m)
+    commits.commit()
     Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("gen_") && n != s"gen_$g") fs.delete(st.getPath, true)
@@ -156,12 +181,17 @@ private[core] class ManagedArtifact(val spark: SparkSession,
   /** Read a table with its declared schema; a missing directory is the
     * empty frame (nothing was ever written there), and a zero-file
     * partitioned directory reads empty instead of failing inference.
+    * Under a `committed` state the relation (listing included) resolves
+    * once for that state; without one, every call lists.
     */
-  def read(p: Path, schema: StructType): DataFrame =
-    if (fs.exists(p))
-      graft.operators.ScaleKnobs.withDriverListing(spark)(
-        spark.read.schema(schema).parquet(p.toString))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  def read(p: Path, schema: StructType,
+      committed: Option[CommittedState] = None): DataFrame =
+    CommittedState.frame(spark, committed, ("table", p)) {
+      if (fs.exists(p))
+        graft.operators.ScaleKnobs.withDriverListing(spark)(
+          spark.read.schema(schema).parquet(p.toString))
+      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    }
 }
 
 private[core] object ManagedArtifact {
@@ -211,8 +241,9 @@ private[core] final case class SegmentedFamily(noun: String,
   * cannot tombstone the fresh version of a document either.
   */
 private[core] final class SegmentedArtifact(spark: SparkSession,
-    fs: FileSystem, dir: Path, label: String, family: SegmentedFamily)
-    extends ManagedArtifact(spark, fs, dir, label) {
+    fs: FileSystem, dir: Path, label: String, commits: CommitPoint,
+    family: SegmentedFamily)
+    extends ManagedArtifact(spark, fs, dir, label, commits) {
   import GraftDatabase.Compression
 
   private val TombstonesSchema = StructType.fromDDL("id BIGINT, seg INT")
@@ -222,10 +253,15 @@ private[core] final class SegmentedArtifact(spark: SparkSession,
       throw new IllegalArgumentException(s"$label has no table $sub"))
 
   def table(s: ArtifactSnapshot, sub: String): DataFrame =
-    read(new Path(s.dataDir, sub), schemaOf(s.meta, sub))
+    read(new Path(s.dataDir, sub), schemaOf(s.meta, sub), s.committed)
 
   def tombstones(s: ArtifactSnapshot): DataFrame =
-    read(new Path(s.dataDir, "tombstones"), TombstonesSchema)
+    read(new Path(s.dataDir, "tombstones"), TombstonesSchema, s.committed)
+
+  private def tombstoned(s: ArtifactSnapshot): Boolean = {
+    val p = new Path(s.dataDir, "tombstones")
+    CommittedState.memo(s.committed, ("exists", p))(fs.exists(p))
+  }
 
   /** Live rows of `sub`; `where` filters the table scan itself, so its
     * partition pruning is untouched by the tombstone anti-join. A
@@ -236,7 +272,7 @@ private[core] final class SegmentedArtifact(spark: SparkSession,
       where: Option[Column] = None): DataFrame = {
     val t = table(s, sub)
     val rows = where.fold(t)(t.filter)
-    if (!fs.exists(new Path(s.dataDir, "tombstones"))) rows
+    if (!tombstoned(s)) rows
     else rows.join(broadcast(tombstones(s)), Seq("id", "seg"), "left_anti")
   }
 
@@ -247,7 +283,8 @@ private[core] final class SegmentedArtifact(spark: SparkSession,
   }
 
   /** Append `rows` as the next segment of the snapshot's generation,
-    * reserving its number in the meta first; returns the number. */
+    * reserving its number in the meta first and committing after the
+    * segment is written; returns the number. */
   def append(s: ArtifactSnapshot, rows: DataFrame, above: Int = 0): Int = {
     val last = s.meta.maxSeg.getOrElse(
       table(s, family.docs).agg(coalesce(max("seg"), lit(0)))
@@ -256,6 +293,7 @@ private[core] final class SegmentedArtifact(spark: SparkSession,
     val m = s.meta.copy(maxSeg = Some(seg))
     writeMeta(m)
     family.writeSegment(rows, seg, s.dataDir, m)
+    commits.commit()
     seg
   }
 
@@ -303,6 +341,7 @@ private[core] final class SegmentedArtifact(spark: SparkSession,
           if (!fs.rename(tmp, tombPath))
             throw new IllegalStateException(
               s"$label tombstone swap failed for $name")
+          commits.commit()
         }
         clearStale()
         wrote

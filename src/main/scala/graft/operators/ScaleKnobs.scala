@@ -127,6 +127,10 @@ object ScaleKnobs {
     * explicit schema (collection reads resolve theirs from a footer on
     * the driver), so no Spark job runs under the lock and concurrent
     * commands queue for a listing, never for another command's job.
+    * A database lists only on a cache miss: the collection read and the
+    * served artifact tables keep their resolved relation per committed
+    * state (`graft.core.CommitCache`), so warm commands never take the
+    * lock.
     */
   def withDriverListing[T](spark: org.apache.spark.sql.SparkSession)(
       body: => T): T = listingLock.synchronized {

@@ -2327,22 +2327,25 @@ object TextAnalysis {
   /** [[dirichletQL]] over a STORED postings artifact ([[bm25FromIndex]]'s
     * sibling): tf per (doc, term) from ≤|terms| pruned partitions, ctf as
     * their sums, |C| from the doclens companion — no corpus scan,
-    * bit-identical to the rescan.
+    * bit-identical to the rescan. `corpus` = (N, Σdl) known up front
+    * ([[bm25FromIndex]]) makes |C| a plan literal.
     */
   def dirichletQLFromIndex(postings: DataFrame, doclens: DataFrame,
       idCol: String, terms: Seq[String], mu: Double = 2000.0,
-      k: Int = 20): DataFrame = {
+      k: Int = 20, corpus: Option[(Long, Long)] = None): DataFrame = {
     require(terms.nonEmpty, "dirichletQLFromIndex: empty term list")
     require(terms.distinct == terms,
       s"dirichletQLFromIndex: duplicate terms in $terms")
     require(k >= 1 && mu > 0, s"bad k/mu: $k/$mu")
-    val (perDoc, stats) = qlStoredFrames(postings, doclens, idCol, terms)
+    val (perDoc, stats) = qlStoredFrames(postings, doclens, idCol, terms,
+      corpus)
     qlRank(perDoc, stats, idCol, terms.size, k)(dirichletContrib(mu))
   }
 
   /** Stored-artifact (perDoc, stats) frames shared by the QL family. */
   private def qlStoredFrames(postings: DataFrame, doclens: DataFrame,
-      idCol: String, terms: Seq[String]): (DataFrame, DataFrame) = {
+      idCol: String, terms: Seq[String],
+      corpus: Option[(Long, Long)]): (DataFrame, DataFrame) = {
     // explicit isNotNull: the same ReusedExchange-enabling filter as
     // bm25FromIndex (the doclens inner join pushes it into one branch
     // only otherwise; a no-op on values — postings ids are non-null)
@@ -2356,7 +2359,6 @@ object TextAnalysis {
           sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"__tf_$i")
         }: _*)
     val perDoc = perDocAgg.join(doclens, Seq(idCol))
-    val cs = doclens.agg(sum("dl").as("__cs"))
     // collection term frequencies re-aggregate the PER-DOC table:
     // Σ_docs(per-doc Σ tf) ≡ Σ_rows tf exactly (integer sums regrouped),
     // and both consumers now share the hits→groupBy(id) exchange, so the
@@ -2369,8 +2371,14 @@ object TextAnalysis {
       terms.indices.tail.map { i =>
         sum(col(s"__tf_$i")).as(s"__ctf_$i")
       }: _*)
+    // |C| = Σdl: a literal from the known corpus stats (null over an
+    // empty doclens, as sum gives), else aggregated in-plan, with an
     // explicit broadcast on the 1×1 stats cross (the bm25FromIndex rule)
-    (perDoc, cs.crossJoin(broadcast(ctfs)))
+    (perDoc, corpus match {
+      case Some((n, sumDl)) => ctfs.select(col("*"),
+        (if (n == 0) lit(null).cast("long") else lit(sumDl)).as("__cs"))
+      case None => doclens.agg(sum("dl").as("__cs")).crossJoin(broadcast(ctfs))
+    })
   }
 
   /** [[jelinekMercerQL]] over a STORED postings artifact — the
@@ -2380,13 +2388,14 @@ object TextAnalysis {
     */
   def jelinekMercerQLFromIndex(postings: DataFrame, doclens: DataFrame,
       idCol: String, terms: Seq[String], lambda: Double = 0.7,
-      k: Int = 20): DataFrame = {
+      k: Int = 20, corpus: Option[(Long, Long)] = None): DataFrame = {
     require(terms.nonEmpty, "jelinekMercerQLFromIndex: empty term list")
     require(terms.distinct == terms,
       s"jelinekMercerQLFromIndex: duplicate terms in $terms")
     require(k >= 1, s"k must be positive, got $k")
     require(lambda > 0 && lambda < 1, s"lambda must be in (0,1), got $lambda")
-    val (perDoc, stats) = qlStoredFrames(postings, doclens, idCol, terms)
+    val (perDoc, stats) = qlStoredFrames(postings, doclens, idCol, terms,
+      corpus)
     qlRank(perDoc, stats, idCol, terms.size, k)(jmContrib(lambda))
   }
 
@@ -2632,6 +2641,18 @@ object TextAnalysis {
     matched.groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
   }
 
+  /** BM25's corpus stats as literals from (N, Σdl): `__n` = N and
+    * `__avgdl` = Σdl / N — the one IEEE division the in-plan
+    * `cast(sum(dl) as double) / count` performs, null over an empty
+    * doclens as that aggregation gives.
+    */
+  private[graft] def bm25StatCols(corpus: (Long, Long)): Seq[Column] = {
+    val (n, sumDl) = corpus
+    Seq(lit(n).as("__n"),
+      (if (n == 0) lit(null).cast("double") else lit(sumDl.toDouble / n.toDouble))
+        .as("__avgdl"))
+  }
+
   /** Per-doc lengths — the index's companion frame ([[bm25FromIndex]]
     * needs `dl` and the corpus stats derive from it).
     */
@@ -2649,10 +2670,16 @@ object TextAnalysis {
     * stored partitioned by term), the stats and dfs are two
     * broadcast-sized aggregations, and the cut is the same bounded
     * top-k on the rounded score.
+    *
+    * `corpus` = (N, Σdl) over `doclens`, when the caller already knows
+    * them (a database caches them per committed index state): N and
+    * avgdl then enter as plan literals ([[bm25StatCols]]) instead of an
+    * in-plan doclens aggregation — the same values, the same IEEE
+    * division.
     */
   def bm25FromIndex(postings: DataFrame, doclens: DataFrame, idCol: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      k: Int = 20): DataFrame = {
+      k: Int = 20, corpus: Option[(Long, Long)] = None): DataFrame = {
     require(terms.nonEmpty, "bm25FromIndex: empty term list")
     require(terms.distinct == terms, s"bm25FromIndex: duplicate terms in $terms")
     require(k >= 1, s"k must be positive, got $k")
@@ -2671,9 +2698,6 @@ object TextAnalysis {
           sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"__tf_$i")
         }: _*)
     val perDoc = perDocAgg.join(doclens, Seq(idCol))
-    val base = doclens.agg(
-      count(lit(1)).as("__n"),
-      (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))
     // document frequencies re-aggregate the PER-DOC table, not the hits:
     // a live doc has exactly one posting row per term it contains (the
     // segment tombstones guarantee one live version), so
@@ -2692,7 +2716,13 @@ object TextAnalysis {
     // explicit broadcast: the 1×1 stats cross must never plan as a
     // CartesianProduct when auto-broadcast is disabled (hint survives
     // spark.sql.autoBroadcastJoinThreshold = -1)
-    val stats = base.crossJoin(broadcast(dfs))
+    val stats = corpus match {
+      case Some(c) => dfs.select(col("*") +: bm25StatCols(c): _*)
+      case None => doclens.agg(
+          count(lit(1)).as("__n"),
+          (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))
+        .crossJoin(broadcast(dfs))
+    }
     // the contribution chain is copied from bm25() operation-for-
     // operation (the q136 never-pre-fold rule: identical ARITHMETIC)
     val contrib = terms.indices.map { i =>

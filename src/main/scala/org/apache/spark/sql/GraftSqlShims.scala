@@ -60,6 +60,19 @@ object GraftSqlShims {
       new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
   }
 
+  /** The relation a plain data-source read (`spark.read...parquet`) scans
+    * — its resolved schema, file listing and partition spec — or None for
+    * any other frame. `SparkSession.baseRelationToDataFrame` turns it back
+    * into a frame with fresh attribute ids, so the listing is reused
+    * without sharing attributes between two reads.
+    */
+  def baseRelation(ds: Dataset[_]): Option[sources.BaseRelation] =
+    ds.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        Some(l.relation)
+      case _ => None
+    }
+
   /** True if the frame's analyzed plan is a checkpoint scan (used by specs
     * to assert leak-hygiene contracts without peeking at Spark internals).
     */

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TestContextShims
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -97,6 +98,99 @@ class ServingPathSpec extends AnyFunSuite {
     assert(plan.contains("textindex_docs"), "SEARCHTEXT must serve the stored postings")
     assert(!plan.contains("LeftAnti"),
       s"a tombstone-free generation needs no anti-join:\n$plan")
+  }
+
+  /** Files Spark's file index discovered while `body` ran. */
+  private def filesListed[T](body: => T): (T, Long) = {
+    val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    val out = body
+    (out, HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before)
+  }
+
+  test("warm serving: reads list nothing, stored SEARCHTEXT fits its budget, a commit relists once") {
+    val db = freshDb()
+    db.createCollection("docs")
+    db.bulkInsert("docs", records(400))
+    db.reindex("docs", nBits = 4)
+    db.quantize("docs")
+    db.reindexPostings("docs")
+    val vec = records(1, 77).select("embedding").head().getSeq[Float](0)
+      .map(x => x + 0.01f).mkString(",")
+    val cmds = Seq(
+      "exact SEARCHSIMILAR" -> ("SEARCHSIMILAR", s"k=10;vec=$vec"),
+      "SQ8 ANN SEARCHSIMILAR" -> ("SEARCHSIMILAR", s"k=10;radius=1;shortlist=100;vec=$vec"),
+      "stored SEARCHTEXT" -> ("SEARCHTEXT", "terms=vector,probe,rare77;k=10"),
+      "SEARCH" -> ("SEARCH", "id IN (3, 5, 8) AND id % 2 = 1"))
+    def run(cmd: String, arg: String): ((Array[Row], Long), Int) = jobsOf(
+      filesListed(command(db, cmd, arg).collect()))
+    // warm: the first run of each command resolves and caches
+    cmds.foreach { case (_, (c, a)) => run(c, a) }
+    val (readListed, readJobs) = jobsOf(filesListed(db.read("docs"))._2)
+    assert(readJobs == 0 && readListed == 0, s"warm read: $readJobs jobs, $readListed files")
+    val warm = cmds.map { case (what, (c, a)) =>
+      val ((_, listed), jobs) = run(c, a)
+      assert(listed == 0, s"warm $what listed $listed files")
+      what -> jobs
+    }.toMap
+    assert(warm("stored SEARCHTEXT") <= 5, warm.toString)
+    assert(warm - "stored SEARCHTEXT" == Map("exact SEARCHSIMILAR" -> 1,
+      "SEARCH" -> 1, "SQ8 ANN SEARCHSIMILAR" -> 2), warm.toString)
+    // a commit through another handle: the next read lists the collection
+    // once, exactly as a fresh read does, and later reads list nothing
+    GraftDatabase.open(spark, db.root.toString).bulkInsert("docs", records(5, 1000))
+    val (_, first) = filesListed(db.read("docs"))
+    val (_, once) = filesListed(spark.read.option("basePath", s"${db.root}/docs")
+      .schema(db.read("docs").schema).parquet(s"${db.root}/docs"))
+    assert(first > 0 && first == once, s"relist after commit: $first files, one listing is $once")
+    assert(filesListed(db.read("docs"))._2 == 0)
+    assert(filesListed(command(db, "SEARCHTEXT", "terms=vector,rare1002;k=10")
+      .collect())._1.map(_.getLong(0)).contains(1002L))
+  }
+
+  test("cached corpus stats: empty and tombstoned indexes score bit-identically to the rescan") {
+    import graft.operators.TextAnalysis
+    val db = freshDb()
+    val terms = Seq("vector", "probe", "rare7", "shard")
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+    def sameAsRescan(c: String): Unit = {
+      val cur = db.read(c)
+      assert(rows(db.searchText(c, terms)) == rows(TextAnalysis.bm25(cur, "id", "payload", terms)))
+      assert(rows(db.searchTextQL(c, terms)) ==
+        rows(TextAnalysis.dirichletQL(cur, "id", "payload", terms)))
+      assert(rows(db.searchTextJM(c, terms)) ==
+        rows(TextAnalysis.jelinekMercerQL(cur, "id", "payload", terms)))
+    }
+    // the literal stats are the in-plan aggregation's values, null avgdl on
+    // an empty doclens included
+    def inPlan(doclens: DataFrame): Row = doclens.agg(count(lit(1)).as("__n"),
+      (sum("dl").cast("double") / count(lit(1))).as("__avgdl")).head()
+    def literal(doclens: DataFrame): Row = {
+      val r = doclens.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+      spark.range(1).select(TextAnalysis.bm25StatCols((r.getLong(0), r.getLong(1))): _*)
+        .head()
+    }
+    val emptyLens = TextAnalysis.docLengths(records(3).filter($"id" < 0), "id", "payload")
+    assert(inPlan(emptyLens) == Row(0L, null) && literal(emptyLens) == Row(0L, null))
+    db.createCollection("empty")
+    db.reindexPostings("empty", buckets = 4)
+    sameAsRescan("empty")
+    assert(db.searchText("empty", terms).isEmpty)
+
+    db.createCollection("docs")
+    db.bulkInsert("docs", records(60))
+    db.reindexPostings("docs", buckets = 4)
+    sameAsRescan("docs")
+    // a tombstoned generation: changed and deleted documents' old versions
+    // are dead rows the stats must not count
+    db.update("docs", records(4, 5).withColumn("payload", lit("vector vector rare7 new")))
+    db.delete("docs", $"id" === 11L)
+    db.refreshPostings("docs")
+    val plan = db.searchText("docs", terms).queryExecution.executedPlan.toString
+    assert(plan.contains("textindex_docs") && plan.contains("LeftAnti"), plan)
+    sameAsRescan("docs")
+    val lens = TextAnalysis.docLengths(db.read("docs"), "id", "payload")
+    assert(inPlan(lens) == literal(lens))
+    assert(inPlan(lens).getLong(0) == 59L)
   }
 
   test("collection read: schema equals Spark's inference across every layout") {

@@ -11,7 +11,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional args (dev only — the driver passes none): restrict the run
     // to the named queries, for standalone adjudication of a suspect
     // in-set number (the r9 house method: a rise that reproduces in a
@@ -22,23 +21,7 @@ object Bench {
       if (args.nonEmpty) Some(args.toSet) else None
     val benchSet = SparkEntry.benchQueries.filter(q => only.forall(_(q)))
     require(benchSet.nonEmpty, s"no bench queries match ${args.toSeq}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, default 100: 13 multi-stage queries evict each
-      // other's generated classes between interleaved passes, putting
-      // Janino recompilation inside every timed window — a long-running
-      // service would have a warm cache, so the bench should too
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // the library's session-extension surface, loaded the way a no-code
-      // integration would (string conf, not withExtensions)
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.start()
     // Two known-benign WARN categories otherwise land in the driver's ~2 KB
     // stdout-tail capture right before the metric line and eat its headroom:
     // WindowExec's "No Partition Defined" fires on the hybrid serving

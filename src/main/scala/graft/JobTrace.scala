@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic (guide §1.1/§2.6): per-JOB wall-clock timeline of one
   * query — job id, start offset, duration, description — to find
@@ -15,21 +14,8 @@ object JobTrace {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobTrace <queryName>")
     val name = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("GRAFT_LIST_THRESHOLD", "32"))
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.start()
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).collect() // warmup
     spark.catalog.clearCache()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic (optimization-round measurement tool, guide §1.1/§7.2):
   * write each named query's `.explain("formatted")` output — plus the
   * AQE FINAL executed plan after a collect() — to
@@ -9,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.PlansDump plans/r17 before q268_unigram_lm ..."
   *
-  * With no query names, dumps every Bench entry. The session mirrors
-  * Bench's conf (shuffle partitions = SPARK_GRAFT_CPUS, extensions,
-  * codegen cache) so the captured plans are the benched plans.
+  * With no query names, dumps every Bench entry. The session is Bench's
+  * ([[DevSession]]), so the captured plans are the benched plans.
   */
 object PlansDump {
   def main(args: Array[String]): Unit = {
@@ -21,18 +18,7 @@ object PlansDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq else SparkEntry.benchQueries
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession.start("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       try {

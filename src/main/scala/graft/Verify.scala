@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,24 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 74 queries × several codegen stages each blow far past the
-      // default 100-entry generated-class cache — evictions put Janino
-      // recompiles inside the run (measured 40%+ on the bench set)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // the library's session-extension surface, loaded the way a no-code
-      // integration would (string conf, not withExtensions)
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      // bucketed-table queries use saveAsTable: keep the warehouse out of CWD
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.start()
     new java.io.File(outDir).mkdirs()
     // Failures must be LOUD: a query that throws still writes a sentinel
     // one-row parquet (column `_error`) so the driver's DuckDB compare

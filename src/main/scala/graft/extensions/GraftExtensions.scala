@@ -16,7 +16,8 @@ import graft.functions.{CosineSimilarity, DotProduct, HammingDistance, L2Distanc
   * plug-in point for Spark libraries. Activate with either
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   // on the session builder, in code:
+  *   .withExtensions(new GraftExtensions)
   *   // or, with no code change at all:
   *   --conf spark.sql.extensions=graft.extensions.GraftExtensions
   * }}}

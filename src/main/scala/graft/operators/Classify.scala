@@ -124,14 +124,9 @@ object Classify {
     * [[nbPredict]] and [[nbMarginCalibration]]: one row per doc×label
     * with (`idCol`, label = true label, __label = candidate,
     * __score = rounded NB score).
-    *
-    * `materializeBase` exists ONLY for the NbBench A/B harness (adjudicate
-    * the eager-checkpoint trade standalone, r17 verdict item 1); every
-    * production caller takes the default.
     */
   private[graft] def nbScoredGrid(df: DataFrame, idCol: String,
-      textCol: String, labelCol: String, isTrain: Column,
-      materializeBase: Boolean = true): DataFrame = {
+      textCol: String, labelCol: String, isTrain: Column): DataFrame = {
     // null text ≡ empty text (zero tokens, scored by the prior) — the
     // same contract explode_outer gives nbScore; without the coalesce a
     // null array nulls __ntok and the whole score.
@@ -140,11 +135,11 @@ object Classify {
     // ReusedExchange cannot dedup their differing subtrees — unmaterialized,
     // the plan re-scanned and RE-TOKENIZED the corpus 13× (q145 plan
     // audit, r17). One corpus pass, one tokenization.
-    val base0 = df.select(col(idCol), col(labelCol).as("__label"),
+    val base = df.select(col(idCol), col(labelCol).as("__label"),
       isTrain.as("__train"),
       coalesce(TextAnalysis.normalizedTokens(col(textCol)),
         array().cast("array<string>")).as("__toks"))
-    val base = if (materializeBase) base0.localCheckpoint(true) else base0
+      .localCheckpoint(true)
 
     val trainToks = base.filter(col("__train"))
       .select(col("__label"), explode(col("__toks")).as("__tok"))

@@ -37,18 +37,8 @@ object ScaleKnobs {
     * the no-modulo-bias rule), clamped to [16, 4096]; a stat-less plan
     * falls back to the historical default 64.
     */
-  def postingsBuckets(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val statless = size >= spark.sessionState.conf.defaultSizeInBytes
-    if (statless) 64
-    else {
-      val want = (size / (8L * 1024 * 1024)).toLong + 1
-      var b = 16
-      while (b < 4096 && b < want) b *= 2
-      b
-    }
-  }
+  def postingsBuckets(df: DataFrame): Int =
+    powerOfTwoBuckets(df, targetMb = 8, lo = 16, fallback = 64)
 
   /** EXPORT shard count: target ~64 MB of source bytes per shard file
     * (one task writes one shard, so a shard must be a healthy single
@@ -57,18 +47,8 @@ object ScaleKnobs {
     * then), clamped to [1, 4096]; a stat-less plan falls back to the
     * historical default 8.
     */
-  def exportShards(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val statless = size >= spark.sessionState.conf.defaultSizeInBytes
-    if (statless) 8
-    else {
-      val want = (size / (64L * 1024 * 1024)).toLong + 1
-      var b = 1
-      while (b < 4096 && b < want) b *= 2
-      b
-    }
-  }
+  def exportShards(df: DataFrame): Int =
+    powerOfTwoBuckets(df, targetMb = 64, lo = 1, fallback = 8)
 
   /** Hash-key sub-bucket count for the band/signature screening
     * artifacts (minhash bands, winsig sigs, dhash bands): their keys are
@@ -82,6 +62,25 @@ object ScaleKnobs {
     * (the safe direction, same argument as [[postingsBuckets]]). Power
     * of two in [8, 4096]; a stat-less plan falls back to 16.
     */
+  def sigBuckets(df: DataFrame): Int =
+    powerOfTwoBuckets(df, targetMb = 32, lo = 8, fallback = 16)
+
+  /** The smallest power of two ≥ `lo` covering the plan's size estimate
+    * at `targetMb` per bucket, capped at 4096; `fallback` when the plan
+    * has no size statistics (its estimate is the session default).
+    */
+  private def powerOfTwoBuckets(df: DataFrame, targetMb: Long, lo: Int,
+      fallback: Int): Int = {
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (size >= df.sparkSession.sessionState.conf.defaultSizeInBytes) fallback
+    else {
+      val want = (size / (targetMb * 1024 * 1024)).toLong + 1
+      var b = lo
+      while (b < 4096 && b < want) b *= 2
+      b
+    }
+  }
+
   /** Arrival-batch broadcast cap for the ROUTE screens: a micro-batch
     * up to this many rows is pinned broadcast (the screen's stored side
     * is corpus-scale — shuffling it for a tiny batch is the wrong
@@ -91,19 +90,6 @@ object ScaleKnobs {
     * broadcast; the hot-bucket caps bound the join blow-up either way.
     */
   val routeBroadcastMaxRows: Long = 65536L
-
-  def sigBuckets(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val statless = size >= spark.sessionState.conf.defaultSizeInBytes
-    if (statless) 16
-    else {
-      val want = (size / (32L * 1024 * 1024)).toLong + 1
-      var b = 8
-      while (b < 4096 && b < want) b *= 2
-      b
-    }
-  }
 
   private val listingLock = new Object
 

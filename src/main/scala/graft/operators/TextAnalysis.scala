@@ -190,8 +190,9 @@ object TextAnalysis {
     * and every quantity stays exact-integer). The regime knob is DOC
     * LENGTH, not corpus size — per-row cost is near-linearithmic in a
     * document's tokens and independent of how many documents surround
-    * it. Measured (RepBench, sf0.01 + sf0.1 interleaved min-rep):
-    * 0.81–0.93× of [[repetitionStats]] for the quadratic form already;
+    * it. Measured (round-11 A/B, sf0.01 + sf0.1 interleaved min-rep,
+    * BENCH_ADJUDICATION_r11.md): 0.81–0.93× of [[repetitionStats]] for
+    * the quadratic form already;
     * the sorted fold only widens that — this form is the batch default
     * too (q166). Tie-breaks, divisions, and thresholds are the same
     * exact-integer arithmetic, so stream and batch can never disagree
@@ -1326,9 +1327,9 @@ object TextAnalysis {
     * Per-round cost is O(|pair table| + hit set) either way, because the
     * union+regroup rewrites the whole maintained table every round — the
     * delta path only narrows PAIR GENERATION (explode the hit set, not
-    * every segment). MEASURED regimes (`graft.BpeBench`, 256-merge
-    * budget, numbers in SURVEY.md §6): on the gate corpora the recount
-    * WINS (0.179 vs 0.226 s/round at sf0.01, ratio 0.79; 0.81 at sf0.1)
+    * every segment). MEASURED regimes (incremental-vs-recount A/B,
+    * 256-merge budget, numbers in SURVEY.md §6): on the gate corpora the
+    * recount WINS (0.179 vs 0.226 s/round at sf0.01, ratio 0.79; 0.81 at sf0.1)
     * — at vocabularies of a few thousand words the explode is cheaper
     * than the maintained table's rewrite, so the default here is the
     * recount. The delta path's regime is million-word vocabularies where

@@ -986,12 +986,12 @@ object TextQueries {
     // paper's. The corpus has no newlines, so the line fractions are
     // exercised structurally here (always one line → 0.0) and
     // numerically by spec; the n-gram family carries the gate.
-    // Round-11 A/B (RepBench, sf0.01 + sf0.1): the stateless per-row
-    // formulation beats the grouped two-aggregation one 0.81–0.93× at
-    // corpus grain (zero shuffle beats the count-table exchange at
-    // normal doc lengths), so it is the batch default here; the gate
-    // text is unchanged — both formulations hash-match it (q167 is the
-    // standing stream ≡ batch proof).
+    // Round-11 A/B (sf0.01 + sf0.1, BENCH_ADJUDICATION_r11.md): the
+    // stateless per-row formulation beats the grouped two-aggregation one
+    // 0.81–0.93× at corpus grain (zero shuffle beats the count-table
+    // exchange at normal doc lengths), so it is the batch default here;
+    // the gate text is unchanged — both formulations hash-match it (q167
+    // is the standing stream ≡ batch proof).
     "q166_repetition" -> ((s, dir) => {
       TextAnalysis.repetitionStatsStateless(
           graft.operators.Parallelism.ensure(Tables.documents(s, dir)),

@@ -16,13 +16,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * total). If a future spec uses a generator loop, the runtime total
   * diverges from the literal count and THIS doc must be revisited —
   * the guard errs toward failing loudly.
+  *
+  * The same source walk guards the session-builder debt: under
+  * `src/main/scala` only the dev mains' shared session
+  * (`graft.DevSession`) and the user-facing CLI (`graft.cli.Main`) may
+  * build a SparkSession.
   */
 class CountDriftSpec extends AnyFunSuite {
 
-  private lazy val readme = {
-    val src = scala.io.Source.fromFile("README.md", "UTF-8")
-    try src.mkString finally src.close()
-  }
+  private lazy val readme = read(new java.io.File("README.md"))
 
   test("README gate count matches the live query registry") {
     val m = "\\((\\d+)/(\\d+) at sf0\\.001".r.findFirstMatchIn(readme)
@@ -39,31 +41,44 @@ class CountDriftSpec extends AnyFunSuite {
         "update README's Correctness section")
   }
 
+  private def scalaFiles(root: String): Seq[java.io.File] = {
+    def walk(d: java.io.File): Seq[java.io.File] = {
+      val fs = Option(d.listFiles()).getOrElse(Array.empty).toSeq
+      fs.filter(_.isFile) ++ fs.filter(_.isDirectory).flatMap(walk)
+    }
+    walk(new java.io.File(root)).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def read(f: java.io.File): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
   test("README spec/suite counts match the test tree") {
     val m = "(\\d+) ScalaTest specs across (\\d+) suites".r
       .findFirstMatchIn(readme)
     assert(m.isDefined, "README must state the spec/suite counts")
     val (claimedSpecs, claimedSuites) =
       (m.get.group(1).toInt, m.get.group(2).toInt)
-    val specFiles = {
-      def walk(d: java.io.File): Seq[java.io.File] = {
-        val fs = Option(d.listFiles()).getOrElse(Array.empty).toSeq
-        fs.filter(_.isFile) ++ fs.filter(_.isDirectory).flatMap(walk)
-      }
-      walk(new java.io.File("src/test/scala"))
-        .filter(_.getName.endsWith("Spec.scala"))
-    }
+    val specFiles = scalaFiles("src/test/scala")
+      .filter(_.getName.endsWith("Spec.scala"))
     assert(specFiles.nonEmpty, "test tree must be visible from the cwd")
-    val testCount = specFiles.map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try "(?m)^\\s*test\\(\"".r.findAllIn(src.mkString).size
-      finally src.close()
-    }.sum
+    val testCount = specFiles
+      .map(f => "(?m)^\\s*test\\(\"".r.findAllIn(read(f)).size).sum
     assert(claimedSuites == specFiles.size,
       s"README claims $claimedSuites suites, tree has ${specFiles.size}")
     assert(claimedSpecs == testCount,
       s"README claims $claimedSpecs specs, tree declares $testCount — " +
         "update README's Correctness section")
+  }
+
+  test("only the shared dev session and the CLI build a SparkSession") {
+    val main = new java.io.File("src/main/scala").toPath
+    val sites = scalaFiles("src/main/scala")
+      .filter(f => read(f).contains("SparkSession.builder"))
+      .map(f => main.relativize(f.toPath).toString).sorted
+    assert(sites === Seq("graft/DevSession.scala", "graft/cli/Main.scala"),
+      "a dev main must start its session with graft.DevSession.start")
   }
 
   test("every bench entry is a registered, oracle-gated query") {

@@ -61,7 +61,8 @@ class PlanAuditSpec extends AnyFunSuite {
       "single-row query side must broadcast")
     // the scoring project must sit inside a WholeStageCodegen span — the
     // custom expression's doGenCode is what makes it 6-7× faster than the
-    // higher-order-function / UDF formulations (see graft.ScoreBench).
+    // higher-order-function / UDF formulations (SURVEY.md §"M4 scoring
+    // measurement").
     // AQE only materializes codegen markers in the final plan → execute first.
     val df = graft.SparkEntry.queries("q20_knn_cosine")(spark, graft.TestSpark.sf)
     df.collect()

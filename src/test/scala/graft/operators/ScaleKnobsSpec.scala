@@ -72,6 +72,37 @@ class ScaleKnobsSpec extends AnyFunSuite {
     assert(Integer.bitCount(b) === 1, s"$b must be a power of two")
   }
 
+  test("bucket derivations: stat-less fallbacks 64/8/16; a sized plan takes the power-of-two rule") {
+    // an RDD-backed frame carries no size statistics: its estimate is the
+    // session default, the stat-less case
+    val statless = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
+      StructType(Seq(StructField("id", LongType))))
+    assert(statless.queryExecution.optimizedPlan.stats.sizeInBytes ===
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    assert(ScaleKnobs.postingsBuckets(statless) === 64)
+    assert(ScaleKnobs.exportShards(statless) === 8)
+    assert(ScaleKnobs.sigBuckets(statless) === 16)
+    // a Range plan estimates 8 bytes a row: 800 MB here, never executed
+    val sized = spark.range(100000000L).toDF()
+    val size = sized.queryExecution.optimizedPlan.stats.sizeInBytes
+    // the derivation as each knob spelled it out before sharing a helper:
+    // the smallest power of two from `lo` covering size / target + 1,
+    // capped at 4096
+    def formula(targetBytes: Long, lo: Int): Int = {
+      val want = (size / targetBytes).toLong + 1
+      var b = lo
+      while (b < 4096 && b < want) b *= 2
+      b
+    }
+    val mb = 1024L * 1024
+    assert(ScaleKnobs.postingsBuckets(sized) === formula(8 * mb, 16))
+    assert(ScaleKnobs.exportShards(sized) === formula(64 * mb, 1))
+    assert(ScaleKnobs.sigBuckets(sized) === formula(32 * mb, 8))
+    assert((ScaleKnobs.postingsBuckets(sized), ScaleKnobs.exportShards(sized),
+      ScaleKnobs.sigBuckets(sized)) === ((128, 16, 32)))
+  }
+
   private def screenDb(tag: String) = {
     val db = graft.core.GraftDatabase.create(spark,
       java.nio.file.Files.createTempDirectory(tag).toString, "kdb")

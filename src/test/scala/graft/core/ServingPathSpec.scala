@@ -100,6 +100,34 @@ class ServingPathSpec extends AnyFunSuite {
       s"a tombstone-free generation needs no anti-join:\n$plan")
   }
 
+  test("SEARCHHYBRID: job budget, single and queries= batch, on the serving collection") {
+    val db = freshDb()
+    db.createCollection("docs")
+    db.bulkInsert("docs", records(400))
+    db.reindex("docs", nBits = 4)
+    db.quantize("docs")
+    db.reindexPostings("docs")
+    def vecOf(i: Int): String = records(1, i).select("embedding").head()
+      .getSeq[Float](0).map(x => x + 0.01f).mkString(",")
+    val batch = Files.createTempFile("graft_hybrid_batch", ".txt")
+    Files.write(batch, Seq(77, 13, 205, 340).zipWithIndex.map { case (d, i) =>
+      s"$i|vector,probe,rare$d|${vecOf(d)}"
+    }.mkString("\n").getBytes("UTF-8"))
+    val cmds = Seq(
+      "single" -> s"terms=vector,probe,rare77;vec=${vecOf(77)};k=10;radius=1;shortlist=100",
+      "batch" -> s"queries=$batch;k=10;radius=1;shortlist=100")
+    def run(arg: String): (Array[Row], Int) =
+      jobsOf(command(db, "SEARCHHYBRID", arg).collect())
+    // warm: the first run of each command resolves and caches
+    cmds.foreach { case (_, a) => run(a) }
+    val counts = cmds.map { case (what, a) =>
+      val (rows, jobs) = run(a)
+      assert(rows.length == (if (what == "single") 10 else 40), what)
+      what -> jobs
+    }.toMap
+    assert(counts == Map("single" -> 6, "batch" -> 12), counts.toString)
+  }
+
   /** Files Spark's file index discovered while `body` ran. */
   private def filesListed[T](body: => T): (T, Long) = {
     val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount

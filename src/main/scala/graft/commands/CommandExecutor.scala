@@ -287,43 +287,24 @@ object CommandExecutor {
         val opts = parseKv(arg)
         val k = opts.getOrElse("k", "10").toInt
         val metric = opts.getOrElse("metric", "cosine")
-        // radius >= 0 opts into the IVF probe on an indexed collection
-        // (see GraftDatabase.searchSimilar for the recall trade-off);
-        // shortlist=<n> instead selects the SQ8 quantized-rerank path
-        // (index-free, structure-free — see SimilaritySearch.topKSq8)
+        // radius= and shortlist= pass straight through: the database picks
+        // the cells and the scorer from the collection's layout
+        // (GraftDatabase.searchSimilar)
         val radius = opts.getOrElse("radius", "-1").toInt
+        val shortlist = opts.getOrElse("shortlist", "-1").toInt
         opts.get("batch") match {
           // batch= names a parquet file of (query_id, query_vec) — the
           // retrieval-job shape: the whole batch probes in ONE scan
           case Some(path) =>
             db.searchSimilarBatch(coll, readBatchQueries(spark, path), k,
-              metric, probeRadius = radius,
-              shortlist = opts.get("shortlist").map(_.toInt).getOrElse(-1))
+              metric, radius, shortlist)
           case None =>
             val vec = opts.get("vec") match {
               case Some(v) => v.split(",").map(_.trim.toFloat)
               case None => throw new IllegalArgumentException(
                 "SEARCHSIMILAR arg must include vec=f,f,... or batch=<path>")
             }
-            opts.get("shortlist") match {
-              case Some(s) => db.indexTypeOf(coll) match {
-                // on a REINDEX type=pq collection, shortlist= means the ADC
-                // path (stored m-byte codes + sidecar codebooks), composed
-                // with cell pruning when radius= is also given
-                case Some("pq") =>
-                  db.searchSimilarPq(coll, vec, k, s.toInt, probeRadius = radius)
-                // residual layout: radius= keeps the kmeans convention
-                // (nprobe = radius + 1, like searchSimilar on type=kmeans)
-                case Some("ivfpq_kmeans") =>
-                  db.searchSimilarIvfPq(coll, vec, k, s.toInt,
-                    nprobe = if (radius >= 0) radius + 1 else 2)
-                // radius= composes the cell probe on a sign/kmeans layout,
-                // the same option names SEARCHHYBRID composes under
-                case _ => db.searchSimilarSq8(coll, vec, k, s.toInt, metric,
-                  probeRadius = radius)
-              }
-              case None => db.searchSimilar(coll, vec, k, metric, radius)
-            }
+            db.searchSimilar(coll, vec, k, metric, radius, shortlist)
         }
 
       case Sync(coll, arg) =>
@@ -371,7 +352,7 @@ object CommandExecutor {
           // driver-side by construction; Float.toString round-trips, so
           // a file written from the API's vectors parses back exact).
           // The whole batch is answered by ONE postings pass + ONE
-          // cell/ADC probe (searchHybridBatch).
+          // dense plan (searchHybridBatch).
           case Some(path) =>
             require(!opts.contains("vec") && !opts.contains("terms"),
               "SEARCHHYBRID: queries= (batch file) excludes vec=/terms=")
@@ -402,9 +383,8 @@ object CommandExecutor {
               k = opts.getOrElse("k", "10").toInt,
               kf = opts.getOrElse("kf", "20").toInt,
               kRrf = opts.getOrElse("krrf", "60").toInt,
-              // radius + shortlist opt the dense branch into the stored ANN
-              // composition (cell probe × SQ8 × exact rerank) — the same
-              // option names SEARCHSIMILAR uses
+              // radius + shortlist choose the dense branch's cells and
+              // scorer — the same options SEARCHSIMILAR takes
               probeRadius = opts.getOrElse("radius", "-1").toInt,
               shortlist = opts.getOrElse("shortlist", "-1").toInt)
         }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.IndexLayout.{IvfPqKMeans, KMeans, Pq, SignBucket}
 import graft.model.VectorRecord
-import graft.operators.{ProductQuantization, SimilaritySearch, TextAnalysis, VectorIndex, ZOrder}
+import graft.operators.{ProductQuantization, SimilaritySearch, TextAnalysis, VectorIndex, VectorPlanner, ZOrder}
 
 /** A graft database: a directory of named collections, each a Parquet-backed
   * table (SURVEY §1.2). Reference surface: database init at
@@ -299,7 +299,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       rows: DataFrame): DataFrame = {
     val quanted =
       if (existing.contains(QuantCol))
-        rows.withColumn(QuantCol, quantExpr(col("embedding")))
+        rows.withColumn(QuantCol, SimilaritySearch.sq8Bytes(col("embedding")))
       else rows
     if (!existing.contains("cluster_id")) quanted
     else layout.fold(IndexLayout.unindexedTail(quanted))(_.assign(quanted))
@@ -737,12 +737,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     requireCollection(name)
     val cur = read(name)
     if (!cur.columns.contains(QuantCol))
-      rewrite(name, cur.withColumn(QuantCol, quantExpr(col("embedding"))),
+      rewrite(name, cur.withColumn(QuantCol, SimilaritySearch.sq8Bytes(col("embedding"))),
         layoutOf(name))
   }
-
-  private def quantExpr(v: Column): Column =
-    transform(graft.operators.SimilaritySearch.sq8(v), x => x.cast("tinyint"))
 
 
   /** UPDATE (reference `src/command/types.rs:82-93`): upsert by key.
@@ -769,7 +766,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val base = current.drop("cluster_id").drop(QuantCol).drop(PqCodeCol)
     val mergedRaw = graft.operators.Mutations.upsert(base, align(name, updates), key)
     val merged =
-      if (hasQuant) mergedRaw.withColumn(QuantCol, quantExpr(col("embedding")))
+      if (hasQuant) mergedRaw.withColumn(QuantCol, SimilaritySearch.sq8Bytes(col("embedding")))
       else mergedRaw
     val layout = layoutOf(name)
     rewrite(name,
@@ -849,49 +846,79 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   }
 
   /** SEARCHSIMILAR (reference `src/command/types.rs:121-132`): exact k-NN
-    * by default; pass `probeRadius >= 0` on a REINDEXed collection to opt
-    * into the IVF probe — a partition-pruned scan of the buckets within
-    * `probeRadius` bit-flips of the query's bucket, exact rerank inside.
+    * by default, one call into [[VectorPlanner]] with the cells and scorer
+    * [[vectorPlan]] picks for the collection:
     *
-    * Probing is opt-in rather than automatic because its recall depends on
-    * the corpus: strongly clustered embeddings probe well; near-isotropic
-    * ones (weak neighbor structure) can see low recall at aggressive
-    * pruning (IvfRecallSpec characterizes this on the testdata). The engine
-    * never silently trades correctness for speed — callers choose, with the
-    * trade measured.
+    *  - `probeRadius >= 0` opts into the cell probe on a REINDEXed
+    *    collection — the query's cells at that radius (hamming radius on
+    *    sign-bucket layouts, nprobe − 1 on centroid layouts);
+    *  - `shortlist >= 1` opts into the approximate first pass the layout
+    *    stores — residual ADC on ivfpq_kmeans, ADC on pq, SQ8 elsewhere —
+    *    and exact-reranks that many rows.
+    *
+    * Both are opt-in because recall depends on the corpus: strongly
+    * clustered embeddings probe well; near-isotropic ones (weak neighbor
+    * structure) can see low recall at aggressive pruning (IvfRecallSpec
+    * characterizes this on the testdata). The engine never silently trades
+    * correctness for speed — callers choose, with the trade measured.
     */
   def searchSimilar(name: String, query: Array[Float], k: Int,
       metric: String = "cosine", probeRadius: Int = -1,
-      idCol: String = "id"): DataFrame = {
+      shortlist: Int = -1, idCol: String = "id"): DataFrame = {
     val data = read(name)
-    // probe ONLY sign_bucket and kmeans layouts ([[CellLayout.cells]] —
-    // radius 0 means "just the query's own cell" for both). A cluster_id
-    // from an external assign function has no recoverable geometry, so it
-    // falls back to exact rather than silently returning wrong neighbors.
-    val probeable = probeRadius >= 0 && data.columns.contains("cluster_id")
-    def probe(l: CellLayout) =
-      data.filter(col("cluster_id").isin(l.cells(query, probeRadius): _*))
-    val scanned = (if (probeable) layoutOf(name) else None) match {
-      case Some(l: SignBucket) => probe(l)
-      case Some(l: KMeans) => probe(l)
-      case _ => data
-    }
-    SimilaritySearch.topK(scanned, query, k, metric, idCol = idCol)
+    val (cells, scorer) = vectorPlan(name, data, metric, probeRadius, shortlist)
+    VectorPlanner.topK(data, query, k, cells, scorer, idCol = idCol)
   }
 
-  /** SEARCHTEXT (extension): BM25 keyword retrieval over the collection's
-    * payload — the sparse half of a hybrid store (the reference's record
-    * format carries the source text beside its vector,
-    * `src/utils/embeddings.rs:55-62`; this makes it searchable).
-    *
-    * With a [[reindexPostings]] artifact present, the query answers from
-    * the STORED postings: the scan prunes to the query terms'
-    * `term_bucket=` partitions (≤ |terms| directories of a
-    * vocabulary-sized table — the plan a search engine runs), scores via
-    * [[graft.operators.TextAnalysis.bm25FromIndex]], bit-identical to
-    * the rescan. Without one it falls back to the one-pass
-    * [[graft.operators.TextAnalysis.bm25]] corpus scan.
+  /** Batch SEARCHSIMILAR — the retrieval-job shape: `queries` is a
+    * (`query_id`, `query_vec` array<float>) frame, and the WHOLE batch is
+    * answered by ONE scan (the union of all probed cells) with a bounded
+    * per-query heap — never one job per query. Same plan choices as
+    * [[searchSimilar]]. Output: (query_id, id, score, rank), plus
+    * `approx_score` with `shortlist`.
     */
+  def searchSimilarBatch(name: String, queries: DataFrame, k: Int,
+      metric: String = "cosine", probeRadius: Int = -1,
+      shortlist: Int = -1, idCol: String = "id"): DataFrame = {
+    val data = read(name)
+    val (cells, scorer) = vectorPlan(name, data, metric, probeRadius, shortlist)
+    VectorPlanner.topKBatch(data, queries, k, cells, scorer, idCol = idCol)
+  }
+
+  /** The vector plan's two choices for `name`, one rule per layout and the
+    * same for every arity:
+    *
+    *  - cells: `probeRadius >= 0` on a [[CellLayout]] probes
+    *    `layout.cells(q, probeRadius)` ([[VectorPlanner.cellsOf]]). On a
+    *    collection without one — zorder, no layout record, a user-made
+    *    `cluster_id` — the request is refused: never a silent full scan the
+    *    caller believes is pruned;
+    *  - scorer: exact float in `metric` without `shortlist`; with one,
+    *    residual ADC on ivfpq_kmeans, ADC on pq, and SQ8 elsewhere —
+    *    reading the stored `embedding_q8` column when there is one.
+    */
+  private def vectorPlan(name: String, data: DataFrame, metric: String,
+      probeRadius: Int, shortlist: Int): (VectorPlanner.Cells, VectorPlanner.Scorer) = {
+    val layout =
+      if (probeRadius >= 0 || shortlist >= 1) layoutOf(name) else None
+    val cells = VectorPlanner.cellsOf(layout, probeRadius)
+    require(probeRadius < 0 || cells.isDefined,
+      s"probeRadius=$probeRadius set but layout ${layout.fold("none")(_.kind)} " +
+        s"on $name has no cells to probe (no batch probe, no single-query " +
+        "probe) — REINDEX to sign/kmeans/pq/ivfpq or drop probeRadius for " +
+        "the exact scan")
+    val scorer =
+      if (shortlist < 1) VectorPlanner.Exact(metric)
+      else layout match {
+        case Some(l: IvfPqKMeans) =>
+          VectorPlanner.ResidualAdc(l.codebooks, l.cellCents, shortlist, PqCodeCol)
+        case Some(l: Pq) => VectorPlanner.Adc(l.codebooks, shortlist, PqCodeCol)
+        case _ => VectorPlanner.Sq8(metric, shortlist,
+          Some(QuantCol).filter(data.columns.contains))
+      }
+    (cells, scorer)
+  }
+
   /** SUMMARIZE (extension command, the LISTINDEXES/SEARCHTEXT
     * precedent): TextRank extractive top sentence per document over the
     * collection's payload — `SUMMARIZE [-a "iters=5;maxsents=64"]`.
@@ -924,6 +951,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .orderBy("id")
   }
 
+  /** SEARCHTEXT (extension): BM25 keyword retrieval over the collection's
+    * payload — the sparse half of a hybrid store (the reference's record
+    * format carries the source text beside its vector,
+    * `src/utils/embeddings.rs:55-62`; this makes it searchable).
+    *
+    * With a [[reindexPostings]] artifact present, the query answers from
+    * the STORED postings: the scan prunes to the query terms'
+    * `term_bucket=` partitions (≤ |terms| directories of a
+    * vocabulary-sized table — the plan a search engine runs), scores via
+    * [[graft.operators.TextAnalysis.bm25FromIndex]], bit-identical to
+    * the rescan. Without one it falls back to the one-pass
+    * [[graft.operators.TextAnalysis.bm25]] corpus scan.
+    */
   def searchText(name: String, rawTerms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75, k: Int = 20): DataFrame =
     rankText(name, rawTerms)(
@@ -2093,13 +2133,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     out
   }
 
-  /** Shared ROUTE tail: write-once collision check, inheritance
-    * ([[graft.operators.TrainExport.routeSplits]]), the marked-segment
-    * sidecar commit, optional admission. The routed frame is eagerly
-    * checkpointed BEFORE the insert/refresh — correctness, not just
-    * cost: the returned plan reads the screen's inputs, and re-running
-    * it after admission would screen the arrivals against THEMSELVES.
-    */
   /** Pre-execution plan of the last ROUTE screen (spec introspection):
     * the routed frame the caller gets back is a checkpoint scan, so the
     * screen's pruned-scan shape is not visible there — audits assert on
@@ -2113,6 +2146,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private def routeSnapshot(name: String): ArtifactSnapshot =
     splitsSnapshot(name, s"no split sidecar on $name — run SPLIT before ROUTE")
 
+  /** Shared ROUTE tail: write-once collision check, inheritance
+    * ([[graft.operators.TrainExport.routeSplits]]), the marked-segment
+    * sidecar commit, optional admission. The routed frame is eagerly
+    * checkpointed BEFORE the insert/refresh — correctness, not just
+    * cost: the returned plan reads the screen's inputs, and re-running
+    * it after admission would screen the arrivals against THEMSELVES.
+    */
   private def routeCore(name: String, sp: ArtifactSnapshot, batch: DataFrame,
       arriving: DataFrame, matchesIn: => DataFrame, insert: Boolean,
       refreshBands: Boolean, batchTag: Option[String] = None,
@@ -2839,27 +2879,30 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val sparse = searchText(name, terms, k = kf)
       .withColumn("rank", row_number().over(wS).cast("long"))
       .select("id", "rank")
-    val wD = org.apache.spark.sql.expressions.Window
-      .orderBy(org.apache.spark.sql.functions.desc("__cs"), col("id"))
-    // dense branch: `probeRadius >= 0` + `shortlist >= 1` opts into the
-    // stored ANN composition (IVF cell probe × SQ8 shortlist × exact
-    // rerank — [[searchSimilarSq8]]'s dispatch): the serving shape where
-    // BOTH retrieval branches answer from stored artifacts. The internal
-    // k = shortlist keeps the only engine-side cut on the INTEGER-exact
-    // int8 score (the q79 discipline); the kf cut below is on the
-    // ROUNDED exact score — never a raw float both engines compute with
-    // their own op order. Default (-1) stays the exact corpus scan.
-    val denseScored =
-      if (probeRadius >= 0 && shortlist >= 1)
-        searchSimilarSq8(name, query, k = shortlist, shortlist = shortlist,
-            probeRadius = probeRadius)
+    // dense branch: the planner's cells and scorer for the collection
+    // (cosine, `probeRadius`, `shortlist`). An approximate scorer reranks
+    // k = shortlist rows, so the only engine-side cut inside it is its own
+    // shortlist cut (the INTEGER-exact int8 score on SQ8, the q79
+    // discipline); the kf cut below is on the ROUNDED exact score — never
+    // a raw float both engines compute with their own op order. ADC ranks
+    // its l2 distance ascending.
+    val data = read(name)
+    val (cells, scorer) = vectorPlan(name, data, "cosine", probeRadius, shortlist)
+    val denseScored = scorer match {
+      case _: VectorPlanner.Exact =>
+        cells.fold(data)(c => VectorPlanner.inCells(data, c(query)))
+          .select(col("id"),
+            round(graft.functions.cosine_sim(col("embedding"), lit(query)), 6)
+              .as("__cs"))
+      case s: VectorPlanner.Shortlisted =>
+        VectorPlanner.topK(data, query, s.shortlist, cells, s)
           .select(col("id"), round(col("score"), 6).as("__cs"))
-      else
-        read(name).select(col("id"),
-          round(graft.functions.cosine_sim(col("embedding"), lit(query)), 6)
-            .as("__cs"))
+    }
+    val byScore =
+      if (VectorPlanner.descending(scorer)) desc("__cs") else asc("__cs")
+    val wD = org.apache.spark.sql.expressions.Window.orderBy(byScore, col("id"))
     val dense = denseScored
-      .orderBy(org.apache.spark.sql.functions.desc("__cs"), col("id"))
+      .orderBy(byScore, col("id"))
       .limit(kf)
       .withColumn("rank", row_number().over(wD).cast("long"))
       .select("id", "rank")
@@ -2885,13 +2928,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     *    bounded heap per query on the ROUNDED score — no windows, no
     *    per-query plan branches: plan size is independent of batch
     *    size, and the postings scan executes once for the batch.
-    *  - ONE cell-probe scan for every query's dense candidates
-    *    ([[VectorIndex.probeBatch]]: the union of all probed cells,
-    *    scored per (query, cell) broadcast pair, bounded heap per
-    *    query). The kf cut rides the heap's raw exact score (the
-    *    q128-gated discipline); ranks are then re-derived on the
-    *    ROUNDED score (the hybrid rank doctrine) over the ≤ kf
-    *    survivors.
+    *  - ONE dense plan for the whole batch ([[VectorPlanner.topKBatch]]
+    *    with [[searchSimilarBatch]]'s cells and scorer: one scan of the
+    *    union of the probed cells, a bounded heap per query, one exact
+    *    rerank after an approximate scorer). The kf cut rides the
+    *    planner's rank; ranks are then re-derived on the ROUNDED score
+    *    (the hybrid rank doctrine) over the ≤ kf survivors — descending
+    *    cosine, or ascending l2 after ADC.
     *  - RRF fusion per query ([[SimilaritySearch.rrfFuse]]'s exact
     *    arithmetic) with a k-cut over the ≤ 2·kf fused rows per query.
     *
@@ -2900,21 +2943,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * with literal filters and the per-query score chains stay
     * fixed-order plan literals.
     *
-    * Dense dispatch mirrors [[searchSimilarBatch]] layout-for-layout:
-    * an ADC layout (`pq` / `ivfpq_kmeans`) with `shortlist >= 1` runs
-    * the codes-only batch probe ([[ProductQuantization.probeAdcBatch]]
-    * / [[ProductQuantization.probeAdcResidualBatch]] — per-(query, cell)
-    * broadcast LUTs, bounded shortlist heap, ONE exact rerank whose
-    * rank is already on the ROUNDED l2 ascending, id tie-break);
-    * `sign_bucket` runs the exact cosine cell probe; `kmeans` the exact
-    * cosine nprobe probe (probeRadius = nprobe − 1, the house
-    * convention). `probeRadius` on a clustered layout with no batch
-    * probe is LOUD — never a silent exact scan the caller believes is
-    * pruned. A STALE postings artifact is equally LOUD (a silent
-    * per-call corpus tokenize would hide the degradation — refresh or
-    * drop the artifact first); no artifact at all → one corpus
-    * tokenize, still one pass for the batch; no probeRadius / no cell
-    * layout → the exact broadcast batch scan.
+    * `probeRadius` on a collection without cells is LOUD — never a
+    * silent exact scan the caller believes is pruned. A STALE postings
+    * artifact is equally LOUD (a silent per-call corpus tokenize would
+    * hide the degradation — refresh or drop the artifact first); no
+    * artifact at all → one corpus tokenize, still one pass for the batch.
     *
     * Output: (query_id, id, rrf, n_lists) — [[SimilaritySearch.rrfFuse]]'s
     * columns per query, ordered (query_id, rrf desc, id).
@@ -3023,52 +3056,21 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         kf, desc_? = true, "id", "query_id")
       .select(col("query_id"), col("id"), col("rank").cast("long").as("rank"))
 
-    // ---- dense branch: one cell-union probe for the whole batch.
-    // cosine layouts rank DESC on the rounded similarity; the ADC
-    // layouts' exact rerank already ranks ASC on the rounded l2 (a
-    // distance) — RRF consumes ranks, so the two conventions fuse
-    // identically.
+    // ---- dense branch: one planner call for the whole batch. Cosine
+    // scorers rank DESC on the rounded similarity, ADC ASC on the rounded
+    // l2 (a distance) — RRF consumes ranks, so the two fuse identically.
     val qvecs = queries.map { case (qid, _, v) => (qid, v) }
       .toDF("query_id", "query_vec")
     val data = read(name)
-    val probeable = probeRadius >= 0 && data.columns.contains("cluster_id")
-    val layout = if (probeable) layoutOf(name) else None
-    def cosineRanks(denseTop: DataFrame): DataFrame = {
-      val wD = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(org.apache.spark.sql.functions.desc("__cs"), col("id"))
-      denseTop
-        .select(col("query_id"), col("id"), round(col("score"), 6).as("__cs"))
-        .withColumn("rank", row_number().over(wD).cast("long"))
-        .select("query_id", "id", "rank")
-    }
-    val dense = layout match {
-      case Some(l: IvfPqKMeans) if shortlist >= 1 =>
-        ProductQuantization.probeAdcResidualBatch(data, qvecs, k = kf,
-            shortlist = shortlist, codebooks = l.codebooks,
-            cellCents = l.cellCents, nprobe = probeRadius + 1,
-            vecCol = "embedding", codeCol = PqCodeCol, idCol = "id")
-          .select(col("query_id"), col("id"),
-            col("rank").cast("long").as("rank"))
-      case Some(l: Pq) if shortlist >= 1 =>
-        ProductQuantization.probeAdcBatch(data, qvecs, k = kf,
-            shortlist = shortlist, codebooks = l.codebooks, nBits = l.bits,
-            radius = probeRadius, vecCol = "embedding", codeCol = PqCodeCol,
-            idCol = "id")
-          .select(col("query_id"), col("id"),
-            col("rank").cast("long").as("rank"))
-      case Some(l: CellLayout) if !l.isInstanceOf[IvfPqKMeans] =>
-        cosineRanks(VectorIndex.probeBatchCells(data.drop(PqCodeCol), qvecs,
-          l.cells(_, probeRadius), k = kf, metric = "cosine",
-          vecCol = "embedding", idCol = "id"))
-      case _ =>
-        require(!probeable,
-          s"probeRadius=$probeRadius set but layout ${layout.map(_.kind)} " +
-            s"on $name has no batch probe — REINDEX to sign/kmeans/pq/ivfpq " +
-            "or drop probeRadius for the exact scan")
-        cosineRanks(SimilaritySearch.topKBatchAgg(data, qvecs, k = kf,
-          metric = "cosine", vecCol = "embedding", idCol = "id"))
-    }
+    val (cells, scorer) = vectorPlan(name, data, "cosine", probeRadius, shortlist)
+    val wD = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id")
+      .orderBy(if (VectorPlanner.descending(scorer)) desc("__cs") else asc("__cs"),
+        col("id"))
+    val dense = VectorPlanner.topKBatch(data, qvecs, kf, cells, scorer)
+      .select(col("query_id"), col("id"), round(col("score"), 6).as("__cs"))
+      .withColumn("rank", row_number().over(wD).cast("long"))
+      .select("query_id", "id", "rank")
 
     // ---- RRF per query (rrfFuse's exact arithmetic, query-keyed)
     val wK = org.apache.spark.sql.expressions.Window
@@ -3087,86 +3089,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .orderBy(col("query_id"), desc("rrf"), col("id"))
   }
 
-  /** SQ8-accelerated SEARCHSIMILAR (see [[SimilaritySearch.topKSq8]]): scan
-    * int8-quantized scores for everything, exact-rerank only a shortlist.
-    * Works on any layout (no index required) — the accelerator of choice
-    * when the corpus has no cluster structure for an IVF probe to exploit.
-    *
-    * On a REINDEXed + quantized collection, `probeRadius >= 0` composes
-    * BOTH prunings (the 100 TB plan): partition-prune to the probed cells,
-    * int8-rank only inside them, exact-rerank the shortlist —
-    * [[VectorIndex.probeCellsSq8]]. Same probeRadius semantics as
-    * [[searchSimilar]] (hamming radius for sign_bucket, nprobe − 1 for
-    * kmeans); same fallback discipline (no recoverable geometry → the
-    * index-free quantized scan, never silently wrong neighbors).
-    */
-  def searchSimilarSq8(name: String, query: Array[Float], k: Int,
-      shortlist: Int = 1000, metric: String = "cosine",
-      idCol: String = "id", rerank: Boolean = true,
-      probeRadius: Int = -1): DataFrame = {
-    val data = read(name)
-    val stored = if (data.columns.contains(QuantCol)) Some(QuantCol) else None
-    val probeable = probeRadius >= 0 && rerank && stored.isDefined &&
-      data.columns.contains("cluster_id")
-    def probe(l: CellLayout) = VectorIndex.probeCellsSq8(data,
-      l.cells(query, probeRadius), query, k, shortlist, metric,
-      q8Col = QuantCol, idCol = idCol)
-    (if (probeable) layoutOf(name) else None) match {
-      case Some(l: SignBucket) => probe(l)
-      case Some(l: KMeans) => probe(l)
-      case _ => SimilaritySearch.topKSq8(data, query, k, shortlist, metric,
-        idCol = idCol, q8Col = stored, rerank = rerank)
-    }
-  }
-
-  /** Batch SEARCHSIMILAR — the retrieval-job shape through the managed
-    * surface: `queries` is a (`query_id`, `query_vec` array<float>) frame,
-    * and the WHOLE batch is answered by ONE scan (the union of all probed
-    * cells on an indexed layout) with a bounded per-query heap — never one
-    * job per query. Dispatch mirrors the single-query paths:
-    * `probeRadius >= 0` + a pq or ivfpq layout + `shortlist >= 1` runs the
-    * batch IVF × ADC composition ([[ProductQuantization.probeAdcBatch]] /
-    * [[ProductQuantization.probeAdcResidualBatch]]); sign-bucket, pq and
-    * kmeans layouts run the exact batch probe over their cells
-    * ([[VectorIndex.probeBatchCells]]);
-    * anything else is the exact broadcast batch scan
-    * ([[SimilaritySearch.topKBatchAgg]]) — same fallback discipline as
-    * [[searchSimilar]], never silently wrong neighbors.
-    */
-  def searchSimilarBatch(name: String, queries: DataFrame, k: Int,
-      metric: String = "cosine", probeRadius: Int = -1,
-      shortlist: Int = -1, idCol: String = "id"): DataFrame = {
-    val data = read(name)
-    val probeable = probeRadius >= 0 && data.columns.contains("cluster_id")
-    (if (probeable) layoutOf(name) else None) match {
-      case Some(l: Pq) if shortlist >= 1 =>
-        ProductQuantization.probeAdcBatch(data, queries, k, shortlist,
-          l.codebooks, nBits = l.bits, radius = probeRadius,
-          vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
-      case Some(l: IvfPqKMeans) if shortlist >= 1 =>
-        // residual batch probe; radius keeps the kmeans convention
-        // (nprobe = radius + 1)
-        ProductQuantization.probeAdcResidualBatch(data, queries, k, shortlist,
-          l.codebooks, l.cellCents, nprobe = probeRadius + 1,
-          vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
-      case Some(l: CellLayout) if !l.isInstanceOf[IvfPqKMeans] =>
-        VectorIndex.probeBatchCells(data.drop(PqCodeCol), queries,
-          l.cells(_, probeRadius), k, metric, idCol = idCol)
-      case _ =>
-        SimilaritySearch.topKBatchAgg(data, queries, k, metric, idCol = idCol)
-    }
-  }
-
   /** The collection's layout record, None without one. */
   private def layoutOf(name: String): Option[IndexLayout] =
     CommittedState.memo(stateOf(name), "layout")(
       IndexLayout.read(fs, collDir(name)))
 
-  /** The index layout recorded in the collection's sidecar, if any —
-    * public so the command layer can dispatch SEARCHSIMILAR options to the
-    * path the collection's index actually supports (e.g. `shortlist=` on a
-    * PQ collection means the ADC path, not the SQ8 scan).
-    */
+  /** The index layout kind recorded in the collection's sidecar, if any. */
   def indexTypeOf(name: String): Option[String] = {
     requireCollection(name)
     layoutOf(name).map(_.kind)
@@ -3233,8 +3161,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * refinements), rewrite the collection partitioned by sign-bucket
     * `cluster_id` with an m-byte `pq_code` column beside each vector, and
     * record codebooks + geometry in the sidecar. The sidecar is what makes
-    * the index live AND reproducible: [[searchSimilarPq]] probes with the
-    * stored codebooks, and arriving rows (INSERT/BULKINSERT/UPDATE) get
+    * the index live AND reproducible: SEARCHSIMILAR `shortlist=` ADC-scores
+    * with the stored codebooks ([[vectorPlan]]), and arriving rows (INSERT/BULKINSERT/UPDATE) get
     * cluster_id and pq_code re-derived by the same deterministic rules —
     * no invalidation, no row loss (both assignment rules are pure column
     * math against sidecar literals).
@@ -3247,37 +3175,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     reindexAs(name, base, Pq(nBits, m, ksub, cb))
   }
 
-  /** PQ-accelerated SEARCHSIMILAR over a `REINDEX type=pq` collection:
-    * ADC-score the stored m-byte codes against the query's lookup table
-    * (built from the sidecar codebooks), keep the `shortlist` nearest,
-    * exact-l2-rerank only those. `probeRadius >= 0` composes the
-    * sign-bucket cell pruning (hamming radius, like [[searchSimilar]]) —
-    * cell pruning × 32× code compression is the 100 TB read path
-    * (≈0.1% of corpus vector bytes at the defaults). l2 metric by
-    * construction (ADC decomposes squared l2 per subspace; cosine
-    * callers normalize at ingest). Loud on a collection without the pq
-    * sidecar — never silently exact-scans when the caller asked for the
-    * compressed path.
-    */
-  def searchSimilarPq(name: String, query: Array[Float], k: Int,
-      shortlist: Int = 1000, probeRadius: Int = -1,
-      idCol: String = "id"): DataFrame = {
-    val data = read(name)
-    val pq = layoutOf(name).collect { case l: Pq => l }.getOrElse(
-      throw new IllegalStateException(
-        s"index sidecar for $name has no codebooks — REINDEX type=pq first"))
-    require(data.columns.contains(PqCodeCol),
-      s"$name has no $PqCodeCol column — REINDEX type=pq first")
-    if (probeRadius >= 0 && data.columns.contains("cluster_id"))
-      ProductQuantization.probeAdc(data, query, k, shortlist, pq.codebooks,
-        nBits = pq.bits, radius = probeRadius,
-        vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
-    else
-      ProductQuantization.topKAdc(data.drop(PqCodeCol), data, query, k,
-        shortlist, pq.codebooks, vecCol = "embedding", codeCol = PqCodeCol,
-        idCol = idCol)
-  }
-
   /** REINDEX with the FAISS-canonical kmeans-coarse RESIDUAL IVFPQ layout
     * (q169/q170's layout as a managed artifact): a deterministic kmeans
     * coarse quantizer — [[ProductQuantization.trainCodebooks]] at m = 1,
@@ -3287,7 +3184,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * each vector. The sidecar records coarse centroids AND codebooks, so
     * the layout survives INSERT/BULKINSERT/UPDATE: both derived columns
     * re-derive from sidecar literals ([[IndexLayout.IvfPqKMeans]]), no
-    * invalidation, no row loss. [[searchSimilarIvfPq]] is the read path.
+    * invalidation, no row loss. SEARCHSIMILAR `shortlist=` reads it with
+    * residual ADC ([[vectorPlan]]).
     */
   def reindexIvfPq(name: String, m: Int = 8, ksub: Int = 16,
       rounds: Int = 1, kCells: Int = 8, idCol: String = "id",
@@ -3306,28 +3204,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     reindexAs(name, base, IvfPqKMeans(m, ksub, kCells, cb, coarse(0)))
   }
 
-  /** SEARCHSIMILAR over a `REINDEX type=ivfpq` collection: the query
-    * probes its `nprobe` nearest coarse cells (rounded-l2 rank,
-    * [[ProductQuantization.nearestCellsD]]), ADC-scores the probed cells'
-    * stored codes against per-cell residual lookup tables, and
-    * exact-l2-reranks the bounded shortlist — cell pruning × 32× code
-    * compression, the deepest managed read path. Loud without the
-    * sidecar/codes — never silently exact-scans.
-    */
-  def searchSimilarIvfPq(name: String, query: Array[Float], k: Int,
-      shortlist: Int = 1000, nprobe: Int = 2,
-      idCol: String = "id"): DataFrame = {
-    val data = read(name)
-    require(data.columns.contains(PqCodeCol),
-      s"$name has no $PqCodeCol column — REINDEX type=ivfpq first")
-    val l = layoutOf(name).collect { case l: IvfPqKMeans => l }.getOrElse(
-      throw new IllegalStateException(s"index sidecar for $name has no " +
-        "ivfpq layout — REINDEX type=ivfpq first"))
-    ProductQuantization.probeAdcResidualCells(data, query,
-      l.cells(query, nprobe - 1), k, shortlist, l.codebooks, l.cellCents,
-      vecCol = "embedding", codeCol = PqCodeCol, idCol = idCol)
-  }
-
   /** Semantic cross-set decontamination screen over a stored collection
     * — the embedding-level sibling of the n-gram screens, against the
     * collection as the TRAINING corpus: each eval query's nearest train
@@ -3337,9 +3213,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * map-side-combinable max(struct(rounded score, −id)) — ONE struct
     * per query per partition ever shuffles. On an `ivfpq_kmeans`
     * collection with `probeRadius`/`shortlist` set, the screen answers
-    * from the stored CODES instead ([[ProductQuantization
-    * .adcResidualScored]] — the batched-ADC serving machinery under the
-    * decon flag rule): per-query cell probes, broadcast residual LUTs,
+    * from the stored CODES instead ([[VectorPlanner.shortlistBatch]] —
+    * the batch planner's residual-ADC shortlists under the decon flag
+    * rule): per-query cell probes, broadcast residual LUTs,
     * bounded shortlist heap, then ONE exact cosine rerank of shortlisted
     * rows only — a re-screen per eval-set revision reads m bytes of
     * vector data per row instead of the float corpus. On a `kmeans`
@@ -3389,15 +3265,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
               s"probeRadius=$probeRadius on the ivfpq_kmeans layout " +
                 "needs shortlist >= 1 (the ADC screen's rerank bound), " +
                 s"got $shortlist")
-            val scored = ProductQuantization.adcResidualScored(data, qs,
-                l.codebooks, l.cellCents,
-                nprobe = probeRadius + 1, codeCol = PqCodeCol, idCol = "id")
-              .select(col("query_id").cast("long"), col("id").cast("long"),
-                col("s").cast("double"))
-              .as[(Long, Long, Double)]
-            val short = graft.operators.SimilaritySearch
-              .boundedTopKPerQuery(scored, shortlist, desc_? = false,
-                "id", "query_id")
+            val short = VectorPlanner.shortlistBatch(data, qs,
+                VectorPlanner.cellsOf(Some(l), probeRadius),
+                VectorPlanner.ResidualAdc(l.codebooks, l.cellCents, shortlist,
+                  PqCodeCol))
               .select(col("query_id"), col("id"))
             data.select(col("id").cast("long").as("id"), col("embedding"))
               .join(broadcast(short), Seq("id"))
@@ -3495,9 +3366,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * (each bucketed to `[0, 2^bits)` via pmod). Unlike sign/kmeans this is
     * a FILE layout, not a partition layout — no `cluster_id` column; range
     * predicates on EITHER column skip files through parquet min/max stats
-    * instead of directory pruning, and SEARCHSIMILAR/mutations treat the
-    * collection as flat (the probe dispatch ignores non-geometric
-    * sidecars by design).
+    * instead of directory pruning. Mutations treat the collection as
+    * flat, and SEARCHSIMILAR scans it exactly: it has no cells, so a
+    * `probeRadius` is refused ([[vectorPlan]]).
     *
     * Mutation semantics follow the OPTIMIZE model: appends land unordered
     * and updates rewrite without the clustering — the sidecar records

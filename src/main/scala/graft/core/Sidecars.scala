@@ -144,7 +144,7 @@ private[graft] object IndexLayout {
     def assign(df: DataFrame): DataFrame =
       VectorIndex.assignSignBuckets(df, nBits = bits)
     def cells(query: Array[Float], r: Int): Seq[Int] =
-      signCells(query, bits, r)
+      VectorIndex.signCells(query, bits, r)
     protected def members = Seq("bits" -> bits)
   }
 
@@ -173,7 +173,7 @@ private[graft] object IndexLayout {
       VectorIndex.assignSignBuckets(df, nBits = bits), "embedding", codebooks,
       PqCodeCol)
     def cells(query: Array[Float], r: Int): Seq[Int] =
-      signCells(query, bits, r)
+      VectorIndex.signCells(query, bits, r)
     protected def members =
       Seq("bits" -> bits, "m" -> m, "ksub" -> ksub, "codebooks" -> codebooks)
   }
@@ -237,9 +237,6 @@ private[graft] object IndexLayout {
   /** 1-based cell id → coarse centroid. */
   private def cellMap(centroids: Array[Array[Double]]): Map[Int, Array[Double]] =
     centroids.zipWithIndex.map { case (c, i) => (i + 1) -> c }.toMap
-
-  private def signCells(query: Array[Float], bits: Int, r: Int): Seq[Int] =
-    VectorIndex.codesWithin(VectorIndex.signBucketOf(query, bits), bits, r)
 
   /** The m = 1 rounded-argmin cell (1-based `__coarse`), mapped by `cell`. */
   private def coarseAssign(df: DataFrame, centroids: Array[Array[Double]],

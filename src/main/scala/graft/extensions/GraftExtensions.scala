@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
-import graft.core.{CellLayout, GraftDatabase, IndexLayout}
+import graft.core.{GraftDatabase, IndexLayout}
+import graft.operators.VectorPlanner
 import graft.functions.{CosineSimilarity, DotProduct, HammingDistance, L2Distance, L2Norm, NfcNormalize, StripAccents}
 
 /** Session-level integration via [[SparkSessionExtensions]] — the standard
@@ -49,8 +50,8 @@ object GraftExtensions {
   val AutoProbeKey = "spark.graft.ann.autoProbe"
 
   /** `spark.graft.ann.probeRadius` — probe aggressiveness when the rewrite
-    * fires: hamming bit-flip radius for sign_bucket layouts, `nprobe − 1`
-    * for kmeans layouts (same semantics as
+    * fires: hamming bit-flip radius for sign-bucket layouts, `nprobe − 1`
+    * for centroid layouts (same semantics as
     * [[graft.core.GraftDatabase.searchSimilar]]'s `probeRadius`).
     */
   val ProbeRadiusKey = "spark.graft.ann.probeRadius"
@@ -96,11 +97,11 @@ object GraftExtensions {
   *  - the sort subtree scans exactly ONE file-based relation, that relation
   *    carries a `cluster_id` partition column, and the layout record REINDEX
   *    wrote next to the scan root ([[IndexLayout.read]], the one parser the
-  *    database uses too) is sign_bucket, kmeans or ivfpq_kmeans — those
-  *    layouts' cells at `spark.graft.ann.probeRadius` are the probe set. A
-  *    pq layout (its codes are an explicit searchSimilarPq opt-in), a
-  *    zorder layout (no cells) or a collection without a record is left
-  *    exact; a malformed record fails the analysis, naming its file.
+  *    database uses too) has cells: [[VectorPlanner.cellsOf]], the rule
+  *    every vector path uses, at `spark.graft.ann.probeRadius`. A zorder
+  *    layout (no cells) or a collection without a record is left exact —
+  *    the rule only adds filters, so it has nothing to refuse with; a
+  *    malformed record fails the analysis, naming its file.
   *
   * The rewrite only ever ADDS a `Filter(cluster_id IN ...)` directly above
   * the relation — output attributes are untouched, so no downstream
@@ -205,15 +206,8 @@ class AnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       root <- rel.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.headOption
       layout <- IndexLayout.read(
         root.getFileSystem(spark.sessionState.newHadoopConf()), root)
-      cells <- layout match {
-        // pq's cells are sign buckets, but its codes stay an explicit
-        // searchSimilarPq opt-in; ivfpq_kmeans is probed by its coarse
-        // cells with an exact rerank inside, never by its codes
-        case _: IndexLayout.Pq => None
-        case l: CellLayout => Some(l.cells(query, radius))
-        case _ => None // zorder: no probe geometry → exact
-      }
-    } yield cells
+      cells <- VectorPlanner.cellsOf(Some(layout), radius)
+    } yield cells(query)
   }
 
   /** Cell ids as literals of the partition column's own type; an unexpected

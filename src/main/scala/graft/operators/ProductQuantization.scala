@@ -186,71 +186,17 @@ object ProductQuantization {
     }
   }
 
-  /** ADC distance column over a stored code column: Σ_s lut[s][code_s],
-    * rounded (+1e-9) — a fixed chain of literal-array lookups, fully
-    * codegen, reading only the m-byte code.
+  /** ADC distance: Σ_s lut[s·ksub + code_s], rounded (+1e-9) — the one
+    * lookup expression, a fixed chain of array lookups reading only the
+    * m-byte code. `lut` is a flattened m·ksub table column: a literal for
+    * one query, a per-cell map lookup for residual codes, or a broadcast
+    * per-query column in a batch ([[VectorPlanner]]).
     */
-  def adcDistance(codeCol: Column, lut: Array[Array[Double]]): Column = {
-    val total = lut.zipWithIndex.map { case (row, s) =>
-      element_at(lit(row), element_at(codeCol, s + 1).cast("int"))
+  def adcDistance(lut: Column, codeCol: Column, m: Int, ksub: Int): Column = {
+    val total = (0 until m).map { s =>
+      element_at(lut, lit(s * ksub) + element_at(codeCol, s + 1).cast("int"))
     }.reduce(_ + _)
     round(total + lit(1e-9), 6)
-  }
-
-  /** Bounded ADC shortlist over a coded frame: reads `(idCol, codeCol)`
-    * only, scores by the lookup table, keeps the `shortlist` nearest
-    * (TakeOrderedAndProject). Output: (`idCol`, `approx_score`) — feed to
-    * [[SimilaritySearch.rerankExact]] with metric "l2" for the exact cut.
-    */
-  def adcShortlist(coded: DataFrame, query: Array[Float],
-      shortlist: Int, codebooks: Codebooks, codeCol: String = "pq_code",
-      idCol: String = "id"): DataFrame = {
-    require(shortlist >= 1, s"shortlist must be positive, got $shortlist")
-    val lut = adcTable(query, codebooks)
-    coded.select(col(idCol), col(codeCol))
-      .withColumn("approx_score", adcDistance(col(codeCol), lut))
-      .orderBy(asc("approx_score"), col(idCol))
-      .limit(shortlist)
-      .select(col(idCol), col("approx_score"))
-  }
-
-  /** The full PQ probe: ADC shortlist on the stored codes, exact l2
-    * rerank of the shortlist only ([[SimilaritySearch.rerankExact]]'s
-    * cap-and-switch In-pushdown). Output: collection columns minus the
-    * vector, plus `approx_score` (ADC) and `score` (exact l2, ascending).
-    */
-  def topKAdc(collection: DataFrame, coded: DataFrame, query: Array[Float],
-      k: Int, shortlist: Int, codebooks: Codebooks,
-      vecCol: String = "embedding", codeCol: String = "pq_code",
-      idCol: String = "id"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val short = adcShortlist(coded, query, shortlist, codebooks, codeCol, idCol)
-    SimilaritySearch.rerankExact(collection, short, query, k, shortlist,
-      "l2", vecCol, idCol)
-  }
-
-  /** IVF × PQ — the deepest pruning composition: cell pruning and code
-    * compression MULTIPLY, like [[VectorIndex.probeSq8]] but the pruned
-    * scan reads m BYTES per row instead of dim/4. At 100 TB with 256
-    * cells, radius-1 probing, dim 64, m = 8: ≈ (9/256) × 1/32 of the
-    * vector bytes ≈ 0.1% of the corpus — the FAISS IVFPQ layout
-    * re-expressed as a partition-pruned Spark scan. `indexed` carries
-    * both the sign-bucket `cluster_id` ([[VectorIndex.assignSignBuckets]])
-    * and the stored `codeCol` ([[assignCodes]]); the ADC shortlist ranks
-    * only the probed cells' codes, and the exact rerank reads full
-    * vectors for the bounded shortlist alone.
-    */
-  def probeAdc(indexed: DataFrame, query: Array[Float], k: Int,
-      shortlist: Int, codebooks: Codebooks, nBits: Int = 8,
-      radius: Int = 1, vecCol: String = "embedding",
-      codeCol: String = "pq_code", idCol: String = "id"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cells = VectorIndex.codesWithin(
-      VectorIndex.signBucketOf(query, nBits), nBits, radius)
-    val pruned = indexed.filter(col("cluster_id").isin(cells: _*))
-    val short = adcShortlist(pruned, query, shortlist, codebooks, codeCol, idCol)
-    SimilaritySearch.rerankExact(pruned.drop(codeCol), short, query, k,
-      shortlist, "l2", vecCol, idCol)
   }
 
   /** Per-cell ROUNDED mean centroids of an IVF layout — the coarse
@@ -303,57 +249,6 @@ object ProductQuantization {
     indexed.withColumn(resCol,
       residualCol(col(vecCol), col(cellCol), cents))
 
-  /** Residual IVF × PQ probe — the published IVFPQ layout (Jégou et al.
-    * 2011 §IV; the FAISS default) at identical stored bytes to
-    * [[probeAdc]]: codes quantize `x − centroid(cell)` instead of `x`,
-    * so the per-subspace codebooks spend their 4 bits on the
-    * within-cell spread rather than re-encoding the cell's position —
-    * materially tighter quantization error whenever cells are real
-    * clusters. The query is re-expressed per probed cell
-    * (`q − centroid(c)`), giving ONE ADC lookup table per cell; tables
-    * ride in as a plan-literal cell→LUT map (≤ |probed cells| · m·ksub
-    * rounded doubles), so the pruned scan is still pure codegen over
-    * `(id, cluster_id, code)` — m bytes of vector data per row — and
-    * the exact rerank of the bounded shortlist is unchanged.
-    */
-  def probeAdcResidual(indexed: DataFrame, query: Array[Float], k: Int,
-      shortlist: Int, codebooks: Codebooks,
-      cellCents: Map[Int, Array[Double]], nBits: Int = 8,
-      radius: Int = 1, vecCol: String = "embedding",
-      codeCol: String = "pq_code", idCol: String = "id"): DataFrame =
-    probeAdcResidualCells(indexed, query,
-      probedCells(query, cellCents, nBits, radius), k, shortlist,
-      codebooks, cellCents, vecCol, codeCol, idCol)
-
-  /** [[probeAdcResidual]] with an EXPLICIT probed-cell set — composed
-    * with [[nearestCellsD]] this is the FAISS-canonical IVFPQ: kmeans
-    * coarse quantizer, residual codes, nprobe-nearest-cell pruning,
-    * per-cell ADC tables, exact rerank (q169).
-    */
-  def probeAdcResidualCells(indexed: DataFrame, query: Array[Float],
-      cells: Seq[Int], k: Int, shortlist: Int, codebooks: Codebooks,
-      cellCents: Map[Int, Array[Double]], vecCol: String = "embedding",
-      codeCol: String = "pq_code", idCol: String = "id"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val pruned = indexed.filter(col("cluster_id").isin(cells: _*))
-    val short = adcShortlistResidualCells(indexed, query, cells, shortlist,
-      codebooks, cellCents, codeCol, idCol)
-    SimilaritySearch.rerankExact(pruned.drop(codeCol), short, query, k,
-      shortlist, "l2", vecCol, idCol)
-  }
-
-  /** The query's hamming ball restricted to cells that hold data (empty
-    * probed cells have no centroid — and no rows to score).
-    */
-  private def probedCells(query: Array[Float],
-      cellCents: Map[Int, Array[Double]], nBits: Int, radius: Int): Seq[Int] = {
-    val cells = VectorIndex.codesWithin(
-        VectorIndex.signBucketOf(query, nBits), nBits, radius)
-      .filter(cellCents.contains)
-    require(cells.nonEmpty, "probeAdcResidual: no probed cell has data")
-    cells
-  }
-
   /** The `nprobe` cell ids nearest a DOUBLE query under the engine-exact
     * ordering: ROUNDED Euclidean l2 (HALF_UP, 6 places — the
     * [[nearestCid]] assignment rounding; sqrt outputs are never dyadic,
@@ -379,223 +274,5 @@ object ProductQuantization {
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       (r, cid)
     }.sortBy(identity).take(nprobe).map(_._2)
-  }
-
-  /** Residual ADC shortlist: the pruned scan reads `(idCol, cluster_id,
-    * codeCol)` only — m bytes of vector data per row — and scores each
-    * row against ITS cell's lookup table, delivered as a plan-literal
-    * cell→LUT map (≤ |probed cells| · m·ksub rounded doubles). Output:
-    * (`idCol`, `approx_score`), bounded top-`shortlist`.
-    */
-  def adcShortlistResidual(indexed: DataFrame, query: Array[Float],
-      shortlist: Int, codebooks: Codebooks,
-      cellCents: Map[Int, Array[Double]], nBits: Int = 8, radius: Int = 1,
-      codeCol: String = "pq_code", idCol: String = "id"): DataFrame =
-    adcShortlistResidualCells(indexed, query,
-      probedCells(query, cellCents, nBits, radius), shortlist, codebooks,
-      cellCents, codeCol, idCol)
-
-  /** [[adcShortlistResidual]] against an EXPLICIT probed-cell set — the
-    * entry point for coarse quantizers that are not sign buckets (kmeans
-    * cells via [[nearestCellsD]], q169).
-    */
-  def adcShortlistResidualCells(indexed: DataFrame, query: Array[Float],
-      cells: Seq[Int], shortlist: Int, codebooks: Codebooks,
-      cellCents: Map[Int, Array[Double]],
-      codeCol: String = "pq_code", idCol: String = "id"): DataFrame = {
-    require(shortlist >= 1, s"shortlist must be positive, got $shortlist")
-    require(cells.nonEmpty, "adcShortlistResidualCells: no probed cells")
-    require(cells.forall(cellCents.contains),
-      s"probed cells ${cells.filterNot(cellCents.contains)} have no centroid")
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val lutMap: Map[Int, Seq[Double]] = cells.map { c =>
-      val cent = cellCents(c)
-      val qr = Array.tabulate(query.length)(i => query(i).toDouble - cent(i))
-      c -> adcTableD(qr, codebooks).flatten.toSeq
-    }.toMap
-    val adc = (0 until m).map { s =>
-      element_at(col("__lut"),
-        lit(s * ksub) + element_at(col(codeCol), s + 1).cast("int"))
-    }.reduce(_ + _)
-    indexed.select(col(idCol), col(codeCol), col("cluster_id"))
-      .filter(col("cluster_id").isin(cells: _*))
-      .withColumn("__lut",
-        element_at(typedLit(lutMap), col("cluster_id").cast("int")))
-      .withColumn("approx_score", round(adc + lit(1e-9), 6))
-      .orderBy(asc("approx_score"), col(idCol))
-      .limit(shortlist)
-      .select(col(idCol), col("approx_score"))
-  }
-
-  /** Batch IVF × PQ probe — what a retrieval or hard-negative-mining job
-    * runs against a PQ-compressed corpus: each query's hamming ball of
-    * cells, the UNION of all probed cells scanned ONCE reading only
-    * `(idCol, cluster_id, codeCol)` (m bytes of vector data per row), a
-    * per-(query, cell) broadcast so rows ADC-score only against the
-    * queries probing their cell, a bounded per-query heap for the
-    * shortlist ([[SimilaritySearch.boundedTopKPerQuery]] — ≤ shortlist
-    * rows per partition per query cross the shuffle, never a sort), and
-    * ONE exact rerank joining the broadcast shortlist back to the
-    * full-precision vectors. ADC tables ride in as a broadcast
-    * (query_id, flattened-lut) frame — m·ksub rounded doubles per query.
-    *
-    * The final k-cut ranks on the ROUNDED exact l2 (house rule: never
-    * let raw-float accumulation order decide a rank); the shortlist cut
-    * is on the rounded ADC distance. Output: (queryIdCol, idCol,
-    * approx_score, score, rank), self-matches included (queries need
-    * not be corpus members; callers exclude ids they consider "self").
-    */
-  def probeAdcBatch(indexed: DataFrame, queries: DataFrame, k: Int,
-      shortlist: Int, codebooks: Codebooks, nBits: Int = 8,
-      radius: Int = 1, vecCol: String = "embedding",
-      codeCol: String = "pq_code", idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    VectorIndex.requireIntegralCol(queries, queryIdCol, "probeAdcBatch")
-    VectorIndex.requireIntegralCol(indexed, idCol, "probeAdcBatch")
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val qRows = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol)).collect()
-    require(qRows.nonEmpty, "probeAdcBatch: empty query batch")
-    val cellPairs: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-      VectorIndex.codesWithin(
-          VectorIndex.signBucketOf(r.getSeq[Float](1).toArray, nBits),
-          nBits, radius)
-        .map(c => (r.getLong(0), c))
-    }
-    val union = cellPairs.map(_._2).distinct.sorted
-    val cells = cellPairs.toDF(queryIdCol, "cluster_id")
-    val luts = qRows.toSeq.map { r =>
-      (r.getLong(0),
-        adcTable(r.getSeq[Float](1).toArray, codebooks).flatten.toSeq)
-    }.toDF(queryIdCol, "__lut")
-    val adc = (0 until m).map { s =>
-      element_at(col("__lut"),
-        lit(s * ksub) + element_at(col(codeCol), s + 1).cast("int"))
-    }.reduce(_ + _)
-    val scored = indexed
-      .filter(col("cluster_id").isin(union: _*))
-      .join(broadcast(cells), Seq("cluster_id"))
-      .join(broadcast(luts), Seq(queryIdCol))
-      .select(col(queryIdCol), col(idCol).cast("long").as(idCol),
-        (-round(adc + lit(1e-9), 6)).as("s"))
-      .as[(Long, Long, Double)]
-    batchExactRerank(indexed, queries, scored.toDF(queryIdCol, idCol, "s"),
-      k, shortlist, vecCol, idCol, queryIdCol, queryVecCol)
-  }
-
-  /** Batch residual IVFPQ probe — [[probeAdcBatch]] for the
-    * kmeans-coarse layout (q170): each query probes its `nprobe`
-    * nearest cells ([[nearestCellsD]] — the engine-exact ordering), ADC
-    * tables are PER (query, probed cell) because codes quantize
-    * residuals (the q169 LUT re-expressed per cell), delivered as ONE
-    * broadcast (query_id, cluster_id, lut) frame whose cell join also
-    * restricts scoring to probed cells; the bounded per-query heap and
-    * the single exact rerank are shared with the sign-bucket batch
-    * path. Scale shape: the union of probed cells is scanned once
-    * reading (idCol, cluster_id, codeCol) — m bytes of vector data per
-    * row — and broadcast sizes are |queries|·nprobe·m·ksub rounded
-    * doubles.
-    */
-  def probeAdcResidualBatch(indexed: DataFrame, queries: DataFrame, k: Int,
-      shortlist: Int, codebooks: Codebooks,
-      cellCents: Map[Int, Array[Double]], nprobe: Int = 2,
-      vecCol: String = "embedding", codeCol: String = "pq_code",
-      idCol: String = "id", queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val scored = adcResidualScored(indexed, queries, codebooks, cellCents,
-      nprobe, codeCol, idCol, queryIdCol, queryVecCol)
-    batchExactRerank(indexed, queries, scored, k, shortlist, vecCol, idCol,
-      queryIdCol, queryVecCol)
-  }
-
-  /** The codes-only ADC scoring frame shared by [[probeAdcResidualBatch]]
-    * and the decon screen ([[graft.core.GraftDatabase.deconScreen]]): per
-    * query its `nprobe` nearest coarse cells (engine-exact rounded-l2
-    * rank), per-(query, cell) residual LUTs as ONE broadcast whose cell
-    * join also restricts scoring to probed cells, ADC distance per stored
-    * code row. Scans ONLY `(idCol, cluster_id, codeCol)` pruned to the
-    * probed-cell union — never the float vectors. Output: (queryIdCol,
-    * idCol, s) with s = −rounded ADC distance (the bounded heap's
-    * higher-is-better convention).
-    */
-  private[graft] def adcResidualScored(indexed: DataFrame,
-      queries: DataFrame, codebooks: Codebooks,
-      cellCents: Map[Int, Array[Double]], nprobe: Int,
-      codeCol: String = "pq_code", idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    VectorIndex.requireIntegralCol(queries, queryIdCol, "adcResidualScored")
-    VectorIndex.requireIntegralCol(indexed, idCol, "adcResidualScored")
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val qRows = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol)).collect()
-    require(qRows.nonEmpty, "adcResidualScored: empty query batch")
-    val qVecs: Map[Long, Array[Float]] =
-      qRows.map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val cellPairs: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-      nearestCellsD(r.getSeq[Float](1).toArray.map(_.toDouble), cellCents,
-          nprobe)
-        .map(c => (r.getLong(0), c))
-    }
-    val union = cellPairs.map(_._2).distinct.sorted
-    val luts = cellPairs.map { case (qid, c) =>
-      val cent = cellCents(c)
-      val qv = qVecs(qid)
-      val qr = Array.tabulate(qv.length)(i => qv(i).toDouble - cent(i))
-      (qid, c, adcTableD(qr, codebooks).flatten.toSeq)
-    }.toDF(queryIdCol, "cluster_id", "__lut")
-    val adc = (0 until m).map { s =>
-      element_at(col("__lut"),
-        lit(s * ksub) + element_at(col(codeCol), s + 1).cast("int"))
-    }.reduce(_ + _)
-    indexed
-      .filter(col("cluster_id").isin(union: _*))
-      .join(broadcast(luts), Seq("cluster_id"))
-      .select(col(queryIdCol), col(idCol).cast("long").as(idCol),
-        (-round(adc + lit(1e-9), 6)).as("s"))
-  }
-
-  /** Shared batch tail: bounded per-query shortlist heap over negated
-    * ADC scores, then ONE exact rerank joining the broadcast shortlist
-    * back to full-precision vectors, ranking on the ROUNDED l2 (house
-    * rule). `scored` columns: (queryIdCol, idCol, s) with s = −rounded
-    * ADC distance.
-    */
-  private def batchExactRerank(indexed: DataFrame, queries: DataFrame,
-      scored: DataFrame, k: Int, shortlist: Int, vecCol: String,
-      idCol: String, queryIdCol: String, queryVecCol: String): DataFrame = {
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val typed = scored
-      .select(col(queryIdCol).cast("long"), col(idCol).cast("long"),
-        col("s").cast("double"))
-      .as[(Long, Long, Double)]
-    val short = SimilaritySearch
-      .boundedTopKPerQuery(typed, shortlist, desc_? = false, idCol, queryIdCol)
-      .select(col(queryIdCol), col(idCol), col("score").as("approx_score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(queryIdCol).orderBy(asc("score"), col(idCol))
-    indexed.select(col(idCol).cast("long").as(idCol), col(vecCol))
-      .join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries.select(
-        col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol))),
-        Seq(queryIdCol))
-      .withColumn("score",
-        round(graft.functions.l2_dist(col(vecCol), col(queryVecCol)), 6))
-      .drop(vecCol, queryVecCol)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("approx_score"),
-        col("score"), col("rank"))
   }
 }

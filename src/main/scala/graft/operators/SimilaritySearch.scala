@@ -21,8 +21,8 @@ import graft.functions.{cosine_sim, dot_product, l2_dist}
   *    score the (collection × queries) product map-side with zero shuffle,
   *    then one shuffle on `query_id` for the per-query top-k window. The big
   *    collection is never shuffled.
-  *  - At 100 TB, exact scan is the fallback; the IVF path (see
-  *    [[VectorIndex]]) prunes candidate partitions before this operator runs.
+  *  - At 100 TB, exact scan is the fallback; [[VectorPlanner]] composes
+  *    these operators with cell pruning and the approximate scorers.
   */
 object SimilaritySearch {
 
@@ -67,23 +67,11 @@ object SimilaritySearch {
       greatest(lit(-127), least(lit(127),
         floor(x.cast("double") * 127 + 0.5).cast("int"))))
 
-  /** SQ8-accelerated top-k: rank everything by the cosine of the int8
-    * QUANTIZED vectors (4× less data to read when the quantized column is
-    * stored, and integer products are exact in double — the approximate
-    * score is bit-reproducible across engines), keep a `shortlist`, then
-    * exact-rerank only the shortlist with full-precision vectors.
-    *
-    * This is the ANN path that holds up on corpora with no cluster
-    * structure (where any cell-probing index — sign-bucket or KMeans —
-    * must scan most of the data to recall well, see IvfRecallSpec): the
-    * first pass touches every row but only the small quantized column, and
-    * exact scoring touches ≤ `shortlist` rows. Both passes are
-    * TakeOrderedAndProject (bounded heaps), never a full sort.
-    *
-    * Ties break on (approx score, id) for the shortlist and (score, id)
-    * for the final rank, so the result is total-order deterministic and a
-    * SQL oracle can reproduce it exactly.
+  /** [[sq8]] as `array<tinyint>` — the stored `embedding_q8` column's
+    * rule, and the in-flight copy of it where none is stored.
     */
+  def sq8Bytes(vec: Column): Column = transform(sq8(vec), x => x.cast("tinyint"))
+
   /** The quantized-scan half of [[topKSq8]]: every row scored by the cosine
     * of the int8 vectors, top `shortlist` kept (TakeOrderedAndProject), the
     * full-precision vector column carried through for reranking. The
@@ -112,6 +100,24 @@ object SimilaritySearch {
       .limit(shortlist)
   }
 
+  /** SQ8-accelerated top-k: rank everything by the cosine of the int8
+    * QUANTIZED vectors (4× less data to read when the quantized column is
+    * stored, and integer products are exact in double — the approximate
+    * score is bit-reproducible across engines), keep a `shortlist`, then
+    * exact-rerank only the shortlist with full-precision vectors.
+    *
+    * This is the ANN path that holds up on corpora with no cluster
+    * structure (where any cell-probing index — sign-bucket or KMeans —
+    * must scan most of the data to recall well, see IvfRecallSpec): the
+    * first pass touches every row but only the small quantized column, and
+    * exact scoring touches ≤ `shortlist` rows. Both passes are
+    * TakeOrderedAndProject (bounded heaps), never a full sort.
+    *
+    * Ties break on (approx score, id) for the shortlist and (score, id)
+    * for the final rank, so the result is total-order deterministic and a
+    * SQL oracle can reproduce it exactly. This is [[VectorPlanner]]'s SQ8
+    * plan without cells, over the stored `q8Col` or an in-flight copy.
+    */
   def topKSq8(
       collection: DataFrame,
       queryVec: Array[Float],
@@ -122,45 +128,15 @@ object SimilaritySearch {
       idCol: String = "id",
       q8Col: Option[String] = None,
       rerank: Boolean = true): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val (exact, _) = score(metric, col(vecCol), lit(queryVec))
-    q8Col match {
-      case None if !rerank =>
-        // quantized ranking only, quantizing in-flight: same scores as the
-        // stored-column fast path (useful for recall studies before
-        // committing to a stored column) — the IO win itself needs the
-        // stored column.
-        sq8Shortlist(collection, queryVec, k, metric, vecCol, idCol)
-          .drop(vecCol)
-          .withColumnRenamed("approx_score", "score")
-      case None =>
-        val short = sq8Shortlist(collection, queryVec, shortlist, metric,
-          vecCol, idCol)
-        short
-          .withColumn("score", exact)
-          .drop(vecCol)
-          .orderBy(desc("score"), col(idCol))
-          .limit(k)
-      case Some(qc) if rerank =>
-        // STORED quantized column: the shortlist pass reads only (id, qc) —
-        // a quarter of the vector bytes, scored directly on the int8 array
-        // (see VectorExpressionHelpers) — then the exact rerank touches
-        // ≤ shortlist full-precision rows via [[rerankExact]]'s
-        // cap-and-switch (In-pushdown small, broadcast join-back large).
-        val short = sq8ShortlistStored(collection, queryVec, shortlist,
-          metric, qc, idCol)
-        rerankExact(collection.drop(qc), short, queryVec, k, shortlist,
-          metric, vecCol, idCol)
-      case Some(qc) =>
-        // rerank = false: rank by the quantized score alone — the scan
-        // NEVER touches full-precision vectors, so total IO is a strict
-        // quarter of the exact scan no matter the storage layout. The
-        // quantization perturbs cosine by ~1e-3, so top-k order can
-        // differ from exact only where neighbors are closer than that
-        // (recall characterized in IvfRecallSpec).
-        sq8ShortlistStored(collection, queryVec, k, metric, qc, idCol)
-          .withColumnRenamed("approx_score", "score")
-    }
+    val scorer = VectorPlanner.Sq8(metric, if (rerank) shortlist else k, q8Col)
+    if (rerank) VectorPlanner.topK(collection, queryVec, k, None, scorer, vecCol, idCol)
+    // rank by the quantized score alone: the scan never touches
+    // full-precision vectors — with a stored column a strict quarter of the
+    // exact scan's bytes. The quantization perturbs cosine by ~1e-3, so
+    // the order can differ from exact only where neighbors are closer than
+    // that (recall characterized in IvfRecallSpec).
+    else VectorPlanner.shortlist(collection, queryVec, None, scorer, vecCol, idCol)
+      .withColumnRenamed("approx_score", "score")
   }
 
   /** Exact rerank of a bounded shortlist, cap-and-switch on the shortlist
@@ -247,38 +223,8 @@ object SimilaritySearch {
       .select(col(idCol), col("approx_score"))
   }
 
-  /** Exact per-query top-k via a bounded heap aggregation instead of a
-    * ranking window: partial aggregation ships ≤ k rows per partition per
-    * query through the shuffle (the window formulation shuffles every
-    * scored row). Identical output to [[topKBatch]] — ties break on
-    * (score, id) in both — so callers choose purely on plan shape.
-    */
-  def topKBatchAgg(
-      collection: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      metric: String = "cosine",
-      vecCol: String = "embedding",
-      idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    // both ids get .cast("long") below — gate loudly, like the indexed
-    // batch probes (the candidatePairs/embeddingPairs doctrine)
-    VectorIndex.requireIntegralCol(collection, idCol, "topKBatchAgg")
-    VectorIndex.requireIntegralCol(queries, queryIdCol, "topKBatchAgg")
-    val spark = collection.sparkSession
-    import spark.implicits._
-    val (sc, desc_?) = score(metric, col(vecCol), col(queryVecCol))
-    val eff = if (desc_?) sc else -sc
-    val scored = collection
-      .crossJoin(broadcast(queries))
-      .select(col(queryIdCol).cast("long"), col(idCol).cast("long"), eff.as("s"))
-      .as[(Long, Long, Double)]
-    boundedTopKPerQuery(scored, k, desc_?, idCol, queryIdCol)
-  }
-
-  /** The bounded-heap tail shared by [[topKBatchAgg]] and the batch IVF
-    * probes ([[VectorIndex.probeBatchCells]]): per-query top-k via
+  /** The bounded-heap tail of every batch plan ([[VectorPlanner
+    * .topKBatch]]: exact top-k and approximate shortlists): per-query top-k via
     * [[TopKAggregator]] over a pre-scored (query, id, effective-score)
     * dataset — ≤ k rows per partition per query cross the shuffle. The
     * effective score is ALWAYS higher-is-better (callers negate ascending
@@ -305,51 +251,9 @@ object SimilaritySearch {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Batch form of [[topKSq8]]: int8-quantized scoring against every query
-    * with the bounded-heap aggregator keeping a per-query `shortlist`
-    * (≤ shortlist rows per partition per query cross the shuffle), then an
-    * exact rerank of the shortlist only. The rerank joins the (tiny)
-    * shortlist back to the collection broadcast-side, so the full-precision
-    * vectors are read once and never shuffled.
-    *
-    * Output matches [[topKBatchAgg]]: (queryId, id, score, rank).
-    */
-  def topKSq8Batch(
-      collection: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      shortlist: Int,
-      metric: String = "cosine",
-      vecCol: String = "embedding",
-      idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    require(metric == "cosine" || metric == "dot",
-      s"sq8 supports cosine/dot, got $metric")
-    val q8f: Column => Column = v => transform(sq8(v), x => x.cast("float"))
-    val short = topKBatchAgg(
-        collection.select(col(idCol), q8f(col(vecCol)).as(vecCol)),
-        queries.select(col(queryIdCol), q8f(col(queryVecCol)).as(queryVecCol)),
-        shortlist, metric, vecCol, idCol, queryIdCol, queryVecCol)
-      .select(col(queryIdCol), col(idCol))
-    val (exact, desc_?) = score(metric, col(vecCol), col(queryVecCol))
-    val w = Window
-      .partitionBy(queryIdCol)
-      .orderBy(if (desc_?) desc("score") else asc("score"), col(idCol))
-    collection.select(col(idCol), col(vecCol))
-      .join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries), Seq(queryIdCol))
-      .withColumn("score", exact)
-      .drop(vecCol, queryVecCol)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("score"), col("rank"))
-  }
-
   /** Exact per-query top-k for a batch of queries (ranking-window
-    * formulation — simplest plan; see [[topKBatchAgg]] for the
-    * shuffle-bounded variant).
+    * formulation — simplest plan; [[VectorPlanner.topKBatch]] is the
+    * shuffle-bounded heap variant).
     *
     * @param queries DataFrame with (`queryIdCol`, `queryVecCol`); must be
     *                small enough to broadcast (true by construction: queries
@@ -586,21 +490,9 @@ object SimilaritySearch {
     require(nBits >= 1 && nBits <= 30, s"nBits must be in [1,30], got $nBits")
     require(maxRadius >= 0 && maxRadius <= nBits,
       s"maxRadius must be in [0,$nBits], got $maxRadius")
-    // ids ride the bounded heap as longs; reject non-integral id columns
-    // up front (the candidatePairs/embeddingPairs precedent — a silent
-    // cast would emit wrong joins, not an error)
-    val integral = Seq[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType)
-    require(integral.contains(vectors.schema(idCol).dataType),
-      s"signRecallCurve requires an integral id column; '$idCol' is " +
-        vectors.schema(idCol).dataType.simpleString +
-        " — hash or re-key non-numeric ids first")
-    require(integral.contains(queries.schema(qidCol).dataType),
-      s"signRecallCurve requires an integral query-id column; '$qidCol' " +
-        s"is ${queries.schema(qidCol).dataType.simpleString}")
+    // ids ride the bounded heap as longs: reject non-integral ids up front
+    VectorIndex.requireIntegralCol(vectors, idCol, "signRecallCurve")
+    VectorIndex.requireIntegralCol(queries, qidCol, "signRecallCurve")
     val spark = vectors.sparkSession
     import spark.implicits._
     val coded = vectors.select(col(idCol).cast("long").as("__id"),

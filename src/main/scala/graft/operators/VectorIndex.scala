@@ -72,123 +72,11 @@ object VectorIndex {
     flips(code, 0, radius).distinct.sorted
   }
 
-  /** IVF probe: partition-pruned scan of the buckets near the query, then
-    * exact top-k rerank within the candidates. `radius` trades recall for
-    * scanned volume (nprobe).
+  /** The sign-bucket probe cells of a query: the codes within `radius`
+    * bit-flips of its own ([[VectorPlanner]]'s cells on a sign layout).
     */
-  def probe(indexed: DataFrame, query: Array[Float], k: Int,
-      metric: String = "cosine", nBits: Int = 8, radius: Int = 1,
-      vecCol: String = "embedding", idCol: String = "id"): DataFrame = {
-    val candidates = codesWithin(signBucketOf(query, nBits), nBits, radius)
-    SimilaritySearch.topK(
-      indexed.filter(col("cluster_id").isin(candidates: _*)),
-      query, k, metric, vecCol, idCol)
-  }
-
-  /** IVF × SQ8 — the composition that holds up at 100 TB: partition pruning
-    * and byte pruning multiply. The probe keeps only the cells in
-    * `cellIds` (at rest: a partition-pruned scan that never opens the other
-    * cells' files), ranks the surviving rows by the STORED int8 column
-    * (¼ of the vector bytes — the scan reads `(id, q8Col)` only), and
-    * exact-reranks just the bounded shortlist with full-precision vectors
-    * ([[SimilaritySearch.rerankExact]]'s cap-and-switch). Scanned bytes
-    * ≈ (|cells| / total cells) × ¼ of the vector data — at 100 TB with 256
-    * cells and radius-1 probing that is ~0.9% of the corpus bytes, vs 25 TB
-    * for a plain SQ8 pass or 3.5 TB for IVF with float rerank.
-    *
-    * Output: all collection columns except the vectors, plus
-    * `approx_score` (int8 cosine, integer-exact in double → engine-
-    * reproducible) and `score` (exact).
-    */
-  def probeCellsSq8(indexed: DataFrame, cellIds: Seq[Int],
-      query: Array[Float], k: Int, shortlist: Int,
-      metric: String = "cosine", vecCol: String = "embedding",
-      q8Col: String = "embedding_q8", idCol: String = "id",
-      inThreshold: Int = 10000): DataFrame = {
-    val cells = indexed.filter(col("cluster_id").isin(cellIds: _*))
-    val short = SimilaritySearch.sq8ShortlistStored(
-      cells, query, shortlist, metric, q8Col, idCol)
-    SimilaritySearch.rerankExact(
-      cells.drop(q8Col), short, query, k, shortlist, metric, vecCol, idCol,
-      inThreshold)
-  }
-
-  /** [[probeCellsSq8]] on a sign-bucket layout: cells within `radius`
-    * bit-flips of the query's code. Fully deterministic end to end (sign
-    * buckets + integer-exact quantized scores) — the whole composition is
-    * SQL-reproducible, so it carries a full hash-match oracle (q79).
-    */
-  def probeSq8(indexed: DataFrame, query: Array[Float], k: Int,
-      shortlist: Int, metric: String = "cosine", nBits: Int = 8,
-      radius: Int = 1, vecCol: String = "embedding",
-      q8Col: String = "embedding_q8", idCol: String = "id",
-      inThreshold: Int = 10000): DataFrame =
-    probeCellsSq8(indexed, codesWithin(signBucketOf(query, nBits), nBits, radius),
-      query, k, shortlist, metric, vecCol, q8Col, idCol, inThreshold)
-
-  /** Batch IVF probe — the shape a retrieval or hard-negative-mining job
-    * actually runs (the single-query probes serve the request path): for a
-    * BATCH of queries, compute each query's probe cells driver-side (the
-    * batch is request-sized, the same class of driver value as one query
-    * vector), scan the UNION of all probed cells ONCE — on a
-    * `partitionBy("cluster_id")` layout that is a partition-pruned scan
-    * that never opens the other cells' files — and keep a bounded heap
-    * per query ([[SimilaritySearch.boundedTopKPerQuery]]: ≤ k rows per
-    * partition per query cross the shuffle, never a full sort).
-    *
-    * Each scanned row joins the (query, cell) pairs broadcast-side, so a
-    * row scores only against the queries actually probing its cell — the
-    * scored volume is Σ_q |cells(q)|-worth of rows, not |batch| × |union
-    * scan| (the crossJoin shape of the exact batch, q22/q59).
-    *
-    * `cellsOf` maps a query vector to its probe cells — sign-bucket
-    * hamming balls ([[probeBatch]]) or a collection layout's cells
-    * ([[graft.core.CellLayout.cells]]).
-    *
-    * Output matches [[SimilaritySearch.topKBatchAgg]]:
-    * (queryIdCol, idCol, score, rank).
-    */
-  def probeBatchCells(indexed: DataFrame, queries: DataFrame,
-      cellsOf: Array[Float] => Seq[Int], k: Int, metric: String = "cosine",
-      vecCol: String = "embedding", idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    requireIntegralCol(queries, queryIdCol, "probeBatchCells")
-    requireIntegralCol(indexed, idCol, "probeBatchCells")
-    val qRows = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol)).collect()
-    require(qRows.nonEmpty, "probeBatchCells: empty query batch")
-    val cellPairs: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-      cellsOf(r.getSeq[Float](1).toArray).map(c => (r.getLong(0), c))
-    }
-    val union = cellPairs.map(_._2).distinct.sorted
-    val cells = cellPairs.toDF(queryIdCol, "cluster_id")
-    val (sc, descQ) = SimilaritySearch.score(metric, col(vecCol), col(queryVecCol))
-    val eff = if (descQ) sc else -sc
-    val scored = indexed
-      .filter(col("cluster_id").isin(union: _*))
-      .join(broadcast(cells), Seq("cluster_id"))
-      .join(broadcast(queries.select(
-        col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol))),
-        Seq(queryIdCol))
-      .select(col(queryIdCol), col(idCol).cast("long").as(idCol), eff.as("s"))
-      .as[(Long, Long, Double)]
-    SimilaritySearch.boundedTopKPerQuery(scored, k, descQ, idCol, queryIdCol)
-  }
-
-  /** [[probeBatchCells]] on a sign-bucket layout: each query probes the
-    * cells within `radius` bit-flips of its own code.
-    */
-  def probeBatch(indexed: DataFrame, queries: DataFrame, k: Int,
-      metric: String = "cosine", nBits: Int = 8, radius: Int = 1,
-      vecCol: String = "embedding", idCol: String = "id",
-      queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame =
-    probeBatchCells(indexed, queries,
-      qv => codesWithin(signBucketOf(qv, nBits), nBits, radius),
-      k, metric, vecCol, idCol, queryIdCol, queryVecCol)
+  def signCells(query: Array[Float], nBits: Int, radius: Int): Seq[Int] =
+    codesWithin(signBucketOf(query, nBits), nBits, radius)
 
   /** MLlib BucketedRandomProjectionLSH approximate nearest neighbors —
     * the "MLlib for vectors" alternative to the sign-bucket path. Seeded ⇒
@@ -265,44 +153,6 @@ object VectorIndex {
       (s, i)
     }.sortBy(identity).take(nprobe).map(_._2).toSeq
 
-  /** KMeans-IVF probe: partition-pruned scan of the `nprobe` cells nearest
-    * the query, exact top-k rerank inside. The scan cost is ~nprobe/k of the
-    * collection (cells are size-balanced by construction — KMeans' advantage
-    * over sign buckets on skewed corpora).
-    */
-  def probeKMeans(indexed: DataFrame, query: Array[Float], k: Int,
-      metric: String, centroids: Array[Array[Double]], nprobe: Int,
-      vecCol: String = "embedding", idCol: String = "id"): DataFrame = {
-    val cand = nearestCentroidIds(query, centroids, math.max(1, nprobe))
-    SimilaritySearch.topK(
-      indexed.filter(col("cluster_id").isin(cand: _*)),
-      query, k, metric, vecCol, idCol)
-  }
-
-  /** One fully-deterministic Lloyd (k-means) iteration, every number
-    * engine-recomputable — the reproducible counterpart of the MLlib
-    * kmeans index build (whose internal init/hashing keeps q49/q68
-    * rows-only): initial centroids are the first `k` vectors in
-    * md5(seed:id) order, assignment is argmin of ROUNDED l2 distance with
-    * a centroid-id tie-break, refined centroids are per-dimension means
-    * rounded before reuse (every handoff between stages is rounded, so
-    * accumulation ulps can never flip an argmin across engines).
-    *
-    * Returns one row per input vector: (`idCol`, c_init, c_refined) —
-    * the assignment under the seed centroids and after one refinement.
-    * Empty clusters simply vanish from the refined set (mirrored by any
-    * SQL recomputation).
-    *
-    * Scale shape: centroid seeding is a bounded top-k (TakeOrdered);
-    * each assignment is a literal-centroid argmin expression INSIDE the
-    * scan (zero shuffle — the [[lloydIterate]] shape; the final plan is
-    * scan → project, PlanAuditSpec-pinned); the refinement is one
-    * partial-agg mean over (cluster, dim) — k·dim result rows of
-    * bounded driver state. Real index builds run [[kmeansAssign]] (MLlib,
-    * many iterations); this operator exists for the exactness-audited
-    * path and as the convergence primitive a caller can iterate with the
-    * [[graft.operators.Dedup]] localCheckpoint discipline.
-    */
   /** Deterministic farthest-point (k-center greedy) selection — the
     * classic 2-approximation to the k-center problem, doubling as the
     * diversity-sampling primitive of training-data curation (coreset
@@ -333,15 +183,7 @@ object VectorIndex {
   def farthestPointSample(df: DataFrame, idCol: String, vecCol: String,
       k: Int, seed: String = "kc"): Seq[(Long, Array[Double])] = {
     require(k >= 1, s"k must be positive, got $k")
-    df.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType
-         | org.apache.spark.sql.types.IntegerType
-         | org.apache.spark.sql.types.ShortType
-         | org.apache.spark.sql.types.ByteType => ()
-      case other => throw new IllegalArgumentException(
-        s"farthestPointSample requires an integral id column, got $idCol: " +
-          s"$other (hash string ids to int64 first)")
-    }
+    requireIntegralCol(df, idCol, "farthestPointSample")
     val e = df.select(col(idCol).cast("long").as("__id"),
       col(vecCol).cast("array<double>").as("__v"))
     val key = md5(concat(lit(seed + ":"), col("__id").cast("string")))
@@ -446,6 +288,30 @@ object VectorIndex {
     (assignNearestCentroid(df, cents, vecCol), cents, iter)
   }
 
+  /** One fully-deterministic Lloyd (k-means) iteration, every number
+    * engine-recomputable — the reproducible counterpart of the MLlib
+    * kmeans index build (whose internal init/hashing keeps q49/q68
+    * rows-only): initial centroids are the first `k` vectors in
+    * md5(seed:id) order, assignment is argmin of ROUNDED l2 distance with
+    * a centroid-id tie-break, refined centroids are per-dimension means
+    * rounded before reuse (every handoff between stages is rounded, so
+    * accumulation ulps can never flip an argmin across engines).
+    *
+    * Returns one row per input vector: (`idCol`, c_init, c_refined) —
+    * the assignment under the seed centroids and after one refinement.
+    * Empty clusters simply vanish from the refined set (mirrored by any
+    * SQL recomputation).
+    *
+    * Scale shape: centroid seeding is a bounded top-k (TakeOrdered);
+    * each assignment is a literal-centroid argmin expression INSIDE the
+    * scan (zero shuffle — the [[lloydIterate]] shape; the final plan is
+    * scan → project, PlanAuditSpec-pinned); the refinement is one
+    * partial-agg mean over (cluster, dim) — k·dim result rows of
+    * bounded driver state. Real index builds run [[kmeansAssign]] (MLlib,
+    * many iterations); this operator exists for the exactness-audited
+    * path and as the convergence primitive a caller can iterate with the
+    * [[graft.operators.Dedup]] localCheckpoint discipline.
+    */
   def lloydOnce(df: DataFrame, idCol: String, vecCol: String, k: Int,
       seed: String = "km"): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.core.GraftDatabase
-import graft.operators.{SimilaritySearch, VectorIndex}
+import graft.operators.{SimilaritySearch, VectorIndex, VectorPlanner}
 
 /** SEARCHSIMILAR (#10) + REINDEX (#11) coverage over the embeddings table:
   * exact k-NN (cosine / L2), batched k-NN, IVF probe-and-rerank on the
@@ -147,8 +147,8 @@ object VectorQueries {
       val e = Tables.embeddings(s, dir)
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      SimilaritySearch
-        .topKBatchAgg(e, qs, k = 5, metric = "cosine",
+      VectorPlanner
+        .topKBatch(e, qs, k = 5, None, VectorPlanner.Exact("cosine"),
           vecCol = "embedding", idCol = "vec_id")
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
@@ -308,8 +308,8 @@ object VectorQueries {
       val e = Tables.embeddings(s, dir)
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      SimilaritySearch
-        .topKSq8Batch(e, qs, k = 5, shortlist = 50, metric = "cosine",
+      VectorPlanner
+        .topKBatch(e, qs, k = 5, None, VectorPlanner.Sq8("cosine", 50),
           vecCol = "embedding", idCol = "vec_id")
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
@@ -345,8 +345,8 @@ object VectorQueries {
       // query row rides through the probe (it shares the query's cell by
       // construction) and is dropped before that final cut — mirrored in
       // the oracle.
-      db.searchSimilarSq8("vecs", query, k = 100, shortlist = 100,
-          metric = "cosine", idCol = "vec_id", probeRadius = 1)
+      db.searchSimilar("vecs", query, k = 100, metric = "cosine",
+          probeRadius = 1, shortlist = 100, idCol = "vec_id")
         .filter(col("vec_id") =!= 0)
         .select(col("vec_id"), round(col("score"), 6).as("score"),
           round(col("approx_score"), 6).as("approx_score"))
@@ -507,16 +507,13 @@ object VectorQueries {
           .filter(col("__rn") <= n).select("query_id", "vec_id", "__l2")
       }
       val exact = topL2(scored, 10)
-      val adc = (0 until 8).map { sub =>
-        element_at(col("__lut"),
-          lit(sub * 16) + element_at(col("pq_code"), sub + 1).cast("int"))
-      }.reduce(_ + _)
       val wAdc = org.apache.spark.sql.expressions.Window
         .partitionBy("query_id").orderBy(asc("__adc"), col("vec_id"))
       val shortlist = scored
         .join(broadcast(balls), Seq("cluster_id", "query_id"))
         .join(broadcast(luts), Seq("query_id"))
-        .withColumn("__adc", round(adc + lit(1e-9), 6))
+        .withColumn("__adc", graft.operators.ProductQuantization
+          .adcDistance(col("__lut"), col("pq_code"), 8, 16))
         .withColumn("__sn", row_number().over(wAdc))
         .filter(col("__sn") <= 50)
       val probe = topL2(shortlist, 10)
@@ -662,11 +659,8 @@ object VectorQueries {
         e, "embedding", cb)
       val query = e.filter(col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
-      graft.operators.ProductQuantization.topKAdc(
-          e.filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
-          coded.filter(col("vec_id") =!= 0), query,
-          k = 50, shortlist = 50, cb,
-          vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topK(coded.filter(col("vec_id") =!= 0), query, k = 50,
+          None, VectorPlanner.Adc(cb, 50), idCol = "vec_id")
         .select(col("vec_id"), col("approx_score").as("adc_dist"),
           round(col("score"), 6).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -684,8 +678,9 @@ object VectorQueries {
       val indexed = VectorIndex.assignSignBuckets(e, "embedding", nBits = 8)
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      VectorIndex.probeBatch(indexed, qs, k = 5, metric = "cosine",
-          nBits = 8, radius = 1, vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topKBatch(indexed, qs, k = 5,
+          Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Exact("cosine"),
+          idCol = "vec_id")
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
           round(col("score"), 6).as("score"), col("rank").cast("long").as("rank"))
@@ -706,10 +701,9 @@ object VectorQueries {
         "embedding", cb)
       val query = e.filter(col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
-      graft.operators.ProductQuantization.probeAdc(
-          coded.filter(col("vec_id") =!= 0), query,
-          k = 50, shortlist = 50, cb, nBits = 8, radius = 1,
-          vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topK(coded.filter(col("vec_id") =!= 0), query, k = 50,
+          Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Adc(cb, 50),
+          idCol = "vec_id")
         .select(col("vec_id"), col("approx_score").as("adc_dist"),
           round(col("score"), 6).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -729,9 +723,9 @@ object VectorQueries {
         "embedding", cb)
       val qs = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      graft.operators.ProductQuantization.probeAdcBatch(
-          coded, qs, k = 5, shortlist = 20, cb, nBits = 8, radius = 1,
-          vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topKBatch(coded, qs, k = 5,
+          Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Adc(cb, 20),
+          idCol = "vec_id")
         .select(col("query_id"), col("vec_id"),
           col("approx_score").as("adc_dist"), col("score").as("dist"),
           col("rank").cast("long").as("rank"))
@@ -758,10 +752,9 @@ object VectorQueries {
         .assignCodes(res, "__res", cb).drop("__res")
       val query = e.filter(col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
-      graft.operators.ProductQuantization.probeAdcResidual(
-          coded.filter(col("vec_id") =!= 0), query,
-          k = 50, shortlist = 50, cb, cents, nBits = 8, radius = 1,
-          vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topK(coded.filter(col("vec_id") =!= 0), query, k = 50,
+          Some(VectorIndex.signCells(_, 8, 1)),
+          VectorPlanner.ResidualAdc(cb, cents, 50), idCol = "vec_id")
         .select(col("vec_id"), col("approx_score").as("adc_dist"),
           round(col("score"), 6).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -823,17 +816,15 @@ object VectorQueries {
           .filter(col("__rn") <= 10).select("query_id", "vec_id")
       }
       val exact = top10(scored)
-      def adcOf(codeCol: String, lutCol: String) = (0 until 8).map { sub =>
-        element_at(col(lutCol),
-          lit(sub * 16) + element_at(col(codeCol), sub + 1).cast("int"))
-      }.reduce(_ + _)
+      def adcOf(codeCol: String, lutCol: String) =
+        PQ.adcDistance(col(lutCol), col(codeCol), 8, 16)
       def probeRecall(luts: DataFrame, codeCol: String, lutCol: String,
           hitCol: String): DataFrame = {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id").orderBy(asc("__adc"), col("vec_id"))
         val short = scored.filter(col("cluster_id") === col("__qc"))
           .join(broadcast(luts), "query_id")
-          .withColumn("__adc", round(adcOf(codeCol, lutCol) + lit(1e-9), 6))
+          .withColumn("__adc", adcOf(codeCol, lutCol))
           .withColumn("__sn", row_number().over(w))
           .filter(col("__sn") <= 20)
         exact.join(top10(short), Seq("query_id", "vec_id"))
@@ -898,16 +889,14 @@ object VectorQueries {
           .filter(col("__rn") <= 10).select("query_id", "vec_id")
       }
       val exact = top10(scored)
-      def adcOf(codeCol: String, lutCol: String) = (0 until 8).map { sub =>
-        element_at(col(lutCol),
-          lit(sub * 16) + element_at(col(codeCol), sub + 1).cast("int"))
-      }.reduce(_ + _)
+      def adcOf(codeCol: String, lutCol: String) =
+        PQ.adcDistance(col(lutCol), col(codeCol), 8, 16)
       def armHits(luts: DataFrame, codeCol: String, lutCol: String,
           hitCol: String): DataFrame = {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id").orderBy(asc("__adc"), col("vec_id"))
         val short = scored.join(broadcast(luts), "query_id")
-          .withColumn("__adc", round(adcOf(codeCol, lutCol) + lit(1e-9), 6))
+          .withColumn("__adc", adcOf(codeCol, lutCol))
           .withColumn("__sn", row_number().over(w))
           .filter(col("__sn") <= 20)
         exact.join(top10(short), Seq("query_id", "vec_id"))
@@ -966,10 +955,7 @@ object VectorQueries {
           .filter(col("__rn") <= 10).select("query_id", "vec_id")
       }
       val exact = top10(scored)
-      val adcOf = (0 until 8).map { sub =>
-        element_at(col("__lutr"),
-          lit(sub * 16) + element_at(col("code_r"), sub + 1).cast("int"))
-      }.reduce(_ + _)
+      val adcOf = PQ.adcDistance(col("__lutr"), col("code_r"), 8, 16)
       def armHits(radius: Int, hitCol: String): DataFrame = {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id").orderBy(asc("__adc"), col("vec_id"))
@@ -977,7 +963,7 @@ object VectorQueries {
           .bitwiseXOR(col("__qc").cast("long"))) <= radius
         val short = scored.filter(inBall)
           .join(broadcast(lutR), "query_id")
-          .withColumn("__adc", round(adcOf + lit(1e-9), 6))
+          .withColumn("__adc", adcOf)
           .withColumn("__sn", row_number().over(w))
           .filter(col("__sn") <= 20)
         exact.join(top10(short), Seq("query_id", "vec_id"))
@@ -1021,9 +1007,9 @@ object VectorQueries {
         .select("embedding").head().getSeq[Float](0).toArray
       val cells = PQ.nearestCellsD(query.map(_.toDouble), cellCents,
         nprobe = 2)
-      PQ.probeAdcResidualCells(coded.filter(col("vec_id") =!= 0), query,
-          cells, k = 50, shortlist = 50, cb, cellCents,
-          vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topK(coded.filter(col("vec_id") =!= 0), query, k = 50,
+          Some(_ => cells), VectorPlanner.ResidualAdc(cb, cellCents, 50),
+          idCol = "vec_id")
         .select(col("vec_id"), col("approx_score").as("adc_dist"),
           round(col("score"), 6).as("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -1053,8 +1039,9 @@ object VectorQueries {
       val qs = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_vec"))
-      PQ.probeAdcResidualBatch(coded, qs, k = 5, shortlist = 20, cb,
-          cellCents, nprobe = 2, vecCol = "embedding", idCol = "vec_id")
+      VectorPlanner.topKBatch(coded, qs, k = 5,
+          Some(q => PQ.nearestCellsD(q.map(_.toDouble), cellCents, 2)),
+          VectorPlanner.ResidualAdc(cb, cellCents, 20), idCol = "vec_id")
         .select(col("query_id"), col("vec_id"),
           col("approx_score").as("adc_dist"), col("score").as("dist"),
           col("rank").cast("long").as("rank"))

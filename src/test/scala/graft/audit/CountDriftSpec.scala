@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same source walk guards the session-builder debt: under
   * `src/main/scala` only the dev mains' shared session
   * (`graft.DevSession`) and the user-facing CLI (`graft.cli.Main`) may
-  * build a SparkSession.
+  * build a SparkSession; and the cell-filter debt: only the vector
+  * planner, ROUTE by=embedding's bucket screen and `deconScreen`'s kmeans
+  * branch may write `col("cluster_id").isin(`.
   */
 class CountDriftSpec extends AnyFunSuite {
 
@@ -79,6 +81,17 @@ class CountDriftSpec extends AnyFunSuite {
       .map(f => main.relativize(f.toPath).toString).sorted
     assert(sites === Seq("graft/DevSession.scala", "graft/cli/Main.scala"),
       "a dev main must start its session with graft.DevSession.start")
+  }
+
+  test("only the vector planner, ROUTE's bucket screen and the decon kmeans screen filter cells") {
+    val main = new java.io.File("src/main/scala").toPath
+    val sites = scalaFiles("src/main/scala").map { f =>
+      main.relativize(f.toPath).toString ->
+        "col\\(\"cluster_id\"\\)\\.isin\\(".r.findAllIn(read(f)).size
+    }.filter(_._2 > 0).toMap
+    assert(sites === Map("graft/operators/VectorPlanner.scala" -> 1,
+      "graft/core/GraftDatabase.scala" -> 2),
+      "a vector query's cells come from VectorPlanner (cellsOf / inCells)")
   }
 
   test("every bench entry is a registered, oracle-gated query") {

@@ -137,7 +137,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(shortPlan.contains("TakeOrderedAndProject"))
     // and the rerank reads full vectors only behind a PUSHED id filter, so
     // row-group stats can skip — not a join that re-reads every float row
-    val res = db.searchSimilarSq8("vecs", q, k = 5, shortlist = 50, idCol = "vec_id")
+    val res = db.searchSimilar("vecs", q, k = 5, shortlist = 50, idCol = "vec_id")
     val p = res.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters: [In(vec_id"),
       s"rerank scan must push the shortlist id filter:\n${p.take(2000)}")
@@ -161,10 +161,16 @@ class PlanAuditSpec extends AnyFunSuite {
       .select("embedding").head().getSeq[Float](0).toArray
     // broadcast branch (inThreshold = 0): the WHOLE composition is one DAG,
     // so one executed plan must show both prunings multiplying
-    val composed = graft.operators.VectorIndex.probeSq8(
-      db.read("vecs"), q, k = 10, shortlist = 100, metric = "cosine",
-      nBits = 8, radius = 1, q8Col = "embedding_q8", idCol = "vec_id",
-      inThreshold = 0)
+    val cells = graft.operators.VectorIndex.signCells(q, 8, 1)
+    val short = graft.operators.VectorPlanner.shortlist(db.read("vecs"), q,
+      Some(_ => cells),
+      graft.operators.VectorPlanner.Sq8("cosine", 100, Some("embedding_q8")),
+      idCol = "vec_id")
+    val composed = graft.operators.SimilaritySearch.rerankExact(
+      graft.operators.VectorPlanner.inCells(db.read("vecs"), cells)
+        .drop("embedding_q8"),
+      short, q, k = 10, shortlist = 100, metric = "cosine",
+      idCol = "vec_id", inThreshold = 0)
     val p = composed.queryExecution.executedPlan.toString
     // the probe prunes cluster_id partitions at the scan (IVF half)…
     assert(p.contains("PartitionFilters: [cluster_id"),

@@ -588,7 +588,7 @@ class CommandsSpec extends AnyFunSuite {
       Seq(0, 1).foreach { r =>
         val got = CommandExecutor.execute(db, GraftCommand.SearchSimilar(coll,
           s"k=10;radius=$r;shortlist=40;vec=${vec.mkString(",")}"))
-        val want = db.searchSimilarSq8(coll, vec, 10, 40, probeRadius = r)
+        val want = db.searchSimilar(coll, vec, 10, probeRadius = r, shortlist = 40)
         val rows = got.collect().toSeq
         assert(rows.nonEmpty && rows == want.collect().toSeq, s"$coll radius=$r")
         val plan = got.queryExecution.executedPlan.toString

@@ -42,8 +42,15 @@ class CommitCacheSpec extends AnyFunSuite {
     "SEARCHTEXT" ->
       db.searchText(c, Seq("vector", "rare5", "probe"), k = 10).toJSON.collect().toSeq,
     "SEARCHSIMILAR" -> db.searchSimilar(c, query, k = 5).toJSON.collect().toSeq,
-    "SEARCHSIMILAR radius=1" ->
-      db.searchSimilar(c, query, k = 5, probeRadius = 1).toJSON.collect().toSeq)
+    "SEARCHSIMILAR radius=1" -> refusedOr(
+      db.searchSimilar(c, query, k = 5, probeRadius = 1).toJSON.collect().toSeq))
+
+  /** A probe on a collection without cells is refused: the refusal, which
+    * names the layout the handle read, is then the answer to compare.
+    */
+  private def refusedOr(answer: => Seq[String]): Seq[String] =
+    try answer
+    catch { case e: IllegalArgumentException => Seq(s"refused: ${e.getMessage}") }
 
   /** `warm`'s answers equal those of a new handle, whose cache is empty. */
   private def same(warm: GraftDatabase, c: String, what: String): Unit = {

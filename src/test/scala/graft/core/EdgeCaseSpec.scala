@@ -31,7 +31,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     db.quantize("vecs")
     db.delete("vecs", lit(true))
     assert(db.read("vecs").count() == 0)
-    assert(db.searchSimilarSq8("vecs", Array(1.0f, 0.0f, 0.0f), k = 3,
+    assert(db.searchSimilar("vecs", Array(1.0f, 0.0f, 0.0f), k = 3,
       shortlist = 10).count() == 0)
     assert(db.searchSimilar("vecs", Array(1.0f, 0.0f, 0.0f), k = 3).count() == 0)
   }
@@ -49,7 +49,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // sq8 on a non-geometric layout = index-free quantized scan + rerank:
     // exact results, quarter-bytes shortlist
     val q = Array(1.0f, 0.0f, 0.0f)
-    val viaSq8 = db.searchSimilarSq8("vecs", q, k = 5, shortlist = 64)
+    val viaSq8 = db.searchSimilar("vecs", q, k = 5, shortlist = 64)
       .select("id").as[Long].collect().toSeq
     val exact = db.searchSimilar("vecs", q, k = 5)
       .select("id").as[Long].collect().toSeq
@@ -86,7 +86,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       "updated quantized copy must reflect the new vector")
 
     // sq8 search still works over the re-laid-out collection
-    val hit = db.searchSimilarSq8("vecs", Array(-1.0f, -1.0f, -0.5f), k = 1,
+    val hit = db.searchSimilar("vecs", Array(-1.0f, -1.0f, -0.5f), k = 1,
       shortlist = 8)
     assert(hit.select("id").as[Long].head() == 100L)
   }

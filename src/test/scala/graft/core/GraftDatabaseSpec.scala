@@ -691,8 +691,10 @@ class GraftDatabaseSpec extends AnyFunSuite {
     val indexed = db.read("vecs")
     assert(indexed.columns.contains("cluster_id"))
     assert(indexed.select("cluster_id").distinct().count() == 4)
-    val probed = graft.operators.VectorIndex.probe(
-      indexed, Array(1.0f, 1.0f, 0.5f), k = 3, nBits = 2, radius = 0)
+    val probed = graft.operators.VectorPlanner.topK(
+      indexed, Array(1.0f, 1.0f, 0.5f), k = 3,
+      Some(graft.operators.VectorIndex.signCells(_, 2, 0)),
+      graft.operators.VectorPlanner.Exact("cosine"))
     assert(probed.count() == 3)
     // compaction keeps data
     db.compact(Some("vecs"), targetFiles = 2)
@@ -833,17 +835,17 @@ class GraftDatabaseSpec extends AnyFunSuite {
     val coded = graft.operators.ProductQuantization.assignCodes(
       rows.toDF(), "embedding", cb)
     val q = Array(1.0f, 0.0f, 0.0f, 0.005f)
-    val raw = graft.operators.ProductQuantization.topKAdc(
-        rows.toDF(), coded, q, k = 5, shortlist = 40, cb)
+    val raw = graft.operators.VectorPlanner.topK(coded, q, k = 5, None,
+        graft.operators.VectorPlanner.Adc(cb, 40))
       .select($"id", $"score").as[(Long, Double)].collect().toSeq
-    val managed = db.searchSimilarPq("vecs", q, k = 5, shortlist = 40)
+    val managed = db.searchSimilar("vecs", q, k = 5, shortlist = 40)
       .select($"id", $"score").as[(Long, Double)].collect().toSeq
     assert(managed == raw, s"managed $managed != raw $raw")
 
     // radius-composed probe stays within the hamming ball AND finds the
     // planted nearest (same cell as the query by construction)
-    val probed = db.searchSimilarPq("vecs", q, k = 3, shortlist = 40,
-      probeRadius = 0)
+    val probed = db.searchSimilar("vecs", q, k = 3, probeRadius = 0,
+      shortlist = 40)
     assert(probed.select("id").as[Long].collect().forall(_ < 20))
 
     // append re-derives BOTH derived columns from the sidecar
@@ -853,9 +855,9 @@ class GraftDatabaseSpec extends AnyFunSuite {
     assert(after.count() == 41)
     assert(after.filter($"id" === 100 && $"pq_code".isNotNull).count() == 1,
       "appended row missing its pq code")
-    val found = db.searchSimilarPq("vecs",
-      Array(0.99f, 0.0f, 0.0f, 0.01f), k = 1, shortlist = 41,
-      probeRadius = 0)
+    val found = db.searchSimilar("vecs",
+      Array(0.99f, 0.0f, 0.0f, 0.01f), k = 1, probeRadius = 0,
+      shortlist = 41)
     assert(found.select("id").as[Long].head() == 100L)
 
     // update keeps the pq index alive: cells and codes re-derive
@@ -863,8 +865,8 @@ class GraftDatabaseSpec extends AnyFunSuite {
       VectorRecord(0L, Array(0.0f, 1.0f, 0.0f, 0.5f), "moved")).toDF())
     val afterUpd = db.read("vecs")
     assert(afterUpd.columns.contains("pq_code"))
-    val probed3 = db.searchSimilarPq("vecs", Array(0.0f, 1.0f, 0.0f, 0.5f),
-      k = 1, shortlist = 41, probeRadius = 0)
+    val probed3 = db.searchSimilar("vecs", Array(0.0f, 1.0f, 0.0f, 0.5f),
+      k = 1, probeRadius = 0, shortlist = 41)
     assert(probed3.select("id").as[Long].head() == 0L,
       "updated row not re-coded into its new cell")
   }
@@ -891,8 +893,8 @@ class GraftDatabaseSpec extends AnyFunSuite {
 
     // probe finds the planted neighborhood through the managed path
     val q = Array(1.0f, 0.0f, 0.0f, 0.005f)
-    val got = db.searchSimilarIvfPq("vecs", q, k = 3, shortlist = 40,
-      nprobe = 1)
+    val got = db.searchSimilar("vecs", q, k = 3, probeRadius = 0,
+      shortlist = 40)
     assert(got.select("id").as[Long].collect().forall(_ < 20),
       "nprobe=1 must stay inside the query's coarse cell")
 
@@ -904,15 +906,15 @@ class GraftDatabaseSpec extends AnyFunSuite {
     assert(after.filter($"id" === 100 && $"pq_code".isNotNull &&
       $"cluster_id" >= 1).count() == 1,
       "appended row missing residual code or cell")
-    val found = db.searchSimilarIvfPq("vecs",
-      Array(0.99f, 0.0f, 0.0f, 0.01f), k = 1, shortlist = 41, nprobe = 1)
+    val found = db.searchSimilar("vecs",
+      Array(0.99f, 0.0f, 0.0f, 0.01f), k = 1, probeRadius = 0, shortlist = 41)
     assert(found.select("id").as[Long].head() == 100L)
 
     // update re-derives both — the layout survives
     db.update("vecs", Seq(
       VectorRecord(0L, Array(0.0f, 1.0f, 0.0f, 0.5f), "moved")).toDF())
-    val probed3 = db.searchSimilarIvfPq("vecs",
-      Array(0.0f, 1.0f, 0.0f, 0.5f), k = 1, shortlist = 41, nprobe = 1)
+    val probed3 = db.searchSimilar("vecs",
+      Array(0.0f, 1.0f, 0.0f, 0.5f), k = 1, probeRadius = 0, shortlist = 41)
     assert(probed3.select("id").as[Long].head() == 0L,
       "updated row not re-coded into its new cell")
 
@@ -920,27 +922,10 @@ class GraftDatabaseSpec extends AnyFunSuite {
     // the probe still answers, no rows lost
     db.compact(Some("vecs"), targetFiles = 2)
     assert(db.read("vecs").count() == 41)
-    val probed4 = db.searchSimilarIvfPq("vecs",
-      Array(0.99f, 0.0f, 0.0f, 0.01f), k = 1, shortlist = 41, nprobe = 1)
+    val probed4 = db.searchSimilar("vecs",
+      Array(0.99f, 0.0f, 0.0f, 0.01f), k = 1, probeRadius = 0, shortlist = 41)
     assert(probed4.select("id").as[Long].head() == 100L,
       "compaction must not degrade the ivfpq layout")
-  }
-
-  test("searchSimilarPq without a pq sidecar fails loud, never exact-scans") {
-    val db = freshDb()
-    db.createCollection("vecs")
-    db.bulkInsert("vecs", Seq(
-      VectorRecord(1L, Array(1.0f, 0.0f, 0.5f, 0.2f), "a")).toDF())
-    val e = intercept[IllegalStateException] {
-      db.searchSimilarPq("vecs", Array(1.0f, 0.0f, 0.5f, 0.2f), k = 1)
-    }
-    assert(e.getMessage.contains("sidecar"))
-    // a sign-bucket sidecar is not a pq sidecar either
-    db.reindex("vecs", nBits = 4)
-    val e2 = intercept[IllegalStateException] {
-      db.searchSimilarPq("vecs", Array(1.0f, 0.0f, 0.5f, 0.2f), k = 1)
-    }
-    assert(e2.getMessage.contains("codebooks"))
   }
 
   test("custom reindexWith layout: appends survive in the unindexed tail") {
@@ -980,9 +965,10 @@ class GraftDatabaseSpec extends AnyFunSuite {
     val exact = db.searchSimilar("vecs", q, k = 5)
       .select("id").as[Long].collect().toSeq
     assert(exact.size == 5)
-    assert(db.searchSimilar("vecs", q, k = 5, probeRadius = 1)
-      .select("id").as[Long].collect().toSeq == exact,
-      "a probe without a layout record must answer exactly")
+    assert(intercept[IllegalArgumentException](
+        db.searchSimilar("vecs", q, k = 5, probeRadius = 1))
+      .getMessage.contains("layout none"),
+      "a probe without a layout record must refuse, never scan exactly")
     db.bulkInsert("vecs", Seq(VectorRecord(99L, Array(0.5f, 0.5f), "late")).toDF())
     assert(db.read("vecs").filter($"id" === 99L)
       .select($"cluster_id".cast("int")).as[Int].head() == -1,
@@ -1037,8 +1023,8 @@ class GraftDatabaseSpec extends AnyFunSuite {
 
     db.reindex("vecs", nBits = 8)
     db.quantize("vecs")
-    val signProbed = db.searchSimilarSq8("vecs", q, k = 10, shortlist = 50,
-        probeRadius = 1)
+    val signProbed = db.searchSimilar("vecs", q, k = 10, probeRadius = 1,
+        shortlist = 50)
       .select("id").as[Long].collect().toSeq
     assert(signProbed == exact,
       "sign-bucket ivf×sq8 must recover the exact top-k on separable data")
@@ -1048,8 +1034,8 @@ class GraftDatabaseSpec extends AnyFunSuite {
     db2.bulkInsert("vecs", rows.toDF())
     db2.reindexKMeans("vecs", k = 2)
     db2.quantize("vecs")
-    val kmProbed = db2.searchSimilarSq8("vecs", q, k = 10, shortlist = 50,
-        probeRadius = 0)
+    val kmProbed = db2.searchSimilar("vecs", q, k = 10, probeRadius = 0,
+        shortlist = 50)
       .select("id").as[Long].collect().toSeq
     assert(kmProbed == exact,
       "kmeans ivf×sq8 must recover the exact top-k on separable data")
@@ -1072,14 +1058,14 @@ class GraftDatabaseSpec extends AnyFunSuite {
     db.quantize("vecs")
     assert(db.read("vecs").schema("embedding_q8").dataType ==
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType))
-    val viaStored = db.searchSimilarSq8("vecs", q, k = 10, shortlist = 50)
+    val viaStored = db.searchSimilar("vecs", q, k = 10, shortlist = 50)
       .select("id").as[Long].collect().toSeq
     assert(viaStored == exact,
       "sq8-over-stored-column must recover the exact top-k on separable data")
 
     // appended rows get the quantized copy in the same write pass…
     db.bulkInsert("vecs", Seq(VectorRecord(500L, q, "dup")).toDF())
-    val withDup = db.searchSimilarSq8("vecs", q, k = 1, shortlist = 50)
+    val withDup = db.searchSimilar("vecs", q, k = 1, shortlist = 50)
     assert(withDup.select("id").as[Long].head() == 5L ||
       withDup.select("id").as[Long].head() == 500L) // exact dup ties on score
     assert(db.read("vecs").filter($"id" === 500)
@@ -1129,14 +1115,13 @@ class GraftDatabaseSpec extends AnyFunSuite {
       .select("span").as[Long].collect()
     assert(spans.forall(_ <= 128L),
       s"range-partitioned z layout must bound per-file id spans, got ${spans.toSeq}")
-    // probe on a non-geometric layout falls back to exact — same top-k as
-    // a brute-force scan, never silently wrong neighbors
+    // a probe on a layout without cells refuses, naming the layout —
+    // never a silent exact scan the caller believes is pruned
     val q = Array(0.5f, 0.5f)
-    val probed = db.searchSimilar("vecs", q, 5, probeRadius = 1)
-      .select("id").as[Long].collect().toSeq
-    val exact = db.searchSimilar("vecs", q, 5)
-      .select("id").as[Long].collect().toSeq
-    assert(probed == exact)
+    assert(intercept[IllegalArgumentException](
+        db.searchSimilar("vecs", q, 5, probeRadius = 1))
+      .getMessage.contains("layout zorder"))
+    assert(db.searchSimilar("vecs", q, 5).count() == 5)
     // updates keep content; the sidecar (layout intent) survives
     db.update("vecs", Seq(VectorRecord(0L, Array(9f, 9f), "moved")).toDF())
     assert(db.read("vecs").count() == 256L)

@@ -65,7 +65,6 @@ class ProbeDispatchSpec extends AnyFunSuite {
     val qs = Seq((0L, q.toSeq)).toDF("query_id", "query_vec")
     val paths: Seq[(String, String => DataFrame)] = Seq(
       "searchSimilar" -> (db.searchSimilar(_, q, k = 5, probeRadius = 1)),
-      "searchSimilarSq8" -> (db.searchSimilarSq8(_, q, k = 5, probeRadius = 1)),
       "searchSimilarBatch" ->
         (db.searchSimilarBatch(_, qs, k = 5, probeRadius = 1)),
       "searchHybrid" ->
@@ -92,11 +91,11 @@ class ProbeDispatchSpec extends AnyFunSuite {
 
     // per layout, in `paths` order
     val expected = Seq(
-      "sign_bucket" -> Seq("prunes", "prunes", "prunes", "exact", "prunes", "prunes"),
-      "kmeans" -> Seq("prunes", "prunes", "prunes", "exact", "prunes", "prunes"),
-      "pq" -> Seq("exact", "exact", "prunes", "exact", "prunes", "exact"),
-      "ivfpq_kmeans" -> Seq("exact", "exact", "exact", "exact", "refuses", "prunes"),
-      "zorder" -> Seq("exact", "exact", "exact", "exact", "exact", "exact"))
+      "sign_bucket" -> Seq("prunes", "prunes", "prunes", "prunes", "prunes"),
+      "kmeans" -> Seq("prunes", "prunes", "prunes", "prunes", "prunes"),
+      "pq" -> Seq("prunes", "prunes", "prunes", "prunes", "prunes"),
+      "ivfpq_kmeans" -> Seq("prunes", "prunes", "prunes", "prunes", "prunes"),
+      "zorder" -> Seq("refuses", "refuses", "refuses", "refuses", "exact"))
     assert(render(paths.map(_._1), got) === render(paths.map(_._1), expected))
   }
 
@@ -151,11 +150,11 @@ class ProbeDispatchSpec extends AnyFunSuite {
 
     // per layout, in `paths` order
     val expected = Seq(
-      "sign_bucket" -> Seq("sq8", "exact", "exact"),
-      "kmeans" -> Seq("sq8", "exact", "exact"),
+      "sign_bucket" -> Seq("sq8", "sq8", "sq8"),
+      "kmeans" -> Seq("sq8", "sq8", "sq8"),
       "pq" -> Seq("adc", "adc", "adc"),
       "ivfpq_kmeans" -> Seq("residual-adc", "residual-adc", "residual-adc"),
-      "zorder" -> Seq("sq8", "exact", "exact"))
+      "zorder" -> Seq("refuses", "refuses", "refuses"))
     assert(render(paths.map(_._1), got) === render(paths.map(_._1), expected))
   }
 }

@@ -18,18 +18,18 @@ class BatchProbeSpec extends AnyFunSuite {
     val indexed = VectorIndex.assignSignBuckets(e, "embedding", nBits = 8)
     val qs = e.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    val batch = VectorIndex
-      .probeBatch(indexed, qs, k = 5, metric = "cosine",
-        nBits = 8, radius = 1, vecCol = "embedding", idCol = "vec_id")
+    val batch = VectorPlanner
+      .topKBatch(indexed, qs, k = 5, Some(VectorIndex.signCells(_, 8, 1)),
+        VectorPlanner.Exact("cosine"), vecCol = "embedding", idCol = "vec_id")
       .select($"query_id", $"vec_id", round($"score", 6).as("score"))
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sortBy(_._1)).toMap
     (0L until 5L).foreach { qid =>
       val q = e.filter($"vec_id" === qid)
         .select("embedding").head().getSeq[Float](0).toArray
-      val single = VectorIndex
-        .probe(indexed, q, 5, "cosine", nBits = 8, radius = 1,
-          vecCol = "embedding", idCol = "vec_id")
+      val single = VectorPlanner
+        .topK(indexed, q, 5, Some(VectorIndex.signCells(_, 8, 1)),
+          VectorPlanner.Exact("cosine"), vecCol = "embedding", idCol = "vec_id")
         .select($"vec_id", round($"score", 6).as("score"))
         .as[(Long, Double)].collect().sortBy(_._1)
       assert(batch(qid).toSeq == single.toSeq,
@@ -57,8 +57,8 @@ class BatchProbeSpec extends AnyFunSuite {
       StructType(Seq(
         StructField("query_id", LongType),
         StructField("query_vec", ArrayType(FloatType)))))
-    val res = VectorIndex.probeBatch(db.read("vecs"), qs, k = 5,
-      metric = "cosine", nBits = 8, radius = 1,
+    val res = VectorPlanner.topKBatch(db.read("vecs"), qs, k = 5,
+      Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Exact("cosine"),
       vecCol = "embedding", idCol = "vec_id")
     val p = res.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [cluster_id"),
@@ -77,23 +77,28 @@ class BatchProbeSpec extends AnyFunSuite {
       .select($"vec_id".cast("string").as("query_id"),
         $"embedding".as("query_vec"))
     val exBatch = intercept[IllegalArgumentException] {
-      VectorIndex.probeBatch(indexed, strQs, k = 2, idCol = "vec_id")
+      VectorPlanner.topKBatch(indexed, strQs, k = 2,
+        Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Exact("cosine"),
+        idCol = "vec_id")
     }
     assert(exBatch.getMessage.contains("query_id"))
     val goodQs = e.filter($"vec_id" < 2)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
     val strIndexed = indexed.withColumn("vec_id", $"vec_id".cast("string"))
     val exId = intercept[IllegalArgumentException] {
-      VectorIndex.probeBatch(strIndexed, goodQs, k = 2, idCol = "vec_id")
+      VectorPlanner.topKBatch(strIndexed, goodQs, k = 2,
+        Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Exact("cosine"),
+        idCol = "vec_id")
     }
     assert(exId.getMessage.contains("vec_id"))
     val cb = ProductQuantization.trainCodebooks(
       e, "vec_id", "embedding", m = 8, ksub = 4)
     val coded = ProductQuantization.assignCodes(indexed, "embedding", cb)
     val exAdc = intercept[IllegalArgumentException] {
-      ProductQuantization.probeAdcBatch(coded, strQs, k = 2, shortlist = 4,
-        cb, idCol = "vec_id")
+      VectorPlanner.topKBatch(coded, strQs, k = 2,
+        Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Adc(cb, 4),
+        idCol = "vec_id")
     }
-    assert(exAdc.getMessage.contains("probeAdcBatch"))
+    assert(exAdc.getMessage.contains("topKBatch"))
   }
 }

@@ -29,9 +29,10 @@ class IvfRecallSpec extends AnyFunSuite {
           .topK(e.filter($"vec_id" =!= qid), q, 10, "cosine",
             vecCol = "embedding", idCol = "vec_id")
           .select("vec_id").as[Long].collect().toSet
-        val probed = VectorIndex
-          .probe(indexed.filter($"vec_id" =!= qid), q, 10, "cosine",
-            nBits = 8, radius = radius, vecCol = "embedding", idCol = "vec_id")
+        val probed = VectorPlanner
+          .topK(indexed.filter($"vec_id" =!= qid), q, 10,
+            Some(VectorIndex.signCells(_, 8, radius)),
+            VectorPlanner.Exact("cosine"), vecCol = "embedding", idCol = "vec_id")
           .select("vec_id").as[Long].collect().toSet
         (exact intersect probed).size
       }.sum
@@ -77,9 +78,9 @@ class IvfRecallSpec extends AnyFunSuite {
         .select("vec_id").as[Long].collect().toSet
       val cand = VectorIndex.nearestCentroidIds(q, centroids, nprobe)
       val scan = indexed.filter($"cluster_id".isin(cand: _*)).count()
-      val probed = VectorIndex
-        .probeKMeans(indexed.filter($"vec_id" =!= qid), q, 10, "cosine",
-          centroids, nprobe, vecCol = "embedding", idCol = "vec_id")
+      val probed = VectorPlanner
+        .topK(indexed.filter($"vec_id" =!= qid), q, 10, Some(_ => cand),
+          VectorPlanner.Exact("cosine"), vecCol = "embedding", idCol = "vec_id")
         .select("vec_id").as[Long].collect().toSet
       ((exact intersect probed).size, scan)
     }.unzip

@@ -53,9 +53,8 @@ class ProductQuantizationSpec extends AnyFunSuite {
           .topK(e.filter($"vec_id" =!= qid), q, 10, "l2",
             vecCol = "embedding", idCol = "vec_id")
           .select("vec_id").as[Long].collect().toSet
-        val got = ProductQuantization.topKAdc(
-            e.filter($"vec_id" =!= qid).select("vec_id", "embedding"),
-            coded.filter($"vec_id" =!= qid), q, 10, shortlist, cbFine,
+        val got = VectorPlanner.topK(coded.filter($"vec_id" =!= qid), q, 10,
+            None, VectorPlanner.Adc(cbFine, shortlist),
             vecCol = "embedding", idCol = "vec_id")
           .select("vec_id").as[Long].collect().toSet
         (truth intersect got).size
@@ -107,8 +106,8 @@ class ProductQuantizationSpec extends AnyFunSuite {
     val stored = spark.read.parquet(dir)
     val q = e.filter($"vec_id" === 1)
       .select("embedding").head().getSeq[Float](0).toArray
-    val p = ProductQuantization
-      .adcShortlist(stored, q, 50, cb, idCol = "vec_id")
+    val p = VectorPlanner
+      .shortlist(stored, q, None, VectorPlanner.Adc(cb, 50), idCol = "vec_id")
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       s"ADC cut must be a bounded top-k:\n${p.take(1500)}")
@@ -125,9 +124,10 @@ class ProductQuantizationSpec extends AnyFunSuite {
       .select("embedding").head().getSeq[Float](0).toArray
     val ball = VectorIndex.codesWithin(
       VectorIndex.signBucketOf(q, 8), 8, 1).toSet
-    val out = ProductQuantization.probeAdc(
-      indexed.filter($"vec_id" =!= 1), q, k = 10, shortlist = 50,
-      cb, nBits = 8, radius = 1, idCol = "vec_id")
+    val out = VectorPlanner.topK(
+      indexed.filter($"vec_id" =!= 1), q, k = 10,
+      Some(VectorIndex.signCells(_, 8, 1)), VectorPlanner.Adc(cb, 50),
+      idCol = "vec_id")
     val ids = out.select("vec_id").as[Long].collect().toSeq
     assert(ids.nonEmpty && ids.size <= 10)
     val cells = indexed.filter($"vec_id".isin(ids: _*))
@@ -177,8 +177,9 @@ class ProductQuantizationSpec extends AnyFunSuite {
     val stored = spark.read.parquet(dir)
     val q = e.filter($"vec_id" === 1)
       .select("embedding").head().getSeq[Float](0).toArray
-    val p = ProductQuantization
-      .adcShortlistResidual(stored, q, 50, cbR, cents, idCol = "vec_id")
+    val p = VectorPlanner
+      .shortlist(stored, q, Some(VectorIndex.signCells(_, 8, 1)),
+        VectorPlanner.ResidualAdc(cbR, cents, 50), idCol = "vec_id")
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       s"residual ADC cut must be a bounded top-k:\n${p.take(1500)}")
@@ -188,9 +189,10 @@ class ProductQuantizationSpec extends AnyFunSuite {
       s"residual ADC scan must read only (id, cell, code): $readSchema")
     // the residual probe end-to-end agrees with a driver-side replay of
     // LUT lookups over the same codes
-    val out = ProductQuantization.probeAdcResidual(
-      stored.filter($"vec_id" =!= 1), q, k = 5, shortlist = 50, cbR, cents,
-      idCol = "vec_id")
+    val out = VectorPlanner.topK(
+      stored.filter($"vec_id" =!= 1), q, k = 5,
+      Some(VectorIndex.signCells(_, 8, 1)),
+      VectorPlanner.ResidualAdc(cbR, cents, 50), idCol = "vec_id")
     assert(out.count() == 5)
     val ball = VectorIndex.codesWithin(
       VectorIndex.signBucketOf(q, 8), 8, 1).toSet
@@ -245,9 +247,9 @@ class ProductQuantizationSpec extends AnyFunSuite {
       "embedding", cb)
     val qs = e.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    val out = ProductQuantization.probeAdcBatch(
-        indexed, qs, k = 5, shortlist = 20, cb, nBits = 8, radius = 1,
-        idCol = "vec_id")
+    val out = VectorPlanner.topKBatch(
+        indexed, qs, k = 5, Some(VectorIndex.signCells(_, 8, 1)),
+        VectorPlanner.Adc(cb, 20), idCol = "vec_id")
       .collect()
     assert(out.nonEmpty)
     // each query finds itself first at exact distance 0
@@ -286,8 +288,9 @@ class ProductQuantizationSpec extends AnyFunSuite {
     val coded = ProductQuantization.assignCodes(res, "__res", cb).drop("__res")
     val qs = e.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    val out = ProductQuantization.probeAdcResidualBatch(coded, qs, k = 5,
-      shortlist = 20, cb, cellCents, nprobe = 2,
+    val out = VectorPlanner.topKBatch(coded, qs, k = 5,
+      Some(q => ProductQuantization.nearestCellsD(q.map(_.toDouble), cellCents, 2)),
+      VectorPlanner.ResidualAdc(cb, cellCents, 20),
       vecCol = "embedding", idCol = "vec_id").collect()
     val firsts = out.filter(_.getAs[Int]("rank") == 1)
     assert(firsts.length == 3)

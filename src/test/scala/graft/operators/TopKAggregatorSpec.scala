@@ -23,8 +23,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
         .topKBatch(e, qs, k = 7, metric, vecCol = "embedding", idCol = "vec_id")
         .select($"query_id", $"vec_id", round($"score", 9).as("score"), $"rank")
         .as[(Long, Long, Double, Int)].collect().toSet
-      val viaAgg = SimilaritySearch
-        .topKBatchAgg(e, qs, k = 7, metric, vecCol = "embedding", idCol = "vec_id")
+      val viaAgg = VectorPlanner
+        .topKBatch(e, qs, k = 7, None, VectorPlanner.Exact(metric),
+          vecCol = "embedding", idCol = "vec_id")
         .select($"query_id", $"vec_id", round($"score", 9).as("score"), $"rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(viaAgg == viaWindow, s"metric=$metric")
@@ -38,8 +39,8 @@ class TopKAggregatorSpec extends AnyFunSuite {
       (7L, Array(2.0f, 0.0f)), (5L, Array(0.0f, 1.0f))
     ).toDF("id", "embedding")
     val qs = Seq((0L, Array(1.0f, 0.0f))).toDF("query_id", "query_vec")
-    val got = SimilaritySearch
-      .topKBatchAgg(coll, qs, k = 3, "cosine")
+    val got = VectorPlanner
+      .topKBatch(coll, qs, k = 3, None, VectorPlanner.Exact("cosine"))
       .orderBy("rank")
       .select("id").as[Long].collect().toSeq
     // cosine: ids 10, 3, 7 all score 1.0 → order by id: 3, 7, 10
@@ -50,13 +51,14 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val coll = Seq(("a", Array(1.0f, 0.0f))).toDF("id", "embedding")
     val qs = Seq((0L, Array(1.0f, 0.0f))).toDF("query_id", "query_vec")
     val e1 = intercept[IllegalArgumentException] {
-      SimilaritySearch.topKBatchAgg(coll, qs, k = 1, "cosine")
+      VectorPlanner.topKBatch(coll, qs, k = 1, None, VectorPlanner.Exact("cosine"))
     }
     assert(e1.getMessage.contains("integral"))
     val collOk = Seq((1L, Array(1.0f, 0.0f))).toDF("id", "embedding")
     val qsBad = Seq(("q0", Array(1.0f, 0.0f))).toDF("query_id", "query_vec")
     val e2 = intercept[IllegalArgumentException] {
-      SimilaritySearch.topKBatchAgg(collOk, qsBad, k = 1, "cosine")
+      VectorPlanner.topKBatch(collOk, qsBad, k = 1, None,
+        VectorPlanner.Exact("cosine"))
     }
     assert(e2.getMessage.contains("integral"))
   }

@@ -12,14 +12,26 @@ import org.apache.spark.sql.types.StructType
 /** Driver state valid for exactly one committed state of one collection:
   * the resolved relations of its reads (footer schema, file listing,
   * partition spec), its parsed layout record, its artifacts' snapshots and
-  * the stored text index's corpus stats. Each value is computed on first
-  * use and served to every later reader of the same state.
+  * the stored text index's corpus stats and per-term document
+  * frequencies. Each value is computed on first use and served to every
+  * later reader of the same state; it dies with the state, so the cache
+  * has no size bound of its own.
   */
 private[core] final class CommittedState(val token: String) {
   private val memo = TrieMap.empty[Any, Any]
 
   def apply[T](key: Any)(compute: => T): T =
     memo.getOrElseUpdate(key, compute).asInstanceOf[T]
+
+  /** The values of `keys` under `prefix`: the ones not cached yet come
+    * from ONE `compute` call, which returns a value for each key it is
+    * given. */
+  def all[K, V](prefix: Any, keys: Seq[K])(compute: Seq[K] => Map[K, V]): Map[K, V] = {
+    val missing = keys.filterNot(k => memo.contains((prefix, k)))
+    if (missing.nonEmpty)
+      compute(missing).foreach { case (k, v) => memo.putIfAbsent((prefix, k), v) }
+    keys.map(k => k -> memo((prefix, k)).asInstanceOf[V]).toMap
+  }
 
   /** `build`'s frame with its relation resolved once for this state.
     * `build` returns a plain relation read or an empty frame; every call

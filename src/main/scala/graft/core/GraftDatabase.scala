@@ -2,10 +2,12 @@ package graft.core
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, ShortType, StructField, StructType}
 
 import graft.core.IndexLayout.{IvfPqKMeans, KMeans, Pq, SignBucket}
 import graft.model.VectorRecord
@@ -966,7 +968,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def searchText(name: String, rawTerms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75, k: Int = 20): DataFrame =
-    rankText(name, rawTerms)(
+    rankText(name, rawTerms, withDfs = true)(
       TextAnalysis.bm25FromIndex(_, _, "id", _, k1, b, k, _),
       TextAnalysis.bm25(_, "id", "payload", _, k1, b, k))
 
@@ -980,10 +982,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * through the SAME rule (lowercase, split at non-alphanumerics, drop
     * empties, dedup) — a verbatim 'Vector' could never match either path.
     * The stored scorers get the corpus stats of the committed state
-    * ([[corpusStats]]).
+    * ([[corpusStats]]), with the query terms' dfs when `withDfs`.
     */
-  private def rankText(name: String, rawTerms: Seq[String])(
-      stored: (DataFrame, DataFrame, Seq[String], Option[(Long, Long)]) => DataFrame,
+  private def rankText(name: String, rawTerms: Seq[String], withDfs: Boolean)(
+      stored: (DataFrame, DataFrame, Seq[String], Option[TextAnalysis.CorpusStats]) => DataFrame,
       rescan: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     requireCollection(name)
     val terms = normalizeTerms(rawTerms)
@@ -992,11 +994,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val post = postings(name)
     post.served.filter(_.live) match {
       case Some(s) =>
-        val wanted = terms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
-        stored(post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(terms: _*))),
+        stored(termRows(post, s, terms),
           post.live(s, "doclens").select(col("id"), col("dl")), terms,
-          corpusStats(post, s))
+          corpusStats(post, s, if (withDfs) terms else Nil))
       case None =>
         val cur = read(name)
         require(cur.columns.contains("payload"),
@@ -1015,7 +1015,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def searchTextQL(name: String, rawTerms: Seq[String],
       mu: Double = 2000.0, k: Int = 20): DataFrame =
-    rankText(name, rawTerms)(
+    rankText(name, rawTerms, withDfs = false)(
       TextAnalysis.dirichletQLFromIndex(_, _, "id", _, mu, k, _),
       TextAnalysis.dirichletQL(_, "id", "payload", _, mu, k))
 
@@ -1027,7 +1027,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def searchTextJM(name: String, rawTerms: Seq[String],
       lambda: Double = 0.7, k: Int = 20): DataFrame =
-    rankText(name, rawTerms)(
+    rankText(name, rawTerms, withDfs = false)(
       TextAnalysis.jelinekMercerQLFromIndex(_, _, "id", _, lambda, k, _),
       TextAnalysis.jelinekMercerQL(_, "id", "payload", _, lambda, k))
 
@@ -1188,18 +1188,42 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private def hasPositions(meta: ArtifactMeta): Boolean =
     meta.bool("positions").contains(true)
 
-  /** (N, Σdl) over the live doclens rows of a served postings snapshot:
-    * one job per committed state, then plan literals for every stored
-    * scorer. None for an uncached snapshot — the scorers then aggregate
-    * doclens in-plan.
+  /** The live postings rows of `terms` in a served snapshot: the scan
+    * prunes to their `term_bucket=` partitions, tombstoned versions drop.
     */
-  private def corpusStats(post: SegmentedArtifact,
-      s: ArtifactSnapshot): Option[(Long, Long)] =
-    s.committed.map(_(("corpusStats", s.dataDir)) {
-      val r = post.live(s, "doclens")
-        .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    })
+  private def termRows(post: SegmentedArtifact, s: ArtifactSnapshot,
+      terms: Seq[String]): DataFrame = {
+    val wanted = terms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
+    post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
+      col("term").isin(terms: _*)))
+  }
+
+  /** The corpus stats of a served postings snapshot, as plan literals for
+    * every stored scorer: (N, Σdl) over the live doclens rows in one job
+    * per committed state, and the df of each of `terms`, cached per
+    * (state, term) — a query's uncached terms are counted in one job over
+    * the same pruned, tombstone-filtered postings rows it scores
+    * ([[termRows]]). Every entry dies with its committed state (a commit
+    * starts a new one), so no df outlives the postings it counts and the
+    * cache needs no size knob. None for an uncached snapshot — the scorers
+    * then aggregate in-plan.
+    */
+  private def corpusStats(post: SegmentedArtifact, s: ArtifactSnapshot,
+      terms: Seq[String]): Option[TextAnalysis.CorpusStats] =
+    s.committed.map { st =>
+      val (n, sumDl) = st(("corpusStats", s.dataDir)) {
+        val r = post.live(s, "doclens")
+          .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      val dfs = st.all(("df", s.dataDir), terms) { missing =>
+        val counted = termRows(post, s, missing)
+          .groupBy("term").agg(count(lit(1))).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        missing.map(t => t -> counted.getOrElse(t, 0L)).toMap
+      }
+      TextAnalysis.CorpusStats(n, sumDl, dfs)
+    }
 
   /** SEARCHPHRASE — exact consecutive-token phrase match. With a LIVE
     * positional artifact (REINDEX type=postings;positions=true) the
@@ -2864,21 +2888,20 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   /** SEARCHHYBRID (extension): reciprocal-rank fusion of SEARCHTEXT and
     * the exact cosine ranking — the modern retrieval-stack shape
-    * (sparse ∪ dense → RRF) through one command. Both branch ranks are
-    * derived from ROUNDED scores (6 dp, id tie-break — the rank
-    * doctrine), the windows run over ≤ `kf` rows post-limit, and the
-    * fusion is [[graft.operators.SimilaritySearch.rrfFuse]]'s
-    * exact-integer-division sum.
+    * (sparse ∪ dense → RRF) through one command. Each branch ends in one
+    * bounded cut of ≤ `kf` rows on its ROUNDED score (6 dp, id tie-break —
+    * the rank doctrine) that is collected; a branch's ranks are its row
+    * positions, and [[graft.operators.SimilaritySearch.rrfFuseRanked]]
+    * fuses them on the driver with [[graft.operators.SimilaritySearch
+    * .rrfFuse]]'s arithmetic. The answer is a local relation: collecting
+    * it runs no job.
     */
   def searchHybrid(name: String, terms: Seq[String], query: Array[Float],
       k: Int = 10, kf: Int = 20, kRrf: Int = 60,
       probeRadius: Int = -1, shortlist: Int = -1): DataFrame = {
     requireCollection(name)
-    val wS = org.apache.spark.sql.expressions.Window
-      .orderBy(org.apache.spark.sql.functions.desc("bm25"), col("id"))
-    val sparse = searchText(name, terms, k = kf)
-      .withColumn("rank", row_number().over(wS).cast("long"))
-      .select("id", "rank")
+    // sparse branch: searchText's rows are already in (bm25 desc, id) order
+    val sparse = searchText(name, terms, k = kf).select("id")
     // dense branch: the planner's cells and scorer for the collection
     // (cosine, `probeRadius`, `shortlist`). An approximate scorer reranks
     // k = shortlist rows, so the only engine-side cut inside it is its own
@@ -2898,16 +2921,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         VectorPlanner.topK(data, query, s.shortlist, cells, s)
           .select(col("id"), round(col("score"), 6).as("__cs"))
     }
-    val byScore =
-      if (VectorPlanner.descending(scorer)) desc("__cs") else asc("__cs")
-    val wD = org.apache.spark.sql.expressions.Window.orderBy(byScore, col("id"))
     val dense = denseScored
-      .orderBy(byScore, col("id"))
+      .orderBy(if (VectorPlanner.descending(scorer)) desc("__cs") else asc("__cs"),
+        col("id"))
       .limit(kf)
-      .withColumn("rank", row_number().over(wD).cast("long"))
-      .select("id", "rank")
-    graft.operators.SimilaritySearch.rrfFuse(Seq(sparse, dense), "id",
-      kRrf = kRrf, k = k)
+      .select("id")
+    val idField = unionField(Seq(sparse, dense), "id")
+    localFrame(SimilaritySearch.rrfSchema(idField),
+      SimilaritySearch.rrfFuseRanked(Seq(sparse, dense).map(ids), kRrf, k)
+        .map { case (id, rrf, n) => Row(idValue(idField.dataType, id), rrf, n) })
   }
 
   /** SEARCHHYBRID for a QUERY BATCH — the concurrent-serving shape
@@ -2916,11 +2938,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * probe per query. This answers the WHOLE batch with:
     *
     *  - ONE postings pass pruned to the union of every query's term
-    *    buckets: the batch rides a BROADCAST (query_id, term, ord)
-    *    catalog joined onto the pruned postings rows, each row computes
+    *    buckets: the batch rides a (query_id, term, ord) catalog joined
+    *    onto the pruned postings rows as literals
+    *    ([[SimilaritySearch.literalJoin]]), each row computes
     *    its own BM25 contribution ([[graft.operators.TextAnalysis
-    *    .bm25FromIndex]]'s arithmetic term-for-term), and the per-
-    *    (query, doc) score is an ord-ordered sort+fold — bit-identical
+    *    .bm25FromIndex]]'s arithmetic term-for-term, the terms' dfs
+    *    riding the catalog from the committed state's cache), and the
+    *    per-(query, doc) score is an ord-ordered sort+fold — bit-identical
     *    to the single-query fixed-order chain because absent terms
     *    contribute exactly +0.0 (all contributions are ≥ 0, so
     *    skipping zeros is an IEEE identity) and the fold adds in the
@@ -2932,11 +2956,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     *    with [[searchSimilarBatch]]'s cells and scorer: one scan of the
     *    union of the probed cells, a bounded heap per query, one exact
     *    rerank after an approximate scorer). The kf cut rides the
-    *    planner's rank; ranks are then re-derived on the ROUNDED score
-    *    (the hybrid rank doctrine) over the ≤ kf survivors — descending
-    *    cosine, or ascending l2 after ADC.
-    *  - RRF fusion per query ([[SimilaritySearch.rrfFuse]]'s exact
-    *    arithmetic) with a k-cut over the ≤ 2·kf fused rows per query.
+    *    planner's rank.
+    *  - Both answers — ≤ kf rows per query each — are collected, and each
+    *    query's ranked lists fuse on the driver
+    *    ([[SimilaritySearch.rrfFuseRanked]], [[SimilaritySearch.rrfFuse]]'s
+    *    exact arithmetic and k-cut). Dense ranks are re-derived there on
+    *    the ROUNDED score (the hybrid rank doctrine) — descending cosine,
+    *    or ascending l2 after ADC.
     *
     * Queries are driver-side by construction (a serving request, not a
     * table) — that is what lets the term sets prune the postings scan
@@ -2949,8 +2975,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * hide the degradation — refresh or drop the artifact first); no
     * artifact at all → one corpus tokenize, still one pass for the batch.
     *
-    * Output: (query_id, id, rrf, n_lists) — [[SimilaritySearch.rrfFuse]]'s
-    * columns per query, ordered (query_id, rrf desc, id).
+    * Output: a local relation (query_id, id, rrf, n_lists) —
+    * [[SimilaritySearch.rrfFuse]]'s columns per query — ordered
+    * (query_id, rrf desc, id); collecting it runs no job.
     */
   def searchHybridBatch(name: String,
       queries: Seq[(Long, Seq[String], Array[Float])],
@@ -2977,12 +3004,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val snap = post.served
     val (hits, doclens, stats) = snap.filter(_.live) match {
       case Some(s) =>
-        val wanted = unionTerms.map(bucketOfTerm(_, textBuckets(s.meta))).distinct
-        (post.live(s, "postings", Some(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(unionTerms: _*)))
-            .select(col("id"), col("term"), col("tf")),
+        (termRows(post, s, unionTerms).select(col("id"), col("term"), col("tf")),
           post.live(s, "doclens").select(col("id"), col("dl")),
-          corpusStats(post, s))
+          corpusStats(post, s, unionTerms))
       case None =>
         // a STALE artifact never serves — but silently tokenizing the
         // corpus once per batch call hides the degradation from the
@@ -3006,12 +3030,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // the batch catalog: (query_id, term, ord) — ord is the term's
     // position in ITS query's list, the fold order that keeps per-query
     // summation identical to the single-query chain
-    val qt = broadcast(termsByQ.flatMap { case (qid, terms) =>
+    val catalog = termsByQ.flatMap { case (qid, terms) =>
       terms.zipWithIndex.map { case (t, o) => (qid, t, o) }
-    }.toDF("query_id", "term", "__ord"))
-    // per-term document frequencies: term-grain, ≤ |unionTerms| rows
-    val dfs = broadcast(hits.groupBy("term")
-      .agg(count(lit(1)).as("__df")))
+    }
     val k1 = 1.2
     val b = 0.75
     // per (query, doc, term) contribution: bm25()/bm25FromIndex()
@@ -3025,17 +3046,27 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val contrib = idf * (col("tf") * (k1 + 1)) /
       (col("tf") + lit(k1) *
         (lit(1.0) - b + lit(b) * col("dl") / col("__avgdl")))
-    val joined = hits
-      .join(qt, Seq("term"))
-      .join(doclens, Seq("id"))
-      .join(dfs, Seq("term"))
-    // N and avgdl: literals from the committed state's corpus stats, else
-    // one in-plan doclens aggregation crossed in as a broadcast
+    // N, avgdl and the per-term dfs: literals from the committed state's
+    // corpus stats (the dfs ride the catalog), else in-plan aggregations
+    // joined and crossed in as broadcasts
     val withStats = stats match {
-      case Some(st) => joined.select(col("*") +: TextAnalysis.bm25StatCols(st): _*)
-      case None => joined.crossJoin(broadcast(doclens.agg(
-        count(lit(1)).as("__n"),
-        (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))))
+      case Some(st) =>
+        SimilaritySearch.literalJoin(hits,
+            catalog.map { case (q, t, o) => Row(t, q, o, st.dfs(t)) },
+            StructType.fromDDL("term STRING, query_id BIGINT, __ord INT, __df BIGINT"),
+            "term")
+          .join(doclens, Seq("id"))
+          .select(col("*") +: TextAnalysis.bm25StatCols((st.n, st.sumDl)): _*)
+      case None =>
+        SimilaritySearch.literalJoin(hits,
+            catalog.map { case (q, t, o) => Row(t, q, o) },
+            StructType.fromDDL("term STRING, query_id BIGINT, __ord INT"), "term")
+          .join(doclens, Seq("id"))
+          .join(broadcast(hits.groupBy("term").agg(count(lit(1)).as("__df"))),
+            Seq("term"))
+          .crossJoin(broadcast(doclens.agg(
+            count(lit(1)).as("__n"),
+            (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))))
     }
     val scoredRows = withStats
       .select(col("query_id"), col("id"), col("__ord"), contrib.as("__c"))
@@ -3054,40 +3085,65 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         perQueryDoc.select(col("query_id"), col("id"), col("bm25"))
           .as[(Long, Long, Double)],
         kf, desc_? = true, "id", "query_id")
-      .select(col("query_id"), col("id"), col("rank").cast("long").as("rank"))
+      .select(col("query_id"), col("id"), col("rank"))
 
-    // ---- dense branch: one planner call for the whole batch. Cosine
-    // scorers rank DESC on the rounded similarity, ADC ASC on the rounded
-    // l2 (a distance) — RRF consumes ranks, so the two fuse identically.
+    // ---- dense branch: one planner call for the whole batch
     val qvecs = queries.map { case (qid, _, v) => (qid, v) }
       .toDF("query_id", "query_vec")
     val data = read(name)
     val (cells, scorer) = vectorPlan(name, data, "cosine", probeRadius, shortlist)
-    val wD = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(if (VectorPlanner.descending(scorer)) desc("__cs") else asc("__cs"),
-        col("id"))
     val dense = VectorPlanner.topKBatch(data, qvecs, kf, cells, scorer)
-      .select(col("query_id"), col("id"), round(col("score"), 6).as("__cs"))
-      .withColumn("rank", row_number().over(wD).cast("long"))
-      .select("query_id", "id", "rank")
+      .select(col("query_id"), col("id"), col("score"))
 
-    // ---- RRF per query (rrfFuse's exact arithmetic, query-keyed)
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(org.apache.spark.sql.functions.desc("rrf"), col("id"))
-    sparse.unionByName(dense)
-      .select(col("query_id"), col("id"), col("rank").cast("long").as("__r"))
-      .groupBy("query_id", "id")
-      .agg(
-        round(sum(lit(1.0) / (lit(kRrf) + col("__r"))) + lit(1e-9), 6)
-          .as("rrf"),
-        count(lit(1)).as("n_lists"))
-      .withColumn("__rk", row_number().over(wK))
-      .filter(col("__rk") <= k)
-      .select(col("query_id"), col("id"), col("rrf"), col("n_lists"))
-      .orderBy(col("query_id"), desc("rrf"), col("id"))
+    // ---- RRF per query on the driver. Cosine scorers rank DESC on the
+    // rounded similarity, ADC ASC on the rounded l2 (a distance) — RRF
+    // consumes ranks, so the two fuse identically. Rounded scores hold no
+    // -0.0, so Double.compare is Spark's double order.
+    val sign = if (VectorPlanner.descending(scorer)) -1 else 1
+    val sparseLists = sparse.collect().toSeq.groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.sortBy(_.getInt(2)).map(_.getLong(1)) }
+    val denseLists = dense.collect().toSeq.groupBy(_.getLong(0))
+      .map { case (q, rs) =>
+        q -> rs.map(r => (SimilaritySearch.round6(r.getDouble(2)), r.getLong(1)))
+          .sortWith { case ((sa, ia), (sb, ib)) =>
+            val c = sign * java.lang.Double.compare(sa, sb)
+            if (c != 0) c < 0 else ia < ib
+          }.map(_._2)
+      }
+    val idField = unionField(Seq(sparse, dense), "id")
+    localFrame(
+      StructType(unionField(Seq(sparse, dense), "query_id") +:
+        SimilaritySearch.rrfSchema(idField).fields),
+      (sparseLists.keySet ++ denseLists.keySet).toSeq.sorted.flatMap { q =>
+        SimilaritySearch.rrfFuseRanked(Seq(sparseLists.getOrElse(q, Nil),
+            denseLists.getOrElse(q, Nil)), kRrf, k)
+          .map { case (id, rrf, n) => Row(q, idValue(idField.dataType, id), rrf, n) }
+      })
   }
+
+  /** Column `c` of the union of `frames`: the widest integral type among
+    * them, nullable if any is. */
+  private def unionField(frames: Seq[DataFrame], c: String): StructField = {
+    frames.foreach(VectorIndex.requireIntegralCol(_, c, "SEARCHHYBRID"))
+    val fs = frames.map(_.schema(c))
+    StructField(c, fs.map(_.dataType).maxBy(_.defaultSize), fs.exists(_.nullable))
+  }
+
+  /** A long id as a value of the integral type `t`. */
+  private def idValue(t: DataType, v: Long): Any = t match {
+    case ByteType => v.toByte
+    case ShortType => v.toShort
+    case IntegerType => v.toInt
+    case _ => v
+  }
+
+  /** The integral ids of a one-column frame, in row order. */
+  private def ids(df: DataFrame): Seq[Long] =
+    df.collect().toSeq.map(_.getAs[Number](0).longValue)
+
+  /** Driver-side rows as a local relation: collecting it runs no job. */
+  private def localFrame(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** The collection's layout record, None without one. */
   private def layoutOf(name: String): Option[IndexLayout] =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, MapType, StructField, StructType}
 
 import graft.functions.{cosine_sim, dot_product, l2_dist}
 
@@ -144,11 +144,10 @@ object SimilaritySearch {
     *
     *  - `shortlist ≤ inThreshold`: materialize the shortlist ONCE on the
     *    driver (it is request-sized by construction — the same class of
-    *    driver-side value as the query vector), push the ids into the
-    *    rerank scan as an `In` filter so parquet row-group/page statistics
-    *    can skip full-precision data, and attach the approx scores as a
-    *    literal id lookup (no second execution of the shortlist plan and
-    *    no broadcast job: the rerank is the command's only other job).
+    *    driver-side value as the query vector) and join it back in the
+    *    rerank scan as literals ([[literalJoin]]: no second execution of
+    *    the shortlist plan and no broadcast job — the rerank is the
+    *    command's only other job).
     *  - above the threshold: a giant In-list would serialize through the
     *    driver into every task, so the shortlist never leaves the
     *    executors — broadcast join-back instead (the pushdown win no
@@ -166,39 +165,48 @@ object SimilaritySearch {
       metric: String = "cosine",
       vecCol: String = "embedding",
       idCol: String = "id",
-      inThreshold: Int = 10000): DataFrame = {
+      inThreshold: Int = InThreshold): DataFrame = {
     val (exact, desc_?) = score(metric, col(vecCol), lit(queryVec))
     val joined =
-      if (shortlist <= inThreshold) {
-        val rows = short.collect()
-        // resolve by name, not position — a shortlist with columns in
-        // another order would otherwise silently push scores as ids
-        val idIdx = short.schema.fieldIndex(idCol)
-        val ids = rows.map(_.get(idIdx)).toSeq
-        // the join-back as a literal lookup instead of a broadcast join
-        // (a second job): id → the shortlist's other columns, one struct
-        // per shortlist row, inlined — the inner USING join's columns and
-        // multiplicity (duplicate ids on either side, null ids matching
-        // nothing)
-        val rest = StructType(short.schema.filterNot(_.name == idCol))
-        val byId = rows.filter(_.get(idIdx) != null).groupBy(_.get(idIdx))
-          .map { case (id, rs) =>
-            id -> rs.toSeq.map(r => Row.fromSeq(rest.map(f => r.getAs[Any](f.name))))
-          }
-        val lookup = GraftSqlShims.column(Literal.create(byId,
-          MapType(short.schema(idCol).dataType,
-            ArrayType(rest, containsNull = false), valueContainsNull = false)))
-        collection
-          .filter(col(idCol).isInCollection(ids))
-          .select((idCol +: collection.columns.toSeq.filter(_ != idCol))
-            .map(col) :+ inline(element_at(lookup, col(idCol))): _*)
-      } else {
-        collection.join(broadcast(short), Seq(idCol))
-      }
+      if (shortlist <= inThreshold) literalJoin(collection, short.collect().toSeq,
+        short.schema, idCol)
+      else collection.join(broadcast(short), Seq(idCol))
     val ranked = joined.withColumn("score", exact).drop(vecCol)
     (if (desc_?) ranked.orderBy(desc("score"), col(idCol))
      else ranked.orderBy(asc("score"), col(idCol)))
       .limit(k)
+  }
+
+  /** The shortlist size up to which an exact rerank joins its shortlist
+    * back as literals ([[literalJoin]]) rather than by broadcast.
+    */
+  val InThreshold = 10000
+
+  /** `collection` inner-joined on `idCol` with `rows` (laid out as
+    * `schema`, already on the driver) in one scan and no job of its own:
+    * the ids push into the scan as an `In` filter, so parquet
+    * row-group/page statistics can skip data, and the rows' other columns
+    * attach through a literal id → array<struct> lookup, inlined — the
+    * inner USING join's columns and multiplicity (duplicate ids on either
+    * side, null ids matching nothing). Bounded by the caller: the rows
+    * travel in every task.
+    */
+  private[graft] def literalJoin(collection: DataFrame, rows: Seq[Row],
+      schema: StructType, idCol: String): DataFrame = {
+    // positions from `schema`, by name — a shortlist with columns in
+    // another order would otherwise silently push scores as ids
+    val idIdx = schema.fieldIndex(idCol)
+    val restIdx = schema.indices.filter(_ != idIdx)
+    val rest = StructType(restIdx.map(schema(_)))
+    val byId = rows.filter(_.get(idIdx) != null).groupBy(_.get(idIdx))
+      .map { case (id, rs) => id -> rs.map(r => Row.fromSeq(restIdx.map(r.get))) }
+    val lookup = GraftSqlShims.column(Literal.create(byId,
+      MapType(schema(idCol).dataType,
+        ArrayType(rest, containsNull = false), valueContainsNull = false)))
+    collection
+      .filter(col(idCol).isInCollection(rows.map(_.get(idIdx))))
+      .select((idCol +: collection.columns.toSeq.filter(_ != idCol))
+        .map(col) :+ inline(element_at(lookup, col(idCol))): _*)
   }
 
   /** The quantized-scan stage over a STORED int8 column: reads (id, q8Col)
@@ -346,6 +354,40 @@ object SimilaritySearch {
       .orderBy(desc("rrf"), col(idCol))
       .limit(k)
   }
+
+  /** [[rrfFuse]] over ranked id lists already on the driver, a list's
+    * ranks being its positions from 1 — the same arithmetic: each list
+    * adds `1.0 / (kRrf + r)` to its ids' sums, which start at 0.0; a sum
+    * rounds as `round(x + 1e-9, 6)` ([[round6]]); the cut is the same
+    * (rrf desc, id) top `k`. Output: (id, rrf, n_lists) in rank order.
+    */
+  def rrfFuseRanked(rankings: Seq[Seq[Long]], kRrf: Int = 60,
+      k: Int = 10): Seq[(Long, Double, Long)] = {
+    require(rankings.nonEmpty, "rrfFuse: no rankings to fuse")
+    require(kRrf >= 1, s"kRrf must be positive, got $kRrf")
+    val fused = scala.collection.mutable.LinkedHashMap.empty[Long, (Double, Long)]
+    for (ranked <- rankings; (id, i) <- ranked.zipWithIndex) {
+      val (sum, n) = fused.getOrElse(id, (0.0, 0L))
+      fused(id) = (sum + 1.0 / (kRrf.toLong + i + 1).toDouble, n + 1)
+    }
+    fused.toSeq.map { case (id, (sum, n)) => (id, round6(sum + 1e-9), n) }
+      .sortWith { case ((ia, ra, _), (ib, rb, _)) =>
+        if (ra != rb) ra > rb else ia < ib }
+      .take(k)
+  }
+
+  /** [[rrfFuse]]'s output schema for ids of `idField`. */
+  def rrfSchema(idField: StructField): StructType = StructType(Seq(idField,
+    StructField("rrf", DoubleType), StructField("n_lists", LongType, nullable = false)))
+
+  /** Spark's `round(x, 6)` of a double on the driver: HALF_UP on the
+    * double's shortest decimal form (`BigDecimal.valueOf`), NaN and the
+    * infinities unchanged.
+    */
+  def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
   /** Embedding diversity per group: the mean pairwise cosine similarity
     * over all ordered pairs, computed WITHOUT any pair enumeration via

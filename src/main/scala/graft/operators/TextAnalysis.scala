@@ -2328,12 +2328,12 @@ object TextAnalysis {
   /** [[dirichletQL]] over a STORED postings artifact ([[bm25FromIndex]]'s
     * sibling): tf per (doc, term) from ≤|terms| pruned partitions, ctf as
     * their sums, |C| from the doclens companion — no corpus scan,
-    * bit-identical to the rescan. `corpus` = (N, Σdl) known up front
-    * ([[bm25FromIndex]]) makes |C| a plan literal.
+    * bit-identical to the rescan. `corpus` known up front
+    * ([[bm25FromIndex]]) makes |C| a plan literal; its dfs are unused.
     */
   def dirichletQLFromIndex(postings: DataFrame, doclens: DataFrame,
       idCol: String, terms: Seq[String], mu: Double = 2000.0,
-      k: Int = 20, corpus: Option[(Long, Long)] = None): DataFrame = {
+      k: Int = 20, corpus: Option[CorpusStats] = None): DataFrame = {
     require(terms.nonEmpty, "dirichletQLFromIndex: empty term list")
     require(terms.distinct == terms,
       s"dirichletQLFromIndex: duplicate terms in $terms")
@@ -2346,7 +2346,7 @@ object TextAnalysis {
   /** Stored-artifact (perDoc, stats) frames shared by the QL family. */
   private def qlStoredFrames(postings: DataFrame, doclens: DataFrame,
       idCol: String, terms: Seq[String],
-      corpus: Option[(Long, Long)]): (DataFrame, DataFrame) = {
+      corpus: Option[CorpusStats]): (DataFrame, DataFrame) = {
     // explicit isNotNull: the same ReusedExchange-enabling filter as
     // bm25FromIndex (the doclens inner join pushes it into one branch
     // only otherwise; a no-op on values — postings ids are non-null)
@@ -2376,7 +2376,7 @@ object TextAnalysis {
     // empty doclens, as sum gives), else aggregated in-plan, with an
     // explicit broadcast on the 1×1 stats cross (the bm25FromIndex rule)
     (perDoc, corpus match {
-      case Some((n, sumDl)) => ctfs.select(col("*"),
+      case Some(CorpusStats(n, sumDl, _)) => ctfs.select(col("*"),
         (if (n == 0) lit(null).cast("long") else lit(sumDl)).as("__cs"))
       case None => doclens.agg(sum("dl").as("__cs")).crossJoin(broadcast(ctfs))
     })
@@ -2389,7 +2389,7 @@ object TextAnalysis {
     */
   def jelinekMercerQLFromIndex(postings: DataFrame, doclens: DataFrame,
       idCol: String, terms: Seq[String], lambda: Double = 0.7,
-      k: Int = 20, corpus: Option[(Long, Long)] = None): DataFrame = {
+      k: Int = 20, corpus: Option[CorpusStats] = None): DataFrame = {
     require(terms.nonEmpty, "jelinekMercerQLFromIndex: empty term list")
     require(terms.distinct == terms,
       s"jelinekMercerQLFromIndex: duplicate terms in $terms")
@@ -2642,6 +2642,16 @@ object TextAnalysis {
     matched.groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
   }
 
+  /** A stored index's corpus statistics, known before a query plans:
+    * N and Σdl over the live doclens rows, and the document frequency of
+    * each query term over the live postings rows (a live document has one
+    * postings row per term it contains, so a term's df is its row count).
+    * [[bm25FromIndex]] needs the dfs of all its terms; the QL scorers read
+    * N and Σdl only.
+    */
+  final case class CorpusStats(n: Long, sumDl: Long,
+      dfs: Map[String, Long] = Map.empty)
+
   /** BM25's corpus stats as literals from (N, Σdl): `__n` = N and
     * `__avgdl` = Σdl / N — the one IEEE division the in-plan
     * `cast(sum(dl) as double) / count` performs, null over an empty
@@ -2668,19 +2678,21 @@ object TextAnalysis {
     * contribution expression as [[bm25]], so the doubles are
     * bit-identical, not merely rounded-equal. Cost shape: the postings
     * scan reads |terms| lists (partition-prunable when the index is
-    * stored partitioned by term), the stats and dfs are two
-    * broadcast-sized aggregations, and the cut is the same bounded
-    * top-k on the rounded score.
+    * stored partitioned by term), and the cut is the same bounded top-k
+    * on the rounded score. Without `corpus` the stats and dfs are two
+    * broadcast-sized aggregations in the plan.
     *
-    * `corpus` = (N, Σdl) over `doclens`, when the caller already knows
-    * them (a database caches them per committed index state): N and
-    * avgdl then enter as plan literals ([[bm25StatCols]]) instead of an
-    * in-plan doclens aggregation — the same values, the same IEEE
-    * division.
+    * `corpus` = the [[CorpusStats]] of `postings` and `doclens`, when the
+    * caller already knows them (a database caches them per committed
+    * index state): N and avgdl then enter as plan literals
+    * ([[bm25StatCols]]) instead of an in-plan doclens aggregation — the
+    * same values, the same IEEE division — and so do the dfs, leaving the
+    * plan one scoring pass over the per-doc tfs with no aggregation and no
+    * broadcast of its own.
     */
   def bm25FromIndex(postings: DataFrame, doclens: DataFrame, idCol: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      k: Int = 20, corpus: Option[(Long, Long)] = None): DataFrame = {
+      k: Int = 20, corpus: Option[CorpusStats] = None): DataFrame = {
     require(terms.nonEmpty, "bm25FromIndex: empty term list")
     require(terms.distinct == terms, s"bm25FromIndex: duplicate terms in $terms")
     require(k >= 1, s"k must be positive, got $k")
@@ -2706,8 +2718,8 @@ object TextAnalysis {
     // and both dfs and the score join now sit above the SAME
     // hits→groupBy(id) exchange, which AQE ReusedExchange dedups: the
     // pruned postings partitions are scanned ONCE per probe instead of
-    // twice (r18, guide §2.4)
-    val dfs = perDocAgg.agg(
+    // twice (r18, guide §2.4); analyzed only when no corpus is given
+    def dfs = perDocAgg.agg(
       terms.indices.map { i =>
         sum(when(col(s"__tf_$i") > 0L, 1L).otherwise(0L)).as(s"__df_$i")
       }.head,
@@ -2717,12 +2729,17 @@ object TextAnalysis {
     // explicit broadcast: the 1×1 stats cross must never plan as a
     // CartesianProduct when auto-broadcast is disabled (hint survives
     // spark.sql.autoBroadcastJoinThreshold = -1)
-    val stats = corpus match {
-      case Some(c) => dfs.select(col("*") +: bm25StatCols(c): _*)
-      case None => doclens.agg(
+    val scored = corpus match {
+      case Some(c) =>
+        require(terms.forall(c.dfs.contains),
+          s"bm25FromIndex: corpus stats without the dfs of ${terms.filterNot(c.dfs.contains)}")
+        perDoc.select(col("*") +: (bm25StatCols((c.n, c.sumDl)) ++ terms.zipWithIndex.map {
+          case (t, i) => lit(c.dfs(t)).as(s"__df_$i")
+        }): _*)
+      case None => perDoc.crossJoin(broadcast(doclens.agg(
           count(lit(1)).as("__n"),
           (sum("dl").cast("double") / count(lit(1))).as("__avgdl"))
-        .crossJoin(broadcast(dfs))
+        .crossJoin(broadcast(dfs))))
     }
     // the contribution chain is copied from bm25() operation-for-
     // operation (the q136 never-pre-fold rule: identical ARITHMETIC)
@@ -2734,7 +2751,7 @@ object TextAnalysis {
         (tf + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("__avgdl"))))
         .otherwise(lit(0.0))
     }.reduce(_ + _)
-    perDoc.crossJoin(broadcast(stats))
+    scored
       .withColumn("bm25", round(contrib + lit(1e-9), 6))
       .orderBy(desc("bm25"), col(idCol))
       .limit(k)

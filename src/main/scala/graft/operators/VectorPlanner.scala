@@ -27,7 +27,10 @@ import graft.operators.ProductQuantization.Codebooks
   * each row only against the queries probing its cell (a broadcast
   * (query, cell) join), keeps a bounded heap per query
   * ([[SimilaritySearch.boundedTopKPerQuery]]) and, for an approximate
-  * scorer, reranks the heap's shortlist in one broadcast join-back.
+  * scorer, collects the heap's shortlists once and reranks them in one
+  * scan through the same literal lookup as one query's, as long as
+  * shortlist × |batch| stays within [[SimilaritySearch.InThreshold]]; a
+  * larger batch reranks through a broadcast join-back.
   *
   * Rank rules the gates depend on: the SQ8 shortlist cuts on the
   * integer-exact int8 score (q79); exact and SQ8 results rank by the raw
@@ -199,12 +202,15 @@ object VectorPlanner {
   /** A batch's top-k per query: `queries` is (`queryIdCol` integral,
     * `queryVecCol` array<float>), request-sized by construction. Output:
     * (queryIdCol, idCol, score, rank) — plus `approx_score` after an
-    * approximate scorer — self-matches included.
+    * approximate scorer — self-matches included. `inThreshold` caps
+    * shortlist × |batch| for the literal rerank ([[SimilaritySearch
+    * .rerankExact]]'s rule at batch arity).
     */
   def topKBatch(data: DataFrame, queries: DataFrame, k: Int, cells: Cells,
       scorer: Scorer, vecCol: String = "embedding", idCol: String = "id",
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
+      queryVecCol: String = "query_vec",
+      inThreshold: Int = SimilaritySearch.InThreshold): DataFrame = {
     val b = new Batch(data, queries, cells, scorer, idCol, queryIdCol, queryVecCol)
     scorer match {
       case Exact(metric) =>
@@ -214,7 +220,10 @@ object VectorPlanner {
       case s: Shortlisted =>
         require(s.shortlist >= k, s"shortlist ${s.shortlist} must be >= k $k")
         // ONE exact rerank: the shortlists join back to the full vectors of
-        // the probed cells, both sides broadcast
+        // the probed cells — rerankExact's cap-and-switch on the observable
+        // size shortlist × |batch|: at most inThreshold rows are collected
+        // once and join back as literals, the query vectors with them (one
+        // scan, no broadcast); above it both sides broadcast
         val (exact, desc_?) = s match {
           case _: Sq8 =>
             SimilaritySearch.score(s.rerankMetric, col(vecCol), col(queryVecCol))
@@ -223,10 +232,14 @@ object VectorPlanner {
         }
         val w = Window.partitionBy(queryIdCol)
           .orderBy(if (desc_?) desc("score") else asc("score"), col(idCol))
-        b.probed
-          .select(col(idCol).cast("long").as(idCol), col(vecCol))
-          .join(broadcast(b.shortlists(s, vecCol)), Seq(idCol))
-          .join(broadcast(b.qs), Seq(queryIdCol))
+        val vecs = b.probed.select(col(idCol).cast("long").as(idCol), col(vecCol))
+        val short = b.shortlists(s, vecCol)
+        val joined =
+          if (s.shortlist.toLong * b.rows.size <= inThreshold)
+            SimilaritySearch.literalJoin(vecs, short.collect().toSeq, short.schema, idCol)
+              .withColumn(queryVecCol, element_at(typedLit(b.rows.toMap), col(queryIdCol)))
+          else vecs.join(broadcast(short), Seq(idCol)).join(broadcast(b.qs), Seq(queryIdCol))
+        joined
           .withColumn("score", exact)
           .drop(vecCol, queryVecCol)
           .withColumn("rank", row_number().over(w))
@@ -248,7 +261,8 @@ object VectorPlanner {
       .shortlists(scorer, vecCol)
 
   /** One query batch against `data`: the frame, its rows on the driver
-    * (collected once, only when cells or lookup tables need them), the
+    * (collected once, only when cells, lookup tables or the literal rerank
+    * need them), the
     * (query, cell) pairs it probes, and the scan that scores each row
     * against the queries probing its cell.
     */
@@ -263,7 +277,7 @@ object VectorPlanner {
     val qs: DataFrame = queries.select(
       col(queryIdCol).cast("long").as(queryIdCol), col(queryVecCol))
 
-    private lazy val rows: Seq[(Long, Array[Float])] = {
+    lazy val rows: Seq[(Long, Array[Float])] = {
       val rs = qs.collect().toSeq
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       require(rs.nonEmpty, "VectorPlanner.topKBatch: empty query batch")

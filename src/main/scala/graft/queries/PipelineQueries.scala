@@ -971,7 +971,7 @@ object PipelineQueries {
     // Batch retrieval through the command grammar: SEARCHSIMILAR batch=
     // names a parquet of (query_id, query_vec) and the pq-indexed
     // collection answers the whole batch in ONE union-pruned scan (batch
-    // IVF × ADC × one broadcast rerank). Gated against q135's oracle
+    // IVF × ADC × one exact rerank). Gated against q135's oracle
     // VERBATIM — the managed command path must equal the raw-operator
     // composition row-for-row (the stream ≡ batch gating pattern).
     "q142_batch_cmd" -> ((s, dir) => {

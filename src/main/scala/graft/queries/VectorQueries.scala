@@ -712,7 +712,7 @@ object VectorQueries {
 
     // Batch IVF × PQ: 3 queries, one union scan of their probed cells
     // reading only the 8-byte codes, per-query ADC shortlist in a
-    // bounded heap, one broadcast exact rerank. Self-matches ride
+    // bounded heap, one exact rerank (literal join-back). Self-matches ride
     // through (rank 1 at distance 0) — deterministic and mirrored.
     "q135_pq_batch" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)

@@ -16,7 +16,7 @@ import graft.extensions.GraftExtensions
 
 /** What each vector path does on each index layout at `probeRadius = 1`:
   * without `shortlist`, whether it prunes (a `cluster_id` partition
-  * filter in the executed plan), scans exactly, or refuses; with
+  * filter in the plans it executed), scans exactly, or refuses; with
   * `shortlist = 20`, which scorer it runs. The tables pin the behaviour as
   * it is; any change to a dispatch shows up as an explicit diff to them.
   */
@@ -81,11 +81,10 @@ class ProbeDispatchSpec extends AnyFunSuite {
         finally spark.conf.set(GraftExtensions.AutoProbeKey, "false")
       })
 
-    def outcome(plan: => DataFrame): String =
-      try {
-        val p = plan.queryExecution.executedPlan.toString
-        if (p.contains("PartitionFilters: [cluster_id")) "prunes" else "exact"
-      } catch { case _: IllegalArgumentException => "refuses" }
+    def outcome(plan: => DataFrame): String = executedPlans(plan) match {
+      case None => "refuses"
+      case Some(p) => if (p.contains("PartitionFilters: [cluster_id")) "prunes" else "exact"
+    }
 
     val got = layouts.map(kind => kind -> paths.map { case (_, run) => outcome(run(kind)) })
 
@@ -99,12 +98,11 @@ class ProbeDispatchSpec extends AnyFunSuite {
     assert(render(paths.map(_._1), got) === render(paths.map(_._1), expected))
   }
 
-  /** The scorer `run` executed, read from the columns its queries scanned
-    * (the shortlist of a single-query path runs as its own query): the
-    * stored int8 copy is sq8, the PQ codes are adc — residual-adc when the
-    * lookup table is chosen by the row's cell — and neither is exact.
+  /** The executed plans of every query `run` runs, built and collected
+    * (a shortlist, or a hybrid branch fused on the driver, runs as its own
+    * query); None when the path refuses.
     */
-  private def scorerOf(run: => DataFrame): String = {
+  private def executedPlans(run: => DataFrame): Option[String] = {
     val plans = ArrayBuffer.empty[String]
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -119,17 +117,25 @@ class ProbeDispatchSpec extends AnyFunSuite {
         try { run.collect(); true }
         catch { case _: IllegalArgumentException => false }
       TestContextShims.drainListenerBus(sc)
-      val text = plans.synchronized(plans.mkString("\n"))
+      if (ran) Some(plans.synchronized(plans.mkString("\n"))) else None
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The scorer `run` executed, read from the columns its queries scanned:
+    * the stored int8 copy is sq8, the PQ codes are adc — residual-adc when
+    * the lookup table is chosen by the row's cell — and neither is exact.
+    */
+  private def scorerOf(run: => DataFrame): String = executedPlans(run) match {
+    case None => "refuses"
+    case Some(text) =>
       val scans = text.linesIterator.filter(_.contains("ReadSchema:")).mkString("\n")
-      if (!ran) "refuses"
-      else if (scans.contains("pq_code:")) {
+      if (scans.contains("pq_code:")) {
         val cellLut = text.linesIterator.exists(l =>
           l.contains("__lut") && l.contains("cluster_id"))
         if (cellLut) "residual-adc" else "adc"
       }
       else if (scans.contains("embedding_q8:")) "sq8"
       else "exact"
-    } finally spark.listenerManager.unregister(listener)
   }
 
   test("probe dispatch scorer per layout and path at probeRadius=1, shortlist=20") {

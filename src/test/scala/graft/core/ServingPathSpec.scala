@@ -125,9 +125,16 @@ class ServingPathSpec extends AnyFunSuite {
       assert(rows.length == (if (what == "single") 10 else 40), what)
       what -> jobs
     }.toMap
-    // the batch's dense branch runs SQ8 (shortlist heap + one broadcast
-    // rerank) where it ran the exact cell probe before: 12 → 15 jobs
-    assert(counts == Map("single" -> 6, "batch" -> 15), counts.toString)
+    // single: the sparse branch's 3 stored-SEARCHTEXT jobs and the SQ8
+    // dense branch's shortlist and rerank; batch: the sparse pass and its
+    // per-query heap, the dense shortlist heap and one literal rerank.
+    // Both fuse on the driver.
+    assert(counts == Map("single" -> 5, "batch" -> 10), counts.toString)
+    // the fused answer is a local relation: collecting it runs nothing
+    cmds.foreach { case (what, a) =>
+      val df = command(db, "SEARCHHYBRID", a)
+      assert(jobsOf(df.collect())._2 == 0, s"$what collect")
+    }
   }
 
   /** Files Spark's file index discovered while `body` ran. */
@@ -162,7 +169,7 @@ class ServingPathSpec extends AnyFunSuite {
       assert(listed == 0, s"warm $what listed $listed files")
       what -> jobs
     }.toMap
-    assert(warm("stored SEARCHTEXT") <= 5, warm.toString)
+    assert(warm("stored SEARCHTEXT") <= 3, warm.toString)
     assert(warm - "stored SEARCHTEXT" == Map("exact SEARCHSIMILAR" -> 1,
       "SEARCH" -> 1, "SQ8 ANN SEARCHSIMILAR" -> 2), warm.toString)
     // a commit through another handle: the next read lists the collection
@@ -221,6 +228,36 @@ class ServingPathSpec extends AnyFunSuite {
     val lens = TextAnalysis.docLengths(db.read("docs"), "id", "payload")
     assert(inPlan(lens) == literal(lens))
     assert(inPlan(lens).getLong(0) == 59L)
+
+    // df freshness: each term's df is cached per committed state, so every
+    // commit below (each changes the dfs of the queried terms) must serve
+    // the new counts — stored SEARCHTEXT equals the rescan bit for bit
+    db.insert("docs", VectorRecord(500L, Array.fill(8)(0.5f), "vector shard rare7 probe"))
+    db.bulkInsert("docs", records(6, 600))
+    db.refreshPostings("docs")
+    sameAsRescan("docs")
+    db.delete("docs", $"id" === 7L || $"id" === 600L)
+    db.refreshPostings("docs")
+    sameAsRescan("docs")
+    db.compactPostings("docs")
+    assert(!db.searchText("docs", terms).queryExecution.executedPlan.toString
+      .contains("LeftAnti"), "a compacted generation has no tombstones")
+    sameAsRescan("docs")
+    // with a marker the dfs are literals: no stats cross join in the plan
+    def statsCross(d: GraftDatabase): Boolean =
+      d.searchText("docs", terms).queryExecution.executedPlan.toString
+        .contains("BroadcastNestedLoopJoin")
+    assert(!statsCross(db))
+    // a database without a commit marker aggregates N, avgdl and the dfs in
+    // the plan and crosses them in — the uncached rule
+    val fs = db.root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = new org.apache.hadoop.fs.Path(db.root, "docs")
+    fs.delete(new org.apache.hadoop.fs.Path(dir, CommitCache.File), false)
+    fs.delete(new org.apache.hadoop.fs.Path(dir, s".${CommitCache.File}.crc"), false)
+    val unmarked = GraftDatabase.open(spark, db.root.toString)
+    assert(statsCross(unmarked))
+    assert(rows(unmarked.searchText("docs", terms)) ==
+      rows(TextAnalysis.bm25(unmarked.read("docs"), "id", "payload", terms)))
   }
 
   test("collection read: schema equals Spark's inference across every layout") {
@@ -289,6 +326,42 @@ class ServingPathSpec extends AnyFunSuite {
     spark.conf.set(key, "true")
     try check(mergeSchema = true)
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("batch rerank: shortlist x |batch| at the threshold joins literals, one above broadcasts, same answers") {
+    import graft.operators.{ProductQuantization, VectorIndex, VectorPlanner}
+    val data = VectorIndex.assignSignBuckets(records(120), "embedding", nBits = 3)
+    val cb = ProductQuantization.trainCodebooks(data, "id", "embedding", m = 2,
+      ksub = 4, seed = "pq")
+    val pq = ProductQuantization.assignCodes(data, "embedding", cb)
+    val cents = ProductQuantization.cellCentroids(data)
+    val res = ProductQuantization.withResiduals(data, "embedding", cents)
+    val rcb = ProductQuantization.trainCodebooks(res, "id", "__res", m = 2,
+      ksub = 4, seed = "rpq")
+    val rpq = ProductQuantization.assignCodes(res, "__res", rcb).drop("__res")
+    val qs = Seq(3, 40, 77).map(i => (i.toLong * 10,
+        records(1, i).select("embedding").head().getSeq[Float](0).map(_ + 0.01f)))
+      .toDF("query_id", "query_vec")
+    val shortlist = 12
+    val atCap = shortlist * 3
+    val cells: VectorPlanner.Cells = Some(VectorIndex.signCells(_, 3, 1))
+    Seq[(String, DataFrame, VectorPlanner.Scorer, VectorPlanner.Cells)](
+      ("SQ8", data, VectorPlanner.Sq8("cosine", shortlist), None),
+      ("SQ8 probed", data, VectorPlanner.Sq8("cosine", shortlist), cells),
+      ("ADC", pq, VectorPlanner.Adc(cb, shortlist), cells),
+      ("residual ADC", rpq, VectorPlanner.ResidualAdc(rcb, cents, shortlist), None)
+    ).foreach { case (what, df, scorer, cs) =>
+      def batch(threshold: Int): DataFrame =
+        VectorPlanner.topKBatch(df, qs, 5, cs, scorer, inThreshold = threshold)
+      val (literal, joined) = (batch(atCap), batch(atCap - 1))
+      assert(literal.schema == joined.schema, what)
+      def rows(d: DataFrame): Seq[Row] = d.orderBy("query_id", "rank").collect().toSeq
+      assert(rows(literal) == rows(joined), what)
+      assert(rows(literal).size == 15, what)
+      def plan(d: DataFrame): String = d.queryExecution.executedPlan.toString
+      assert(!plan(literal).contains("BroadcastHashJoin"), s"$what:\n${plan(literal)}")
+      assert(plan(joined).contains("BroadcastHashJoin"), s"$what:\n${plan(joined)}")
+    }
   }
 
   test("SQ8 rerank: the literal join-back equals the broadcast join, duplicate ids included") {

@@ -2940,7 +2940,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     *  - ONE postings pass pruned to the union of every query's term
     *    buckets: the batch rides a (query_id, term, ord) catalog joined
     *    onto the pruned postings rows as literals
-    *    ([[SimilaritySearch.literalJoin]]), each row computes
+    *    ([[SimilaritySearch.literalJoin]]; by broadcast above
+    *    [[SimilaritySearch.InThreshold]] rows), each row computes
     *    its own BM25 contribution ([[graft.operators.TextAnalysis
     *    .bm25FromIndex]]'s arithmetic term-for-term, the terms' dfs
     *    riding the catalog from the committed state's cache), and the
@@ -3027,12 +3028,17 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
           graft.operators.TextAnalysis.docLengths(cur, "id", "payload"),
           None)
     }
-    // the batch catalog: (query_id, term, ord) — ord is the term's
+    // the batch catalog: (term, query_id, ord) — ord is the term's
     // position in ITS query's list, the fold order that keeps per-query
-    // summation identical to the single-query chain
+    // summation identical to the single-query chain; the committed state's
+    // cached dfs ride it as a fourth column
     val catalog = termsByQ.flatMap { case (qid, terms) =>
-      terms.zipWithIndex.map { case (t, o) => (qid, t, o) }
+      terms.zipWithIndex.map { case (t, o) =>
+        Row.fromSeq(Seq(t, qid, o) ++ stats.map(_.dfs(t)))
+      }
     }
+    val catalogSchema = StructType.fromDDL("term STRING, query_id BIGINT, __ord INT" +
+      stats.fold("")(_ => ", __df BIGINT"))
     val k1 = 1.2
     val b = 0.75
     // per (query, doc, term) contribution: bm25()/bm25FromIndex()
@@ -3046,22 +3052,21 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val contrib = idf * (col("tf") * (k1 + 1)) /
       (col("tf") + lit(k1) *
         (lit(1.0) - b + lit(b) * col("dl") / col("__avgdl")))
-    // N, avgdl and the per-term dfs: literals from the committed state's
-    // corpus stats (the dfs ride the catalog), else in-plan aggregations
-    // joined and crossed in as broadcasts
+    // the catalog joins as literals up to the inlining threshold, by
+    // broadcast above it
+    val joined =
+      (if (catalog.size <= SimilaritySearch.InThreshold)
+        SimilaritySearch.literalJoin(hits, catalog, catalogSchema, "term")
+      else hits.join(broadcast(localFrame(catalogSchema, catalog)), Seq("term")))
+        .join(doclens, Seq("id"))
+    // N and avgdl: literals from the committed state's corpus stats, else
+    // in-plan aggregations (with the dfs) joined and crossed in as
+    // broadcasts
     val withStats = stats match {
       case Some(st) =>
-        SimilaritySearch.literalJoin(hits,
-            catalog.map { case (q, t, o) => Row(t, q, o, st.dfs(t)) },
-            StructType.fromDDL("term STRING, query_id BIGINT, __ord INT, __df BIGINT"),
-            "term")
-          .join(doclens, Seq("id"))
-          .select(col("*") +: TextAnalysis.bm25StatCols((st.n, st.sumDl)): _*)
+        joined.select(col("*") +: TextAnalysis.bm25StatCols((st.n, st.sumDl)): _*)
       case None =>
-        SimilaritySearch.literalJoin(hits,
-            catalog.map { case (q, t, o) => Row(t, q, o) },
-            StructType.fromDDL("term STRING, query_id BIGINT, __ord INT"), "term")
-          .join(doclens, Seq("id"))
+        joined
           .join(broadcast(hits.groupBy("term").agg(count(lit(1)).as("__df"))),
             Seq("term"))
           .crossJoin(broadcast(doclens.agg(

@@ -177,8 +177,10 @@ object SimilaritySearch {
       .limit(k)
   }
 
-  /** The shortlist size up to which an exact rerank joins its shortlist
-    * back as literals ([[literalJoin]]) rather than by broadcast.
+  /** The literal size up to which a join-back of driver-side rows inlines
+    * them ([[literalJoin]]) rather than broadcasting them: a rerank's
+    * shortlist (plus a batch's query-vector floats,
+    * [[VectorPlanner.topKBatch]]), a hybrid batch's term catalog.
     */
   val InThreshold = 10000
 

@@ -28,9 +28,10 @@ import graft.operators.ProductQuantization.Codebooks
   * (query, cell) join), keeps a bounded heap per query
   * ([[SimilaritySearch.boundedTopKPerQuery]]) and, for an approximate
   * scorer, collects the heap's shortlists once and reranks them in one
-  * scan through the same literal lookup as one query's, as long as
-  * shortlist × |batch| stays within [[SimilaritySearch.InThreshold]]; a
-  * larger batch reranks through a broadcast join-back.
+  * scan through the same literal lookup as one query's, as long as the
+  * literal — shortlist × |batch| rows plus the |batch| × dim query floats —
+  * stays within [[SimilaritySearch.InThreshold]]; a larger batch reranks
+  * through a broadcast join-back.
   *
   * Rank rules the gates depend on: the SQ8 shortlist cuts on the
   * integer-exact int8 score (q79); exact and SQ8 results rank by the raw
@@ -202,9 +203,11 @@ object VectorPlanner {
   /** A batch's top-k per query: `queries` is (`queryIdCol` integral,
     * `queryVecCol` array<float>), request-sized by construction. Output:
     * (queryIdCol, idCol, score, rank) — plus `approx_score` after an
-    * approximate scorer — self-matches included. `inThreshold` caps
-    * shortlist × |batch| for the literal rerank ([[SimilaritySearch
-    * .rerankExact]]'s rule at batch arity).
+    * approximate scorer — self-matches included. `inThreshold` caps what
+    * the literal rerank inlines into every task: shortlist × |batch|
+    * lookup rows plus |batch| × dim query-vector floats
+    * ([[SimilaritySearch.rerankExact]]'s rule at batch arity, where the
+    * query vectors ride the literal too).
     */
   def topKBatch(data: DataFrame, queries: DataFrame, k: Int, cells: Cells,
       scorer: Scorer, vecCol: String = "embedding", idCol: String = "id",
@@ -221,9 +224,10 @@ object VectorPlanner {
         require(s.shortlist >= k, s"shortlist ${s.shortlist} must be >= k $k")
         // ONE exact rerank: the shortlists join back to the full vectors of
         // the probed cells — rerankExact's cap-and-switch on the observable
-        // size shortlist × |batch|: at most inThreshold rows are collected
-        // once and join back as literals, the query vectors with them (one
-        // scan, no broadcast); above it both sides broadcast
+        // size shortlist × |batch| + |batch| × dim: within inThreshold the
+        // shortlists are collected once and join back as literals, the
+        // query vectors with them (one scan, no broadcast); above it both
+        // sides broadcast
         val (exact, desc_?) = s match {
           case _: Sq8 =>
             SimilaritySearch.score(s.rerankMetric, col(vecCol), col(queryVecCol))
@@ -235,7 +239,8 @@ object VectorPlanner {
         val vecs = b.probed.select(col(idCol).cast("long").as(idCol), col(vecCol))
         val short = b.shortlists(s, vecCol)
         val joined =
-          if (s.shortlist.toLong * b.rows.size <= inThreshold)
+          if (s.shortlist.toLong * b.rows.size +
+              b.rows.map(_._2.length.toLong).sum <= inThreshold)
             SimilaritySearch.literalJoin(vecs, short.collect().toSeq, short.schema, idCol)
               .withColumn(queryVecCol, element_at(typedLit(b.rows.toMap), col(queryIdCol)))
           else vecs.join(broadcast(short), Seq(idCol)).join(broadcast(b.qs), Seq(queryIdCol))

@@ -49,11 +49,13 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   /** Window nodes whose SUBTREE carries no bounding node (TakeOrdered /
-    * Limit / the bounded-heap ObjectHashAggregate / a driver-side local
-    * relation) — i.e. rank windows fed
-    * by an unbounded corpus read, the single-reducer-sort scale killer the
-    * r12 verdict flagged. Walks the plan text by tree-marker depth: a
-    * node's subtree is the following lines with a strictly deeper marker.
+    * Limit / the bounded-heap ObjectHashAggregate) and reads more than
+    * driver-side local relations — i.e. rank windows fed by an unbounded
+    * corpus read, the single-reducer-sort scale killer the r12 verdict
+    * flagged. A LocalTableScan bounds a window only when every leaf under
+    * it is one: a corpus scan crossed with broadcast local queries is
+    * still unbounded. Walks the plan text by tree-marker depth: a node's
+    * subtree is the following lines with a strictly deeper marker.
     */
   private def unboundedWindows(p: String): Seq[String] = {
     val lines = p.linesIterator.toVector
@@ -67,13 +69,42 @@ class PlanAuditSpec extends AnyFunSuite {
         val d = depth(l)
         val sub = lines.drop(i + 1)
           .takeWhile(x => depth(x) < 0 || depth(x) > d)
-        // a LocalTableScan is rows already on the driver: bounded
-        if (sub.exists(s => s.contains("TakeOrderedAndProject") ||
-            s.contains("Limit") || s.contains("ObjectHashAggregate") ||
-            s.contains("LocalTableScan"))) None
+        // rows already on the driver are bounded, unless some other leaf
+        // (a file, RDD or range scan, or a reused exchange whose subtree
+        // the text hides) feeds the window too
+        val onlyLocal = sub.exists(_.contains("LocalTableScan")) &&
+          !sub.exists(s => s.replace("LocalTableScan", "").contains("Scan") ||
+            s.contains("Range (") || s.contains("ReusedExchange"))
+        if (onlyLocal || sub.exists(s => s.contains("TakeOrderedAndProject") ||
+            s.contains("Limit") || s.contains("ObjectHashAggregate"))) None
         else Some(l.trim.take(160))
       }
     }
+  }
+
+  test("unboundedWindows: a corpus read crossed with broadcast local queries stays unbounded") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val qs = Seq((1L, 0.5), (2L, 0.25)).toDF("query_id", "w")
+    val w = Window.partitionBy("query_id").orderBy(desc("score"), col("vec_id"))
+    // the row_number over a whole collection scan, per broadcast query:
+    // the shape this audit exists to catch
+    val corpus = graft.Tables.embeddings(spark, TestSpark.sf)
+      .crossJoin(broadcast(qs))
+      .withColumn("score", col("w") * col("vec_id"))
+      .withColumn("rank", row_number().over(w))
+    val p = corpus.queryExecution.executedPlan.toString
+    assert(p.contains("LocalTableScan") && p.contains("FileScan"), p.take(2000))
+    assert(unboundedWindows(p).nonEmpty,
+      s"a window over a corpus scan must be reported:\n${p.take(2000)}")
+    // the same window over the local rows alone is bounded
+    val local = qs.withColumn("score", col("w"))
+      .withColumn("vec_id", col("query_id"))
+      .withColumn("rank", row_number().over(w))
+    val lp = local.queryExecution.executedPlan.toString
+    assert(lp.contains("Window ["), lp)
+    assert(unboundedWindows(lp).isEmpty, lp)
   }
 
   test("q02 search pushes filters and prunes columns at the scan") {

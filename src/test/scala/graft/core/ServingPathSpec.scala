@@ -328,7 +328,7 @@ class ServingPathSpec extends AnyFunSuite {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("batch rerank: shortlist x |batch| at the threshold joins literals, one above broadcasts, same answers") {
+  test("batch rerank: shortlist x |batch| + |batch| x dim at the threshold joins literals, one above broadcasts, same answers") {
     import graft.operators.{ProductQuantization, VectorIndex, VectorPlanner}
     val data = VectorIndex.assignSignBuckets(records(120), "embedding", nBits = 3)
     val cb = ProductQuantization.trainCodebooks(data, "id", "embedding", m = 2,
@@ -343,7 +343,8 @@ class ServingPathSpec extends AnyFunSuite {
         records(1, i).select("embedding").head().getSeq[Float](0).map(_ + 0.01f)))
       .toDF("query_id", "query_vec")
     val shortlist = 12
-    val atCap = shortlist * 3
+    // the literal carries 3 shortlists and 3 query vectors of 8 floats
+    val atCap = shortlist * 3 + 3 * 8
     val cells: VectorPlanner.Cells = Some(VectorIndex.signCells(_, 3, 1))
     Seq[(String, DataFrame, VectorPlanner.Scorer, VectorPlanner.Cells)](
       ("SQ8", data, VectorPlanner.Sq8("cosine", shortlist), None),
@@ -361,6 +362,34 @@ class ServingPathSpec extends AnyFunSuite {
       def plan(d: DataFrame): String = d.queryExecution.executedPlan.toString
       assert(!plan(literal).contains("BroadcastHashJoin"), s"$what:\n${plan(literal)}")
       assert(plan(joined).contains("BroadcastHashJoin"), s"$what:\n${plan(joined)}")
+    }
+  }
+
+  test("batch rerank: wide query vectors count toward the literal cap") {
+    import graft.operators.VectorPlanner
+    // 256-d vectors: the 3 query vectors inline 768 floats, far more than
+    // the 36 shortlist rows, so a cap on the shortlists alone would not
+    // bound the literal
+    val dim = 256
+    val data = (0 until 60).map { i =>
+      (i.toLong, Array.tabulate(dim)(j => math.sin(i * 0.7 + j * 1.3).toFloat))
+    }.toDF("id", "embedding")
+    val qs = Seq(3, 20, 41).map(i => (i.toLong,
+        Array.tabulate(dim)(j => math.cos(i * 0.3 + j * 0.9).toFloat)))
+      .toDF("query_id", "query_vec")
+    val shortlist = 12
+    def batch(threshold: Int): DataFrame =
+      VectorPlanner.topKBatch(data, qs, 5, None,
+        VectorPlanner.Sq8("cosine", shortlist), inThreshold = threshold)
+    def plan(d: DataFrame): String = d.queryExecution.executedPlan.toString
+    def rows(d: DataFrame): Seq[Row] = d.orderBy("query_id", "rank").collect().toSeq
+    val atCap = shortlist * 3 + 3 * dim
+    val reference = rows(batch(atCap))
+    assert(reference.size == 15)
+    assert(!plan(batch(atCap)).contains("BroadcastHashJoin"), plan(batch(atCap)))
+    Seq(shortlist * 3, atCap - 1).foreach { t =>
+      assert(plan(batch(t)).contains("BroadcastHashJoin"), s"$t:\n${plan(batch(t))}")
+      assert(rows(batch(t)) == reference, t.toString)
     }
   }
 

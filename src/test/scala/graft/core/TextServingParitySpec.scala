@@ -201,6 +201,44 @@ class TextServingParitySpec extends AnyFunSuite {
     checkAll(db, "ivfpq", -1, 30, ascending = true, "residual adc")
   }
 
+  test("hybrid batch: a term catalog above the inlining cap broadcasts, same answers") {
+    val db = freshDb()
+    db.createCollection("docs")
+    db.bulkInsert("docs", records(40))
+    db.reindexPostings("docs", buckets = 4)
+    val qs = termSets.zipWithIndex.map { case ((_, terms), i) =>
+      (i.toLong, terms, vecOf(db, "docs", (i * 5 + 1).toLong))
+    }
+    // terms in no document add no postings row, so appending them after
+    // a query's own terms leaves its answer as it was — but they push the
+    // catalog past the cap
+    val junk = (0 to SimilaritySearch.InThreshold).map(i => s"zzjunk$i")
+    val wide = qs.updated(0, qs.head.copy(_2 = qs.head._2 ++ junk))
+    /** The answer, and whether a plan it ran joined a literal lookup. */
+    def run(batch: Seq[(Long, Seq[String], Array[Float])]): (Seq[Row], Boolean) = {
+      val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = plans.synchronized { plans += qe.executedPlan.toString; () }
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      org.apache.spark.TestContextShims.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        val rows = db.searchHybridBatch("docs", batch).collect().toSeq
+        org.apache.spark.TestContextShims.drainListenerBus(spark.sparkContext)
+        (rows, plans.synchronized(plans.exists(_.contains("Generate inline"))))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val (narrowRows, narrowLiteral) = run(qs)
+    val (wideRows, wideLiteral) = run(wide)
+    assert(narrowLiteral, "a catalog within the cap joins as literals")
+    assert(!wideLiteral, "a catalog above the cap must not be inlined")
+    assert(wideRows == narrowRows)
+    assert(narrowRows.nonEmpty)
+  }
+
   test("RRF ranks from the rounded score: ties keep the id order") {
     // ids 0..3 and 1000..1003 are identical documents: every tie on the
     // rounded score must break on id in both branches and in the fusion
